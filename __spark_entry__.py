@@ -1091,7 +1091,8 @@ sig AS (SELECT doc_id, {mh} FROM h GROUP BY doc_id)"""
 def _text_stats_sql(n_tok: str, stop: str) -> str:
     """Fused token-count / quality / language-ID twin (one SELECT per
     metric family over documents, joined on doc_id)."""
-    # normalized/padded text mirrors textops._norm_ws/_pad_ws exactly
+    # normalized/padded text: runs of \s to one space, trimmed, then
+    # space-padded, as textops.quality_py/langid_py tokenize
     pad = "(' ' || trim(regexp_replace(text, '\\s+', ' ', 'g')) || ' ')"
 
     def cnt(w):
@@ -1107,7 +1108,7 @@ def _text_stats_sql(n_tok: str, stop: str) -> str:
         f"WHEN s_{lg} = best AND best > 0 THEN '{lg}'" for lg in langs
     )
     sels = ", ".join(f"{e} AS s_{lg}" for lg, e in scores.items())
-    return f"""
+    return rf"""
 WITH sc AS (SELECT doc_id, {sels} FROM documents),
 b AS (SELECT doc_id, {best} AS best, * FROM sc),
 l AS (SELECT doc_id, CASE {whens} ELSE 'und' END AS pred_lang FROM b),
@@ -1478,8 +1479,8 @@ def _raster_oracle_sql(n: int = 128) -> str:
 
 def _oracle_sql_base() -> dict[str, str]:
     zc, zlast = OSQL.zorder_ctes_duckdb()
-    _nrm = "trim(regexp_replace(text, '\s+', ' ', 'g'))"
-    _pad = "(' ' || trim(regexp_replace(text, '\s+', ' ', 'g')) || ' ')"
+    _nrm = r"trim(regexp_replace(text, '\s+', ' ', 'g'))"
+    _pad = r"(' ' || trim(regexp_replace(text, '\s+', ' ', 'g')) || ' ')"
     n_tok = (f"(CASE WHEN length({_nrm}) = 0 THEN 0 ELSE "
              f"length({_nrm}) - length(replace({_nrm}, ' ', '')) + 1 END)")
     stop = " + ".join(

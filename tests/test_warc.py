@@ -287,10 +287,11 @@ def test_text_only_projection_matches_full(spark, warc_path):
     want = {r.url: (r.warc_ts, r.text) for r in full.collect()}
     txt = warc.read_warc_pages_text(spark, warc_path)
     assert "html" not in txt.columns
-    got = {r.url: (r.warc_ts, r.text) for r in txt.collect()}
-    assert got == want
-    langs = {r.lang for r in txt.collect()}
-    assert langs  # lang derived JVM-side from the projected text
+    rows = txt.collect()
+    assert {r.url: (r.warc_ts, r.text) for r in rows} == want
+    lang = {r.url: r.lang for r in
+            warc.read_warc_pages_full(spark, warc_path).collect()}
+    assert {r.url: r.lang for r in rows} == lang
 
 
 def test_extract_text_py_twin_parity(spark):

@@ -66,7 +66,7 @@ def main():
         print(f"error: --sf {args.sf} is missing tables: {missing}")
         return 2
 
-    spark = get_spark("oracle-check", cores=8, shuffle_partitions=8)
+    spark = get_spark("oracle-check", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')")

@@ -198,7 +198,7 @@ def main() -> int:
     from osm_spark.operators import tiles as T
     from osm_spark.session import get_spark
 
-    spark = get_spark("make-goldens", cores=8, shuffle_partitions=8)
+    spark = get_spark("make-goldens", shuffle_partitions=8)
     sf = "/root/testdata/sf0.01"  # unused by these queries (fixture-only)
     qs = entry.queries()
 
