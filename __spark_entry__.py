@@ -218,7 +218,7 @@ def q_g06_pip_tag(spark, sf):
     bcast = spatial_join(docs, polys, how="left", page_key="doc_id").select(
         F.lit(0).cast("long").alias("path"), "doc_id", "feature_id")
     layer = Path(__file__).resolve().parent / "data" / "driver_player_city"
-    if not (layer / "_SUCCESS").exists():
+    if not (layer / "_osm_layer_meta.json").exists():
         write_partitioned_layer(polys, str(layer))
     part = spatial_join_partitioned(
         docs, str(layer), how="left", page_key="doc_id").select(

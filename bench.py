@@ -117,7 +117,7 @@ def main():
     layer_path = str(Path(__file__).resolve().parent / "data" /
                      f"bench_player_{N_SMALL_POLYS}")
     if ((not only_set or "spatial_join_partitioned" in only_set)
-            and not (Path(layer_path) / "_SUCCESS").exists()):
+            and not (Path(layer_path) / "_osm_layer_meta.json").exists()):
         write_partitioned_layer(polys, layer_path)
 
     queries = [

@@ -110,12 +110,17 @@ def knn_broadcast(points: DataFrame, features: DataFrame, k: int = 1,
     Zero shuffles, zero joins — the right plan whenever the feature layer
     fits in executor memory (~<=200k rows).  Chunked so the distance
     matrix stays ~chunk×n_features int64."""
+    feats = features.select("feature_id", "lat", "lon").toPandas()
+    return _knn_broadcast_frame(points, feats, k, key, chunk)
+
+
+def _knn_broadcast_frame(points: DataFrame, feats, k: int, key: str,
+                         chunk: int = 0) -> DataFrame:
+    """``knn_broadcast`` over a collected (feature_id, lat, lon) frame."""
     import pandas as pd
 
-    rows = features.select("feature_id", "lat", "lon").collect()
-    fid = np.array([r.feature_id for r in rows], np.int64)
-    fla = np.array([r.lat for r in rows], np.int64)
-    flo = np.array([r.lon for r in rows], np.int64)
+    fid, fla, flo = (feats[c].to_numpy(np.int64)
+                     for c in ("feature_id", "lat", "lon"))
     # deterministic tie-break (dist2, feature_id): pre-sort by id so that
     # stable kind='stable' argsort resolves equal distances by id
     o = np.argsort(fid, kind="stable")
@@ -278,7 +283,8 @@ def knn_join(
     small enough to ship (exact, shuffle-free); the cell-ring candidate
     path (reference rtree.ml:209-258 analog) otherwise.  Pass
     ``n_features`` (or an explicit ``strategy``) in production pipelines
-    to skip the auto-probe's bounded count at plan time.  ``exact=True``
+    to skip the auto-probe (one bounded columnar collect at plan time,
+    reused as the broadcast payload when the layer is small).  ``exact=True``
     certifies each point's result against the cell bound and retries
     uncertified points at doubled radius (up to ``max_expansions``
     rounds); a final residue larger than ``brute_residue_limit`` raises
@@ -287,12 +293,16 @@ def knn_join(
     feature layer (see _residue_brute)."""
     if strategy == "auto" and n_features is not None:
         strategy = "broadcast" if n_features <= BROADCAST_FEATURE_LIMIT else "cells"
-    if strategy == "broadcast" or (
-        strategy == "auto"
-        and features.limit(BROADCAST_FEATURE_LIMIT + 1).count()
-        <= BROADCAST_FEATURE_LIMIT
-    ):
+    if strategy == "broadcast":
         return knn_broadcast(points, features, k, key)
+    if strategy == "auto":
+        # one job: the bounded probe's rows ARE the broadcast payload.
+        # Columnar (Arrow), so overshooting a large layer costs about
+        # what a JVM limit().count() does — no per-row Python objects
+        feats = features.select("feature_id", "lat", "lon").limit(
+            BROADCAST_FEATURE_LIMIT + 1).toPandas()
+        if len(feats) <= BROADCAST_FEATURE_LIMIT:
+            return _knn_broadcast_frame(points, feats, k, key)
     # pmod also folds a point at exactly +180° (cx == 2^z) onto cell 0,
     # mirroring the feature-side wrap below — otherwise it could never
     # match a registered cell

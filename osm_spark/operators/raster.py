@@ -260,9 +260,10 @@ def composite_cells(cells: DataFrame,
             .agg(F.count("*").alias("area_cells")))
     if remap_ids is None:
         # probe the id extremes from the tiny per-feature aggregate, not
-        # the raw cells frame: one localCheckpoint materializes the
-        # upstream lineage (often a full rasterize) exactly once, shared
-        # by this probe and the paint-key join below
+        # the raw cells frame.  The localCheckpoint only deduplicates the
+        # area subtree (this probe and the paint-key join below share
+        # it); the join's raw `cells` side still recomputes the upstream
+        # lineage (often a full rasterize) in the final action
         area = area.localCheckpoint(eager=False)
         ext = area.agg(F.min("feature_id"), F.max("feature_id")).collect()[0]
         remap_ids = ext[0] is not None and (

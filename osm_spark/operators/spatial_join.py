@@ -7,14 +7,20 @@ cells (z-order prefix == slippy tile) as the spatial partitioning key:
 
   1. polygons → covering cells of their bbox (explode; the analog of
      R-tree leaf bboxes in Hilbert order),
-  2. pages → their containing cell (pure column expressions for x,
-     Arrow pandas UDF mercator for y),
+  2. pages → their containing cell (pure JVM column expressions for
+     both x and the mercator y),
   3. candidate join on cell — ``broadcast`` for small layers, else a
      shuffle join with optional **salting** for hot cells + AQE skew
      splitting,
   4. exact PIP verify with a vectorized crossing-number kernel (Arrow
      pandas UDF, grouped by ring inside each batch so the inner loop is
      numpy over all points of one ring).
+
+JVM keys route, numpy decides: Spark-side cell keys (``with_cell``,
+``polygon_cells``) only route rows to a task or a layer read, so no
+Python runs before any exchange; the mappers' numpy kernels pick the
+cell a point is matched in, and the JVM polygon registration is a padded
+superset of numpy's, so boundary points still meet every candidate.
 
 Inside-ness for polygons with holes: in some role-0 (outer) ring and in
 no role-1 (hole) ring — matching the reference's hole handling
@@ -31,11 +37,12 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from osm_spark.geo import kernels as K
 
@@ -53,20 +60,28 @@ def tile_x_col(lon_col, z: int):
     )
 
 
-def tile_y_udf(z: int):
-    @pandas_udf("long")
-    def _f(lat: pd.Series) -> pd.Series:
-        return pd.Series(K.tile_y_float(lat.to_numpy(np.int64), z))
-
-    return _f
+def tile_y_col(lat_col: str, z: int, pad: float = 0.0):
+    """Mercator tile row ``floor(y + pad)`` as a pure JVM expression: the
+    op order of ``K.tile_y_float`` with a cancellation-free asinh,
+    ``sign(t)·log(|t| + sqrt(t²+1))`` (Spark's ``asinh`` cancels for
+    t << 0: up to 800 rows off near −90° at z12, non-finite at −90°).
+    Versus numpy on 2M random lats plus both polar windows: max |Δy|
+    3.6e-12 rows at z12, doubling per zoom, no floor mismatch; not
+    bit-exact, so it routes."""
+    t = F.tan(F.col(lat_col) * F.lit(float(K.CONV)))
+    asinh = F.signum(t) * F.log(F.abs(t) + F.sqrt(t * t + F.lit(1.0)))
+    y = (F.lit(1.0) - asinh / F.lit(math.pi)) / F.lit(2.0) * F.lit(float(1 << z))
+    if pad:
+        y = y + F.lit(pad)
+    return F.floor(y).cast("long")
 
 
 def with_cell(df: DataFrame, z: int = DEFAULT_CELL_ZOOM,
               lat="lat", lon="lon") -> DataFrame:
-    """Add tile cell columns (cx, cy) at zoom z."""
+    """Add tile cell columns (cx, cy) at zoom z as JVM expressions.
+    JVM keys route, numpy decides: the mappers recompute the cell."""
     return df.withColumn("cx", tile_x_col(lon, z)).withColumn(
-        "cy", tile_y_udf(z)(F.col(lat))
-    )
+        "cy", tile_y_col(lat, z))
 
 
 # ---------------------------------------------------------------------------
@@ -85,18 +100,28 @@ def with_bbox(polys: DataFrame) -> DataFrame:
     )
 
 
+# Row padding ε of polygon_cells' JVM span: it contains numpy's span when
+# ε > |Δy| (tile_y_col), and the JVM cell of every point in the bbox when
+# ε > 2|Δy|.  |Δy| = 3.6e-12 rows at z12 doubling per zoom, so 1e-6 holds
+# for z <= 28; it widens only spans with an edge within 1e-6 rows of a
+# row boundary.
+_CELL_PAD_ROWS = 1e-6
+
+
 def polygon_cells(polys: DataFrame, z: int = DEFAULT_CELL_ZOOM) -> DataFrame:
     """Explode each polygon to the tile cells covering its bbox.
 
     The quadtree analog of R-tree leaf registration (rtree.ml:90-121).
+    Pure JVM: JVM keys route, numpy decides — the row span is padded by
+    ``_CELL_PAD_ROWS`` to contain the span numpy registers.
     """
-    ty = tile_y_udf(z)
     boxed = with_bbox(polys)
     boxed = (
         boxed.withColumn("cx_min", tile_x_col("lon_min", z))
         .withColumn("cx_max", tile_x_col("lon_max", z))
-        .withColumn("cy_min", ty(F.col("lat_max")))  # north edge = min row
-        .withColumn("cy_max", ty(F.col("lat_min")))
+        # north edge = min row
+        .withColumn("cy_min", tile_y_col("lat_max", z, -_CELL_PAD_ROWS))
+        .withColumn("cy_max", tile_y_col("lat_min", z, _CELL_PAD_ROWS))
     )
     return (
         boxed.withColumn("cx", F.explode(F.sequence("cx_min", "cx_max")))
@@ -289,13 +314,12 @@ def suggest_salt(pages: DataFrame, z: int = DEFAULT_CELL_ZOOM - 3,
     default is the COGROUP zoom (z-3); for the partitioned disk-index
     path pass ``z=DEFAULT_CELL_ZOOM - COARSE_SHIFT`` (same value by
     default, kept explicit so the two stay decoupled).  Clamped to
-    [1, max_salt]; AQE skew-join remains the runtime backstop.
+    [1, max_salt]; AQE skew-join remains the runtime backstop.  One JVM
+    aggregate: the cells only count rows, so no Python runs.
 
     ``sample_frac`` estimates the histogram from a deterministic
     sample — the max/p95 RATIO is scale-free, so at 10^12 pages a
     1e-4 sample gives the same factor for a fraction of the scan."""
-    import math
-
     if sample_frac is not None:
         pages = pages.sample(fraction=sample_frac, seed=7)
     counts = with_cell(pages, z).groupBy("cx", "cy").count()
@@ -488,15 +512,6 @@ CKEY_SCALE = 1 << 32
 COARSE_SHIFT = 3          # coarse partition cells at z - COARSE_SHIFT
 
 
-def _gkey_col(shift: int = COARSE_SHIFT):
-    """Coarse-cell partition key from the fine (cx, cy) columns,
-    ``shift`` zoom levels coarser (must equal the writer's z - zc)."""
-    return (
-        F.shiftright(F.col("cx"), shift).cast("long") * CKEY_SCALE
-        + F.shiftright(F.col("cy"), shift)
-    )
-
-
 _LAYER_META = "_osm_layer_meta.json"
 
 
@@ -508,15 +523,17 @@ def _write_layer_meta(path: str, z: int, zc: int) -> None:
         json.dump({"z": z, "zc": zc}, fh)
 
 
-def _read_layer_meta(path: str) -> dict | None:
+def _read_layer_meta(path: str) -> dict:
     import json
     import os
 
     p = os.path.join(path, _LAYER_META)
-    if os.path.exists(p):
-        with open(p) as fh:
-            return json.load(fh)
-    return None
+    if not os.path.exists(p):
+        raise ValueError(
+            f"{path} has no {_LAYER_META}: not a write_partitioned_layer "
+            "output")
+    with open(p) as fh:
+        return json.load(fh)
 
 
 def write_partitioned_layer(polys: DataFrame, path: str,
@@ -556,7 +573,7 @@ def write_partitioned_layer(polys: DataFrame, path: str,
 PJOIN_BATCH_BYTES = 64 << 20
 
 
-def _partitioned_join_mapper(layer_path: str, z: int, how: str,
+def _partitioned_join_mapper(layer_path: str, z: int, zc: int, how: str,
                              page_key: str):
     import os
 
@@ -567,11 +584,10 @@ def _partitioned_join_mapper(layer_path: str, z: int, how: str,
         import pyarrow.dataset as pads
 
         dataset = pads.dataset(layer_path, format="parquet")
-        # lazy per-partition layer-index cache: the partition holds
-        # whole coarse cells, so the gkey set — and therefore the layer
-        # slice — is fixed per partition; the first span group reads
-        # (and prunes by row-group stats on the gkey-sorted file) the
-        # cells it touches, later groups only read cells not yet seen.
+        # lazy per-partition layer-index cache: the exchange routed
+        # whole coarse cells here; the first span group reads (and prunes
+        # by row-group stats on the gkey-sorted file) the numpy coarse
+        # cells of its points, later groups only read cells not yet seen.
         # The vectorized index rebuild on a cache miss is effectively
         # free (BENCH/ANALYSIS.md round-3 floor decomposition).
         seen_gk: set[int] = set()
@@ -610,7 +626,7 @@ def _partitioned_join_mapper(layer_path: str, z: int, how: str,
             keys = pdf[page_key].to_numpy()
             la = pdf["lat"].to_numpy(np.int64)
             lo = pdf["lon"].to_numpy(np.int64)
-            gk = pdf["gkey"].to_numpy(np.int64)
+            gk = K.tile_x(lo, zc) * CKEY_SCALE + K.tile_y_float(la, zc)
             out_k: list[np.ndarray] = []
             out_f: list[np.ndarray] = []
             matched = np.zeros(len(keys), dtype=bool)
@@ -662,51 +678,37 @@ def spatial_join_partitioned(
     z: int = DEFAULT_CELL_ZOOM,
     how: str = "inner",
     page_key: str = "page_id",
-    n_partitions: int | None = None,
     salt: int = 1,
     pages_clustered: bool = False,
 ) -> DataFrame:
     """PIP-join against a ``write_partitioned_layer`` output: pages
     hash-partition on the coarse cell key (one JVM columnar exchange,
-    no range-sampling job, no pandas cogroup), each worker reads ONLY
-    its partition's coarse cells from the layer parquet (row-group
-    pruning on the sorted gkey) and runs the shared vectorized index +
-    PIP kernels.  The layer never shuffles and is bounded by disk, not
-    executor memory.  ``salt`` spreads a hot coarse cell's pages across
-    partitions — the price is duplicate layer READS, never duplicate
-    shuffle bytes.  ``pages_clustered=True`` declares the pages table
-    spatially clustered in storage (``cluster.cluster_by_hilbert``
-    layout) and skips the exchange entirely — the zero-shuffle
-    co-located spatial join.  Returns (page_key, feature_id) like
-    ``spatial_join``."""
-    spark = pages.sparkSession
-    if n_partitions is None:
-        n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    no range-sampling job, no pandas cogroup, no Python before it; AQE
+    sizes the reduce side), each worker reads ONLY its partition's
+    coarse cells from the layer parquet (row-group pruning on the sorted
+    gkey) and runs the shared vectorized index + PIP kernels.  The layer
+    never shuffles and is bounded by disk, not executor memory.
+    ``salt`` spreads a hot coarse cell's pages across partitions — the
+    price is duplicate layer READS, never duplicate shuffle bytes.
+    ``pages_clustered=True`` declares the pages table spatially
+    clustered in storage (``cluster.cluster_by_hilbert`` layout) and
+    skips the exchange entirely — the zero-shuffle co-located spatial
+    join.  Returns (page_key, feature_id) like ``spatial_join``."""
     meta = _read_layer_meta(layer_path)
-    if meta is not None:
-        if meta["z"] != z:
-            raise ValueError(
-                f"layer at {layer_path} was written for z={meta['z']}, "
-                f"join requested z={z} — cell keys would not align")
-        shift = z - meta["zc"]
-    else:
-        shift = z - max(z - COARSE_SHIFT, 2)   # pre-meta layers
-    pts = with_cell(pages.select(page_key, "lat", "lon"), z).select(
-        page_key, "lat", "lon", _gkey_col(shift).alias("gkey"))
-    if pages_clustered:
-        # the pages table is already spatially clustered in storage
-        # (cluster_by_hilbert layout): input splits are cell-local, so
-        # the join needs NO exchange at all — scan, per-split layer
-        # range-read, PIP.  The zero-shuffle co-located spatial join.
-        pass
-    elif salt > 1:
-        pts = pts.withColumn(
-            "s_", F.pmod(F.xxhash64(page_key), F.lit(salt)))
-        pts = pts.repartition(n_partitions, "gkey", "s_").drop("s_")
-    else:
-        pts = pts.repartition(n_partitions, "gkey")
+    if meta["z"] != z:
+        raise ValueError(
+            f"layer at {layer_path} was written for z={meta['z']}, "
+            f"join requested z={z} — cell keys would not align")
+    zc = meta["zc"]
+    pts = pages.select(page_key, "lat", "lon")
+    if not pages_clustered:
+        # routing only: the mapper recomputes the cells it reads
+        keys = [tile_x_col("lon", zc) * CKEY_SCALE + tile_y_col("lat", zc)]
+        if salt > 1:
+            keys.append(F.pmod(F.xxhash64(page_key), F.lit(salt)))
+        pts = pts.repartition(*keys)
     return pts.mapInPandas(
-        _partitioned_join_mapper(layer_path, z, how, page_key),
+        _partitioned_join_mapper(layer_path, z, zc, how, page_key),
         "k long, feature_id long",
     ).withColumnRenamed("k", page_key)
 

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osm_spark.geo import kernels as K
-from osm_spark.operators.spatial_join import tile_x_col, tile_y_udf
+from osm_spark.operators.spatial_join import tile_x_col, tile_y_col
 
 ZOOM_BANDS = (6, 8, 10, 12)
 BUILDING_CAT = 12  # fixture category id used for the building exception
@@ -45,20 +45,6 @@ SMALL_AREA = math.trunc(8.0 * (1e7 / (256.0 / 360.0 * 2.0**15.5)) ** 2)
 
 # ---------------------------------------------------------------------------
 # page tiles
-
-
-def tile_y_col(lat_col: str, z: int):
-    """Mercator tile row as a pure JVM expression (tan/asinh are Spark
-    SQL builtins) — whole-stage codegen, no Python workers, no Arrow
-    transfer.  Same formula as kernels.tile_y_float; last-ulp libm
-    differences vs numpy are possible exactly AT a tile boundary, so
-    use this where only self-consistency is needed (page tiling) and
-    the numpy kernel where a Python-side path must agree bit-for-bit
-    (spatial-join cells)."""
-    lat = F.col(lat_col) * F.lit(float(K.CONV))
-    y = (F.lit(1.0) - F.asinh(F.tan(lat)) / F.lit(math.pi)) / F.lit(2.0) \
-        * F.lit(float(1 << z))
-    return F.floor(y).cast("long")
 
 
 def page_tiles(pages_geo: DataFrame, zooms: Iterable[int] = ZOOM_BANDS,

@@ -503,6 +503,37 @@ def test_jpeg_truncated_scan_raises_clean_error():
     assert decode_jpeg_gray(b).shape == (64, 64)
 
 
+def test_jpeg_bad_sampling_factor_raises_clean_error():
+    """A SOF0 sampling byte outside 1..2 (0 used to divide by zero in the
+    MCU geometry) is a labelled ValueError."""
+    import numpy as np
+    import pytest
+
+    from osm_spark.operators.jpeg import decode_jpeg_gray, encode_baseline
+
+    good = encode_baseline(np.zeros((16, 16), np.uint8), quality=85)
+    hv = good.find(b"\xff\xc0") + 11       # first component's (h << 4) | v
+    assert good[hv] == 0x11
+    for byte in (0x00, 0x01, 0x10, 0x31):
+        bad = bytearray(good)
+        bad[hv] = byte
+        with pytest.raises(ValueError, match="sampling"):
+            decode_jpeg_gray(bytes(bad))
+
+
+def test_jpeg_encode_rejects_out_of_range_dri():
+    import numpy as np
+    import pytest
+
+    from osm_spark.operators.jpeg import encode_baseline
+
+    img = np.zeros((16, 16), np.uint8)
+    for dri in (-1, 0x10000):
+        with pytest.raises(ValueError, match="restart interval"):
+            encode_baseline(img, dri=dri)
+    assert encode_baseline(img, dri=0xFFFF)
+
+
 def test_jpeg_corrupt_streams_route_to_fallback(spark):
     """Corrupt (not merely truncated) streams raise KeyError/IndexError/
     ValueError from the parser — decode_and_resize must catch ALL of

@@ -173,11 +173,8 @@ def test_partitioned_mapper_streams_bounded(spark, tmp_path, monkeypatch):
     # direct generator probe: the mapper is a plain generator function —
     # drive it with a pull-counting input and check it yields output
     # before consuming the whole partition
-    meta = SJ._read_layer_meta(layer)
-    shift = SJ.DEFAULT_CELL_ZOOM - meta["zc"]
-    pts = SJ.with_cell(docs, SJ.DEFAULT_CELL_ZOOM).select(
-        "doc_id", "lat", "lon",
-        SJ._gkey_col(shift).alias("gkey")).toPandas()
+    zc = SJ._read_layer_meta(layer)["zc"]
+    pts = docs.select("doc_id", "lat", "lon").toPandas()
     chunks = [c for c in np.array_split(pts, 8) if len(c)]
     pulled = 0
 
@@ -187,7 +184,7 @@ def test_partitioned_mapper_streams_bounded(spark, tmp_path, monkeypatch):
             pulled += 1
             yield c
 
-    fn = SJ._partitioned_join_mapper(layer, SJ.DEFAULT_CELL_ZOOM,
+    fn = SJ._partitioned_join_mapper(layer, SJ.DEFAULT_CELL_ZOOM, zc,
                                      "left", "doc_id")
     it = fn(gen())
     first = next(it)
@@ -354,3 +351,161 @@ def test_partitioned_layer_z_mismatch_raises(spark, tmp_path):
     pages = geocode_pages(FX.pages_df(spark, 50))
     with pytest.raises(ValueError, match="z=12"):
         spatial_join_partitioned(pages, path, z=14)
+
+
+def test_partitioned_layer_without_meta_raises(spark, tmp_path):
+    """A layer directory without the key-geometry sidecar is refused by
+    name instead of guessed at."""
+    from osm_spark.operators.spatial_join import spatial_join_partitioned
+
+    path = str(tmp_path / "not_a_layer")
+    FX.polygons_df(spark, 3).write.parquet(path)
+    pages = geocode_pages(FX.pages_df(spark, 20))
+    with pytest.raises(ValueError, match="not_a_layer"):
+        spatial_join_partitioned(pages, path)
+
+
+# ------------------------------------------- JVM routing keys, numpy cells
+
+
+def _row_boundary(z: int, row: int) -> int:
+    """Smallest fixed-point lat numpy puts north of ``row``:
+    ``K.tile_y_float(b, z) < row <= K.tile_y_float(b - 1, z)``."""
+    lo, hi = -900_000_000, 900_000_000
+    assert K.tile_y_float(lo, z) >= row > K.tile_y_float(hi, z)
+    while hi - lo > 1:
+        mid = (lo + hi) // 2
+        if K.tile_y_float(mid, z) < row:
+            hi = mid
+        else:
+            lo = mid
+    return hi
+
+
+def _rect(fid, la0, la1, lo0, lo1):
+    return (fid, [(0, [la0, la0, la1, la1, la0], [lo0, lo1, lo1, lo0, lo0])])
+
+
+def test_row_boundaries_exact_on_every_path(spark, tmp_path):
+    """Points at numpy row boundaries (b-1, b, b+1) of the fine z12 and
+    the coarse z9 grid, against rectangles whose bbox edges sit on those
+    boundaries: the JVM-routed partitioned, clustered and cogroup paths
+    return the broadcast path's match set, which is the cell-free PIP;
+    and polygon_cells' JVM row span is numpy's, padded."""
+    from osm_spark.operators import spatial_join as SJ
+    from osm_spark.operators.spatial_join import (polygon_cells,
+                                                 spatial_join_partitioned,
+                                                 write_partitioned_layer)
+
+    lo0, lo1 = 8_000_000, 9_500_000
+    lons = [lo0 - 1, lo0, 8_700_000, lo1, lo1 + 1]
+    polys, pts = [], []
+    for zi, z in enumerate((12, 9)):
+        r0 = int(K.tile_y_float(41_5000000, z))
+        bs = [_row_boundary(z, r) for r in range(r0 - 2, r0 + 3)]  # N -> S
+        for d, (s, n) in enumerate([(0, 0), (-1, 1), (1, -1), (0, 1)]):
+            polys.append(_rect(100 * zi + d, bs[3] + s, bs[1] + n, lo0, lo1))
+        polys.append(_rect(100 * zi + 9, bs[4], bs[2], lo0 + 1, lo1 - 1))
+        pts += [(b + e, lo) for b in bs for e in (-1, 0, 1) for lo in lons]
+    docs = spark.createDataFrame(
+        [(i, la, lo) for i, (la, lo) in enumerate(pts)],
+        "doc_id long, lat long, lon long")
+    layer_df = spark.createDataFrame(
+        polys, "feature_id long, "
+        "rings array<struct<role:int, lat:array<long>, lon:array<long>>>")
+    oracle = brute_force_matches(
+        range(len(pts)), [p[0] for p in pts], [p[1] for p in pts],
+        [{"feature_id": f, "rings": [{"role": r, "lat": la, "lon": lo}
+                                     for r, la, lo in rs]}
+         for f, rs in polys])
+    assert len(oracle) > 50
+
+    def pairs(df):
+        return {(r.doc_id, r.feature_id) for r in df.collect()}
+
+    layer = write_partitioned_layer(layer_df, str(tmp_path / "layer"))
+    got = {
+        "broadcast": pairs(spatial_join(docs, layer_df, page_key="doc_id",
+                                        broadcast_polys=True)),
+        "cogroup": pairs(spatial_join(docs, layer_df, page_key="doc_id",
+                                      broadcast_polys=False)),
+        "cogroup_salted": pairs(spatial_join(
+            docs, layer_df, page_key="doc_id", broadcast_polys=False,
+            salt=3)),
+    }
+    for kw in ({}, {"salt": 3}, {"pages_clustered": True}):
+        got[f"partitioned{kw}"] = pairs(spatial_join_partitioned(
+            docs, layer, page_key="doc_id", **kw))
+    for name, g in got.items():
+        assert g == oracle, name
+
+    # the JVM row span is numpy's padded by _CELL_PAD_ROWS each way: it
+    # contains numpy's and is one row wider where a bbox edge lies within
+    # the pad of a boundary (edges at b do at z9, where 1 fp unit of lat
+    # is ~2e-7 rows)
+    widened = 0
+    for z in (12, 9):
+        jvm = {(r.feature_id, r.cx, r.cy)
+               for r in polygon_cells(layer_df, z).collect()}
+        for fid, [(_, la, lo)] in polys:
+            y0, y1 = _mercator_y([max(la), min(la)], z)
+            want = set(range(int(np.floor(y0 - SJ._CELL_PAD_ROWS)),
+                             int(np.floor(y1 + SJ._CELL_PAD_ROWS)) + 1))
+            assert {cy for f, _, cy in jvm if f == fid} == want, (z, fid)
+            assert {cx for f, cx, _ in jvm if f == fid} == set(range(
+                int(K.tile_x(min(lo), z)), int(K.tile_x(max(lo), z)) + 1))
+            widened += len(want) - (int(np.floor(y1)) - int(np.floor(y0)) + 1)
+    assert widened > 0
+
+
+def _mercator_y(lat_fp, z: int) -> np.ndarray:
+    """``K.tile_y_float`` before its floor."""
+    y = np.asarray(lat_fp).astype(np.float64) * K.CONV
+    return (1.0 - np.arcsinh(np.tan(y)) / np.pi) / 2.0 * float(1 << z)
+
+
+def _new_plans(spark, action) -> list[str]:
+    """Physical plans of the SQL executions ``action`` runs, picked by
+    execution id: the status store evicts old executions, so list
+    positions shift."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    last = max((e.executionId() for e in executions()), default=-1)
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return [e.physicalPlanDescription() for e in executions()
+            if e.executionId() > last]
+
+
+def test_cell_keys_run_no_python_before_exchange(spark, tmp_path):
+    """Routing keys are JVM expressions: suggest_salt and
+    write_partitioned_layer run no Python UDF, and the partitioned join's
+    only Python is its one MapInPandas after an AQE-sized exchange."""
+    from osm_spark.operators.geocode import geocode_ids
+    from osm_spark.operators.spatial_join import (COARSE_SHIFT,
+                                                 spatial_join_partitioned,
+                                                 suggest_salt,
+                                                 write_partitioned_layer)
+
+    docs = geocode_ids(
+        spark.range(500).withColumnRenamed("id", "doc_id"), "doc_id")
+    polys = FX.polygons_df(spark, 20)
+    path = str(tmp_path / "layer")
+    for action in (
+            lambda: suggest_salt(docs, z=12 - COARSE_SHIFT),
+            lambda: write_partitioned_layer(polys, path)):
+        plans = _new_plans(spark, action)
+        assert plans
+        for plan in plans:
+            assert "EvalPython" not in plan, plan
+    for kw in ({}, {"salt": 3}):
+        plan = spatial_join_partitioned(
+            docs, path, page_key="doc_id",
+            **kw)._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in plan, plan
+        assert plan.count("MapInPandas") == 1, plan
+        assert "REPARTITION_BY_COL" in plan, plan   # no fixed count: AQE sizes it

@@ -257,3 +257,64 @@ def test_feature_tiles_ringless_feature(spark):
     out = T.feature_tiles(polys, zooms=(12,)).collect()
     fids = {r.feature_id for r in out}
     assert 1 in fids and 2 not in fids and 3 not in fids
+
+
+def test_page_tiles_match_kernel_at_poles(spark):
+    """page_tiles' JVM mercator equals the numpy kernel at every zoom
+    band, at both poles, the mercator limit and a dense window just north
+    of -90° (where log(x + sqrt(x²+1)) cancels)."""
+    import pandas as pd
+
+    rng = np.random.default_rng(5)
+    lats = np.concatenate([
+        [900_000_000, -900_000_000, 850_511_000, -850_511_000],
+        np.arange(-900_000_000, -899_998_999),
+        rng.integers(-900_000_000, 900_000_001, 4000),
+    ]).astype(np.int64)
+    lons = rng.integers(-1_800_000_000, 1_800_000_000, len(lats))
+    df = spark.createDataFrame(pd.DataFrame(
+        {"page_id": np.arange(len(lats)), "lat": lats, "lon": lons}))
+    got = {(r.page_id, r.z, r.x, r.y)
+           for r in T.page_tiles(df, T.ZOOM_BANDS).collect()}
+    want = {(int(i), z, int(x), int(y))
+            for z in T.ZOOM_BANDS
+            for i, x, y in zip(range(len(lats)), K.tile_x(lons, z),
+                               K.tile_y_float(lats, z))}
+    assert got == want
+
+
+def test_knn_auto_probe_runs_one_job(spark, geo_pages):
+    """strategy='auto' sizes AND ships a small layer from one bounded
+    collect: exactly one Spark job runs before the query does."""
+    feats = geocode_ids(
+        spark.range(300).withColumnRenamed("id", "feature_id"), "feature_id")
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-auto-probe", "knn auto probe")
+    try:
+        out = knn_join(geo_pages, feats, k=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("knn-auto-probe")) == 1
+    got = {(r.page_id, r.rank, r.feature_id, r.dist2) for r in out.collect()}
+    want = {(r.page_id, r.rank, r.feature_id, r.dist2)
+            for r in brute_force_knn(geo_pages, feats, k=2).collect()}
+    assert got == want
+
+
+def test_knn_auto_probe_over_limit_takes_cells(spark, geo_pages, monkeypatch):
+    """A layer past BROADCAST_FEATURE_LIMIT: the probe's arrays are
+    dropped, the cell-ring path answers, and the result stays exact."""
+    from osm_spark.operators import knn as KNN
+
+    def no_broadcast(*a, **kw):
+        raise AssertionError("broadcast path taken over the limit")
+
+    monkeypatch.setattr(KNN, "BROADCAST_FEATURE_LIMIT", 100)
+    monkeypatch.setattr(KNN, "_knn_broadcast_frame", no_broadcast)
+    feats = geocode_ids(
+        spark.range(300).withColumnRenamed("id", "feature_id"), "feature_id")
+    out = knn_join(geo_pages, feats, k=2)
+    got = {(r.page_id, r.rank, r.feature_id, r.dist2) for r in out.collect()}
+    want = {(r.page_id, r.rank, r.feature_id, r.dist2)
+            for r in brute_force_knn(geo_pages, feats, k=2).collect()}
+    assert got == want

@@ -104,7 +104,7 @@ def main():
                                                  write_partitioned_layer)
 
     layer_path = REPO / "data" / "plans_layer"
-    if not (layer_path / "_SUCCESS").exists():
+    if not (layer_path / "_osm_layer_meta.json").exists():
         write_partitioned_layer(FX.polygons_df(spark, 500), str(layer_path))
     sjp = spatial_join_partitioned(geo, str(layer_path), page_key="doc_id",
                                    salt=2)
@@ -114,13 +114,18 @@ def main():
         "The on-disk R-tree analog (database/rtree.ml): the layer lives "
         "cell-sorted in parquet (one-time `write_partitioned_layer` bulk "
         "load); pages hash-partition on the coarse cell key — ONE JVM "
-        "columnar Exchange, no range-sampling job, no pandas cogroup — "
-        "and each task range-reads only its cells from the layer file "
-        "via row-group pruning.  The polygon side never shuffles and is "
+        "columnar Exchange, no range-sampling job, no pandas cogroup, "
+        "no Python before it (the key is a JVM expression that only "
+        "routes; the mapper's numpy kernels decide the cell), and no "
+        "fixed partition count, so AQE sizes the reduce side — and each "
+        "task range-reads only its cells from the layer file via "
+        "row-group pruning.  The polygon side never shuffles and is "
         "bounded by disk, not executor memory; salt spreads hot cells "
         "at the cost of duplicate layer reads, never shuffle bytes.",
-        must_contain=("Exchange", "MapInPandas"),
+        must_contain=("Exchange", "MapInPandas", "REPARTITION_BY_COL"),
     )
+    checks.append(("Spatial join — partitioned disk-index path (huge layers)",
+                   "no EvalPython", "EvalPython" not in fmt(sjp)))
     sjp0 = spatial_join_partitioned(geo, str(layer_path), page_key="doc_id",
                                     pages_clustered=True)
     plan0 = fmt(sjp0)
