@@ -201,7 +201,7 @@ def q_x1_edge_lead(spark, sf):
 
 def q_g06_pip_tag(spark, sf):
     """G6 through BOTH physical paths, one row each tagged by ``path``:
-    0 = broadcast cell-index mapInPandas (zero shuffles); 1 = the
+    0 = broadcast cell-index mapInArrow (zero shuffles); 1 = the
     PARTITIONED disk-index path (G15's on-disk bulk load + G16's range
     query; spatial_join.py:spatial_join_partitioned) — the 100 TB
     strategy for layers beyond executor memory: one hash exchange on

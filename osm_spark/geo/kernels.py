@@ -15,9 +15,9 @@ the reference pins a semantic edge case we reproduce it exactly:
   (geometry.mli:32-33) and here.
 - polygon_area: anchored shoelace with ``(a+1)/2`` truncating division
   (/root/reference/osm/geometry.ml:211-226; OCaml `/` truncates toward 0).
-- douglas_peucker_int: squared-eps integer variant incl. the
-  ``truncate(float n * float n / float d2)`` mixed rounding of
-  /root/reference/osm/douglas_peucker.ml:88-98.
+- simplify_ring_int: squared-eps integer Douglas-Peucker over a batch of
+  polylines, incl. the ``truncate(float n * float n / float d2)`` mixed
+  rounding of douglas_peucker.ml:88-98.
 - distance: haversine, truncated, with the reference's radius constant
   (units: the reference uses r = 6371*1e6, i.e. millimeters;
   /root/reference/osm/geometry.ml:26-36).  ``distance_m`` floors to meters.
@@ -46,6 +46,16 @@ def _trunc_div(a, b):
     a = np.asarray(a)
     q = np.abs(a) // np.abs(b)
     return np.where(np.sign(a) * np.sign(b) < 0, -q, q)
+
+
+def concat_ranges(starts, lens):
+    """Concatenation of ``arange(s, s + l)`` over (starts, lens) pairs in
+    one vectorized pass: the gather index of a CSR segment list."""
+    starts = np.asarray(starts, np.int64)
+    lens = np.asarray(lens, np.int64)
+    ends = np.cumsum(lens)
+    return (np.arange(ends[-1] if len(ends) else 0, dtype=np.int64)
+            + np.repeat(starts - (ends - lens), lens))
 
 
 # ---------------------------------------------------------------------------
@@ -369,8 +379,7 @@ def polygon_areas_packed(px, py, starts, lens):
             vlens = lens[valid]
             # index gather (not a repeat-mask) so packs whose starts
             # are non-contiguous stay correct on this rare path
-            idx = np.concatenate([np.arange(s, s + l) for s, l in
-                                  zip(starts[valid], vlens)])
+            idx = concat_ranges(starts[valid], vlens)
             vstarts = np.concatenate(
                 ([0], np.cumsum(vlens)[:-1])).astype(np.int64)
             out[valid] = polygon_areas_packed(
@@ -461,62 +470,70 @@ def hilbert_key(lat_fp, lon_fp):
 # Douglas-Peucker
 
 
-def douglas_peucker_int(eps: int, x, y):
-    """Integer Douglas-Peucker; exact semantics of
-    /root/reference/osm/douglas_peucker.ml:73-127:
+def simplify_ring_int(eps, x, y, lens):
+    """Integer Douglas-Peucker over many polylines packed end to end in
+    flat arrays: polyline k is the next ``lens[k]`` vertices of (x, y)
+    and simplifies at its own ``eps[k]`` (a scalar applies to all).
 
-    - squared-eps comparison, strict `>`;
-    - perpendicular case rounds via truncate(float(n)*float(n)/float(d2));
-    - endpoint-distance cases for t<=0 / t>=d2;
-    - polylines of <=2 points returned unchanged.
+    Exact semantics of douglas_peucker.ml:73-127: squared-eps
+    comparison, strict ``>``; the perpendicular case rounds via
+    ``truncate(float(n)*float(n)/float(d2))``; endpoint distances for
+    ``t <= 0`` / ``t >= d2`` (so ``d2 == 0`` measures from the start);
+    the first index of the maximum splits; polylines of <= 2 points
+    keep every vertex.  Level-synchronous: each pass splits every open
+    interval of every polyline at once (segment maximum by ``reduceat``),
+    so Python runs once per recursion depth, never per interval.
 
-    Returns a boolean keep-mask over the input vertices (the kept
-    subsequence equals the reference's output order).
+    Returns a boolean keep-mask over the flat vertices (the kept
+    subsequence of each polyline equals the reference's output order).
     """
     x = np.asarray(x, np.int64)
     y = np.asarray(y, np.int64)
-    n_pts = len(x)
-    keep = np.zeros(n_pts, dtype=bool)
-    keep[0] = keep[-1] = True
-    if n_pts <= 2:
-        return keep
-    eps2 = eps * eps
-    stack = [(0, n_pts - 1)]
-    while stack:
-        i1, i2 = stack.pop()
-        if i2 - i1 < 2:
-            continue
-        dx = int(x[i2] - x[i1])
-        dy = int(y[i2] - y[i1])
-        d2 = dx * dx + dy * dy
-        xi = x[i1 + 1 : i2]
-        yi = y[i1 + 1 : i2]
-        dxp = xi - x[i1]
-        dyp = yi - y[i1]
+    lens = np.asarray(lens, np.int64)
+    eps2 = np.broadcast_to(np.asarray(eps, np.int64), lens.shape) ** 2
+    ends = np.cumsum(lens)
+    keep = np.zeros(len(x), dtype=bool)
+    keep[(ends - lens)[lens > 0]] = True
+    keep[ends[lens > 0] - 1] = True
+    # open intervals (i1, i2) with interior points, each with its eps^2
+    opn = lens > 2
+    i1, i2, e2 = (ends - lens)[opn], ends[opn] - 1, eps2[opn]
+    while len(i1):
+        n = i2 - i1 - 1
+        seg = np.cumsum(n) - n
+        i = concat_ranges(i1 + 1, n)
+        dx = x[i2] - x[i1]
+        dy = y[i2] - y[i1]
+        d2 = np.repeat(dx * dx + dy * dy, n)
+        dx = np.repeat(dx, n)
+        dy = np.repeat(dy, n)
+        dxp = x[i] - np.repeat(x[i1], n)
+        dyp = y[i] - np.repeat(y[i1], n)
+        dxe = x[i] - np.repeat(x[i2], n)
+        dye = y[i] - np.repeat(y[i2], n)
         t = dx * dxp + dy * dyp
-        # three distance regimes, matching douglas_peucker.ml:85-98
-        d_start = dxp * dxp + dyp * dyp
-        dxe = xi - x[i2]
-        dye = yi - y[i2]
-        d_end = dxe * dxe + dye * dye
-        ncross = dx * dyp - dy * dxp
-        d_perp = np.trunc(
-            ncross.astype(np.float64) * ncross.astype(np.float64) / float(d2)
-        ).astype(np.int64) if d2 != 0 else d_start
-        dist = np.where(t <= 0, d_start, np.where(t >= d2, d_end, d_perp))
-        max_i_rel = int(np.argmax(dist))
-        if int(dist[max_i_rel]) > eps2:
-            mi = i1 + 1 + max_i_rel
-            keep[mi] = True
-            stack.append((i1, mi))
-            stack.append((mi, i2))
+        nc = (dx * dyp - dy * dxp).astype(np.float64)
+        # d2 == 0 implies t == 0, so the guarded divisor is never read
+        d_perp = np.trunc(nc * nc / np.maximum(d2, 1).astype(np.float64))
+        dist = np.where(t <= 0, dxp * dxp + dyp * dyp,
+                        np.where(t >= d2, dxe * dxe + dye * dye,
+                                 d_perp.astype(np.int64)))
+        mx = np.maximum.reduceat(dist, seg)
+        at_max = np.flatnonzero(dist == np.repeat(mx, n))
+        mi = i[at_max[np.searchsorted(at_max, seg)]]
+        split = mx > e2
+        i1, mi, i2, e2 = i1[split], mi[split], i2[split], e2[split]
+        keep[mi] = True
+        i1, i2, e2 = (np.concatenate((i1, mi)), np.concatenate((mi, i2)),
+                      np.concatenate((e2, e2)))
+        opn = i2 - i1 >= 2
+        i1, i2, e2 = i1[opn], i2[opn], e2[opn]
     return keep
 
 
-def simplify_ring_int(eps: int, x, y):
-    """DP-simplify a closed ring; returns (x', y') kept arrays."""
-    m = douglas_peucker_int(eps, x, y)
-    return np.asarray(x, np.int64)[m], np.asarray(y, np.int64)[m]
+def douglas_peucker_int(eps: int, x, y):
+    """Keep-mask of one polyline: ``simplify_ring_int`` on a batch of one."""
+    return simplify_ring_int(eps, x, y, [len(x)])
 
 
 # ---------------------------------------------------------------------------

@@ -23,15 +23,18 @@ def geocode_pages(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Add ``page_id``, ``lat``, ``lon`` derived from the url.
 
     Falls back to the hash geocode of ``page_id`` when no geo slug exists.
+    Whatever cannot be derived is NULL, never a task failure: a url
+    without a ``page<digits>`` suffix, or a number that overflows
+    ``long`` (``try_cast`` under ANSI casts).
     """
-    page_id = F.regexp_extract(F.col(url_col), r"page(\d+)$", 1).cast("long")
+    page_id = F.regexp_extract(F.col(url_col), r"page(\d+)$", 1).try_cast("long")
     lat_s = F.regexp_extract(F.col(url_col), _GEO_RE, 1)
     lon_s = F.regexp_extract(F.col(url_col), _GEO_RE, 2)
     lat_h, lon_h = geocode_id_cols(page_id)
     return (
         df.withColumn("page_id", page_id)
-        .withColumn("lat", F.when(lat_s != "", lat_s.cast("long")).otherwise(lat_h))
-        .withColumn("lon", F.when(lon_s != "", lon_s.cast("long")).otherwise(lon_h))
+        .withColumn("lat", F.when(lat_s != "", lat_s.try_cast("long")).otherwise(lat_h))
+        .withColumn("lon", F.when(lon_s != "", lon_s.try_cast("long")).otherwise(lon_h))
     )
 
 

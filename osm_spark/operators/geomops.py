@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.geo import kernels as K
+from osm_spark.operators.spatial_join import flat_values, ring_cols
 
 
 def haversine_col(lat1, lon1, lat2, lon2):
@@ -68,24 +69,21 @@ def feature_areas(polys: DataFrame) -> DataFrame:
 def feature_dp_counts(polys: DataFrame, ratio: int) -> DataFrame:
     """(feature_id, n_in, n_kept): Douglas-Peucker vertex retention per
     feature at epsilon=ratio (douglas_peucker.ml:73-127 int semantics),
-    summed over rings."""
+    summed over rings; one batched DP over every ring of the batch."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {"feature_id": [], "n_in": [], "n_kept": []}
-            for fid, rings in zip(pdf["feature_id"], pdf["rings"]):
-                n_in = n_kept = 0
-                for r in rings:
-                    la = np.asarray(r["lat"], np.int64)
-                    lo = np.asarray(r["lon"], np.int64)
-                    n_in += len(la)
-                    n_kept += int(K.douglas_peucker_int(ratio, lo, la).sum())
-                out["feature_id"].append(fid)
-                out["n_in"].append(n_in)
-                out["n_kept"].append(n_kept)
-            yield pd.DataFrame(out)
+            lens, _ = flat_values(pdf["lens"])
+            la, n_in = flat_values(pdf["flat_lat"])
+            lo, _ = flat_values(pdf["flat_lon"])
+            keep = K.simplify_ring_int(ratio, lo, la, lens)
+            vfeat = np.repeat(np.arange(len(pdf)), n_in)
+            yield pd.DataFrame({
+                "feature_id": pdf["feature_id"].to_numpy(np.int64),
+                "n_in": n_in,
+                "n_kept": np.bincount(vfeat[keep], minlength=len(pdf))})
 
-    return polys.select("feature_id", "rings").mapInPandas(
+    return polys.select("feature_id", *ring_cols()).mapInPandas(
         fn, "feature_id long, n_in long, n_kept long")
 
 

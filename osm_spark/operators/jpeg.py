@@ -447,17 +447,24 @@ class _BitReader:
             v = (v << 1) | self.bit()
         return v
 
-    def sync_rst(self) -> None:
-        """Consume the RST marker at the current byte boundary."""
+    def sync_rst(self, n: int) -> None:
+        """Consume restart marker RST(n mod 8).  It must start at the byte
+        boundary where the interval's entropy data ends, after optional
+        0xFF fill bytes: a reader holding a whole unread byte (it read
+        past the boundary) or 1-bits it had to invent (the marker came
+        early), a different RST number, or anything else at the boundary
+        raises."""
+        d = self.data
+        at_boundary = self.nbits < 8 and not self.truncated
         self.acc = 0
         self.nbits = 0
-        d = self.data
-        while self.pos + 1 < len(d):
-            if d[self.pos] == 0xFF and 0xD0 <= d[self.pos + 1] <= 0xD7:
-                self.pos += 2
-                return
-            self.pos += 1
-        raise ValueError("JPEG: missing restart marker")
+        p = self.pos
+        while p + 2 < len(d) and d[p] == 0xFF and d[p + 1] == 0xFF:
+            p += 1                                # fill bytes
+        if not (at_boundary and p + 1 < len(d) and d[p] == 0xFF
+                and d[p + 1] == 0xD0 + (n & 7)):
+            raise ValueError("JPEG: missing restart marker")
+        self.pos = p + 2
 
 
 def _huff_read(r: _BitReader, h: _HuffDecoder) -> int:
@@ -568,7 +575,7 @@ def decode_jpeg_gray(b: bytes) -> np.ndarray:
     n_mcu = mcu_x * mcu_y
     for mi in range(n_mcu):
         if dri and mi and mi % dri == 0:
-            r.sync_rst()
+            r.sync_rst(mi // dri - 1)
             preds = [0] * len(comps)
         my, mx = divmod(mi, mcu_x)
         for ci, c in enumerate(comps):

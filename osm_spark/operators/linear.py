@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.geo import kernels as K
+from osm_spark.operators.spatial_join import flat_values
 from osm_spark.operators.tiles import ZOOM_BANDS, band_params
 
 # category -> lowest zoom band that includes it; the analog of the
@@ -35,42 +36,50 @@ LINE_TILE_SCHEMA = (
 
 
 def _line_tiles_pandas(zooms: tuple[int, ...]):
-    params = [(z, band_params(z)[1]) for z in zooms]
+    """One batched Douglas-Peucker over every (way, zoom passing the
+    way's category filter) of the batch; spans from reduceat over the
+    keep mask."""
+    ratios = np.array([band_params(z)[1] for z in zooms], np.int64)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {k: [] for k in ("way_id", "category", "z", "x_min",
-                                   "x_max", "y_min", "y_max", "n_pts")}
-            for wid, cat, lats, lons in zip(
-                pdf["way_id"], pdf["category"], pdf["lats"], pdf["lons"]
-            ):
-                la = np.asarray(lats, np.int64)
-                lo = np.asarray(lons, np.int64)
-                if len(la) < 2:       # degenerate way: no line, and DP
-                    continue          # would crash on an empty array
-                min_z = CATEGORY_MIN_ZOOM.get(int(cat), DEFAULT_MIN_ZOOM)
-                for z, ratio in params:
-                    if z < min_z:
-                        continue
-                    keep = K.douglas_peucker_int(ratio, lo, la)
-                    sla, slo = la[keep], lo[keep]
-                    if len(sla) < 2:
-                        continue
-                    # clamp to the valid tile range: mercator y diverges
-                    # at the poles (lat -90 -> row 26836 at z=12) and
-                    # lon=+180 gives x=2^z — without the clamp the
-                    # explode downstream fabricates thousands of
-                    # nonexistent tiles per way
-                    n = (1 << z) - 1
-                    out["way_id"].append(wid)
-                    out["category"].append(cat)
-                    out["z"].append(z)
-                    out["x_min"].append(min(max(int(K.tile_x(slo.min(), z)), 0), n))
-                    out["x_max"].append(min(max(int(K.tile_x(slo.max(), z)), 0), n))
-                    out["y_min"].append(min(max(int(K.tile_y_float(sla.max(), z)), 0), n))
-                    out["y_max"].append(min(max(int(K.tile_y_float(sla.min(), z)), 0), n))
-                    out["n_pts"].append(len(sla))
-            yield pd.DataFrame(out)
+            la, n = flat_values(pdf["lats"])
+            lo, _ = flat_values(pdf["lons"])
+            min_z = (pdf["category"].map(CATEGORY_MIN_ZOOM)
+                     .fillna(DEFAULT_MIN_ZOOM).to_numpy(np.int64))
+            # a degenerate way (< 2 points) has no line
+            w, b = np.nonzero((n[:, None] >= 2)
+                              & (np.asarray(zooms)[None, :] >= min_z[:, None]))
+            ilen = n[w]
+            v = K.concat_ranges((np.cumsum(n) - n)[w], ilen)
+            vla, vlo = la[v], lo[v]
+            keep = K.simplify_ring_int(ratios[b], vlo, vla, ilen)
+            kept = np.add.reduceat(keep, np.cumsum(ilen) - ilen,
+                                   dtype=np.int64)
+            k0 = np.cumsum(kept) - kept
+            sla, slo = vla[keep], vlo[keep]
+            bbox = (np.minimum.reduceat(slo, k0), np.maximum.reduceat(slo, k0),
+                    np.maximum.reduceat(sla, k0), np.minimum.reduceat(sla, k0))
+            parts = []
+            for bi, z in enumerate(zooms):
+                g = np.flatnonzero(b == bi)
+                # clamp to the valid tile range: mercator y diverges at
+                # the poles (lat -90 -> row 26836 at z=12) and lon=+180
+                # gives x=2^z — without the clamp the explode downstream
+                # fabricates thousands of nonexistent tiles per way
+                nmax = (1 << z) - 1
+                x0, x1, ya, yb = (a[g] for a in bbox)
+                parts.append(pd.DataFrame({
+                    "way_id": pdf["way_id"].to_numpy()[w[g]],
+                    "category": pdf["category"].to_numpy()[w[g]],
+                    "z": z,
+                    "x_min": np.clip(K.tile_x(x0, z), 0, nmax),
+                    "x_max": np.clip(K.tile_x(x1, z), 0, nmax),
+                    "y_min": np.clip(K.tile_y_float(ya, z), 0, nmax),
+                    "y_max": np.clip(K.tile_y_float(yb, z), 0, nmax),
+                    "n_pts": kept[g],
+                }))
+            yield pd.concat(parts, ignore_index=True)
 
     return fn
 

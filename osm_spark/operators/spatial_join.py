@@ -12,9 +12,11 @@ cells (z-order prefix == slippy tile) as the spatial partitioning key:
   3. candidate join on cell — ``broadcast`` for small layers, else a
      shuffle join with optional **salting** for hot cells + AQE skew
      splitting,
-  4. exact PIP verify with a vectorized crossing-number kernel (Arrow
-     pandas UDF, grouped by ring inside each batch so the inner loop is
-     numpy over all points of one ring).
+  4. exact PIP verify with a flattened crossing-number kernel: one
+     numpy pass per Arrow batch over (point, candidate edge) pairs
+     gathered through a CSR cell index (``CellIndex``), reduced to ring
+     parity and then the holes rule with ``reduceat`` — no per-cell or
+     per-ring Python.
 
 JVM keys route, numpy decides: Spark-side cell keys (``with_cell``,
 ``polygon_cells``) only route rows to a task or a layer read, so no
@@ -27,8 +29,8 @@ no role-1 (hole) ring — matching the reference's hole handling
 (cat=0 rings mark holes, osm/lib/osm_display.ml:593-598).
 
 Scale notes (100 TB design):
-- the polygon side after explode is (features × covering cells) — for
-  OSM-planet-sized layers this still broadcasts per-cell slices well; the
+- the broadcast CSR index stores every vertex once; only its 8-byte
+  (cell, polygon) registrations grow with the covering cells; the
   cogroup path shuffles pages once on cell id, which is also the layout
   a tile-partitioned Iceberg table would already have (no extra shuffle).
 - the html/binary column is never referenced → column pruning keeps it
@@ -38,15 +40,19 @@ Scale notes (100 TB design):
 from __future__ import annotations
 
 import math
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.geo import kernels as K
 
 DEFAULT_CELL_ZOOM = 12
+CKEY_SCALE = 1 << 32      # cell key = cx * CKEY_SCALE + cy
 
 
 # ---------------------------------------------------------------------------
@@ -132,170 +138,242 @@ def polygon_cells(polys: DataFrame, z: int = DEFAULT_CELL_ZOOM) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# shared edge-packed PIP kernel (broadcast AND cogroup paths)
+# CSR cell index + flattened PIP kernel (broadcast, partitioned and
+# cogroup paths)
 
 
-def _pack_polys(polys: list) -> tuple:
-    """Pack [(fid, [(role, lat_arr, lon_arr), ...]), ...] into flat
-    int64 edge arrays so PIP is ONE vectorized crossing-number pass over
-    (all edges) × (all points) — no per-polygon Python in the hot loop:
-    (exi, eyi, exj, eyj, ring_starts, ring_poly, ring_role, fids)."""
-    exi, eyi, exj, eyj = [], [], [], []
-    ring_starts, ring_poly, ring_role, fids = [], [], [], []
-    pos = 0
-    for local, (fid, rings) in enumerate(polys):
-        fids.append(fid)
-        for role, rla, rlo in rings:
-            if len(rla) < 2:
-                # zero-edge ring: no area, and its empty reduceat
-                # segment would corrupt the neighboring ring's count
-                continue
-            ring_starts.append(pos)
-            ring_poly.append(local)
-            ring_role.append(role)
-            exi.append(rlo[:-1]); exj.append(rlo[1:])
-            eyi.append(rla[:-1]); eyj.append(rla[1:])
-            pos += len(rla) - 1
-    if not exi:
-        z64 = np.empty(0, np.int64)
-        return (z64, z64, z64, z64, z64, z64, z64,
-                np.asarray(fids, np.int64))
-    return (
-        np.concatenate(exi), np.concatenate(eyi),
-        np.concatenate(exj), np.concatenate(eyj),
-        np.asarray(ring_starts, np.int64),
-        np.asarray(ring_poly, np.int64),
-        np.asarray(ring_role, np.int64),
-        np.asarray(fids, np.int64),
-    )
-
-
-def _pip_pack(pack: tuple, lo: np.ndarray, la: np.ndarray):
-    """Exact PIP of points (lo, la) against a packed polygon set.
-
-    Crossing-number with the reference's tie rules
-    (osm/geometry.ml:157-174), vectorized edges × points; points are
-    chunked so the work set stays ~L2-resident.  Holes: inside = in some
-    role-0 ring of the feature and in none of its role-1 rings.
-    Returns (poly_idx, point_idx) match index arrays.
-    """
-    exi, eyi, exj, eyj, rstarts, rpoly, rrole, fids = pack
-    dx = (exj - exi)[:, None]
-    dy = (eyj - eyi)[:, None]
-    outer_rings = rrole == 0
-    n_local = len(fids)
-    out_p: list[np.ndarray] = []
-    out_i: list[np.ndarray] = []
-    pchunk = max(64, (1 << 18) // max(len(exi), 1))
-    for cs in range(0, len(lo), pchunk):
-        x = lo[cs:cs + pchunk][None, :]
-        y = la[cs:cs + pchunk][None, :]
-        pi = eyi[:, None] >= y
-        pj = eyj[:, None] >= y
-        cross = pi != pj
-        d = dx * (y - eyi[:, None]) - (x - exi[:, None]) * dy
-        toggle = (cross & ((d >= 0) != pi)).astype(np.int16)
-        cnt = np.add.reduceat(toggle, rstarts, axis=0)
-        inr = (cnt & 1).astype(bool)       # rings × points
-        in_outer = np.zeros((n_local, x.shape[1]), dtype=bool)
-        in_hole = np.zeros((n_local, x.shape[1]), dtype=bool)
-        np.logical_or.at(in_outer, rpoly[outer_rings], inr[outer_rings])
-        np.logical_or.at(in_hole, rpoly[~outer_rings], inr[~outer_rings])
-        p_idx, pt_idx = np.nonzero(in_outer & ~in_hole)
-        out_p.append(p_idx)
-        out_i.append(pt_idx + cs)
-    return (np.concatenate(out_p) if out_p else np.empty(0, np.int64),
-            np.concatenate(out_i) if out_i else np.empty(0, np.int64))
-
-
-def _rings_of(rings) -> list:
-    """Normalize a rings payload (Rows from collect(), dicts from Arrow)
-    to [(role, lat_arr, lon_arr), ...]."""
+def ring_cols() -> list:
+    """A ``rings`` payload as flat primitive columns: ``roles`` and
+    ``lens`` (vertices) per ring, ``flat_lat`` / ``flat_lon`` per
+    vertex.  JVM-side array ops; the index build consumes these."""
     return [
-        (int(r["role"]),
-         np.asarray(r["lat"], np.int64),
-         np.asarray(r["lon"], np.int64))
-        for r in rings
+        F.expr("transform(rings, r -> r.role)").alias("roles"),
+        F.expr("transform(rings, r -> size(r.lat))").alias("lens"),
+        F.flatten(F.expr("transform(rings, r -> r.lat)")).alias("flat_lat"),
+        F.flatten(F.expr("transform(rings, r -> r.lon)")).alias("flat_lon"),
     ]
 
 
+def flat_values(col: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """(concatenated int64 values, per-row lengths) of a list column."""
+    parts = col.to_list()
+    n = np.fromiter(map(len, parts), np.int64, len(parts))
+    return (np.concatenate(parts).astype(np.int64, copy=False) if n.sum()
+            else np.empty(0, np.int64)), n
+
+
+class CellIndex(NamedTuple):
+    """CSR cell index of a polygon layer at zoom ``z``; every vertex is
+    stored once, whatever the number of cells its polygon covers.
+
+    Cell ``keys[c]`` (``cx * CKEY_SCALE + cy``, sorted) registers the
+    polygons ``cell_poly[cell_off[c]:cell_off[c + 1]]`` (bbox
+    registration); polygon ``p`` owns rings ``poly_ring[p]:poly_ring[p +
+    1]``; ring ``r`` owns vertices ``ring_vert[r]:ring_vert[r + 1]`` of
+    ``lat`` / ``lon``, its edges join consecutive vertices, and
+    ``ring_hole[r]`` marks a non-outer role.  ``lat_min`` / ``lat_max``
+    / ``lon_max`` bound each polygon's vertices.  Zero-edge rings and
+    polygons left without rings are not stored: they match nothing.
+    Pickled size (a ring of v vertices has v - 1 edges): 16 B/edge +
+    25 B/ring + 40 B/polygon + 8 B/(cell, polygon) registration +
+    16 B/cell, plus ~1 kB of framing."""
+    z: int
+    keys: np.ndarray
+    cell_off: np.ndarray
+    cell_poly: np.ndarray
+    poly_ring: np.ndarray
+    ring_vert: np.ndarray
+    ring_hole: np.ndarray
+    lat: np.ndarray
+    lon: np.ndarray
+    fids: np.ndarray
+    lat_min: np.ndarray
+    lat_max: np.ndarray
+    lon_max: np.ndarray
+
+
+def _build_group_index_packed(polys_pdf: pd.DataFrame, z: int) -> CellIndex:
+    """CSR cell index of a polygon layer from its ``feature_id`` and
+    ``ring_cols`` columns: one concat per column, zero-edge rings and
+    ring-less polygons dropped by masks, bboxes by reduceat, and the
+    (cell, polygon) registrations expanded and sorted once — no
+    per-polygon or per-cell Python."""
+    fids = polys_pdf["feature_id"].to_numpy(np.int64)
+    lens, n_rings = flat_values(polys_pdf["lens"])
+    roles, _ = flat_values(polys_pdf["roles"])
+    lat, _ = flat_values(polys_pdf["flat_lat"])
+    lon, _ = flat_values(polys_pdf["flat_lon"])
+    ring_poly = np.repeat(np.arange(len(fids)), n_rings)
+    # a zero-edge (0/1-vertex) ring carries no area, and its empty
+    # reduceat segment would take crossings from its neighbour
+    ok = lens >= 2
+    if not ok.all():
+        vkeep = np.repeat(ok, lens)
+        lat, lon = lat[vkeep], lon[vkeep]
+        lens, roles, ring_poly = lens[ok], roles[ok], ring_poly[ok]
+    live, ring_poly = np.unique(ring_poly, return_inverse=True)
+    fids = fids[live]
+    n_poly = len(fids)
+    poly_ring = np.concatenate(
+        ([0], np.cumsum(np.bincount(ring_poly, minlength=n_poly))))
+    ring_vert = np.concatenate(([0], np.cumsum(lens)))
+    # bbox cells: each polygon registers the cx0..cx1 x cy0..cy1 block
+    pv = ring_vert[poly_ring[:-1]]
+    box = [f.reduceat(a, pv) if n_poly else pv for f, a in (
+        (np.minimum, lon), (np.maximum, lon),
+        (np.minimum, lat), (np.maximum, lat))]
+    cx0, cx1 = K.tile_x(box[0], z), K.tile_x(box[1], z)
+    cy0, cy1 = K.tile_y_float(box[3], z), K.tile_y_float(box[2], z)
+    ny = cy1 - cy0 + 1
+    n_cells = (cx1 - cx0 + 1) * ny
+    reg = np.repeat(np.arange(n_poly), n_cells)
+    k = K.concat_ranges(np.zeros(n_poly, np.int64), n_cells)
+    key = (cx0[reg] + k // ny[reg]) * CKEY_SCALE + cy0[reg] + k % ny[reg]
+    order = np.argsort(key, kind="stable")
+    keys, first = np.unique(key[order], return_index=True)
+    return CellIndex(
+        z=int(z), keys=keys,
+        cell_off=np.append(first, len(key)).astype(np.int64),
+        cell_poly=reg[order], poly_ring=poly_ring, ring_vert=ring_vert,
+        ring_hole=roles != 0, lat=lat, lon=lon, fids=fids,
+        lat_min=box[2], lat_max=box[3], lon_max=box[1])
+
+
+# elements per vectorized chunk: (point, polygon) pairs and (pair, ring)
+# segments per point chunk, (pair, edge) slots per crossing-test chunk;
+# ~10 int64 temporaries of this length stay a few tens of MB
+PIP_CHUNK = 1 << 18
+
+
+def _chunks(sizes: np.ndarray):
+    """``[s, e)`` runs of consecutive items whose ``sizes`` sum to at
+    most ``PIP_CHUNK``; an item larger than that runs alone."""
+    ends = np.cumsum(sizes)
+    s = 0
+    while s < len(sizes):
+        e = max(s + 1, int(np.searchsorted(ends, ends[s] - sizes[s] + PIP_CHUNK,
+                                           side="right")))
+        yield s, e
+        s = e
+
+
+def _pip_pack(index: CellIndex, la: np.ndarray, lo: np.ndarray):
+    """Exact PIP of one point batch against a CSR cell index, as one
+    flattened pass: points sort by cell and ``searchsorted`` into the
+    keys, then run in chunks of at most ``PIP_CHUNK`` candidate (point,
+    ring) segments — their cells' polygons' rings — so every temporary
+    is bounded by the chunk, not by the batch.  Per chunk, (point,
+    candidate polygon) pairs within the polygon's bbox and their (pair,
+    ring) segments gather through the CSR offsets; over sub-chunks of
+    whole segments, the edges a point's row crosses take the crossing
+    test with the reference's tie rules (osm/geometry.ml:157-174:
+    ``py >= y``, ``d >= 0``) and their toggles count into ring parity
+    per segment; a ``reduceat`` over each pair's rings applies the holes
+    rule (inside = in some outer ring of the polygon and in none of its
+    holes).  Returns (point_idx, feature_id) match arrays."""
+    empty = np.empty(0, np.int64)
+    if not len(index.keys) or not len(la):
+        return empty, empty
+    key = K.tile_x(lo, index.z) * CKEY_SCALE + K.tile_y_float(la, index.z)
+    order = np.argsort(key, kind="stable")
+    key = key[order]
+    c = np.minimum(np.searchsorted(index.keys, key), len(index.keys) - 1)
+    found = index.keys[c] == key
+    pts, c = order[found], c[found]
+    cell_rings = np.add.reduceat(np.diff(index.poly_ring)[index.cell_poly],
+                                 index.cell_off[:-1])
+    hits, fids = [empty], [empty]
+    for s, e in _chunks(cell_rings[c]):
+        h, f = _pip_points(index, la, lo, pts[s:e], c[s:e])
+        hits.append(h)
+        fids.append(f)
+    return np.concatenate(hits), np.concatenate(fids)
+
+
+def _pip_points(index: CellIndex, la, lo, pts, c):
+    """``_pip_pack`` of the points ``pts`` found in index cells ``c``."""
+    # (point, polygon) candidate pairs inside the polygon's bbox: a point
+    # above, below or east of every vertex toggles no edge
+    n = index.cell_off[c + 1] - index.cell_off[c]
+    pair_pt = np.repeat(pts, n)
+    pair_poly = index.cell_poly[K.concat_ranges(index.cell_off[c], n)]
+    y, x = la[pair_pt], lo[pair_pt]
+    near = ((y >= index.lat_min[pair_poly]) & (y <= index.lat_max[pair_poly])
+            & (x <= index.lon_max[pair_poly]))
+    pair_pt, pair_poly = pair_pt[near], pair_poly[near]
+    if not len(pair_poly):
+        return pair_pt, pair_poly
+    # (pair, ring) segments and their edge counts
+    nr = index.poly_ring[pair_poly + 1] - index.poly_ring[pair_poly]
+    ring = K.concat_ranges(index.poly_ring[pair_poly], nr)
+    seg_pt = np.repeat(pair_pt, nr)
+    v0 = index.ring_vert[ring]
+    ne = index.ring_vert[ring + 1] - v0 - 1
+    odd = np.empty(len(ring), dtype=np.uint8)
+    for s, e in _chunks(ne):
+        m = ne[s:e]
+        v = K.concat_ranges(v0[s:e], m)
+        y = np.repeat(la[seg_pt[s:e]], m)
+        yi, yj = index.lat[v], index.lat[v + 1]
+        pi = yi >= y
+        # only an edge the point's row crosses can toggle
+        cross = np.flatnonzero(pi != (yj >= y))
+        seg = np.searchsorted(np.cumsum(m) - m, cross, side="right") - 1
+        v, y, yi, yj, pi = v[cross], y[cross], yi[cross], yj[cross], pi[cross]
+        x = lo[seg_pt[s + seg]]
+        xi, xj = index.lon[v], index.lon[v + 1]
+        d = (xj - xi) * (y - yi) - (x - xi) * (yj - yi)
+        odd[s:e] = np.bincount(seg[(d >= 0) != pi], minlength=e - s) & 1
+    # per pair: bit 0 = in an outer ring, bit 1 = in a hole
+    code = odd << index.ring_hole[ring].astype(np.uint8)
+    inside = np.bitwise_or.reduceat(code, np.cumsum(nr) - nr) == 1
+    return pair_pt[inside], index.fids[pair_poly[inside]]
+
+
+def _point_batch(batch):
+    """(keys, lat, lon, valid) of a (key, lat, lon) Arrow batch; a row
+    with a NULL coordinate is not valid and matches nothing."""
+    la, lo = batch.column(1), batch.column(2)
+    valid = pc.and_(la.is_valid(), lo.is_valid()).to_numpy(
+        zero_copy_only=False)
+    return (batch.column(0),
+            pc.fill_null(la, 0).to_numpy().astype(np.int64, copy=False),
+            pc.fill_null(lo, 0).to_numpy().astype(np.int64, copy=False),
+            valid)
+
+
+def _match_emit(index: CellIndex | None, batch, how: str):
+    """One (key, lat, lon) Arrow batch -> its (k, feature_id) rows;
+    ``how='left'`` appends every unmatched key with a NULL feature_id."""
+    keys, la, lo, valid = _point_batch(batch)
+    hits = fids = np.empty(0, np.int64)
+    if index is not None:
+        ok = np.flatnonzero(valid)
+        hits, fids = _pip_pack(index, la[ok], lo[ok])
+        hits = ok[hits]
+    null = np.zeros(len(hits), dtype=bool)
+    if how == "left":
+        miss = np.ones(len(keys), dtype=bool)
+        miss[hits] = False
+        miss = np.flatnonzero(miss)
+        hits = np.concatenate((hits, miss))
+        fids = np.concatenate((fids, np.zeros(len(miss), np.int64)))
+        null = np.concatenate((null, np.ones(len(miss), dtype=bool)))
+    return pa.RecordBatch.from_arrays(
+        [keys.take(pa.array(hits)).cast(pa.int64()),
+         pa.array(fids, type=pa.int64(), mask=null)],
+        names=["k", "feature_id"])
+
+
 # ---------------------------------------------------------------------------
-# broadcast path: cell-indexed PIP in one mapInPandas pass
-
-def build_cell_index(poly_rows, z: int):
-    """Driver-side cell index of a collected polygon layer — the
-    in-memory analog of the R-tree the reference scans per viewport
-    (rtree.ml:173-195): bbox registration per covering cell, exact PIP
-    at query time; per-cell layout from ``_pack_polys``."""
-    per_cell: dict[tuple[int, int], list] = {}
-    for r in poly_rows:
-        fid = int(r["feature_id"])
-        rings = _rings_of(r["rings"])
-        la = np.concatenate([rg[1] for rg in rings])
-        lo = np.concatenate([rg[2] for rg in rings])
-        cx0 = int(K.tile_x(lo.min(), z)); cx1 = int(K.tile_x(lo.max(), z))
-        cy0 = int(K.tile_y_float(la.max(), z)); cy1 = int(K.tile_y_float(la.min(), z))
-        for cx in range(cx0, cx1 + 1):
-            for cy in range(cy0, cy1 + 1):
-                per_cell.setdefault((cx, cy), []).append((fid, rings))
-    return {cell: _pack_polys(polys) for cell, polys in per_cell.items()}
+# broadcast path: one mapInArrow pass over a broadcast CellIndex
 
 
-def _match_batch(index: dict, la: np.ndarray, lo: np.ndarray, z: int):
-    """Match one point batch against a (cell -> packed polys) index:
-    sort by cell key, one ``_pip_pack`` pass per occupied cell.
-    Returns (point_idx, feature_id) arrays."""
-    cx = K.tile_x(lo, z)
-    cy = K.tile_y_float(la, z)
-    cell_key = (cx << 32) | cy
-    order = np.argsort(cell_key, kind="stable")
-    out_i: list[np.ndarray] = []
-    out_f: list[np.ndarray] = []
-    uniq, starts = np.unique(cell_key[order], return_index=True)
-    bounds = np.append(starts, len(order))
-    for u, s0, s1 in zip(uniq, bounds[:-1], bounds[1:]):
-        cell = index.get((int(u >> 32), int(u & 0xFFFFFFFF)))
-        if cell is None:
-            continue
-        ii_all = order[s0:s1]
-        p_idx, pt_idx = _pip_pack(cell, lo[ii_all], la[ii_all])
-        if len(p_idx):
-            out_i.append(ii_all[pt_idx])
-            out_f.append(cell[7][p_idx])
-    return (np.concatenate(out_i) if out_i else np.empty(0, np.int64),
-            np.concatenate(out_f) if out_f else np.empty(0, np.int64))
-
-
-def _broadcast_join_mapper(bc, z: int, how: str):
+def _broadcast_join_mapper(bc, how: str):
     def fn(batches):
         index = bc.value
-        for pdf in batches:
-            keys = pdf.iloc[:, 0].to_numpy()
-            la = pdf["lat"].to_numpy(np.int64)
-            lo = pdf["lon"].to_numpy(np.int64)
-            out_k: list[np.ndarray] = []
-            out_f: list[np.ndarray] = []
-            matched = np.zeros(len(keys), dtype=bool)
-            hits, fids = _match_batch(index, la, lo, z)
-            if len(hits):
-                matched[hits] = True
-                out_k.append(keys[hits])
-                out_f.append(fids)
-            n_miss = 0
-            if how == "left":
-                miss = keys[~matched]
-                n_miss = len(miss)
-                out_k.append(miss)
-                out_f.append(np.zeros(n_miss, np.int64))
-            kcat = np.concatenate(out_k) if out_k else np.empty(0, np.int64)
-            fcat = np.concatenate(out_f) if out_f else np.empty(0, np.int64)
-            mask = np.zeros(len(kcat), dtype=bool)
-            if n_miss:
-                mask[len(kcat) - n_miss:] = True  # NULL feature_id for misses
-            yield pd.DataFrame({
-                "k": kcat,
-                "feature_id": pd.arrays.IntegerArray(fcat, mask),
-            })
+        for batch in batches:
+            yield _match_emit(index, batch, how)
 
     return fn
 
@@ -336,14 +414,17 @@ def broadcast_polygon_index(polys: DataFrame, z: int = DEFAULT_CELL_ZOOM):
     """Collect + cell-index a polygon layer and broadcast it.  Build once
     per layer version and reuse across joins — at 10^12 pages the build
     cost amortizes to zero (the reference builds its R-tree once the
-    same way, rtree.ml:90-134)."""
-    spark = polys.sparkSession
-    index = build_cell_index(polys.select("feature_id", "rings").collect(), z)
-    return spark.sparkContext.broadcast(index)
+    same way, rtree.ml:90-134).  One collect of the flat ring columns,
+    then the vectorized CSR build."""
+    cols = polys.select("feature_id", *ring_cols())
+    pdf = pd.DataFrame(cols.collect(), columns=cols.columns)
+    return polys.sparkSession.sparkContext.broadcast(
+        _build_group_index_packed(pdf, z))
 
 
-# polygon layers up to this many total vertices broadcast (~32 B/edge
-# packed → ≈64 MB index); larger layers take the salted cell-cogroup path
+# polygon layers up to this many total vertices broadcast (CSR index:
+# 16 B/vertex + small per-ring/per-cell terms → ≈40 MB); larger layers
+# take the partitioned or the salted cell-cogroup path
 BROADCAST_MAX_VERTS = 2_000_000
 
 
@@ -353,8 +434,7 @@ BROADCAST_MAX_VERTS = 2_000_000
 # entirely.  FIFO-bounded; keyed by (cx, cy, z) + feature-id AND
 # geometry checksums (vertex count, wrapped coordinate sums/xors), so
 # a stale entry cannot be served for a different polygon set, a moved
-# geometry, or a different fine zoom.  The checksum costs one vertex
-# concat, reused by the build on a miss.
+# geometry, or a different fine zoom.
 _GROUP_INDEX_CACHE: dict = {}
 _GROUP_INDEX_CACHE_MAX = 32
 
@@ -365,9 +445,9 @@ def _cogroup_cell_fn(page_key: str, z: int):
 
     Rings cross the shuffle ONCE per (coarse cell, salt replica) —
     never per candidate (page, polygon) pair.  Inside each group the
-    SAME machinery as the broadcast path runs: a local fine-zoom cell
-    index over the group's polygons, then one vectorized PIP pass per
-    occupied fine cell.  Cogrouping at a coarser zoom keeps groups few
+    SAME machinery as the broadcast path runs: a fine-zoom CSR cell
+    index over the group's polygons, then one flattened PIP pass over
+    the group's pages.  Cogrouping at a coarser zoom keeps groups few
     and large (per-group Arrow overhead amortizes over ~10^3-10^4
     pages instead of ~10^2); the per-worker index cache dedups the
     build across salt replicas of the same cell."""
@@ -380,30 +460,24 @@ def _cogroup_cell_fn(page_key: str, z: int):
                 "feature_id": pd.array([], dtype="int64"),
             })
         fid_arr = polys_pdf["feature_id"].to_numpy(np.int64)
-        lat_l = [np.asarray(v, np.int64) for v in polys_pdf["flat_lat"]]
-        lon_l = [np.asarray(v, np.int64) for v in polys_pdf["flat_lon"]]
-        V_lat = (np.concatenate(lat_l) if lat_l
-                 else np.empty(0, np.int64))
-        V_lon = (np.concatenate(lon_l) if lon_l
-                 else np.empty(0, np.int64))
+        v_lat, _ = flat_values(polys_pdf["flat_lat"])
+        v_lon, _ = flat_values(polys_pdf["flat_lon"])
         with np.errstate(over="ignore"):
             ck = (int(key[0]), int(key[1]), z, len(fid_arr),
                   int(fid_arr.sum()), int(np.bitwise_xor.reduce(fid_arr)),
-                  len(V_lat),
-                  int(V_lat.sum(dtype=np.int64)),
-                  int(V_lon.sum(dtype=np.int64)),
-                  int(np.bitwise_xor.reduce(V_lat)) if len(V_lat) else 0,
-                  int(np.bitwise_xor.reduce(V_lon)) if len(V_lon) else 0)
+                  len(v_lat),
+                  int(v_lat.sum(dtype=np.int64)),
+                  int(v_lon.sum(dtype=np.int64)),
+                  int(np.bitwise_xor.reduce(v_lat)) if len(v_lat) else 0,
+                  int(np.bitwise_xor.reduce(v_lon)) if len(v_lon) else 0)
         index = _GROUP_INDEX_CACHE.get(ck)
         if index is None:
-            index = _build_group_index_packed(polys_pdf, fid_arr, z,
-                                              lat_l=lat_l, lon_l=lon_l)
+            index = _build_group_index_packed(polys_pdf, z)
             while len(_GROUP_INDEX_CACHE) >= _GROUP_INDEX_CACHE_MAX:
                 _GROUP_INDEX_CACHE.pop(next(iter(_GROUP_INDEX_CACHE)))
             _GROUP_INDEX_CACHE[ck] = index
-        lo = pts_pdf["lon"].to_numpy(np.int64)
-        la = pts_pdf["lat"].to_numpy(np.int64)
-        pt_idx, fids = _match_batch(index, la, lo, z)
+        pt_idx, fids = _pip_pack(index, pts_pdf["lat"].to_numpy(np.int64),
+                                 pts_pdf["lon"].to_numpy(np.int64))
         keys = pts_pdf[page_key].to_numpy()
         return pd.DataFrame({
             "k": keys[pt_idx],
@@ -411,90 +485,6 @@ def _cogroup_cell_fn(page_key: str, z: int):
         })
 
     return fn
-
-
-def _build_group_index_packed(polys_pdf: pd.DataFrame,
-                              fid_arr: np.ndarray, z: int,
-                              lat_l: list | None = None,
-                              lon_l: list | None = None) -> dict:
-    """Fine-zoom cell index from the group's flat vertex arrays: one
-    global concat, edge arrays via two boolean masks (drop each ring's
-    last / first vertex), per-feature bboxes via reduceat, per-cell
-    packs via slice-concat — no per-ring Python anywhere."""
-    nf = len(fid_arr)
-    if lat_l is None:
-        lat_l = [np.asarray(v, np.int64) for v in polys_pdf["flat_lat"]]
-        lon_l = [np.asarray(v, np.int64) for v in polys_pdf["flat_lon"]]
-    else:
-        lat_l, lon_l = list(lat_l), list(lon_l)
-    lens_l = [np.asarray(v, np.int64) for v in polys_pdf["lens"]]
-    roles_l = [np.asarray(v, np.int64) for v in polys_pdf["roles"]]
-    # drop zero-edge rings (0- or 1-vertex): they carry no area, and
-    # their empty reduceat segments would crash on (or steal crossing
-    # counts from) neighboring rings.  Rare, so repack only when hit.
-    for f in range(nf):
-        l = lens_l[f]
-        if len(l) and (l < 2).any():
-            keep = l >= 2
-            vkeep = np.repeat(keep, l)
-            lat_l[f] = lat_l[f][vkeep]
-            lon_l[f] = lon_l[f][vkeep]
-            lens_l[f] = l[keep]
-            roles_l[f] = roles_l[f][keep]
-    V_lat = np.concatenate(lat_l)
-    V_lon = np.concatenate(lon_l)
-    n_verts = np.fromiter((len(a) for a in lat_l), np.int64, nf)
-    voff = np.concatenate(([0], np.cumsum(n_verts)))
-    ring_vlens = np.concatenate(lens_l)           # vertices per ring
-    rends = np.cumsum(ring_vlens)                  # global vertex offsets
-    rstarts_v = rends - ring_vlens
-    # edge arrays: ring-aligned "all but last" / "all but first" vertices
-    mask_i = np.ones(len(V_lat), dtype=bool); mask_i[rends - 1] = False
-    mask_j = np.ones(len(V_lat), dtype=bool); mask_j[rstarts_v] = False
-    EXI = V_lon[mask_i]; EYI = V_lat[mask_i]
-    EXJ = V_lon[mask_j]; EYJ = V_lat[mask_j]
-    n_rings = np.fromiter((len(l) for l in lens_l), np.int64, nf)
-    foff_e = np.concatenate(([0], np.cumsum(n_verts - n_rings)))
-    ring_elens_l = [l - 1 for l in lens_l]         # edges per ring
-    # per-feature bbox (reduceat over the vertex arrays); a feature
-    # left with no vertices registers no cells (empty segment guard)
-    if not len(V_lat):
-        return {}
-    nonempty = n_verts > 0
-    st = np.minimum(voff[:-1], len(V_lat) - 1)
-    lo_min = np.minimum.reduceat(V_lon, st)
-    lo_max = np.maximum.reduceat(V_lon, st)
-    la_min = np.minimum.reduceat(V_lat, st)
-    la_max = np.maximum.reduceat(V_lat, st)
-    cx0 = K.tile_x(lo_min, z)
-    cx1 = K.tile_x(lo_max, z)
-    cy0 = K.tile_y_float(la_max, z)
-    cy1 = K.tile_y_float(la_min, z)
-    per_cell: dict[tuple[int, int], list[int]] = {}
-    for i in range(nf):
-        if not nonempty[i]:
-            continue
-        for cx in range(int(cx0[i]), int(cx1[i]) + 1):
-            for cy in range(int(cy0[i]), int(cy1[i]) + 1):
-                per_cell.setdefault((cx, cy), []).append(i)
-    index = {}
-    for cell, fi in per_cell.items():
-        sl = [slice(foff_e[f], foff_e[f + 1]) for f in fi]
-        rl = [ring_elens_l[f] for f in fi]
-        ring_lens = np.concatenate(rl)
-        ring_starts = np.concatenate(([0], np.cumsum(ring_lens)[:-1]))
-        index[cell] = (
-            np.concatenate([EXI[s] for s in sl]),
-            np.concatenate([EYI[s] for s in sl]),
-            np.concatenate([EXJ[s] for s in sl]),
-            np.concatenate([EYJ[s] for s in sl]),
-            ring_starts.astype(np.int64),
-            np.repeat(np.arange(len(fi), dtype=np.int64),
-                      [len(r) for r in rl]),
-            np.concatenate([roles_l[f] for f in fi]),
-            fid_arr[np.asarray(fi, np.int64)],
-        )
-    return index
 
 
 # ---------------------------------------------------------------------------
@@ -508,7 +498,6 @@ def _build_group_index_packed(polys_pdf: pd.DataFrame,
 # the pages side, layer size bounded by disk not executor memory.
 
 
-CKEY_SCALE = 1 << 32
 COARSE_SHIFT = 3          # coarse partition cells at z - COARSE_SHIFT
 
 
@@ -548,10 +537,7 @@ def write_partitioned_layer(polys: DataFrame, path: str,
     cells = polygon_cells(polys.select("feature_id", "rings"), zc).select(
         (F.col("cx").cast("long") * CKEY_SCALE + F.col("cy")).alias("gkey"),
         "feature_id",
-        F.expr("transform(rings, r -> r.role)").alias("roles"),
-        F.expr("transform(rings, r -> size(r.lat))").alias("lens"),
-        F.flatten(F.expr("transform(rings, r -> r.lat)")).alias("flat_lat"),
-        F.flatten(F.expr("transform(rings, r -> r.lon)")).alias("flat_lon"),
+        *ring_cols(),
     )
     (cells.repartitionByRange(n_files, "gkey")
      .sortWithinPartitions("gkey")
@@ -588,15 +574,13 @@ def _partitioned_join_mapper(layer_path: str, z: int, zc: int, how: str,
         # whole coarse cells here; the first span group reads (and prunes
         # by row-group stats on the gkey-sorted file) the numpy coarse
         # cells of its points, later groups only read cells not yet seen.
-        # The vectorized index rebuild on a cache miss is effectively
-        # free (BENCH/ANALYSIS.md round-3 floor decomposition).
         seen_gk: set[int] = set()
-        have_fid: set[int] = set()
+        have_fid = np.empty(0, np.int64)
         layer_parts: list[pd.DataFrame] = []
         index = None
 
         def ensure_index(gk: np.ndarray):
-            nonlocal index
+            nonlocal index, have_fid
             miss = [int(v) for v in np.unique(gk) if int(v) not in seen_gk]
             if miss:
                 seen_gk.update(miss)
@@ -604,65 +588,40 @@ def _partitioned_join_mapper(layer_path: str, z: int, zc: int, how: str,
                     filter=pads.field("gkey").isin(miss))
                 if tbl.num_rows:
                     # a polygon spanning k cells appears k times in the
-                    # file (and across successive range reads); dedupe
-                    # by feature before the index build — the build
-                    # re-registers every covering cell itself
-                    lp = tbl.to_pandas().drop_duplicates("feature_id")
-                    lp = lp[~lp["feature_id"].isin(have_fid)]
-                    if len(lp):
-                        have_fid.update(
-                            int(v) for v in lp["feature_id"].to_numpy())
-                        layer_parts.append(lp)
+                    # file (and across successive range reads); keep one
+                    # copy per feature — the build registers every
+                    # covering cell itself
+                    fid = tbl.column("feature_id").to_numpy()
+                    u, first = np.unique(fid, return_index=True)
+                    new = ~np.isin(u, have_fid)
+                    if new.any():
+                        have_fid = np.concatenate((have_fid, u[new]))
+                        layer_parts.append(
+                            tbl.take(pa.array(first[new])).to_pandas())
                         index = None
             if index is None and layer_parts:
                 lpdf = (layer_parts[0] if len(layer_parts) == 1
                         else pd.concat(layer_parts, ignore_index=True))
-                fid_arr = lpdf["feature_id"].to_numpy(np.int64)
-                index = _build_group_index_packed(lpdf, fid_arr, z)
+                index = _build_group_index_packed(lpdf, z)
             return index
 
-        def flush(group: list[pd.DataFrame]) -> pd.DataFrame:
-            pdf = group[0] if len(group) == 1 else pd.concat(group)
-            keys = pdf[page_key].to_numpy()
-            la = pdf["lat"].to_numpy(np.int64)
-            lo = pdf["lon"].to_numpy(np.int64)
-            gk = K.tile_x(lo, zc) * CKEY_SCALE + K.tile_y_float(la, zc)
-            out_k: list[np.ndarray] = []
-            out_f: list[np.ndarray] = []
-            matched = np.zeros(len(keys), dtype=bool)
-            idx = ensure_index(gk) if len(gk) else None
-            if idx is not None:
-                hits, fids = _match_batch(idx, la, lo, z)
-                if len(hits):
-                    matched[hits] = True
-                    out_k.append(keys[hits])
-                    out_f.append(fids)
-            n_miss = 0
-            if how == "left":
-                miss = keys[~matched]
-                n_miss = len(miss)
-                out_k.append(miss)
-                out_f.append(np.zeros(n_miss, np.int64))
-            kcat = np.concatenate(out_k) if out_k else np.empty(0, np.int64)
-            fcat = np.concatenate(out_f) if out_f else np.empty(0, np.int64)
-            mask = np.zeros(len(kcat), dtype=bool)
-            if n_miss:
-                mask[len(kcat) - n_miss:] = True
-            return pd.DataFrame({
-                "k": kcat,
-                "feature_id": pd.arrays.IntegerArray(fcat, mask),
-            })
+        def flush(group: list) -> pa.RecordBatch:
+            batch = (group[0] if len(group) == 1 else
+                     pa.Table.from_batches(group).combine_chunks()
+                     .to_batches()[0])
+            _, la, lo, valid = _point_batch(batch)
+            gk = (K.tile_x(lo[valid], zc) * CKEY_SCALE
+                  + K.tile_y_float(la[valid], zc))
+            return _match_emit(ensure_index(gk) if len(gk) else None,
+                               batch, how)
 
-        group: list[pd.DataFrame] = []
+        group: list = []
         gbytes = 0
         for b in batches:
-            if not len(b):
+            if not b.num_rows:
                 continue
             group.append(b)
-            # deep=True: object-dtype columns (string page keys / urls)
-            # must count their payload, not 8 bytes/pointer — otherwise
-            # held memory can exceed the budget by the string factor
-            gbytes += int(b.memory_usage(index=False, deep=True).sum())
+            gbytes += b.nbytes
             if gbytes >= budget:
                 yield flush(group)
                 group, gbytes = [], 0
@@ -707,7 +666,7 @@ def spatial_join_partitioned(
         if salt > 1:
             keys.append(F.pmod(F.xxhash64(page_key), F.lit(salt)))
         pts = pts.repartition(*keys)
-    return pts.mapInPandas(
+    return pts.mapInArrow(
         _partitioned_join_mapper(layer_path, z, zc, how, page_key),
         "k long, feature_id long",
     ).withColumnRenamed("k", page_key)
@@ -735,9 +694,9 @@ def spatial_join(
     Strategy (``broadcast_polys=None`` auto-picks from the measured
     layer size — one cheap aggregate over the polygon side only):
 
-    - **broadcast**: ships a (cell → packed polygon) index to every
-      executor once and PIP-tags pages in a single mapInPandas pass —
-      zero shuffles, zero joins.  Right whenever the packed layer fits
+    - **broadcast**: ships a CSR cell index to every executor once
+      and PIP-tags pages in a single mapInArrow pass —
+      zero shuffles, zero joins.  Right whenever the CSR index fits
       comfortably in executor memory (``broadcast_max_verts``).
     - **partitioned disk-index** (when ``layer_path`` — a
       ``write_partitioned_layer`` output — is given): pages
@@ -769,8 +728,8 @@ def spatial_join(
 
     if broadcast_polys:
         bc = index if index is not None else broadcast_polygon_index(polys, z)
-        out = pages.select(page_key, "lat", "lon").mapInPandas(
-            _broadcast_join_mapper(bc, z, how),
+        out = pages.select(page_key, "lat", "lon").mapInArrow(
+            _broadcast_join_mapper(bc, how),
             "k long, feature_id long",
         ).withColumnRenamed("k", page_key)
         return out
@@ -790,10 +749,7 @@ def spatial_join(
     # payloads segfault pyspark's cogroup Arrow->pandas conversion.
     cells = polygon_cells(polys.select("feature_id", "rings"), zc).select(
         "cx", "cy", "feature_id",
-        F.expr("transform(rings, r -> r.role)").alias("roles"),
-        F.expr("transform(rings, r -> size(r.lat))").alias("lens"),
-        F.flatten(F.expr("transform(rings, r -> r.lat)")).alias("flat_lat"),
-        F.flatten(F.expr("transform(rings, r -> r.lon)")).alias("flat_lon"),
+        *ring_cols(),
     )
 
     keys = ["cx", "cy"]

@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osm_spark.geo import kernels as K
-from osm_spark.operators.spatial_join import tile_x_col, tile_y_col
+from osm_spark.operators.spatial_join import (flat_values, ring_cols,
+                                              tile_x_col, tile_y_col)
 
 ZOOM_BANDS = (6, 8, 10, 12)
 BUILDING_CAT = 12  # fixture category id used for the building exception
@@ -107,46 +108,31 @@ def page_tiles_exact(pages_geo: DataFrame, rows_df: DataFrame, key: str = "page_
 
 
 def _feature_tiles_pandas(zooms: tuple[int, ...]):
-    """Areas and full-resolution bboxes are computed in ONE vectorized
-    pass over the batch's packed ring arrays (polygon_areas_packed +
-    reduceat bboxes); only DP simplification — inherently per-ring —
-    and the post-simplification bboxes stay in the per-feature loop,
-    and that loop only runs for features passing a zoom's area cutoff."""
+    """Flat passes over the batch's packed ring arrays, no per-feature
+    or per-ring Python: areas by ``polygon_areas_packed``, full-resolution
+    bboxes by reduceat, then ONE batched Douglas-Peucker over every
+    (band, feature passing the band's area cutoff, ring) at the band's
+    eps; the simplified bboxes, point counts and the "outer ring keeps
+    < 4 points" drop come from reduceat over its keep mask."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        params = [(z, *band_params(z)) for z in zooms]
-        empty = {"feature_id": [], "category": [], "band": [], "z": [],
-                 "x_min": [], "x_max": [], "y_min": [], "y_max": [], "n_pts": []}
+        cutoffs = np.array([band_params(z)[0] for z in zooms], np.int64)
+        ratios = np.array([band_params(z)[1] for z in zooms], np.int64)
         for pdf in batches:
-            # a feature with no rings (or only empty ones) has no
-            # geometry and no tiles; dropping it here also keeps the
-            # packed searchsorted/reduceat bookkeeping below aligned
-            if len(pdf):
-                pdf = pdf[pdf["rings"].map(
-                    lambda rs: any(len(r["lat"]) for r in rs))]
-            nf = len(pdf)
-            if nf == 0:
-                yield pd.DataFrame(empty)
-                continue
-            feat_rings: list[list] = []
-            ring_feat, las, los = [], [], []
-            for fi, rings in enumerate(pdf["rings"]):
-                arrs = [
-                    (np.asarray(r["lat"], np.int64),
-                     np.asarray(r["lon"], np.int64), r["role"])
-                    for r in rings
-                    if len(r["lat"])
-                ]
-                feat_rings.append(arrs)
-                for la_, lo_, _ in arrs:
-                    ring_feat.append(fi)
-                    las.append(la_)
-                    los.append(lo_)
-            lens = np.array([len(x) for x in las], np.int64)
-            la = np.concatenate(las)
-            lo = np.concatenate(los)
-            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-            ring_feat = np.asarray(ring_feat, np.int64)
+            lens, n_rings = flat_values(pdf["lens"])
+            roles, _ = flat_values(pdf["roles"])
+            la, _ = flat_values(pdf["flat_lat"])
+            lo, _ = flat_values(pdf["flat_lon"])
+            # empty rings carry no geometry, and a feature left without
+            # rings has no tiles
+            ring_feat = np.repeat(np.arange(len(pdf)), n_rings)[lens > 0]
+            roles = roles[lens > 0]
+            lens = lens[lens > 0]
+            live, ring_feat = np.unique(ring_feat, return_inverse=True)
+            fids = pdf["feature_id"].to_numpy(np.int64)[live]
+            cats = pdf["category"].to_numpy(np.int64)[live]
+            nf = len(fids)
+            starts = np.cumsum(lens) - lens
 
             ring_area = K.polygon_areas_packed(lo, la, starts, lens)
             feat_area = np.zeros(nf, np.int64)
@@ -154,59 +140,59 @@ def _feature_tiles_pandas(zooms: tuple[int, ...]):
 
             # full-res per-feature bbox + point count (rings are
             # contiguous per feature in the packed layout)
-            feat_first_ring = np.searchsorted(ring_feat, np.arange(nf))
-            fp_starts = starts[feat_first_ring]
-            lo_min = np.minimum.reduceat(lo, fp_starts)
-            lo_max = np.maximum.reduceat(lo, fp_starts)
-            la_min = np.minimum.reduceat(la, fp_starts)
-            la_max = np.maximum.reduceat(la, fp_starts)
-            n_pts = np.add.reduceat(lens, feat_first_ring)
-
-            fids = pdf["feature_id"].to_numpy(np.int64)
-            cats = pdf["category"].to_numpy(np.int64)
+            first_ring = np.searchsorted(ring_feat, np.arange(nf))
+            fp = starts[first_ring]
             is_small = (feat_area <= SMALL_AREA) | (
                 (feat_area <= 50_000_000) & (cats == BUILDING_CAT))
+            parts = [pd.DataFrame({
+                "feature_id": fids, "category": cats,
+                "band": np.where(is_small, "small", "large"), "z": 14,
+                "x_min": K.tile_x(np.minimum.reduceat(lo, fp), 14),
+                "x_max": K.tile_x(np.maximum.reduceat(lo, fp), 14),
+                "y_min": K.tile_y_float(np.maximum.reduceat(la, fp), 14),
+                "y_max": K.tile_y_float(np.minimum.reduceat(la, fp), 14),
+                "n_pts": np.add.reduceat(lens, first_ring),
+            })]
 
-            out = {
-                "feature_id": fids.tolist(),
-                "category": cats.tolist(),
-                "band": np.where(is_small, "small", "large").tolist(),
-                "z": [14] * nf,
-                "x_min": K.tile_x(lo_min, 14).tolist(),
-                "x_max": K.tile_x(lo_max, 14).tolist(),
-                "y_min": K.tile_y_float(la_max, 14).tolist(),
-                "y_max": K.tile_y_float(la_min, 14).tolist(),
-                "n_pts": n_pts.tolist(),
-            }
-
-            for z, cutoff, ratio in params:
-                for fi in np.nonzero(feat_area >= cutoff)[0]:
-                    simp = []
-                    degenerate = False
-                    for la_, lo_, role in feat_rings[fi]:
-                        sla, slo = K.simplify_ring_int(ratio, la_, lo_)
-                        if role == 0 and len(sla) < 4:
-                            degenerate = True
-                            break
-                        simp.append((sla, slo))
-                    if degenerate:
-                        continue
-                    sla = np.concatenate([r[0] for r in simp])
-                    slo = np.concatenate([r[1] for r in simp])
-                    out["feature_id"].append(int(fids[fi]))
-                    out["category"].append(int(cats[fi]))
-                    out["band"].append(str(z))
-                    out["z"].append(z)
+            # one DP over (band, feature over the band's cutoff, ring)
+            sel = [np.flatnonzero(feat_area[ring_feat] >= c) for c in cutoffs]
+            ring = np.concatenate(sel)
+            if len(ring):
+                band = np.repeat(np.arange(len(zooms)), [len(r) for r in sel])
+                ilen = lens[ring]
+                v = K.concat_ranges(starts[ring], ilen)
+                vla, vlo = la[v], lo[v]
+                keep = K.simplify_ring_int(ratios[band], vla, vlo, ilen)
+                kept = np.add.reduceat(keep, np.cumsum(ilen) - ilen,
+                                       dtype=np.int64)
+                # (band, feature) groups are contiguous runs of rings
+                gid = band * nf + ring_feat[ring]
+                g0 = np.flatnonzero(np.r_[True, gid[1:] != gid[:-1]])
+                dropped = np.logical_or.reduceat(
+                    (roles[ring] == 0) & (kept < 4), g0)
+                k0 = (np.cumsum(kept) - kept)[g0]
+                sla, slo = vla[keep], vlo[keep]
+                gb, gf = band[g0], ring_feat[ring[g0]]
+                n_pts = np.add.reduceat(kept, g0)
+                bbox = (np.minimum.reduceat(slo, k0), np.maximum.reduceat(slo, k0),
+                        np.maximum.reduceat(sla, k0), np.minimum.reduceat(sla, k0))
+                for b, z in enumerate(zooms):
+                    g = np.flatnonzero((gb == b) & ~dropped)
                     # clamp to [0, 2^z-1]: polar latitudes blow up the
                     # mercator row and lon=+180 gives x=2^z; the span
                     # explode downstream must not fabricate tiles
                     nmax = (1 << z) - 1
-                    out["x_min"].append(min(max(int(K.tile_x(slo.min(), z)), 0), nmax))
-                    out["x_max"].append(min(max(int(K.tile_x(slo.max(), z)), 0), nmax))
-                    out["y_min"].append(min(max(int(K.tile_y_float(sla.max(), z)), 0), nmax))
-                    out["y_max"].append(min(max(int(K.tile_y_float(sla.min(), z)), 0), nmax))
-                    out["n_pts"].append(int(len(sla)))
-            yield pd.DataFrame(out)
+                    x0, x1, ya, yb = (a[g] for a in bbox)
+                    parts.append(pd.DataFrame({
+                        "feature_id": fids[gf[g]], "category": cats[gf[g]],
+                        "band": str(z), "z": z,
+                        "x_min": np.clip(K.tile_x(x0, z), 0, nmax),
+                        "x_max": np.clip(K.tile_x(x1, z), 0, nmax),
+                        "y_min": np.clip(K.tile_y_float(ya, z), 0, nmax),
+                        "y_max": np.clip(K.tile_y_float(yb, z), 0, nmax),
+                        "n_pts": n_pts[g],
+                    }))
+            yield pd.concat(parts, ignore_index=True)
 
     return fn
 
@@ -220,7 +206,7 @@ FEATURE_TILE_SCHEMA = (
 def feature_tile_spans(polys: DataFrame, zooms: tuple[int, ...] = ZOOM_BANDS) -> DataFrame:
     """Per (feature, band): covering tile span after per-band area filter +
     DP simplification.  One mapInPandas pass over the polygon layer."""
-    return polys.select("feature_id", "category", "rings").mapInPandas(
+    return polys.select("feature_id", "category", *ring_cols()).mapInPandas(
         _feature_tiles_pandas(tuple(zooms)), FEATURE_TILE_SCHEMA
     )
 

@@ -534,6 +534,41 @@ def test_jpeg_encode_rejects_out_of_range_dri():
     assert encode_baseline(img, dri=0xFFFF)
 
 
+def test_jpeg_restart_marker_checked_at_interval_boundary():
+    """RSTn is accepted only where the interval's entropy data ends
+    (0xFF fill bytes allowed) and only with the expected number
+    0xD0 + (i & 7): a swapped number or a marker moved a few bytes either
+    way raises ValueError; an untouched stream still roundtrips."""
+    import numpy as np
+    import pytest
+
+    from osm_spark.operators.jpeg import decode_jpeg_gray, encode_baseline
+
+    rng = np.random.default_rng(11)
+    img = rng.integers(0, 256, (32, 48)).astype(np.uint8)
+    plain = decode_jpeg_gray(encode_baseline(img, quality=80))
+    b = encode_baseline(img, quality=80, dri=2)
+    assert np.array_equal(decode_jpeg_gray(b), plain)
+    sos = b.find(b"\xff\xda")
+    marks = [i for i in range(sos, len(b) - 1)
+             if b[i] == 0xFF and 0xD0 <= b[i + 1] <= 0xD7]
+    assert len(marks) == 11
+    filled = bytearray(b)
+    filled[marks[3]:marks[3]] = b"\xff\xff"
+    assert np.array_equal(decode_jpeg_gray(bytes(filled)), plain)
+    for i in marks[:9]:
+        swapped = bytearray(b)
+        swapped[i + 1] = 0xD0 + ((b[i + 1] + 1) & 7)
+        with pytest.raises(ValueError, match="restart marker"):
+            decode_jpeg_gray(bytes(swapped))
+        for shift in (-3, -1, 1, 2, 3):
+            moved = bytearray(b)
+            del moved[i:i + 2]
+            moved[i + shift:i + shift] = b[i:i + 2]
+            with pytest.raises(ValueError):
+                decode_jpeg_gray(bytes(moved))
+
+
 def test_jpeg_corrupt_streams_route_to_fallback(spark):
     """Corrupt (not merely truncated) streams raise KeyError/IndexError/
     ValueError from the parser — decode_and_resize must catch ALL of

@@ -1,4 +1,5 @@
-"""Linear-feature tiling + clipping tests vs pure-python oracles."""
+"""Linear-feature tiling + clipping tests vs pure-python oracles (the
+scalar DP oracle is ``kernel_oracles.dp_scalar``)."""
 
 from __future__ import annotations
 
@@ -8,6 +9,9 @@ import pytest
 from osm_spark import fixtures as FX
 from osm_spark.geo import kernels as K
 from osm_spark.operators import linear as L
+from osm_spark.operators.tiles import band_params
+
+from kernel_oracles import dp_scalar
 
 
 @pytest.fixture(scope="module")
@@ -26,9 +30,7 @@ def test_linear_tile_spans_match_kernel(spark, roads):
         for z in (8, 12):
             if z < min_z:
                 continue
-            from osm_spark.operators.tiles import band_params
-
-            keep = K.douglas_peucker_int(band_params(z)[1], lo, la)
+            keep = dp_scalar(band_params(z)[1], lo, la)
             sla, slo = la[keep], lo[keep]
             if len(sla) < 2:
                 continue

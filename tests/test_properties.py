@@ -6,18 +6,23 @@ pure-kernel tests, the §5 property-test layer of the build plan.
 The scalar twins live in tools/make_goldens.py (where they also gate
 the golden VALUES oracles); using them here means every random
 counterexample would break the driver gate too.
+
+The per-ring DP and per-cell PIP formulations that the batched kernels
+replaced live in tests/kernel_oracles.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from osm_spark.geo import kernels as K
 from osm_spark.sources import pbf, pbf_fixture
 from tools.make_goldens import (scalar_is_simple, scalar_pip,
                                 scalar_seg_intersect)
+
+from kernel_oracles import dp_scalar, flat_layer, pip_cells_reference
 
 coord = st.integers(min_value=-1000, max_value=1000)
 
@@ -172,3 +177,123 @@ def test_jpeg_dri_stream_decodes_identically(h, w, dri, color, seed):
     rst = decode_jpeg_gray(encode_baseline(img, quality=82, dri=dri))
     assert plain.shape == (h, w)
     assert np.array_equal(plain, rst)
+
+
+# ------------------------------------------- flattened kernels vs oracles
+
+# small coordinates make duplicate, collinear and d2 == 0 spans common
+dp_coord = st.one_of(st.integers(-4, 4), st.integers(-10**6, 10**6))
+polyline = st.lists(st.tuples(dp_coord, dp_coord), max_size=25)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.tuples(polyline, st.integers(0, 3000),
+                          st.sampled_from(["plain", "closed", "collinear",
+                                           "repeat"])),
+                min_size=1, max_size=6))
+# (2,2) is 1.6 from the chord: truncation keeps it out at eps=1
+@example([([(0, 0), (2, 2), (3, 1)], 1, "plain")])
+def test_batched_dp_matches_scalar_oracle(lines):
+    """One ``simplify_ring_int`` pass over a batch of polylines, each at
+    its own eps (including 0), keeps exactly what the scalar stack DP
+    keeps on each polyline alone."""
+    xs, ys, lens, eps = [], [], [], []
+    for pts, e, shape in lines:
+        x = np.array([p[0] for p in pts], np.int64)
+        y = np.array([p[1] for p in pts], np.int64)
+        if shape == "closed" and len(x):
+            x, y = np.append(x, x[0]), np.append(y, y[0])      # d2 == 0
+        elif shape == "collinear":
+            y = 3 * x + 7
+        elif shape == "repeat":
+            x, y = np.repeat(x, 2), np.repeat(y, 2)             # duplicates
+        xs.append(x)
+        ys.append(y)
+        lens.append(len(x))
+        eps.append(e)
+    keep = K.simplify_ring_int(np.array(eps), np.concatenate(xs),
+                               np.concatenate(ys), lens)
+    want = [dp_scalar(e, x, y) for e, x, y in zip(eps, xs, ys)]
+    assert keep.tolist() == np.concatenate(want).tolist()
+    for e, x, y, w in zip(eps, xs, ys, want):
+        if len(x):
+            assert K.douglas_peucker_int(e, x, y).tolist() == w.tolist()
+
+
+PIP_Z = 12
+LAT0, LON0 = 488_000_000, 23_000_000
+pip_off = st.integers(-2_500_000, 2_500_000)
+pip_ring = st.tuples(
+    st.integers(0, 2),                          # role: 0 outer, else hole
+    st.lists(st.tuples(pip_off, pip_off), max_size=8),
+    st.booleans())                              # closed
+pip_layer = st.lists(st.lists(pip_ring, min_size=1, max_size=3),
+                     min_size=1, max_size=6)
+
+
+def _row_boundary(row: int) -> int:
+    """Smallest fixed-point lat numpy puts north of tile row ``row``."""
+    lo, hi = -850_000_000, 850_000_000
+    while hi - lo > 1:
+        mid = (lo + hi) // 2
+        if K.tile_y_float(mid, PIP_Z) < row:
+            hi = mid
+        else:
+            lo = mid
+    return hi
+
+
+@settings(max_examples=150, deadline=None)
+@given(pip_layer, st.lists(st.tuples(pip_off, pip_off), max_size=30),
+       st.integers(0, 2**32))
+def test_csr_pip_matches_per_cell_reference(layer, free_pts, seed):
+    """The flattened CSR matcher equals the per-cell dense PIP on random
+    layers with holes, zero-edge and open rings, for points on vertices,
+    on edges, on tile-row boundaries and anywhere — also with a chunk
+    size of 1..13 elements."""
+    from osm_spark.operators import spatial_join as SJ
+    from osm_spark.operators.spatial_join import (_build_group_index_packed,
+                                                 _pip_pack)
+
+    polys = []
+    for fid, rings in enumerate(layer, start=100):
+        rs = []
+        for role, pts, closed in rings:
+            la = np.array([LAT0 + p[0] for p in pts], np.int64)
+            lo = np.array([LON0 + p[1] for p in pts], np.int64)
+            if closed and len(la):
+                la, lo = np.append(la, la[0]), np.append(lo, lo[0])
+            rs.append((role, la, lo))
+        polys.append((fid, rs))
+    rng = np.random.default_rng(seed)
+    pla = [LAT0 + np.array([p[0] for p in free_pts], np.int64)]
+    plo = [LON0 + np.array([p[1] for p in free_pts], np.int64)]
+    for _, rs in polys:
+        for _, la, lo in rs:
+            pla.append(la)
+            plo.append(lo)
+            for i in range(len(la) - 1):            # lattice points on edges
+                dy, dx = int(la[i + 1] - la[i]), int(lo[i + 1] - lo[i])
+                g = max(np.gcd(dy, dx), 1)
+                k = rng.integers(0, g + 1)
+                pla.append(np.array([la[i] + k * (dy // g)]))
+                plo.append(np.array([lo[i] + k * (dx // g)]))
+    rows = K.tile_y_float(np.array([LAT0 + 2_500_000, LAT0 - 2_500_000]), PIP_Z)
+    for row in range(int(rows[0]), int(rows[1]) + 2):
+        b = _row_boundary(row)
+        pla.append(np.array([b - 1, b, b + 1], np.int64))
+        plo.append(LON0 + rng.integers(-2_500_000, 2_500_000, 3))
+    la, lo = np.concatenate(pla), np.concatenate(plo)
+
+    index = _build_group_index_packed(flat_layer(polys), PIP_Z)
+    hits, fids = _pip_pack(index, la, lo)
+    got = set(zip(hits.tolist(), fids.tolist()))
+    assert len(got) == len(hits)                 # no duplicate pair
+    assert got == pip_cells_reference(polys, la, lo, PIP_Z)
+    # point and edge chunks cut anywhere leave the matches unchanged
+    default, SJ.PIP_CHUNK = SJ.PIP_CHUNK, 1 + seed % 13
+    try:
+        hits, fids = _pip_pack(index, la, lo)
+    finally:
+        SJ.PIP_CHUNK = default
+    assert sorted(zip(hits.tolist(), fids.tolist())) == sorted(got)

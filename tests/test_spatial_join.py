@@ -11,6 +11,8 @@ from osm_spark.geo import kernels as K
 from osm_spark.operators.geocode import geocode_pages
 from osm_spark.operators.spatial_join import spatial_join
 
+from kernel_oracles import flat_layer
+
 N_PAGES = 400
 N_SMALL = 120
 
@@ -173,9 +175,12 @@ def test_partitioned_mapper_streams_bounded(spark, tmp_path, monkeypatch):
     # direct generator probe: the mapper is a plain generator function —
     # drive it with a pull-counting input and check it yields output
     # before consuming the whole partition
+    import pyarrow as pa
+
     zc = SJ._read_layer_meta(layer)["zc"]
     pts = docs.select("doc_id", "lat", "lon").toPandas()
-    chunks = [c for c in np.array_split(pts, 8) if len(c)]
+    chunks = [pa.RecordBatch.from_pandas(c, preserve_index=False)
+              for c in np.array_split(pts, 8) if len(c)]
     pulled = 0
 
     def gen():
@@ -285,25 +290,25 @@ def test_degenerate_rings_skipped(spark):
     crash) the packed reduceat segments on either PIP path."""
     import pandas as pd
 
-    from osm_spark.operators.spatial_join import (
-        _build_group_index_packed, _match_batch, _pack_polys, _pip_pack)
+    from osm_spark.operators.spatial_join import (_build_group_index_packed,
+                                                 _pip_pack)
 
     sq_la = np.array([0, 0, 10**6, 10**6, 0], np.int64)
     sq_lo = np.array([0, 10**6, 10**6, 0, 0], np.int64)
     pt = np.array([5 * 10**5], np.int64)
-    # broadcast path: degenerate ring LAST (the crash case) and first
+    # degenerate ring LAST (the crash case) and first
     for rings in ([(0, sq_la, sq_lo), (1, pt, pt)],
                   [(1, pt, pt), (0, sq_la, sq_lo)],
                   [(0, sq_la, sq_lo), (1, np.empty(0, np.int64),
                                        np.empty(0, np.int64))]):
-        pack = _pack_polys([(7, rings)])
-        p_idx, pt_idx = _pip_pack(pack, pt, pt)
-        assert list(pack[7][p_idx]) == [7]  # inside; hole ignored
-    # all-degenerate feature: empty pack, no matches, no crash
-    pack = _pack_polys([(9, [(0, pt, pt)])])
-    assert len(_pip_pack(pack, pt, pt)[0]) == 0
+        idx = _build_group_index_packed(flat_layer([(7, rings)]), 12)
+        p_idx, fids = _pip_pack(idx, pt, pt)
+        assert list(fids) == [7]  # inside; hole ignored
+    # all-degenerate feature: empty index, no matches, no crash
+    idx = _build_group_index_packed(flat_layer([(9, [(0, pt, pt)])]), 12)
+    assert len(_pip_pack(idx, pt, pt)[0]) == 0
 
-    # cogroup/partitioned path: same geometry through the flat builder
+    # both features in one layer, flat columns as the layer file has them
     pdf = pd.DataFrame({
         "feature_id": [7, 9],
         "flat_lat": [np.concatenate([sq_la, pt]), pt],
@@ -311,9 +316,64 @@ def test_degenerate_rings_skipped(spark):
         "lens": [np.array([5, 1], np.int64), np.array([1], np.int64)],
         "roles": [np.array([0, 1], np.int64), np.array([0], np.int64)],
     })
-    idx = _build_group_index_packed(pdf, np.array([7, 9], np.int64), 12)
-    hits, fids = _match_batch(idx, pt, pt, 12)
+    idx = _build_group_index_packed(pdf, 12)
+    hits, fids = _pip_pack(idx, pt, pt)
     assert list(fids) == [7]
+
+
+def _square_ring(lat0, lon0, half: int, per_side: int):
+    """Closed axis-aligned square ring, ``per_side`` edges per side."""
+    t = np.arange(4 * per_side + 1) / per_side
+    side, f = np.floor(t).astype(int) % 4, t - np.floor(t)
+    x = np.choose(side, [-1 + 2 * f, np.ones_like(f), 1 - 2 * f, -np.ones_like(f)])
+    y = np.choose(side, [-np.ones_like(f), -1 + 2 * f, np.ones_like(f), 1 - 2 * f])
+    return (lat0 + np.round(y * half).astype(np.int64),
+            lon0 + np.round(x * half).astype(np.int64))
+
+
+def test_pip_pack_memory_bounded_by_chunk_in_dense_cell(monkeypatch):
+    """A dense cell (200 nested square frames: outer ring + hole, all
+    registered in the points' cell) with 2,010 points gives 402k
+    candidate (point, polygon) pairs and 804k (pair, ring) segments.
+    ``_pip_pack`` cuts the points into chunks of ``PIP_CHUNK`` candidate
+    segments, so its peak allocation stays within 160 B per chunk
+    element (20 int64 temporaries) + 128 B per point; building every
+    pair at once took ~50 MB here.  Chunk sizes down to one element
+    leave the matches equal to the per-cell reference."""
+    import tracemalloc
+
+    from osm_spark.operators import spatial_join as SJ
+
+    from kernel_oracles import pip_cells_reference
+
+    la0, lo0 = 488_000_000, 23_000_000
+    polys = [(k, [(0, *_square_ring(la0, lo0, 100_000 + 100 * k, 2)),
+                  (1, *_square_ring(la0, lo0, 50_000 + 100 * k, 1))])
+             for k in range(200)]
+    rng = np.random.default_rng(0)
+    # 2,000 points inside every hole (no match), 10 inside every frame
+    la = np.concatenate((la0 + rng.integers(-40_000, 40_000, 2000),
+                         np.full(10, la0 + 90_000)))
+    lo = np.concatenate((lo0 + rng.integers(-40_000, 40_000, 2000),
+                         lo0 + 1000 * np.arange(10)))
+    idx = SJ._build_group_index_packed(flat_layer(polys), 12)
+    want = pip_cells_reference(polys, la, lo, 12)
+    assert len(want) == 10 * 200
+
+    monkeypatch.setattr(SJ, "PIP_CHUNK", 1 << 12)
+    tracemalloc.start()
+    try:
+        hits, fids = SJ._pip_pack(idx, la, lo)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert set(zip(hits.tolist(), fids.tolist())) == want
+    assert peak <= 160 * SJ.PIP_CHUNK + 128 * len(la), peak
+
+    for chunk in (1, 3, 700):
+        monkeypatch.setattr(SJ, "PIP_CHUNK", chunk)
+        hits, fids = SJ._pip_pack(idx, la[-40:], lo[-40:])
+        assert set(zip((hits + len(la) - 40).tolist(), fids.tolist())) == want
 
 
 def test_group_index_cache_keys_on_geometry_and_zoom(spark):
@@ -484,7 +544,7 @@ def _new_plans(spark, action) -> list[str]:
 def test_cell_keys_run_no_python_before_exchange(spark, tmp_path):
     """Routing keys are JVM expressions: suggest_salt and
     write_partitioned_layer run no Python UDF, and the partitioned join's
-    only Python is its one MapInPandas after an AQE-sized exchange."""
+    only Python is its one MapInArrow after an AQE-sized exchange."""
     from osm_spark.operators.geocode import geocode_ids
     from osm_spark.operators.spatial_join import (COARSE_SHIFT,
                                                  spatial_join_partitioned,
@@ -507,5 +567,59 @@ def test_cell_keys_run_no_python_before_exchange(spark, tmp_path):
             docs, path, page_key="doc_id",
             **kw)._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan, plan
-        assert plan.count("MapInPandas") == 1, plan
+        assert plan.count("MapInArrow") == 1, plan
         assert "REPARTITION_BY_COL" in plan, plan   # no fixed count: AQE sizes it
+
+
+def test_broadcast_index_bytes_bounded(spark):
+    """The pickled CSR broadcast index of the benchmark's 1,500-polygon
+    fixture layer stays within its per-element formula (16 B/edge,
+    25 B/ring, 40 B/polygon, 8 B/(cell, polygon) registration,
+    16 B/cell, 2 kB framing) and within 1,668,524 B, the per-cell
+    packed index it replaced (32 B/edge per covering cell)."""
+    import pickle
+
+    from osm_spark.operators.spatial_join import broadcast_polygon_index
+
+    idx = broadcast_polygon_index(FX.polygons_df(spark, 1500)).value
+    n_ring = len(idx.ring_hole)
+    n_edge = len(idx.lat) - n_ring
+    n_poly, n_reg, n_cell = len(idx.fids), len(idx.cell_poly), len(idx.keys)
+    assert n_edge > 10_000 and n_reg > n_poly      # the layer is non-trivial
+    bound = (16 * n_edge + 25 * n_ring + 40 * n_poly + 8 * n_reg
+             + 16 * n_cell + 2048)
+    size = len(pickle.dumps(idx))
+    assert size <= bound, (size, bound)
+    assert size <= 1_668_524, size
+
+
+def test_underivable_geocode_is_null_not_a_task_failure(spark, tmp_path):
+    """Urls without a ``page<digits>`` suffix, or with numbers that
+    overflow ``long``, geocode to NULL under ANSI casts (no
+    CAST_INVALID_INPUT) and pass through a left spatial join with a NULL
+    feature_id on the broadcast and the partitioned path."""
+    from osm_spark.operators.spatial_join import (spatial_join,
+                                                 write_partitioned_layer)
+
+    urls = ["page", "", "https://x.example/page99999999999999999999",
+            "https://x.example/en/geo/99999999999999999999/1/page987654321"]
+    bad = spark.createDataFrame([(u,) for u in urls], "url string")
+    pages = geocode_pages(FX.pages_df(spark, 300).select("url").union(bad))
+    got = {r.url: (r.page_id, r.lat, r.lon) for r in pages.collect()}
+    for u in urls[:3]:
+        assert got[u] == (None, None, None), (u, got[u])
+    assert got[urls[3]][0] == 987654321 and got[urls[3]][1] is None
+    assert sum(None in v for v in got.values()) == 4
+
+    polys = FX.polygons_df(spark, 30)
+    layer = write_partitioned_layer(polys, str(tmp_path / "layer"))
+    want = {r.page_id for r in spatial_join(
+        pages.where("page_id IS NOT NULL AND lat IS NOT NULL"), polys,
+        how="inner").collect()}
+    assert want
+    for kw in ({}, {"broadcast_polys": False, "layer_path": layer}):
+        rows = spatial_join(pages, polys, how="left", **kw).collect()
+        assert sorted((r.page_id is None, r.feature_id is None)
+                      for r in rows if r.page_id is None) == [(True, True)] * 3
+        assert {r.page_id for r in rows if r.feature_id is not None} == want
+        assert [r.feature_id for r in rows if r.page_id == 987654321] == [None]

@@ -11,6 +11,8 @@ from osm_spark.operators import tiles as T
 from osm_spark.operators.geocode import geocode_ids, geocode_pages
 from osm_spark.operators.knn import brute_force_knn, knn_join
 
+from kernel_oracles import dp_scalar
+
 N_PAGES = 300
 
 
@@ -67,7 +69,8 @@ def feature_tiles_oracle(polys, zooms):
                 simp = []
                 ok = True
                 for la, lo, role in rings:
-                    sla, slo = K.simplify_ring_int(ratio, la, lo)
+                    m = dp_scalar(ratio, la, lo)
+                    sla, slo = la[m], lo[m]
                     if role == 0 and len(sla) < 4:
                         ok = False
                     simp.append((sla, slo, role))

@@ -62,14 +62,14 @@ def main():
         must_contain=("PushedFilters", "codegen id"),
     )
 
-    # 2. spatial join, broadcast path: single mapInPandas, NO shuffle
+    # 2. spatial join, broadcast path: single mapInArrow, NO shuffle
     sj = spatial_join(geo, FX.polygons_df(spark, 50), how="left", page_key="doc_id")
     plan = fmt(sj)
     has_no_exchange = "Exchange" not in plan
     checks.append(("Spatial join (broadcast path)", "no Exchange", has_no_exchange))
     sections.append(
         "## Spatial join — broadcast cell-index path\n\n"
-        "One `MapInPandas` over the pages scan; the polygon index ships "
+        "One `MapInArrow` over the pages scan; the CSR polygon index ships "
         "via TorrentBroadcast (outside the plan). ZERO Exchange operators "
         "— pages are never shuffled, which is what makes the 10^12-row "
         "side cheap: cost = one scan + vectorized PIP.\n\n"
@@ -87,8 +87,8 @@ def main():
         "(cell, salt) key — few large cogroup groups, so per-group Arrow "
         "overhead amortizes — polygon rings ship once per (cell, salt) "
         "as flat primitive arrays, never per candidate pair; each group "
-        "rebuilds the fine-zoom packed index and runs the same "
-        "vectorized matcher as the broadcast path.  Hot city cells "
+        "rebuilds the fine-zoom CSR index and runs the same "
+        "flattened matcher as the broadcast path.  Hot city cells "
         "split across `salt` reducers, AQE skew-join as backstop.  "
         "Measured (tools/pathbench.py, 2M pages x 20k polys, local[8]): "
         "~1.9x of the broadcast path with an identical match set; its "
@@ -122,7 +122,7 @@ def main():
         "row-group pruning.  The polygon side never shuffles and is "
         "bounded by disk, not executor memory; salt spreads hot cells "
         "at the cost of duplicate layer reads, never shuffle bytes.",
-        must_contain=("Exchange", "MapInPandas", "REPARTITION_BY_COL"),
+        must_contain=("Exchange", "MapInArrow", "REPARTITION_BY_COL"),
     )
     checks.append(("Spatial join — partitioned disk-index path (huge layers)",
                    "no EvalPython", "EvalPython" not in fmt(sjp)))
