@@ -9,9 +9,11 @@ cells (z-order prefix == slippy tile) as the spatial partitioning key:
      R-tree leaf bboxes in Hilbert order),
   2. pages → their containing cell (pure JVM column expressions for
      both x and the mercator y),
-  3. candidate join on cell — ``broadcast`` for small layers, else a
-     shuffle join with optional **salting** for hot cells + AQE skew
-     splitting,
+  3. candidate lookup by cell — a broadcast cell index for small
+     layers, else the partitioned disk-index path: the layer is written
+     once cell-sorted in parquet (the on-disk R-tree), pages
+     hash-partition on the coarse cell with optional **salting** for
+     hot cells, and each task range-reads only its cells,
   4. exact PIP verify with a flattened crossing-number kernel: one
      numpy pass per Arrow batch over (point, candidate edge) pairs
      gathered through a CSR cell index (``CellIndex``), reduced to ring
@@ -31,15 +33,18 @@ no role-1 (hole) ring — matching the reference's hole handling
 Scale notes (100 TB design):
 - the broadcast CSR index stores every vertex once; only its 8-byte
   (cell, polygon) registrations grow with the covering cells; the
-  cogroup path shuffles pages once on cell id, which is also the layout
-  a tile-partitioned Iceberg table would already have (no extra shuffle).
+  partitioned path shuffles pages once on the coarse cell id (none when
+  they are stored spatially clustered) and never shuffles the layer.
 - the html/binary column is never referenced → column pruning keeps it
   out of every shuffle.
 """
 
 from __future__ import annotations
 
+import atexit
 import math
+import shutil
+import tempfile
 from typing import NamedTuple
 
 import numpy as np
@@ -53,6 +58,7 @@ from osm_spark.geo import kernels as K
 
 DEFAULT_CELL_ZOOM = 12
 CKEY_SCALE = 1 << 32      # cell key = cx * CKEY_SCALE + cy
+COARSE_SHIFT = 3          # partitioned-layer cells at z - COARSE_SHIFT
 
 
 # ---------------------------------------------------------------------------
@@ -138,8 +144,7 @@ def polygon_cells(polys: DataFrame, z: int = DEFAULT_CELL_ZOOM) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# CSR cell index + flattened PIP kernel (broadcast, partitioned and
-# cogroup paths)
+# CSR cell index + flattened PIP kernel (broadcast and partitioned paths)
 
 
 def ring_cols() -> list:
@@ -382,18 +387,19 @@ def _broadcast_join_mapper(bc, how: str):
 # top-level joins
 
 
-def suggest_salt(pages: DataFrame, z: int = DEFAULT_CELL_ZOOM - 3,
-                 max_salt: int = 64,
+MAX_SALT = 64             # suggest_salt's upper clamp
+
+
+def suggest_salt(pages: DataFrame, z: int = DEFAULT_CELL_ZOOM - COARSE_SHIFT,
                  sample_frac: float | None = None) -> int:
     """Salt factor from the measured cell histogram (SURVEY.md §7: hot
     cells are cities by construction; the factor is computed, not
     guessed): replicate enough that the hottest cell's share lands near
     the p95 cell.  Measure at the zoom the salt will apply to — the
-    default is the COGROUP zoom (z-3); for the partitioned disk-index
-    path pass ``z=DEFAULT_CELL_ZOOM - COARSE_SHIFT`` (same value by
-    default, kept explicit so the two stay decoupled).  Clamped to
-    [1, max_salt]; AQE skew-join remains the runtime backstop.  One JVM
-    aggregate: the cells only count rows, so no Python runs.
+    default is the partitioned layer's coarse zoom for the default
+    ``z``.  Clamped to [1, ``MAX_SALT``]; AQE skew-join remains the
+    runtime backstop.  One JVM aggregate: the cells only count rows, so
+    no Python runs.
 
     ``sample_frac`` estimates the histogram from a deterministic
     sample — the max/p95 RATIO is scale-free, so at 10^12 pages a
@@ -407,7 +413,7 @@ def suggest_salt(pages: DataFrame, z: int = DEFAULT_CELL_ZOOM - 3,
     ).first()
     if not row or not row.mx or not row.p95:
         return 1
-    return max(1, min(max_salt, math.ceil(row.mx / max(row.p95, 1))))
+    return max(1, min(MAX_SALT, math.ceil(row.mx / max(row.p95, 1))))
 
 
 def broadcast_polygon_index(polys: DataFrame, z: int = DEFAULT_CELL_ZOOM):
@@ -424,81 +430,19 @@ def broadcast_polygon_index(polys: DataFrame, z: int = DEFAULT_CELL_ZOOM):
 
 # polygon layers up to this many total vertices broadcast (CSR index:
 # 16 B/vertex + small per-ring/per-cell terms → ≈40 MB); larger layers
-# take the partitioned or the salted cell-cogroup path
+# take the partitioned disk-index path
 BROADCAST_MAX_VERTS = 2_000_000
-
-
-# Per-worker cache of built group indexes.  Salt replicas of the same
-# coarse cell carry IDENTICAL polygon sets — whenever two replicas land
-# on the same (reused) Python worker, the second skips the rebuild
-# entirely.  FIFO-bounded; keyed by (cx, cy, z) + feature-id AND
-# geometry checksums (vertex count, wrapped coordinate sums/xors), so
-# a stale entry cannot be served for a different polygon set, a moved
-# geometry, or a different fine zoom.
-_GROUP_INDEX_CACHE: dict = {}
-_GROUP_INDEX_CACHE_MAX = 32
-
-
-def _cogroup_cell_fn(page_key: str, z: int):
-    """Cogrouped (pages-in-coarse-cell, polygons-in-coarse-cell) →
-    exact matches.
-
-    Rings cross the shuffle ONCE per (coarse cell, salt replica) —
-    never per candidate (page, polygon) pair.  Inside each group the
-    SAME machinery as the broadcast path runs: a fine-zoom CSR cell
-    index over the group's polygons, then one flattened PIP pass over
-    the group's pages.  Cogrouping at a coarser zoom keeps groups few
-    and large (per-group Arrow overhead amortizes over ~10^3-10^4
-    pages instead of ~10^2); the per-worker index cache dedups the
-    build across salt replicas of the same cell."""
-
-    def fn(key: tuple, pts_pdf: pd.DataFrame,
-           polys_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pts_pdf) or not len(polys_pdf):
-            return pd.DataFrame({
-                "k": pd.array([], dtype="int64"),
-                "feature_id": pd.array([], dtype="int64"),
-            })
-        fid_arr = polys_pdf["feature_id"].to_numpy(np.int64)
-        v_lat, _ = flat_values(polys_pdf["flat_lat"])
-        v_lon, _ = flat_values(polys_pdf["flat_lon"])
-        with np.errstate(over="ignore"):
-            ck = (int(key[0]), int(key[1]), z, len(fid_arr),
-                  int(fid_arr.sum()), int(np.bitwise_xor.reduce(fid_arr)),
-                  len(v_lat),
-                  int(v_lat.sum(dtype=np.int64)),
-                  int(v_lon.sum(dtype=np.int64)),
-                  int(np.bitwise_xor.reduce(v_lat)) if len(v_lat) else 0,
-                  int(np.bitwise_xor.reduce(v_lon)) if len(v_lon) else 0)
-        index = _GROUP_INDEX_CACHE.get(ck)
-        if index is None:
-            index = _build_group_index_packed(polys_pdf, z)
-            while len(_GROUP_INDEX_CACHE) >= _GROUP_INDEX_CACHE_MAX:
-                _GROUP_INDEX_CACHE.pop(next(iter(_GROUP_INDEX_CACHE)))
-            _GROUP_INDEX_CACHE[ck] = index
-        pt_idx, fids = _pip_pack(index, pts_pdf["lat"].to_numpy(np.int64),
-                                 pts_pdf["lon"].to_numpy(np.int64))
-        keys = pts_pdf[page_key].to_numpy()
-        return pd.DataFrame({
-            "k": keys[pt_idx],
-            "feature_id": fids,
-        })
-
-    return fn
 
 
 # ---------------------------------------------------------------------------
 # partitioned disk-index path: the Spark analog of the reference's
 # ON-DISK R-tree (database/rtree.ml memory-maps the tree and range-reads
 # leaf pages per query).  The polygon layer is written cell-sorted in
-# parquet; pages range-partition on the cell key (a pure JVM columnar
-# exchange — no pandas cogroup machinery); every worker then range-reads
-# ONLY its partition's cell span from the layer file with row-group
-# statistics pruning.  No polygon replication, no grouped-map sort of
-# the pages side, layer size bounded by disk not executor memory.
-
-
-COARSE_SHIFT = 3          # coarse partition cells at z - COARSE_SHIFT
+# parquet; pages hash-partition on the coarse cell key (a pure JVM
+# columnar exchange); every worker then range-reads ONLY its partition's
+# cells from the layer file with row-group statistics pruning.  No
+# polygon replication, no grouped-map sort of the pages side, layer size
+# bounded by disk not executor memory.
 
 
 _LAYER_META = "_osm_layer_meta.json"
@@ -555,16 +499,13 @@ def write_partitioned_layer(polys: DataFrame, path: str,
 # accumulate only up to this bound before matching/emitting, so worker
 # memory stays O(budget + layer-slice), not O(partition) — at 100x page
 # density a partition is GBs and must never materialize whole in one
-# Python worker
+# Python worker.  Read on the driver when the mapper is built.
 PJOIN_BATCH_BYTES = 64 << 20
 
 
 def _partitioned_join_mapper(layer_path: str, z: int, zc: int, how: str,
                              page_key: str):
-    import os
-
-    budget = int(os.environ.get(
-        "OSM_SPARK_PJOIN_BATCH_BYTES", PJOIN_BATCH_BYTES))
+    budget = PJOIN_BATCH_BYTES
 
     def fn(batches):
         import pyarrow.dataset as pads
@@ -642,7 +583,7 @@ def spatial_join_partitioned(
 ) -> DataFrame:
     """PIP-join against a ``write_partitioned_layer`` output: pages
     hash-partition on the coarse cell key (one JVM columnar exchange,
-    no range-sampling job, no pandas cogroup, no Python before it; AQE
+    no range-sampling job, no Python before it; AQE
     sizes the reduce side), each worker reads ONLY its partition's
     coarse cells from the layer parquet (row-group pruning on the sorted
     gkey) and runs the shared vectorized index + PIP kernels.  The layer
@@ -653,6 +594,7 @@ def spatial_join_partitioned(
     clustered in storage (``cluster.cluster_by_hilbert`` layout) and
     skips the exchange entirely — the zero-shuffle co-located spatial
     join.  Returns (page_key, feature_id) like ``spatial_join``."""
+    _check_how(how)
     meta = _read_layer_meta(layer_path)
     if meta["z"] != z:
         raise ValueError(
@@ -672,6 +614,12 @@ def spatial_join_partitioned(
     ).withColumnRenamed("k", page_key)
 
 
+def _check_how(how: str) -> None:
+    if how not in ("inner", "left"):
+        raise ValueError(
+            f"how={how!r}: a spatial join is 'inner' or 'left'")
+
+
 def spatial_join(
     pages: DataFrame,
     polys: DataFrame,
@@ -681,8 +629,6 @@ def spatial_join(
     salt: int | None = None,
     page_key: str = "page_id",
     index=None,
-    broadcast_max_verts: int = BROADCAST_MAX_VERTS,
-    cogroup_zoom: int | None = None,
     layer_path: str | None = None,
     pages_clustered: bool = False,
 ) -> DataFrame:
@@ -690,6 +636,8 @@ def spatial_join(
 
     Returns (page_key, feature_id); ``how='left'`` keeps unmatched pages
     with NULL feature_id (outer-default semantics, database/join.ml:35-57).
+    ``how`` is ``'inner'`` or ``'left'``; anything else raises
+    ``ValueError``.
 
     Strategy (``broadcast_polys=None`` auto-picks from the measured
     layer size — one cheap aggregate over the polygon side only):
@@ -697,21 +645,18 @@ def spatial_join(
     - **broadcast**: ships a CSR cell index to every executor once
       and PIP-tags pages in a single mapInArrow pass —
       zero shuffles, zero joins.  Right whenever the CSR index fits
-      comfortably in executor memory (``broadcast_max_verts``).
-    - **partitioned disk-index** (when ``layer_path`` — a
-      ``write_partitioned_layer`` output — is given): pages
-      hash-partition on the coarse cell key and each task range-reads
-      only its cells from the layer parquet; with
-      ``pages_clustered=True`` the exchange is skipped entirely.  The
-      preferred path for layers above the broadcast limit.
-    - **salted cell-cogroup**: the fallback when no materialized layer
-      exists — pages shuffle once on (cell, salt); polygon cells
-      replicate ``salt`` ways; rings ship once per (cell, salt) group,
-      never per candidate pair.  ``salt`` spreads hot (city) cells; AQE
-      skew-join remains the runtime backstop.  Use
-      ``suggest_salt(pages)`` to derive the factor from the measured
-      cell histogram.
+      comfortably in executor memory (``BROADCAST_MAX_VERTS``).
+    - **partitioned disk-index** (every other case):
+      ``spatial_join_partitioned`` against ``layer_path``, a
+      ``write_partitioned_layer`` output.  Without one, the layer is
+      written once per call to a ``tempfile.mkdtemp`` directory (the
+      executors read it, so it must be on a filesystem they share);
+      pass a built ``layer_path`` to reuse it across joins.  ``salt`` spreads hot
+      (city) cells over tasks (``suggest_salt(pages)`` derives it from
+      the measured cell histogram); with ``pages_clustered=True`` the
+      exchange is skipped entirely.
     """
+    _check_how(how)
     if broadcast_polys is None and index is not None:
         broadcast_polys = True      # caller already built the index
     if broadcast_polys is None:
@@ -719,62 +664,20 @@ def spatial_join(
             F.expr("aggregate(transform(rings, r -> size(r.lat)),"
                    " 0L, (a, x) -> a + x)").alias("nv")
         ).agg(F.sum("nv").alias("v")).first()
-        broadcast_polys = int(nv.v or 0) <= broadcast_max_verts
-
-    if not broadcast_polys and layer_path is not None:
-        return spatial_join_partitioned(
-            pages, layer_path, z=z, how=how, page_key=page_key,
-            salt=salt or 1, pages_clustered=pages_clustered)
+        broadcast_polys = int(nv.v or 0) <= BROADCAST_MAX_VERTS
 
     if broadcast_polys:
         bc = index if index is not None else broadcast_polygon_index(polys, z)
-        out = pages.select(page_key, "lat", "lon").mapInArrow(
+        return pages.select(page_key, "lat", "lon").mapInArrow(
             _broadcast_join_mapper(bc, how),
             "k long, feature_id long",
         ).withColumnRenamed("k", page_key)
-        return out
 
-    # shuffle at a coarser zoom than the PIP cells: fewer, larger
-    # cogroup groups (per-group Arrow overhead amortizes), and fewer
-    # polygon replicas; each group builds the fine-zoom index locally
-    # from the flat vertex arrays (vectorized, cached across salt
-    # replicas on the same worker).  z-3 measured best at 2M×20k
-    # (z-4 groups get big enough that the group index rebuild and the
-    # polygon replica decode dominate; finer than z-2 fragments groups)
-    zc = max(z - 3, 2) if cogroup_zoom is None else cogroup_zoom
-    pts = with_cell(pages.select(page_key, "lat", "lon"), zc)
-    # flat primitive vertex columns (minimum shuffle bytes — edge arrays
-    # are derived group-side with vectorized masks, never per-ring
-    # Python).  Primitive int64 lists only: nested array<struct<array>>
-    # payloads segfault pyspark's cogroup Arrow->pandas conversion.
-    cells = polygon_cells(polys.select("feature_id", "rings"), zc).select(
-        "cx", "cy", "feature_id",
-        *ring_cols(),
-    )
-
-    keys = ["cx", "cy"]
-    if salt and salt > 1:
-        keys = ["cx", "cy", "salt"]
-        pts = pts.withColumn("salt", F.pmod(F.xxhash64(page_key), F.lit(salt)))
-        cells = cells.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        ).withColumn("salt", F.col("salt").cast("long"))
-
-    matches = (
-        pts.groupBy(*keys)
-        .cogroup(cells.groupBy(*keys))
-        .applyInPandas(_cogroup_cell_fn(page_key, z), "k long, feature_id long")
-        .withColumnRenamed("k", page_key)
-    )
-
-    if how == "left":
-        return pages.select(page_key).join(matches, page_key, "left")
-    return matches
-
-
-def spatial_join_pages(pages_with_geo: DataFrame, polys: DataFrame, **kw) -> DataFrame:
-    """Convenience: join and keep url + feature info."""
-    m = spatial_join(pages_with_geo, polys, **kw)
-    return pages_with_geo.join(m, kw.get("page_key", "page_id"), "left").select(
-        "url", "feature_id"
-    )
+    if layer_path is None:
+        # the returned join is lazy: its scratch layer lives until exit
+        layer_path = tempfile.mkdtemp(prefix="osm_layer_")
+        atexit.register(shutil.rmtree, layer_path, ignore_errors=True)
+        write_partitioned_layer(polys, layer_path, z)
+    return spatial_join_partitioned(
+        pages, layer_path, z=z, how=how, page_key=page_key,
+        salt=salt or 1, pages_clustered=pages_clustered)

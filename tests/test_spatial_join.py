@@ -56,7 +56,7 @@ def fixture_data(spark):
         {"broadcast_polys": False},
         {"broadcast_polys": False, "salt": 4},
     ],
-    ids=["broadcast", "shuffle", "salted"],
+    ids=["broadcast", "scratch_layer", "scratch_layer_salted"],
 )
 def test_spatial_join_matches_bruteforce(spark, fixture_data, kw):
     geo, polys, oracle = fixture_data
@@ -93,10 +93,11 @@ def test_text_passthrough_byte_identical(spark):
     assert after == before
 
 
-def test_broadcast_and_cogroup_paths_agree(spark):
-    """The zero-shuffle broadcast index path and the salted cell-cogroup
-    path are alternative physical plans of the SAME logical join — their
-    match sets must be identical."""
+def test_broadcast_and_scratch_layer_paths_agree(spark):
+    """The zero-shuffle broadcast index path and the salted partitioned
+    path over a scratch layer (``broadcast_polys=False``, no
+    ``layer_path``) are alternative physical plans of the SAME logical
+    join — their match sets must be identical."""
     from osm_spark import fixtures as FX
     from osm_spark.operators.geocode import geocode_ids
     from osm_spark.operators.spatial_join import spatial_join
@@ -166,7 +167,7 @@ def test_partitioned_mapper_streams_bounded(spark, tmp_path, monkeypatch):
          SJ.spatial_join_partitioned(docs, layer, page_key="doc_id",
                                      how="left").collect()}
 
-    monkeypatch.setenv("OSM_SPARK_PJOIN_BATCH_BYTES", "1")
+    monkeypatch.setattr(SJ, "PJOIN_BATCH_BYTES", 1)
     b = {(r.doc_id, r.feature_id) for r in
          SJ.spatial_join_partitioned(docs, layer, page_key="doc_id",
                                      how="left").collect()}
@@ -204,9 +205,10 @@ def test_partitioned_mapper_streams_bounded(spark, tmp_path, monkeypatch):
 
 def test_many_ring_multipolygon_both_paths(spark):
     """A feature with >16 rings (1 outer + 20 holes) next to a second
-    feature: exercises ring identity in the cogroup path (round-1 bug:
-    ring_key = feature_id*16 + ring_idx collided across features).  Both
-    physical paths must produce the hand-computed match set."""
+    feature: exercises ring identity in the scratch-layer partitioned
+    path (round-1 bug: ring_key = feature_id*16 + ring_idx collided
+    across features).  Both physical paths must produce the
+    hand-computed match set."""
     base_lat, base_lon = FX.LAT0 + 1_000_000, FX.LON0 + 1_000_000
     S = 100_000
 
@@ -376,32 +378,6 @@ def test_pip_pack_memory_bounded_by_chunk_in_dense_cell(monkeypatch):
         assert set(zip((hits + len(la) - 40).tolist(), fids.tolist())) == want
 
 
-def test_group_index_cache_keys_on_geometry_and_zoom(spark):
-    """A reused worker must NOT serve a cached index for the same
-    feature ids with moved rings or a different fine zoom."""
-    import pandas as pd
-
-    from osm_spark.operators.spatial_join import _cogroup_cell_fn
-
-    def polys_pdf(shift):
-        la = np.array([0, 0, 10**6, 10**6, 0], np.int64) + shift
-        lo = np.array([0, 10**6, 10**6, 0, 0], np.int64) + shift
-        return pd.DataFrame({
-            "feature_id": [7],
-            "flat_lat": [la], "flat_lon": [lo],
-            "lens": [np.array([5], np.int64)],
-            "roles": [np.array([0], np.int64)],
-        })
-
-    pts = pd.DataFrame({"page_id": [1],
-                        "lat": [5 * 10**5], "lon": [5 * 10**5]})
-    fn = _cogroup_cell_fn("page_id", 12)
-    key = (2048, 2048)
-    assert len(fn(key, pts, polys_pdf(0))) == 1           # inside
-    # same fids, same cell, geometry moved away: must MISS the cache
-    assert len(fn(key, pts, polys_pdf(4 * 10**6))) == 0
-
-
 def test_partitioned_layer_z_mismatch_raises(spark, tmp_path):
     from osm_spark.operators.spatial_join import (
         spatial_join_partitioned, write_partitioned_layer)
@@ -449,8 +425,8 @@ def _rect(fid, la0, la1, lo0, lo1):
 def test_row_boundaries_exact_on_every_path(spark, tmp_path):
     """Points at numpy row boundaries (b-1, b, b+1) of the fine z12 and
     the coarse z9 grid, against rectangles whose bbox edges sit on those
-    boundaries: the JVM-routed partitioned, clustered and cogroup paths
-    return the broadcast path's match set, which is the cell-free PIP;
+    boundaries: the JVM-routed partitioned, clustered and scratch-layer
+    paths return the broadcast path's match set, which is the cell-free PIP;
     and polygon_cells' JVM row span is numpy's, padded."""
     from osm_spark.operators import spatial_join as SJ
     from osm_spark.operators.spatial_join import (polygon_cells,
@@ -487,9 +463,9 @@ def test_row_boundaries_exact_on_every_path(spark, tmp_path):
     got = {
         "broadcast": pairs(spatial_join(docs, layer_df, page_key="doc_id",
                                         broadcast_polys=True)),
-        "cogroup": pairs(spatial_join(docs, layer_df, page_key="doc_id",
-                                      broadcast_polys=False)),
-        "cogroup_salted": pairs(spatial_join(
+        "scratch_layer": pairs(spatial_join(
+            docs, layer_df, page_key="doc_id", broadcast_polys=False)),
+        "scratch_layer_salted": pairs(spatial_join(
             docs, layer_df, page_key="doc_id", broadcast_polys=False,
             salt=3)),
     }
@@ -623,3 +599,58 @@ def test_underivable_geocode_is_null_not_a_task_failure(spark, tmp_path):
                       for r in rows if r.page_id is None) == [(True, True)] * 3
         assert {r.page_id for r in rows if r.feature_id is not None} == want
         assert [r.feature_id for r in rows if r.page_id == 987654321] == [None]
+
+
+def test_unmaterialized_layer_takes_partitioned_path(spark, monkeypatch):
+    """A non-broadcast join without ``layer_path`` — asked for, or picked
+    because the measured vertex count is above ``BROADCAST_MAX_VERTS`` —
+    writes a scratch layer and runs the partitioned mapper: one
+    MapInArrow after a cell-key exchange, no grouped-map cogroup, and
+    the broadcast path's match set."""
+    from osm_spark.operators import spatial_join as SJ
+    from osm_spark.operators.geocode import geocode_ids
+
+    docs = geocode_ids(
+        spark.range(1500).withColumnRenamed("id", "doc_id"), "doc_id")
+    polys = FX.polygons_df(spark, 200)
+
+    def pairs(df):
+        return {(r.doc_id, r.feature_id) for r in df.collect()}
+
+    want = pairs(SJ.spatial_join(docs, polys, page_key="doc_id",
+                                 how="left", broadcast_polys=True))
+    assert len(want) > 50
+    joins = [lambda: SJ.spatial_join(docs, polys, page_key="doc_id",
+                                     how="left", broadcast_polys=False)]
+    monkeypatch.setattr(SJ, "BROADCAST_MAX_VERTS", 10)
+    joins.append(lambda: SJ.spatial_join(docs, polys, page_key="doc_id",
+                                         how="left", salt=2))
+    for join in joins:
+        df = join()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1, plan
+        assert "FlatMapCoGroupsInPandas" not in plan, plan
+        assert "REPARTITION_BY_COL" in plan, plan
+        assert pairs(df) == want
+
+
+@pytest.mark.parametrize("how", ["outer", "leftouter", "right", "LEFT"])
+def test_unsupported_how_raises(spark, tmp_path, how):
+    """Only 'inner' and 'left' exist; any other ``how`` is refused by
+    name on every path instead of silently running an inner join."""
+    from osm_spark.operators.spatial_join import (spatial_join,
+                                                 spatial_join_partitioned,
+                                                 write_partitioned_layer)
+
+    polys = FX.polygons_df(spark, 5)
+    layer = write_partitioned_layer(polys, str(tmp_path / "layer"))
+    pages = geocode_pages(FX.pages_df(spark, 20))
+    for join in (
+            lambda: spatial_join(pages, polys, how=how),
+            lambda: spatial_join(pages, polys, how=how,
+                                 broadcast_polys=False),
+            lambda: spatial_join(pages, polys, how=how,
+                                 broadcast_polys=False, layer_path=layer),
+            lambda: spatial_join_partitioned(pages, layer, how=how)):
+        with pytest.raises(ValueError, match=f"'{how}'"):
+            join()

@@ -75,30 +75,7 @@ def main():
         "side cheap: cost = one scan + vectorized PIP.\n\n"
         f"```\n{plan.strip()}\n```\n")
 
-    # 3. spatial join, cogroup path with salting: shuffle on (cx, cy, salt)
-    sj2 = spatial_join(geo, FX.polygons_df(spark, 50), how="inner",
-                       page_key="doc_id", broadcast_polys=False, salt=4)
-    section(
-        "Spatial join — salted cell-cogroup path (huge layers)",
-        sj2,
-        "For polygon layers too big to broadcast (auto-switch: "
-        "`broadcast_polys=None` measures the layer's vertex count and "
-        "broadcasts below ~2M vertices): pages shuffle ONCE on a coarse "
-        "(cell, salt) key — few large cogroup groups, so per-group Arrow "
-        "overhead amortizes — polygon rings ship once per (cell, salt) "
-        "as flat primitive arrays, never per candidate pair; each group "
-        "rebuilds the fine-zoom CSR index and runs the same "
-        "flattened matcher as the broadcast path.  Hot city cells "
-        "split across `salt` reducers, AQE skew-join as backstop.  "
-        "Measured (tools/pathbench.py, 2M pages x 20k polys, local[8]): "
-        "~1.9x of the broadcast path with an identical match set; its "
-        "floor is the grouped-map machinery itself (BENCH/ANALYSIS.md), "
-        "which is why the partitioned disk-index path below is the "
-        "preferred non-broadcast strategy.",
-        must_contain=("Exchange",),
-    )
-
-    # 2c. partitioned disk-index path: hash exchange variant + the
+    # 3. partitioned disk-index path: hash exchange variant + the
     # zero-shuffle clustered variant
     from osm_spark.operators.spatial_join import (spatial_join_partitioned,
                                                  write_partitioned_layer)
@@ -114,14 +91,18 @@ def main():
         "The on-disk R-tree analog (database/rtree.ml): the layer lives "
         "cell-sorted in parquet (one-time `write_partitioned_layer` bulk "
         "load); pages hash-partition on the coarse cell key — ONE JVM "
-        "columnar Exchange, no range-sampling job, no pandas cogroup, "
+        "columnar Exchange, no range-sampling job, "
         "no Python before it (the key is a JVM expression that only "
         "routes; the mapper's numpy kernels decide the cell), and no "
         "fixed partition count, so AQE sizes the reduce side — and each "
         "task range-reads only its cells from the layer file via "
         "row-group pruning.  The polygon side never shuffles and is "
         "bounded by disk, not executor memory; salt spreads hot cells "
-        "at the cost of duplicate layer reads, never shuffle bytes.",
+        "at the cost of duplicate layer reads, never shuffle bytes.  "
+        "Layers above the broadcast limit (`broadcast_polys=None` "
+        "measures the vertex count and broadcasts below ~2M vertices) "
+        "take this path; without a `layer_path`, `spatial_join` first "
+        "writes the layer to a scratch directory.",
         must_contain=("Exchange", "MapInArrow", "REPARTITION_BY_COL"),
     )
     checks.append(("Spatial join — partitioned disk-index path (huge layers)",

@@ -2,14 +2,13 @@
 evidence for the strategy choice (PLANS.md):
 
 - broadcast index (layer fits executor memory; zero shuffle),
-- salted cell-cogroup (no materialized layer available),
 - partitioned disk-index (write_partitioned_layer parquet + hash
   exchange + per-partition range reads),
 - partitioned zero-shuffle (pages already Hilbert-clustered in
   storage: no exchange at all).
 
 Usage: python tools/pathbench.py [--pages 2000000] [--polys 20000]
-       [--cores 8] [--salt 4] [--reps 3]
+       [--cores 8] [--reps 3]
 """
 
 from __future__ import annotations
@@ -28,7 +27,6 @@ def main():
     ap.add_argument("--pages", type=int, default=2_000_000)
     ap.add_argument("--polys", type=int, default=20_000)
     ap.add_argument("--cores", type=int, default=8)
-    ap.add_argument("--salt", type=int, default=4)
     ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
 
@@ -74,10 +72,6 @@ def main():
     def t_broadcast():
         return spatial_join(geo, polys, index=idx).count()
 
-    def t_cogroup():
-        return spatial_join(geo, polys, broadcast_polys=False,
-                            salt=args.salt).count()
-
     def t_partitioned():
         return spatial_join_partitioned(geo, layer, salt=2).count()
 
@@ -85,8 +79,7 @@ def main():
         return spatial_join_partitioned(
             geo_clustered, layer, pages_clustered=True).count()
 
-    paths = [("broadcast", t_broadcast), ("cogroup", t_cogroup),
-             ("partitioned", t_partitioned),
+    paths = [("broadcast", t_broadcast), ("partitioned", t_partitioned),
              ("partitioned_clustered", t_partitioned_clustered)]
     best: dict = {n: [float("inf"), None] for n, _ in paths}
     for _ in range(args.reps):         # interleaved reps (noise protocol)
@@ -98,16 +91,13 @@ def main():
                "pages_per_sec": round(args.pages / b)}
            for n, (b, r) in best.items()}
     b = out["broadcast"]["sec"]
-    out["ratio_cogroup_over_broadcast"] = round(
-        out["cogroup"]["sec"] / b, 2)
     out["ratio_partitioned_over_broadcast"] = round(
         out["partitioned"]["sec"] / b, 2)
     out["ratio_partitioned_clustered_over_broadcast"] = round(
         out["partitioned_clustered"]["sec"] / b, 2)
     out["match_sets_equal"] = (
         len({o["rows"] for o in out.values() if isinstance(o, dict)}) == 1)
-    out.update(pages=args.pages, polys=args.polys, cores=args.cores,
-               salt=args.salt)
+    out.update(pages=args.pages, polys=args.polys, cores=args.cores)
     print(json.dumps(out))
     spark.stop()
 
