@@ -671,9 +671,9 @@ def q_e2e_warc_geo(spark, sf):
     DEFAULT for composed pipelines that don't need raw html.  Text
     extraction runs inside the decode mapper (byte-identical python
     twin of the JVM extractor, pinned by test_text_invariant), so html
-    bytes never cross the Arrow boundary; warcbench measured the full
-    chain at 1→4 efficiency 0.62 with html through Arrow vs 0.89
-    text-only (BENCH/ANALYSIS.md).  ``s2_warc_pages`` keeps the full
+    bytes never cross the Arrow boundary; the full chain measured 1→4
+    efficiency 0.62 with html through Arrow vs 0.89 text-only
+    (BENCH/ANALYSIS.md).  ``s2_warc_pages`` keeps the full
     reader: it IS the byte-identity contract row and needs html."""
     from osm_spark.sources import warc
 

@@ -15,6 +15,56 @@ idiomatic Spark DataFrame library:
 Design: declarative DataFrame plans (Catalyst does pushdown/pruning/join
 selection), Arrow-batched pandas UDFs for geometry (never per-row Python),
 explicit cell partitioning + salting for skew, AQE on.
+
+Python task start-up: every Python task calls ``importlib.invalidate_caches()``
+(``pyspark.worker_util.setup_spark_files``).  Workers import pyspark from
+``pyspark.zip``, and on CPython 3.11 each ``zipimporter`` re-reads its whole
+archive directory on that call — once per importer, and a worker holds ~16
+of them over ~3 archives.  That cost 0.13–0.27 s per task at local[4] on a
+4-CPU VM: a trivial 4-task ``mapInPandas`` took 0.43 s (0.15 s guarded).
+``_guard_zip_rereads`` keeps the original semantics but re-reads an archive
+only when its ``(mtime_ns, size, inode)`` stamp changed since the last
+re-read; importers of an unchanged archive adopt the fresh shared directory
+from ``zipimport._zip_directory_cache``.  Every worker that unpickles an
+osm_spark function imports this module, so a reused worker is guarded from
+its second task on (its first task pays the re-reads once).
 """
 
+import os
+
 __version__ = "0.1.0"
+
+
+def _guard_zip_rereads() -> None:
+    """Idempotent; a no-op where the private zipimport names are absent."""
+    try:
+        import zipimport
+        cls, cache = zipimport.zipimporter, zipimport._zip_directory_cache
+        reread = cls.invalidate_caches
+    except (ImportError, AttributeError):
+        return
+    if reread.__module__ == __name__:
+        return
+    stamps: dict = {}      # archive -> stamp taken just before its re-read
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None
+        files = cache.get(self.archive)
+        if stamp is not None and files is not None \
+                and stamps.get(self.archive) == stamp:
+            self._files = files
+            return
+        stamps.pop(self.archive, None)
+        reread(self)
+        if stamp is not None:
+            stamps[self.archive] = stamp
+
+    invalidate_caches.__wrapped__ = reread
+    cls.invalidate_caches = invalidate_caches
+
+
+_guard_zip_rereads()

@@ -110,7 +110,6 @@ class Pipeline:
         self.name = name
         self._fs = _FS(spark, self.base_dir)
         self._fs.mkdirs()
-        self._log_name = "lineage.jsonl"   # legacy single-file log (read-only)
         self._log_dir = "lineage"
         self._log_seq = 0
 
@@ -129,12 +128,9 @@ class Pipeline:
         self._fs.write_text(json.dumps(rec), self._log_dir, fname)
 
     def lineage(self) -> list[dict]:
-        """All lineage records in append order (legacy ``lineage.jsonl``
-        first, then the per-record ``lineage/`` files)."""
+        """All lineage records in append order, one per file under
+        ``lineage/``."""
         recs: list[dict] = []
-        if self._fs.exists(self._log_name):
-            recs += [json.loads(x) for x in
-                     self._fs.read_text(self._log_name).splitlines() if x]
         for name in self._fs.list_names(self._log_dir):
             if name.endswith(".json"):
                 recs.append(json.loads(

@@ -100,6 +100,18 @@ def _parse_headers(block: bytes) -> dict[str, str]:
     return out
 
 
+def _content_length(hdrs: dict[str, str]) -> int:
+    """The record's ``Content-Length``: ``ValueError`` naming the header
+    when it is missing, not an integer or negative (untrusted bytes)."""
+    v = hdrs.get("content-length")
+    if v is None:
+        raise ValueError("WARC record has no Content-Length header")
+    if not (v.isascii() and v.isdigit()):
+        raise ValueError("WARC Content-Length header is not a non-negative "
+                         f"integer: {v!r}")
+    return int(v)
+
+
 def iter_warc_index(path: str):
     """Yield (offset, size, compressed) per WARC record — metadata-only
     pass (header block + Content-Length seek for plain files; streaming
@@ -176,7 +188,7 @@ def iter_warc_index(path: str):
                 head += more
                 hend = head.find(CRLF2)
             hdrs = _parse_headers(head[:hend])
-            clen = int(hdrs["content-length"])
+            clen = _content_length(hdrs)
             size = hend + 4 + clen + 4          # headers + body + \r\n\r\n
             yield off, size, False
             off += size
@@ -388,8 +400,10 @@ def decode_record(raw: bytes) -> tuple:
     The HTTP response head is stripped; ``html`` is the response body
     bytes exactly as stored."""
     hend = raw.find(CRLF2)
+    if hend < 0:
+        raise ValueError("WARC record has no header terminator (CRLF CRLF)")
     hdrs = _parse_headers(raw[:hend])
-    body = raw[hend + 4:hend + 4 + int(hdrs["content-length"])]
+    body = raw[hend + 4:hend + 4 + _content_length(hdrs)]
     rtype = hdrs.get("warc-type", "")
     url = hdrs.get("warc-target-uri")
     ts = hdrs.get("warc-date")
@@ -572,8 +586,8 @@ def read_warc_pages_text(spark: SparkSession, path: str) -> DataFrame:
     the same Arrow pass.
 
     This is the DEFAULT reader for composed pipelines (e2e_warc_geo
-    uses it): warcbench measured 1→4 chain efficiency 0.89 here vs
-    0.62 when html rides through Arrow (BENCH/ANALYSIS.md).  Use
+    uses it): 1→4 chain efficiency measured 0.89 here vs 0.62 when
+    html rides through Arrow (BENCH/ANALYSIS.md).  Use
     ``read_warc_pages``/``read_warc_pages_full`` only when downstream
     stages genuinely need raw html bytes — media extraction
     (multimodal.py), link-graph parsing, or the byte-identity contract

@@ -344,3 +344,28 @@ def test_large_gz_auto_uses_distributed_walk(spark, tmp_path, monkeypatch):
     idx = warc.warc_index(spark, p)
     assert idx.count() == 1 + 2 * WF.N_PAGES
     assert warc.read_warc_pages(spark, p, ).count() > 0
+
+
+_BAD_RECORDS = {
+    "no_header_terminator": b"garbage",
+    "no_content_length": b"WARC/1.0\r\nWARC-Type: response\r\n\r\nbody",
+    "non_numeric_content_length":
+        b"WARC/1.0\r\nContent-Length: 12abc\r\n\r\nbody",
+    "negative_content_length": b"WARC/1.0\r\nContent-Length: -9\r\n\r\nbody",
+}
+
+
+@pytest.mark.parametrize("raw", _BAD_RECORDS.values(), ids=_BAD_RECORDS)
+def test_decode_record_untrusted_bytes_raise_value_error(raw):
+    with pytest.raises(ValueError):
+        warc.decode_record(raw)
+
+
+@pytest.mark.parametrize("name", ["no_content_length",
+                                  "non_numeric_content_length",
+                                  "negative_content_length"])
+def test_plain_index_walk_bad_content_length_raises(tmp_path, name):
+    p = tmp_path / "bad.warc"
+    p.write_bytes(_BAD_RECORDS[name] + b"\r\n\r\n")
+    with pytest.raises(ValueError, match="Content-Length"):
+        list(warc.iter_warc_index(str(p)))
