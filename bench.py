@@ -36,15 +36,6 @@ N_SMALL_POLYS = int(os.environ.get("SPARK_GRAFT_POLYS", 1500))
 N_KNN_FEATS = int(os.environ.get("SPARK_GRAFT_KNN_FEATS", 256))
 
 
-def _code_fingerprint() -> str:
-    """Identity of the benchmarked code paths — one source of truth
-    (tools/scaling.py's file list + hash), so bench history and scaling
-    history invalidate together when a measured code path changes."""
-    from tools.scaling import source_fingerprint
-
-    return source_fingerprint()
-
-
 def sf_of(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     return float(m.group(1)) if m else 0.1
@@ -188,44 +179,7 @@ def main():
         "pages_per_sec_spatial_join": e2e_rate,
         "polys": N_SMALL_POLYS,
         "knn_feats": N_KNN_FEATS,
-        "code_fingerprint": _code_fingerprint(),
     }
-    # run history: persist every invocation (BENCH_rN otherwise inherits
-    # last-writer-wins fragility — a noisy window would become the round's
-    # only record).  tools/scaling.py disables this for its sub-invocations
-    # since it keeps its own per-run files.  The printed line carries the
-    # best-of-history floor for the same config, so one contended window
-    # can't masquerade as the engine's speed even in a single-run record.
-    if os.environ.get("SPARK_GRAFT_BENCH_HISTORY", "1") != "0":
-        hist = Path(__file__).resolve().parent / "BENCH" / "headline_runs"
-        hist.mkdir(parents=True, exist_ok=True)
-        (hist / (time.strftime("%Y%m%dT%H%M%S") + ".json")).write_text(
-            json.dumps(result, indent=2))
-        best, n_hist = total, 0
-        for p in hist.glob("*.json"):
-            try:
-                r = json.loads(p.read_text())
-            except (OSError, json.JSONDecodeError):
-                continue
-            # the workload knobs are part of the match key (a lighter
-            # polys/knn_feats layer measures a DIFFERENT job — same
-            # rationale as tools/scaling.py's config_key) and so is the
-            # code fingerprint: a pre-regression minimum must not keep
-            # masking slower current code.  Legacy files predate both
-            # fields; they recorded the env defaults, so compare against
-            # those, and accept their missing fingerprint only when the
-            # current tree still matches... it cannot be known — exclude
-            # them from the floor instead (they stay on disk).
-            if (r.get("sf"), r.get("n_pages"), r.get("cpus"),
-                    set(r.get("queries", {})),
-                    r.get("polys", 1500), r.get("knn_feats", 256)) \
-                    == (sf, n_pages, cpus_n, set(timings),
-                        N_SMALL_POLYS, N_KNN_FEATS) \
-                    and r.get("code_fingerprint") == result["code_fingerprint"]:
-                n_hist += 1          # includes the file written above
-                best = min(best, float(r.get("value", total)))
-        result["best_total_on_record"] = round(best, 3)
-        result["n_history_runs"] = n_hist
     print(json.dumps(result))
     spark.stop()
 

@@ -264,14 +264,28 @@ def test_partially_malformed_cdx_distrusted(spark, tmp_path):
     """ONE corrupt line among parseable ones must distrust the whole
     side file (walk; zero records lost) — trusting the surviving lines
     would silently drop the corrupted record from every decode.  Covers
-    both the driver walker and the distributed csv path (whose 4 KB
-    head guard cannot see corruption deeper in the file)."""
+    both ``iter_warc_index`` and the DataFrame index ``warc_index``;
+    the corrupt line sits mid-file, past any head-of-file check."""
     p = str(tmp_path / "partial.warc.gz")
     WF.write_sample(p)
     good = list(warc.iter_warc_index(p))
     assert len(good) == 1 + 2 * WF.N_PAGES
     lines = [f"{o} {s}" for o, s, _ in good]
     lines[len(lines) // 2] = "99x9 480"           # one bit-corrupted line
+    with open(p + ".cdx", "w") as f:
+        f.write("\n".join(lines) + "\n")
+    assert list(warc.iter_warc_index(p)) == good
+    assert warc.warc_index(spark, p).count() == len(good)
+
+
+@pytest.mark.parametrize("bad", ["-5 480", "99999999999999999999 480"])
+def test_cdx_out_of_range_line_distrusted(spark, tmp_path, bad):
+    """A negative or int64-overflowing cdx number distrusts the side
+    file like any other malformed line (walk; zero records lost)."""
+    p = WF.write_sample(str(tmp_path / "oor.warc.gz"))
+    good = list(warc.iter_warc_index(p))
+    lines = [f"{o} {s}" for o, s, _ in good]
+    lines[1] = bad
     with open(p + ".cdx", "w") as f:
         f.write("\n".join(lines) + "\n")
     assert list(warc.iter_warc_index(p)) == good
@@ -315,7 +329,7 @@ def test_extract_text_py_twin_parity(spark):
     assert py == jvm
 
 
-def test_distributed_gz_walk_matches_serial(spark, tmp_path):
+def test_distributed_gz_walk_matches_serial(spark, tmp_path, monkeypatch):
     """Chunked member-resync walk (ranges + magic verify) must produce
     exactly the serial walker's (offset, size) set."""
     p = str(tmp_path / "dist.warc.gz")
@@ -325,10 +339,8 @@ def test_distributed_gz_walk_matches_serial(spark, tmp_path):
     serial = {(o, s) for o, s, _ in warc.iter_warc_index(p)}
     # chunk far smaller than the file so many ranges must resync
     fsize = _os.path.getsize(p)
-    chunk = max(fsize // 7, 1024)
-    dist = {(r.offset, r.size) for r in
-            warc.warc_index_gz_distributed(spark, p, chunk_bytes=chunk)
-            .collect()}
+    monkeypatch.setattr(warc, "_WALK_CHUNK", max(fsize // 7, 1024))
+    dist = {(o, s) for o, s, _ in warc.warc_index_gz_distributed(spark, p)}
     assert dist == serial and len(serial) > 100
 
 
@@ -340,7 +352,7 @@ def test_large_gz_auto_uses_distributed_walk(spark, tmp_path, monkeypatch):
     import os as _os
     if _os.path.exists(p + ".cdx"):
         _os.remove(p + ".cdx")
-    monkeypatch.setenv("OSM_SPARK_WARC_WALK_DISTRIBUTED_MIN", "1")
+    monkeypatch.setattr(warc, "WALK_DISTRIBUTED_MIN", 1)
     idx = warc.warc_index(spark, p)
     assert idx.count() == 1 + 2 * WF.N_PAGES
     assert warc.read_warc_pages(spark, p, ).count() > 0
@@ -369,3 +381,92 @@ def test_plain_index_walk_bad_content_length_raises(tmp_path, name):
     p.write_bytes(_BAD_RECORDS[name] + b"\r\n\r\n")
     with pytest.raises(ValueError, match="Content-Length"):
         list(warc.iter_warc_index(str(p)))
+
+
+def test_plain_index_walk_content_length_past_eof_raises(tmp_path):
+    """A Content-Length that runs past the end of the file (truncated
+    file, or a huge number that no seek can take) is a ValueError."""
+    p = tmp_path / "bad.warc"
+    for clen in ("999", "9" * 40):
+        p.write_bytes(b"WARC/1.0\r\nContent-Length: " + clen.encode()
+                      + b"\r\n\r\nbody\r\n\r\n")
+        with pytest.raises(ValueError, match="past the end"):
+            list(warc.iter_warc_index(str(p)))
+
+
+def _flip(path: str, at: int, n: int) -> None:
+    with open(path, "r+b") as f:
+        f.seek(at)
+        chunk = f.read(n)
+        f.seek(at)
+        f.write(bytes(b ^ 0xFF for b in chunk))
+
+
+def test_gz_walk_corrupt_member_raises_value_error(tmp_path):
+    """The serial gzip walk names the corrupt member's offset in a
+    ValueError (not a bare zlib.error)."""
+    p = WF.write_sample(str(tmp_path / "c.warc.gz"))
+    off, size, _ = list(warc.iter_warc_index(p))[3]
+    _flip(p, off + size // 2, 20)
+    with pytest.raises(ValueError, match=f"offset {off}"):
+        list(warc.iter_warc_index(p))
+
+
+@pytest.mark.parametrize("case", ["corrupt_member", "size_cuts_member"])
+def test_decode_bad_member_raises_value_error(tmp_path, case):
+    """A corrupt gzip member, or a cdx size that cuts through one,
+    fails the decode mapper with a ValueError naming the offset."""
+    import pandas as pd
+
+    p = WF.write_sample(str(tmp_path / "d.warc.gz"))
+    off, size, _ = list(warc.iter_warc_index(p))[3]
+    if case == "corrupt_member":
+        _flip(p, off + size // 2, 20)
+    else:
+        size -= 5
+    pdf = pd.DataFrame({"offset": [off], "size": [size],
+                        "compressed": [True]})
+    with pytest.raises(ValueError, match=f"offset {off}"):
+        warc._decode_pdf(p, pdf)
+
+
+@pytest.fixture()
+def scaled_gz(tmp_path):
+    """(path, cdx rows) of a 301-record .warc.gz; its cdx side file
+    exists."""
+    p = WF.write_scaled(str(tmp_path / "sc.warc.gz"), n_pages=301,
+                        text_repeat=3)
+    return p, list(warc.iter_warc_index(p))
+
+
+def test_decode_plan_has_no_exchange(spark, scaled_gz):
+    plan = (warc.decode_records(spark, scaled_gz[0])
+            ._jdf.queryExecution().executedPlan().toString())
+    assert "MapInPandas" in plan and "Exchange" not in plan
+
+
+def test_index_slices_are_contiguous_and_balanced(spark, scaled_gz):
+    """Each index partition — the decode task's input — is one
+    contiguous offset range, and partition sizes differ by <= 1 row."""
+    p, rows = scaled_gz
+    parts = warc.warc_index(spark, p).rdd.glom().collect()
+    assert len(parts) == spark.sparkContext.defaultParallelism
+    assert [tuple(r) for part in parts for r in part] == sorted(rows)
+    sizes = [len(part) for part in parts]
+    assert max(sizes) - min(sizes) <= 1
+
+
+def test_index_sources_decode_identically(spark, scaled_gz, monkeypatch):
+    """cdx, serial-walk and distributed-walk indexes of one file give
+    the identical decode output."""
+    import os
+
+    p, _rows = scaled_gz
+    via_cdx = warc.decode_records(spark, p).collect()
+    os.remove(p + ".cdx")
+    serial = warc.decode_records(spark, p).collect()
+    monkeypatch.setattr(warc, "WALK_DISTRIBUTED_MIN", 1)
+    monkeypatch.setattr(warc, "_WALK_CHUNK", os.path.getsize(p) // 5)
+    dist = warc.decode_records(spark, p).collect()
+    assert len(via_cdx) == 301
+    assert serial == via_cdx and dist == via_cdx

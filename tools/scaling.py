@@ -83,7 +83,7 @@ def run_bench(sf_dir: str, cpus: int, pages: int = 0, queries: str = "",
     # this tool interleaves LEVELS and takes minima across invocations,
     # which is the stronger protocol for cross-level comparison
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS=str(cpus),
-               SPARK_GRAFT_REPS="1", SPARK_GRAFT_BENCH_HISTORY="0")
+               SPARK_GRAFT_REPS="1")
     if pages:
         env["SPARK_GRAFT_PAGES"] = str(pages)
     if queries:
