@@ -239,8 +239,7 @@ def q_g17_knn(spark, sf):
     feats = spark.createDataFrame(
         OSQL.knn_features(32), "feature_id long, lat long, lon long"
     )
-    out = knn_join(docs, feats, k=1, cell_zoom=8, radius=2, key="doc_id",
-                   n_features=32)  # hoisted: no plan-time count()
+    out = knn_join(docs, feats, k=1, cell_zoom=8, radius=2, key="doc_id")
     return out.select("doc_id", "feature_id", "dist2", F.col("rank").alias("rnk"))
 
 

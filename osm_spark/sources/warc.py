@@ -35,6 +35,7 @@ a pandas UDF that shares the Arrow pass of the other text features).
 from __future__ import annotations
 
 import os
+import re
 import zlib
 from collections.abc import Iterator
 
@@ -92,6 +93,14 @@ def _fsize(path: str) -> int:
 # session-timezone-independent (same convention as the events table)
 WARC_SCHEMA = ("url string, warc_ts timestamp_ntz, html binary, "
                "record_type string, http_status int")
+
+# WARC-Date is a W3C-DTF date (WARC 1.1 §5.4), fractions to the
+# nanosecond warc_ts holds.  pd.Timestamp alone also takes "now" and
+# "today" (the wall clock: every decode of the same bytes would differ)
+# and turns year 0000 into 1972, so the form is checked first.
+_W3C_DTF = re.compile(r"(?!0000)\d{4}(-\d\d(-\d\d(T\d\d:\d\d"
+                      r"(:\d\d(\.\d{1,9})?)?(Z|[+-]\d\d:\d\d))?)?)?",
+                      re.ASCII)
 
 
 def _parse_headers(block: bytes) -> dict[str, str]:
@@ -435,6 +444,10 @@ def _decode_pdf(path: str, pdf: pd.DataFrame,
                                 f"corrupt gzip member at offset {offs[j]} "
                                 f"of {path}: {e}") from e
                     url, ts, html, rtype, status = decode_record(raw)
+                    if ts and not _W3C_DTF.fullmatch(ts):
+                        raise ValueError(
+                            f"WARC-Date {ts!r} of the record at offset "
+                            f"{offs[j]} of {path} is not a W3C-DTF date")
                     urls.append(url)
                     tss.append(pd.Timestamp(ts) if ts else pd.NaT)
                     if want_text:

@@ -7,6 +7,7 @@ import pytest
 
 from osm_spark import fixtures as FX
 from osm_spark.geo import kernels as K
+from osm_spark.operators import knn as KNN
 from osm_spark.operators import tiles as T
 from osm_spark.operators.geocode import geocode_ids, geocode_pages
 from osm_spark.operators.knn import brute_force_knn, knn_join
@@ -131,16 +132,17 @@ def test_knn_sparse_features_fallback(spark, geo_pages):
     assert got == want
 
 
-def test_knn_cells_exact_expanding_rings(spark, geo_pages):
+def test_knn_cells_exact_expanding_rings(spark, geo_pages, monkeypatch):
     """Force the cell path with features so sparse that round-1
     certification fails for most points: expanding-ring retries (and the
     residue brute) must still match the brute-force oracle exactly."""
+    monkeypatch.setattr(KNN, "BROADCAST_FEATURE_LIMIT", 0)
     feats = geocode_ids(spark.range(3).withColumnRenamed("id", "feature_id"),
                         "feature_id")
     got = {
         (r.page_id, r.rank, r.feature_id, r.dist2)
-        for r in knn_join(geo_pages, feats, k=1, cell_zoom=8, radius=1,
-                          strategy="cells", exact=True).collect()
+        for r in knn_join(geo_pages, feats, k=1, cell_zoom=8,
+                          radius=1).collect()
     }
     want = {
         (r.page_id, r.rank, r.feature_id, r.dist2)
@@ -150,17 +152,18 @@ def test_knn_cells_exact_expanding_rings(spark, geo_pages):
     assert len({p for p, *_ in got}) == N_PAGES
 
 
-def test_knn_cells_exact_residue_only(spark, geo_pages):
-    """max_expansions=0: every uncertified point goes through the
+def test_knn_cells_exact_residue_only(spark, geo_pages, monkeypatch):
+    """MAX_EXPANSIONS=0: every uncertified point goes through the
     reverse-broadcast residue kernel (feature layer never broadcast);
     results still exact."""
+    monkeypatch.setattr(KNN, "BROADCAST_FEATURE_LIMIT", 0)
+    monkeypatch.setattr(KNN, "MAX_EXPANSIONS", 0)
     feats = geocode_ids(spark.range(3).withColumnRenamed("id", "feature_id"),
                         "feature_id")
     got = {
         (r.page_id, r.rank, r.feature_id, r.dist2)
-        for r in knn_join(geo_pages, feats, k=2, cell_zoom=8, radius=1,
-                          strategy="cells", exact=True,
-                          max_expansions=0).collect()
+        for r in knn_join(geo_pages, feats, k=2, cell_zoom=8,
+                          radius=1).collect()
     }
     want = {
         (r.page_id, r.rank, r.feature_id, r.dist2)
@@ -169,33 +172,61 @@ def test_knn_cells_exact_residue_only(spark, geo_pages):
     assert got == want
 
 
-def test_knn_residue_guard_raises(spark, geo_pages):
-    """A residue bigger than brute_residue_limit raises instead of
+def test_knn_residue_guard_raises(spark, geo_pages, monkeypatch):
+    """A residue bigger than BRUTE_RESIDUE_LIMIT raises instead of
     risking a quadratic pass."""
+    monkeypatch.setattr(KNN, "BROADCAST_FEATURE_LIMIT", 0)
+    monkeypatch.setattr(KNN, "MAX_EXPANSIONS", 0)
+    monkeypatch.setattr(KNN, "BRUTE_RESIDUE_LIMIT", 5)
     feats = geocode_ids(spark.range(2).withColumnRenamed("id", "feature_id"),
                         "feature_id")
     with pytest.raises(ValueError, match="uncertified"):
-        knn_join(geo_pages, feats, k=1, cell_zoom=8, radius=1,
-                 strategy="cells", exact=True, max_expansions=0,
-                 brute_residue_limit=5)
+        knn_join(geo_pages, feats, k=1, cell_zoom=8, radius=1)
 
 
-def test_knn_cell_path_antimeridian(spark):
+def test_knn_cell_path_antimeridian(spark, monkeypatch):
     """Cell-ring candidates wrap at ±180°: a point at lon +179.99°
     finds a feature at -179.99° as its nearest neighbor."""
-    from pyspark.sql import functions as F
-
-    from osm_spark.operators.knn import knn_join
-
+    monkeypatch.setattr(KNN, "BROADCAST_FEATURE_LIMIT", 0)
     pts = spark.createDataFrame(
         [(1, 100_000_000, 1_799_900_000)], "doc_id long, lat long, lon long")
     feats = spark.createDataFrame(
         [(7, 100_000_000, -1_799_900_000),   # 0.02° across the seam
          (8, 100_000_000, 1_500_000_000)],   # 30° away on the same side
         "feature_id long, lat long, lon long")
-    out = knn_join(pts, feats, k=1, cell_zoom=6, radius=1, key="doc_id",
-                   strategy="cells", exact=False).collect()
+    out = knn_join(pts, feats, k=1, cell_zoom=6, radius=1,
+                   key="doc_id").collect()
     assert out and out[0].feature_id == 7
+
+
+@pytest.mark.parametrize("limits", [
+    {},
+    {"BROADCAST_FEATURE_LIMIT": 0},
+    {"BROADCAST_FEATURE_LIMIT": 0, "MAX_EXPANSIONS": 0},
+], ids=["broadcast", "cells", "residue"])
+def test_knn_antimeridian_paths(spark, monkeypatch, limits):
+    """Each path measures dlon across the ±180° seam: points at +179.99°
+    and -179.98° against features on both sides agree with the
+    brute-force oracle (the block kernel's wrap fold on the broadcast
+    and residue paths, the ring wrap on the cell rounds)."""
+    for name, value in limits.items():
+        monkeypatch.setattr(KNN, name, value)
+    pts = spark.createDataFrame(
+        [(1, 100_000_000, 1_799_900_000), (2, -200_000_000, -1_799_800_000)],
+        "page_id long, lat long, lon long")
+    feats = spark.createDataFrame(
+        [(7, 100_000_000, -1_799_900_000),    # 0.02° east of point 1
+         (8, 100_000_000, 1_500_000_000),     # 29.99° west of point 1
+         (9, -200_000_000, 1_795_000_000),    # 0.52° west of point 2
+         (10, -200_000_000, -1_600_000_000)],  # 19.98° east of point 2
+        "feature_id long, lat long, lon long")
+    got = {(r.page_id, r.rank, r.feature_id, r.dist2)
+           for r in knn_join(pts, feats, k=2, cell_zoom=6,
+                             radius=1).collect()}
+    want = {(r.page_id, r.rank, r.feature_id, r.dist2)
+            for r in brute_force_knn(pts, feats, k=2).collect()}
+    assert got == want
+    assert {(p, f) for p, rank, f, _ in got if rank == 1} == {(1, 7), (2, 9)}
 
 
 # ------------------------------------------------- review regressions
@@ -204,45 +235,43 @@ def test_knn_broadcast_duplicate_feature_ties(spark):
     """Features at IDENTICAL coordinates: every path must pick the
     lower feature_id (the (dist2, feature_id) contract), including
     when argpartition's arbitrary boundary selection would not."""
-    from osm_spark.operators.knn import knn_broadcast
-
     pts = spark.createDataFrame(
         [(1, 10**6, 10**6)], "page_id long, lat long, lon long")
     # 4 co-located features; ids deliberately unsorted on input
     feats = spark.createDataFrame(
         [(9, 0, 0), (3, 0, 0), (7, 0, 0), (5, 0, 0)],
         "feature_id long, lat long, lon long")
-    got = knn_broadcast(pts, feats, k=2).orderBy("rank").collect()
+    got = knn_join(pts, feats, k=2).orderBy("rank").collect()
     assert [r.feature_id for r in got] == [3, 5]
     # and a far feature cannot displace a tied near one
     feats2 = spark.createDataFrame(
         [(9, 0, 0), (3, 0, 0), (1, 10**7, 10**7)],
         "feature_id long, lat long, lon long")
-    got2 = knn_broadcast(pts, feats2, k=2).orderBy("rank").collect()
+    got2 = knn_join(pts, feats2, k=2).orderBy("rank").collect()
     assert [r.feature_id for r in got2] == [3, 9]
 
 
-def test_knn_join_empty_points_exact(spark):
-    """exact=True on zero points returns empty instead of crashing on
+def test_knn_join_empty_points_exact(spark, monkeypatch):
+    """The cell path on zero points returns empty instead of crashing on
     the NULL lat stats."""
+    monkeypatch.setattr(KNN, "BROADCAST_FEATURE_LIMIT", 0)
     pts = spark.createDataFrame([], "page_id long, lat long, lon long")
     feats = spark.createDataFrame(
         [(1, 0, 0)], "feature_id long, lat long, lon long")
-    out = knn_join(pts, feats, k=1, exact=True, strategy="cells",
-                   n_features=1)
+    out = knn_join(pts, feats, k=1)
     assert out.count() == 0
 
 
-def test_knn_point_at_exact_antimeridian(spark):
+def test_knn_point_at_exact_antimeridian(spark, monkeypatch):
     """lon = +180 deg exactly: the point's cell wraps to column 0 and
     still finds the feature registered across the seam."""
+    monkeypatch.setattr(KNN, "BROADCAST_FEATURE_LIMIT", 0)
     lon180 = 180 * 10**7
     pts = spark.createDataFrame(
         [(1, 0, lon180)], "page_id long, lat long, lon long")
     feats = spark.createDataFrame(
         [(42, 0, -lon180 + 10**5)], "feature_id long, lat long, lon long")
-    got = knn_join(pts, feats, k=1, exact=False, strategy="cells",
-                   n_features=1).collect()
+    got = knn_join(pts, feats, k=1).collect()
     assert len(got) == 1 and got[0].feature_id == 42
 
 
@@ -287,8 +316,8 @@ def test_page_tiles_match_kernel_at_poles(spark):
 
 
 def test_knn_auto_probe_runs_one_job(spark, geo_pages):
-    """strategy='auto' sizes AND ships a small layer from one bounded
-    collect: exactly one Spark job runs before the query does."""
+    """knn_join sizes AND ships a small layer from one bounded collect:
+    exactly one Spark job runs before the query does."""
     feats = geocode_ids(
         spark.range(300).withColumnRenamed("id", "feature_id"), "feature_id")
     sc = spark.sparkContext
@@ -307,8 +336,6 @@ def test_knn_auto_probe_runs_one_job(spark, geo_pages):
 def test_knn_auto_probe_over_limit_takes_cells(spark, geo_pages, monkeypatch):
     """A layer past BROADCAST_FEATURE_LIMIT: the probe's arrays are
     dropped, the cell-ring path answers, and the result stays exact."""
-    from osm_spark.operators import knn as KNN
-
     def no_broadcast(*a, **kw):
         raise AssertionError("broadcast path taken over the limit")
 

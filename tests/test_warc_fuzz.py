@@ -1,8 +1,8 @@
 """Fuzz contract for the WARC decoders of untrusted bytes: mutated or
 truncated fixture bytes given to ``decode_record``, ``iter_warc_index``
-(plain and gzip files, no cdx side file) and ``_walk_range`` either
-decode or raise ``ValueError``, within a time bound.  No Spark session
-needed."""
+(plain and gzip files, no cdx side file), ``_walk_range`` and the decode
+mapper ``_decode_pdf`` either decode or raise ``ValueError``, within a
+time bound.  No Spark session needed."""
 
 from __future__ import annotations
 
@@ -10,6 +10,8 @@ import gzip
 import re
 import time
 
+import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -24,15 +26,27 @@ GZ = b"".join(gzip.compress(r, mtime=0) for r in RECORDS)
 
 FUZZ = settings(max_examples=150, deadline=None)
 
+# spliced over a WARC-Date value: W3C-DTF edge cases, words pandas
+# parses as the wall clock, and random date-ish text
+DATES = st.one_of(
+    st.sampled_from(["now", "today", "0000", "2025", "2025-02-30",
+                     "1677-09-21T00:12:43Z", "2262-04-12T00:00Z",
+                     "9999-12-31T23:59:59.999999999-23:59",
+                     "2025-01-01T00:00+23:59", "2025-01-01T24:00Z"]),
+    st.text("0123456789-:+.TZ nowtdayNOW", max_size=40))
+
 
 @st.composite
 def mutated(draw, data: bytes) -> bytes:
-    """``data`` after up to 8 byte edits (overwrite, insert, delete, or
-    digits spliced into a ``Content-Length`` value) and a truncation."""
+    """``data`` after up to 8 byte edits (overwrite, insert, delete,
+    digits spliced into a ``Content-Length`` value, or a ``WARC-Date``
+    value replaced) and a truncation."""
     buf = bytearray(data)
     lengths = [m.end() for m in re.finditer(rb"Content-Length: ", data)]
+    dates = [m.end() for m in re.finditer(rb"WARC-Date: ", data)]
     for _ in range(draw(st.integers(0, 8))):
-        op = draw(st.sampled_from(["set", "insert", "delete", "digits"]))
+        op = draw(st.sampled_from(["set", "insert", "delete", "digits",
+                                   "date"]))
         i = draw(st.integers(0, max(len(buf) - 1, 0)))
         if op == "set" and buf:
             buf[i] = draw(st.integers(0, 255))
@@ -44,6 +58,10 @@ def mutated(draw, data: bytes) -> bytes:
             at = min(draw(st.sampled_from(lengths)), len(buf))
             buf[at:at] = draw(st.text("0123456789-", min_size=1,
                                       max_size=30)).encode()
+        elif op == "date" and dates:
+            at = min(draw(st.sampled_from(dates)), len(buf))
+            end = buf.find(b"\r\n", at)
+            buf[at:end if end >= 0 else at] = draw(DATES).encode()
     cut = draw(st.one_of(st.just(len(buf)), st.integers(0, len(buf))))
     return bytes(buf[:cut])
 
@@ -93,3 +111,36 @@ def test_walk_range_fuzz(fuzz_dir, data, start, span):
     p.write_bytes(data)
     _contract(lambda: list(warc._walk_range(str(p), start, start + span,
                                             len(data))))
+
+
+def _write_records(path, recs: list[bytes], compressed: bool) -> pd.DataFrame:
+    """Write ``recs`` (one gzip member each when ``compressed``) and
+    return their (offset, size, compressed) index batch."""
+    blobs = [gzip.compress(r, mtime=0) if compressed else r for r in recs]
+    path.write_bytes(b"".join(blobs))
+    sizes = np.array([len(b) for b in blobs], np.int64)
+    return pd.DataFrame({"offset": np.cumsum(sizes) - sizes, "size": sizes,
+                         "compressed": compressed})
+
+
+@FUZZ
+@given(st.lists(st.sampled_from(RECORDS).flatmap(mutated), min_size=1,
+                max_size=4),
+       st.booleans(), st.sampled_from([None, ("url", "warc_ts", "text")]))
+def test_decode_mapper_fuzz(fuzz_dir, recs, compressed, columns):
+    p = fuzz_dir / ("m.warc.gz" if compressed else "m.warc")
+    index = _write_records(p, recs, compressed)
+    _contract(warc._decode_pdf, str(p), index, columns)
+
+
+@pytest.mark.parametrize("date", ["now", "today", "0000"])
+def test_decode_mapper_rejects_non_w3c_date(tmp_path, date):
+    """pandas parses "now"/"today" as the wall clock and year 0000 as
+    1972: the mapper raises, naming the record's offset, instead."""
+    rec = RECORDS[1].replace(b"WARC-Date: 2025-01-01T00:00:00Z",
+                             f"WARC-Date: {date}".encode())
+    assert rec != RECORDS[1]
+    p = tmp_path / "d.warc"
+    index = _write_records(p, [RECORDS[0], rec], False)
+    with pytest.raises(ValueError, match=f"offset {len(RECORDS[0])} "):
+        warc._decode_pdf(str(p), index)

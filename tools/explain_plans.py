@@ -43,11 +43,12 @@ def main():
     sections = []
     checks = []
 
-    def section(title, df, notes, must_contain=()):
+    def section(title, df, notes, must_contain=(), must_not=()):
         plan = fmt(df)
         for needle in must_contain:
-            ok = needle in plan
-            checks.append((title, needle, ok))
+            checks.append((title, needle, needle in plan))
+        for needle in must_not:
+            checks.append((title, f"no {needle}", needle not in plan))
         sections.append(f"## {title}\n\n{notes}\n\n```\n{plan.strip()}\n```\n")
 
     # 1. predicate pushdown + column pruning at the parquet scan
@@ -63,17 +64,16 @@ def main():
     )
 
     # 2. spatial join, broadcast path: single mapInArrow, NO shuffle
-    sj = spatial_join(geo, FX.polygons_df(spark, 50), how="left", page_key="doc_id")
-    plan = fmt(sj)
-    has_no_exchange = "Exchange" not in plan
-    checks.append(("Spatial join (broadcast path)", "no Exchange", has_no_exchange))
-    sections.append(
-        "## Spatial join — broadcast cell-index path\n\n"
+    section(
+        "Spatial join — broadcast cell-index path",
+        spatial_join(geo, FX.polygons_df(spark, 50), how="left",
+                     page_key="doc_id"),
         "One `MapInArrow` over the pages scan; the CSR polygon index ships "
         "via TorrentBroadcast (outside the plan). ZERO Exchange operators "
         "— pages are never shuffled, which is what makes the 10^12-row "
-        "side cheap: cost = one scan + vectorized PIP.\n\n"
-        f"```\n{plan.strip()}\n```\n")
+        "side cheap: cost = one scan + vectorized PIP.",
+        must_not=("Exchange",),
+    )
 
     # 3. partitioned disk-index path: hash exchange variant + the
     # zero-shuffle clustered variant
@@ -104,41 +104,34 @@ def main():
         "take this path; without a `layer_path`, `spatial_join` first "
         "writes the layer to a scratch directory.",
         must_contain=("Exchange", "MapInArrow", "REPARTITION_BY_COL"),
+        must_not=("EvalPython",),
     )
-    checks.append(("Spatial join — partitioned disk-index path (huge layers)",
-                   "no EvalPython", "EvalPython" not in fmt(sjp)))
-    sjp0 = spatial_join_partitioned(geo, str(layer_path), page_key="doc_id",
-                                    pages_clustered=True)
-    plan0 = fmt(sjp0)
-    checks.append(("Spatial join — partitioned, clustered pages",
-                   "no Exchange", "Exchange" not in plan0))
-    sections.append(
-        "## Spatial join — partitioned path, spatially-clustered pages\n\n"
+    section(
+        "Spatial join — partitioned path, spatially-clustered pages",
+        spatial_join_partitioned(geo, str(layer_path), page_key="doc_id",
+                                 pages_clustered=True),
         "When the pages table is stored Hilbert-clustered "
         "(`cluster.cluster_by_hilbert` — the natural Iceberg layout), "
         "input splits are already cell-local and the join needs NO "
         "exchange at all: scan → per-split layer range-read → PIP.  The "
         "zero-shuffle spatial join; measured within ~1.2x of the "
-        "broadcast path (and ahead of it under co-tenant load).\n\n"
-        f"```\n{plan0.strip()}\n```\n")
+        "broadcast path (and ahead of it under co-tenant load).",
+        must_not=("Exchange",),
+    )
 
     # 3b. bucketed embedding near-dup: LSH bucket equi-join, no all-pairs
     from osm_spark.operators.similarity import cosine_near_dup_bucketed
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    nd = cosine_near_dup_bucketed(emb, threshold=0.4)
-    plan_nd = fmt(nd)
-    checks.append(("Embedding near-dup (bucketed)", "no CartesianProduct",
-                   "CartesianProduct" not in plan_nd))
-    checks.append(("Embedding near-dup (bucketed)", "no BroadcastNestedLoopJoin",
-                   "BroadcastNestedLoopJoin" not in plan_nd))
-    sections.append(
-        "## Embedding near-dup — LSH-bucketed path\n\n"
+    section(
+        "Embedding near-dup — LSH-bucketed path",
+        cosine_near_dup_bucketed(emb, threshold=0.4),
         "Candidates come from an equi-join on (table, bucket) — the plan "
         "contains hash joins only, no CartesianProduct / nested-loop "
         "join, so the self-join cost scales with bucket occupancy, not "
-        "N^2.  The exact quantized verify runs on candidate pairs only.\n\n"
-        f"```\n{plan_nd.strip()}\n```\n")
+        "N^2.  The exact quantized verify runs on candidate pairs only.",
+        must_not=("CartesianProduct", "BroadcastNestedLoopJoin"),
+    )
 
     # 3c. PBF source: parallel blob decode is a MapInPandas over the index
     from osm_spark.sources import pbf
@@ -172,29 +165,20 @@ def main():
         "are never shuffled.",
         must_contain=("MapInPandas",),
     )
-    wtxt = warc.read_warc_pages_text(spark, warc_path)
-    plan_wtxt = fmt(wtxt)
-    checks.append(("WARC decode — text-only projection", "MapInPandas",
-                   "MapInPandas" in plan_wtxt))
-    checks.append(("WARC decode — text-only projection", "no html column",
-                   "html" not in plan_wtxt))
-    sections.append(
-        "## WARC decode — text-only projection\n\n"
+    section(
+        "WARC decode — text-only projection",
+        warc.read_warc_pages_text(spark, warc_path),
         "`read_warc_pages_text`: html→text runs INSIDE the decode "
         "mapper (the byte-identical python twin of the JVM extractor), "
         "so html bytes never cross the Arrow boundary — the plan "
         "carries no `html` column at all.  This halves the mapper's "
         "Arrow transfer for text-only pipelines; the full reader keeps "
-        "the byte-identity contract.\n\n"
-        f"```\n{plan_wtxt.strip()}\n```\n")
-    e2e = entrymod.q_e2e_warc_geo(spark, sf)
-    plan_e2e = fmt(e2e)
-    checks.append(("Composed WARC->geo chain", "no CartesianProduct",
-                   "CartesianProduct" not in plan_e2e))
-    checks.append(("Composed WARC->geo chain", "AdaptiveSparkPlan",
-                   "AdaptiveSparkPlan" in plan_e2e))
-    sections.append(
-        "## Composed webtext chain — WARC → text → geocode → PIP join → tiles\n\n"
+        "the byte-identity contract.",
+        must_contain=("MapInPandas",), must_not=("html",),
+    )
+    section(
+        "Composed webtext chain — WARC → text → geocode → PIP join → tiles",
+        entrymod.q_e2e_warc_geo(spark, sf),
         "The north-star program as one plan: html→text and the url "
         "geocode are whole-stage-codegen expressions over the decode "
         "output; the polygon PIP index broadcasts (outside the plan); "
@@ -204,48 +188,50 @@ def main():
         "the single wide op is the page_id equi-join of the PIP match "
         "leg — statically SortMergeJoin because `MapInPandas` output "
         "carries no size stats, converted by AQE at runtime when a "
-        "side is small.\n\n"
-        f"```\n{plan_e2e.strip()}\n```\n")
-
-    # 4. kNN cell path: broadcast of the registered feature cells
-    feats = geocode_ids(spark.range(64).withColumnRenamed("id", "feature_id"),
-                        "feature_id")
-    knn = knn_join(geo, feats, k=1, cell_zoom=10, radius=1, key="doc_id",
-                   strategy="cells", exact=False)
-    section(
-        "kNN — cell-ring candidate path",
-        knn,
-        "Feature cells broadcast (`BroadcastExchange` + BroadcastHashJoin); "
-        "pages never shuffle for candidate generation; the only wide op is "
-        "the per-point top-k window.",
-        must_contain=("BroadcastHashJoin",),
+        "side is small.",
+        must_contain=("AdaptiveSparkPlan",), must_not=("CartesianProduct",),
     )
 
-    # 4b. kNN exact path: expanding rings + residue — the fallback must
-    # never broadcast the feature layer (r4 finding: the old brute pass
-    # was crossJoin(broadcast(ALL features)) = BroadcastNestedLoopJoin)
-    # checkpoint_rounds=False: production checkpoints each round (so the
-    # executed plan per round is exactly the sub-tree audited here); the
-    # audit wants the full unfolded tree, not Scan ExistingRDD stubs
-    knn_exact = knn_join(geo, feats, k=1, cell_zoom=8, radius=1,
-                         key="doc_id", strategy="cells", exact=True,
-                         checkpoint_rounds=False)
-    plan = fmt(knn_exact)
-    checks.append(("kNN — exact fallback (expanding rings + residue)",
-                   "no CartesianProduct", "CartesianProduct" not in plan))
-    checks.append(("kNN — exact fallback (expanding rings + residue)",
-                   "no BroadcastNestedLoopJoin",
-                   "BroadcastNestedLoopJoin" not in plan))
-    sections.append(
-        "## kNN — exact fallback: expanding rings + reverse-broadcast "
-        "residue\n\n"
-        "Uncertified points retry through point-side ring explosion "
-        "(the feature layer never re-explodes or broadcasts); the final "
-        "guarded-small residue streams the features through MapInPandas "
-        "with the residue POINTS broadcast — so the plan contains no "
-        "CartesianProduct and no BroadcastNestedLoopJoin anywhere, i.e. "
-        "no full-layer broadcast on any kNN path.\n\n"
-        f"```\n{plan.strip()}\n```\n")
+    # 4. kNN cell path, one unfolded piece of each kind: knn_join
+    # checkpoints every round, so its own plan shows checkpoint scans
+    from osm_spark.operators import knn as KNN
+
+    feats = geocode_ids(spark.range(64).withColumnRenamed("id", "feature_id"),
+                        "feature_id")
+    pts, cfeats = KNN._cell_frames(geo, feats, 8, "doc_id")
+    no_brute = ("CartesianProduct", "BroadcastNestedLoopJoin")
+    section(
+        "kNN — cell path, round 0",
+        KNN._rank_topk(KNN._first_candidates(pts, cfeats, 1, 8), "doc_id", 1),
+        "Features register in every cell within Chebyshev radius R of "
+        "their own and broadcast (`BroadcastExchange` + "
+        "BroadcastHashJoin); pages never shuffle for candidate "
+        "generation, and the only wide op is the per-point top-k window.  "
+        "Memory bound: the broadcast holds (2R+1)² rows of five longs per "
+        "feature, so it grows with the layer — this path runs only above "
+        "`BROADCAST_FEATURE_LIMIT` (200k features), i.e. ≥ 5M rows at "
+        "R=2.",
+        must_contain=("BroadcastHashJoin",), must_not=no_brute,
+    )
+    section(
+        "kNN — cell path, one retry round",
+        KNN._rank_topk(KNN._ring_candidates(pts, cfeats, 2, 8), "doc_id", 1),
+        "Uncertified points explode into the doubled ring and equi-join "
+        "the features keyed at their own cell; the feature side never "
+        "re-explodes or re-broadcasts.",
+        must_not=no_brute,
+    )
+    section(
+        "kNN — residue pass",
+        KNN._residue_brute(feats, geo.select("doc_id", "lat", "lon")
+                           .limit(4).collect(), 1, "doc_id"),
+        "The guarded-small residue (at most `BRUTE_RESIDUE_LIMIT` "
+        "points) is the broadcast; the features stream through the "
+        "block kernel in `MapInPandas` with a per-batch partial top-k, "
+        "and a window merges the partials.  The feature layer is never "
+        "broadcast here.",
+        must_not=no_brute,
+    )
 
     # 5. viewport tile pruning
     tiles = T.page_tiles_exact(
@@ -272,21 +258,18 @@ def main():
 
     rz = RZ.rasterize_polygons(FX.polygons_df(spark, 5).limit(5),
                                FX.LAT0, FX.LON0, FX.SPAN, 128)
-    plan_rz = fmt(rz)
-    checks.append(("Raster fill (vector->raster)", "Range",
-                   "Range" in plan_rz))
-    checks.append(("Raster fill (vector->raster)", "no CartesianProduct",
-                   "CartesianProduct" not in plan_rz))
-    sections.append(
-        "## Raster fill — vector → cell grid\n\n"
+    section(
+        "Raster fill — vector → cell grid",
+        rz,
         "The grid is one JVM `Range` (never materialized to storage, "
         "splits generated per-task); the fill is the broadcast PIP "
         "`MapInPandas` — so rasterizing an n×n grid against a layer "
         "costs one codegen'd scan of n² synthetic rows, no cartesian "
         "grid×polygon join.  The only exchanges belong to the 4-neighbor "
         "boundary count (an equi-join + groupBy on cell keys), which "
-        "runs on the filled subset, not the full grid.\n\n"
-        f"```\n{plan_rz.strip()}\n```\n")
+        "runs on the filled subset, not the full grid.",
+        must_contain=("Range",), must_not=("CartesianProduct",),
+    )
 
     # 7. raster compositing: two partial-agg hash aggregations, no cartesian
     comp = RZ.composite_cells(rz)
