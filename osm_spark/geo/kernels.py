@@ -558,49 +558,6 @@ def _segment_cross_y(x0: int):
     return cross_y
 
 
-def clip_ring_halfplane(x0: int, keep_left: bool, xs, ys):
-    """Clip a closed ring against the vertical half-plane x<=x0 (or
-    x>=x0 when ``keep_left`` is False) — Sutherland-Hodgman with integer
-    intersection rounding.
-
-    The reference splits rings at a vertical line and re-stitches the
-    partial rings by cut-point matching (/root/reference/osm/
-    clipping.ml:25-66, 123-147); for simple rings the half-plane clip
-    produces the same region boundary in one pass.  Intersection y is
-    rounded to the nearest integer (clipping.ml computes on ints).
-
-    Returns (xs', ys') closed arrays, or empty arrays if nothing kept.
-    """
-    xs = np.asarray(xs, np.int64)
-    ys = np.asarray(ys, np.int64)
-    if len(xs) < 4:
-        return xs[:0], ys[:0]
-    px, py = xs[:-1], ys[:-1]  # open ring
-    n = len(px)
-    out_x: list[int] = []
-    out_y: list[int] = []
-
-    def inside(x):
-        return x <= x0 if keep_left else x >= x0
-
-    cross_y = _segment_cross_y(x0)
-
-    for i in range(n):
-        j = (i + 1) % n
-        a_in, b_in = inside(px[i]), inside(px[j])
-        if a_in:
-            out_x.append(int(px[i]))
-            out_y.append(int(py[i]))
-        if a_in != b_in:
-            out_x.append(int(x0))
-            out_y.append(cross_y(px[i], py[i], px[j], py[j]))
-    if len(out_x) < 3:
-        return xs[:0], ys[:0]
-    out_x.append(out_x[0])
-    out_y.append(out_y[0])
-    return np.asarray(out_x, np.int64), np.asarray(out_y, np.int64)
-
-
 def clip_polyline_halfplane(x0: int, keep_left: bool, xs, ys):
     """Clip an open polyline at x=x0; returns a list of (xs', ys')
     pieces (a polyline may split into several runs)."""

@@ -3,7 +3,8 @@
 Two derivations, both pure JVM-side column expressions (no Python):
 
 - ``geocode_pages``: extract the geo slug embedded in the url path
-  (``…/geo/<lat_fp>/<lon_fp>/…``) — regexp_extract, whole-stage codegen.
+  (``…/geo/<lat_fp>/<lon_fp>/…``) — regexp_extract, whole-stage codegen,
+  one SQL expression per derived column.
 - ``geocode_ids``: hash-geocode an integer id into the fixture world box
   with exact int64 arithmetic (same formula as the DuckDB oracle SQL):
   lat = LAT0 + (id*GEO_A) % SPAN, lon = LON0 + (id*GEO_B) % SPAN.
@@ -11,12 +12,24 @@ Two derivations, both pure JVM-side column expressions (no Python):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.fixtures import GEO_A, GEO_B, LAT0, LON0, SPAN
+from osm_spark.operators.sqlexpr import sql_name, sql_str
 
+_PAGE_RE = r"page(\d+)$"
 _GEO_RE = r"/geo/(-?\d+)/(-?\d+)/"
+
+
+def id_geo_sql(id_sql: str) -> tuple[str, str]:
+    """(lat, lon) SQL of the hash geocode of the BIGINT ``id_sql``.
+    Reduce mod SPAN before multiplying (id*GEO_A wraps int64 past
+    ~3.5e9) and use pmod (floored) so negative ids land inside the
+    world box exactly like the numpy fixture and DuckDB twins."""
+    m = f"pmod({id_sql}, {SPAN})"
+    return (f"CAST({LAT0} + pmod({m} * {GEO_A % SPAN}, {SPAN}) AS BIGINT)",
+            f"CAST({LON0} + pmod({m} * {GEO_B % SPAN}, {SPAN}) AS BIGINT)")
 
 
 def geocode_pages(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -25,29 +38,21 @@ def geocode_pages(df: DataFrame, url_col: str = "url") -> DataFrame:
     Falls back to the hash geocode of ``page_id`` when no geo slug exists.
     Whatever cannot be derived is NULL, never a task failure: a url
     without a ``page<digits>`` suffix, or a number that overflows
-    ``long`` (``try_cast`` under ANSI casts).
+    ``long`` (``try_cast`` under ANSI casts).  The patterns reach the
+    SQL parser through ``sql_str``, which keeps their backslashes.
     """
-    page_id = F.regexp_extract(F.col(url_col), r"page(\d+)$", 1).try_cast("long")
-    lat_s = F.regexp_extract(F.col(url_col), _GEO_RE, 1)
-    lon_s = F.regexp_extract(F.col(url_col), _GEO_RE, 2)
-    lat_h, lon_h = geocode_id_cols(page_id)
-    return (
-        df.withColumn("page_id", page_id)
-        .withColumn("lat", F.when(lat_s != "", lat_s.try_cast("long")).otherwise(lat_h))
-        .withColumn("lon", F.when(lon_s != "", lon_s.try_cast("long")).otherwise(lon_h))
-    )
+    url = sql_name(url_col)
+    page_id = f"try_cast(regexp_extract({url}, {sql_str(_PAGE_RE)}, 1) AS BIGINT)"
 
+    def coord(group: int, hashed: str) -> str:
+        m = f"regexp_extract({url}, {sql_str(_GEO_RE)}, {group})"
+        return f"CASE WHEN {m} != '' THEN try_cast({m} AS BIGINT) ELSE {hashed} END"
 
-def geocode_id_cols(id_col: Column) -> tuple[Column, Column]:
-    # reduce mod SPAN before multiplying (id*GEO_A wraps int64 past
-    # ~3.5e9) and use pmod (floored) so negative ids land inside the
-    # world box exactly like the numpy fixture and DuckDB twins
-    m = F.pmod(id_col, F.lit(SPAN))
-    lat = F.lit(LAT0) + F.pmod(m * F.lit(GEO_A % SPAN), F.lit(SPAN))
-    lon = F.lit(LON0) + F.pmod(m * F.lit(GEO_B % SPAN), F.lit(SPAN))
-    return lat.cast("long"), lon.cast("long")
+    lat_h, lon_h = id_geo_sql("page_id")
+    return df.withColumn("page_id", F.expr(page_id)).withColumns(
+        {"lat": F.expr(coord(1, lat_h)), "lon": F.expr(coord(2, lon_h))})
 
 
 def geocode_ids(df: DataFrame, id_col: str) -> DataFrame:
-    lat, lon = geocode_id_cols(F.col(id_col))
-    return df.withColumn("lat", lat).withColumn("lon", lon)
+    lat, lon = id_geo_sql(sql_name(id_col))
+    return df.withColumn("lat", F.expr(lat)).withColumn("lon", F.expr(lon))

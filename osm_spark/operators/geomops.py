@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.geo import kernels as K
-from osm_spark.operators.spatial_join import flat_values, ring_cols
+from osm_spark.operators.spatial_join import RING_SQL, flat_values
 
 
 def haversine_col(lat1, lon1, lat2, lon2):
@@ -83,7 +83,7 @@ def feature_dp_counts(polys: DataFrame, ratio: int) -> DataFrame:
                 "n_in": n_in,
                 "n_kept": np.bincount(vfeat[keep], minlength=len(pdf))})
 
-    return polys.select("feature_id", *ring_cols()).mapInPandas(
+    return polys.selectExpr("feature_id", *RING_SQL).mapInPandas(
         fn, "feature_id long, n_in long, n_kept long")
 
 

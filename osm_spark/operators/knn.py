@@ -39,31 +39,33 @@ feature density histogram.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from osm_spark.geo import kernels as K
-from osm_spark.operators.spatial_join import with_cell
+from osm_spark.operators.spatial_join import tile_x_sql, tile_y_sql
+from osm_spark.operators.sqlexpr import sql_name
+
+# Planar fixed-point dist²; dlon wrapped to <=180° — both the
+# geographically right metric at the antimeridian and the int64
+# overflow guard (unwrapped dlon up to 3.6e9 squares past 2^63).
+_DLON = "abs(lon - flon)"
+_DIST2_SQL = (f"(lat - flat) * (lat - flat) + least({_DLON}, {K.LON_WORLD} - {_DLON})"
+              f" * least({_DLON}, {K.LON_WORLD} - {_DLON})")
 
 
-def _dist2():
-    """Planar fixed-point dist²; dlon wrapped to <=180° — both the
-    geographically right metric at the antimeridian and the int64
-    overflow guard (unwrapped dlon up to 3.6e9 squares past 2^63)."""
-    dlat = F.col("lat") - F.col("flat")
-    dlon = F.abs(F.col("lon") - F.col("flon"))
-    dlon = F.least(dlon, F.lit(K.LON_WORLD) - dlon)
-    return dlat * dlat + dlon * dlon
+def _top_k(df: DataFrame, key: str, k: int) -> DataFrame:
+    """The rows of ``df`` ranked 1..k per ``key`` by (dist2,
+    feature_id), with their ``rank``."""
+    return df.selectExpr(
+        "*", f"row_number() OVER (PARTITION BY {sql_name(key)} "
+        "ORDER BY dist2, feature_id) AS rank").filter(f"rank <= {k}")
 
 
 def _rank_topk(cand: DataFrame, key: str, k: int) -> DataFrame:
-    w = Window.partitionBy(key).orderBy("dist2", "feature_id")
-    return (
-        cand.select(key, "lat", "lon", "feature_id", "flat", "flon")
-        .withColumn("dist2", _dist2())
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(cand.selectExpr(sql_name(key), "lat", "lon", "feature_id",
+                                  "flat", "flon", f"{_DIST2_SQL} AS dist2"), key, k)
 
 
 def cell_min_extent(cell_zoom: int, lat_min_fp: int, lat_max_fp: int,
@@ -85,7 +87,9 @@ BROADCAST_FEATURE_LIMIT = 200_000
 MAX_EXPANSIONS = 3          # ring-doubling retry rounds before the residue pass
 BRUTE_RESIDUE_LIMIT = 10_000  # max uncertified points the brute pass accepts
 
-_BLOCK_SCHEMA = "k long, feature_id long, dist2 long, rank int"
+_BLOCK_SCHEMA = StructType([
+    StructField("k", LongType()), StructField("feature_id", LongType()),
+    StructField("dist2", LongType()), StructField("rank", IntegerType())])
 
 
 def _topk_block(d2: np.ndarray, f_id: np.ndarray, kk: int):
@@ -183,7 +187,7 @@ def _knn_broadcast_frame(points: DataFrame, feats, k: int,
             yield _knn_block(pdf.iloc[:, 0].to_numpy(),
                              *_cols(pdf, "lat", "lon"), *bc.value, k)
 
-    return points.select(key, "lat", "lon").mapInPandas(
+    return points.selectExpr(sql_name(key), "lat", "lon").mapInPandas(
         fn, _BLOCK_SCHEMA).withColumnRenamed("k", key)
 
 
@@ -204,11 +208,9 @@ def _residue_brute(features: DataFrame, residue_rows, k: int,
             yield _knn_block(*bc.value,
                              *_cols(pdf, "feature_id", "lat", "lon"), k)
 
-    partials = features.select("feature_id", "lat", "lon").mapInPandas(
+    partials = features.selectExpr("feature_id", "lat", "lon").mapInPandas(
         fn, _BLOCK_SCHEMA).withColumnRenamed("k", key)
-    w = Window.partitionBy(key).orderBy("dist2", "feature_id")
-    return partials.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k)
+    return _top_k(partials.drop("rank"), key, k)
 
 
 def _ring(df: DataFrame, radius: int, cell_zoom: int) -> DataFrame:
@@ -217,15 +219,12 @@ def _ring(df: DataFrame, radius: int, cell_zoom: int) -> DataFrame:
     wraps dlon); cy does not (no pole wrap) — out-of-range rows never
     match.  Needs 2*radius+1 < 2**cell_zoom, so wrapped cx values stay
     distinct (no duplicate candidates)."""
-    off = F.sequence(F.lit(-radius), F.lit(radius))
-    return (
-        df.withColumn("dx", F.explode(off))
-        .withColumn("dy", F.explode(off))
-        .withColumn("cx", F.pmod(F.col("cx") + F.col("dx"),
-                                 F.lit(1 << cell_zoom)))
-        .withColumn("cy", F.col("cy") + F.col("dy"))
-        .drop("dx", "dy")
-    )
+    off = f"sequence({-radius}, {radius})"
+    shifted = {"cx": f"pmod(cx + dx, {1 << cell_zoom}) AS cx", "cy": "cy + dy AS cy"}
+    return df.selectExpr(
+        "*", f"inline(flatten(transform({off}, dx -> transform({off}, "
+        "dy -> named_struct('dx', dx, 'dy', dy)))))",
+    ).selectExpr(*(shifted.get(c, sql_name(c)) for c in df.columns))
 
 
 def _cell_frames(points: DataFrame, features: DataFrame, cell_zoom: int,
@@ -233,14 +232,10 @@ def _cell_frames(points: DataFrame, features: DataFrame, cell_zoom: int,
     """(points, features) keyed by their cell (cx, cy); features carry
     their coordinates as (flat, flon).  pmod folds a coordinate at
     exactly +180° (cx == 2^z) onto cell 0, as ``_ring`` wraps."""
-    def cell(df, lat, lon):
-        return with_cell(df, cell_zoom, lat, lon).withColumn(
-            "cx", F.pmod(F.col("cx"), F.lit(1 << cell_zoom)))
-
-    feats = features.select("feature_id", F.col("lat").alias("flat"),
-                            F.col("lon").alias("flon"))
-    return (cell(points.select(key, "lat", "lon"), "lat", "lon"),
-            cell(feats, "flat", "flon"))
+    cell = (f"pmod({tile_x_sql('lon', cell_zoom)}, {1 << cell_zoom}) AS cx",
+            f"{tile_y_sql('lat', cell_zoom)} AS cy")
+    return (points.selectExpr(sql_name(key), "lat", "lon", *cell),
+            features.selectExpr("feature_id", "lat AS flat", "lon AS flon", *cell))
 
 
 def _first_candidates(pts: DataFrame, feats: DataFrame, radius: int,
@@ -284,12 +279,13 @@ def knn_join(
     _residue_brute)."""
     # Columnar (Arrow), so overshooting a large layer costs about what a
     # JVM limit().count() does — no per-row Python objects
-    probe = features.select("feature_id", "lat", "lon").limit(
+    probe = features.selectExpr("feature_id", "lat", "lon").limit(
         BROADCAST_FEATURE_LIMIT + 1).toPandas()
     if len(probe) <= BROADCAST_FEATURE_LIMIT:
         return _knn_broadcast_frame(points, probe, k, key)
 
     pts, feats = _cell_frames(points, features, cell_zoom, key)
+    out_cols = (sql_name(key), "feature_id", "dist2", "rank")
 
     def ranked_round(cand: DataFrame) -> DataFrame:
         # each round's ranked frame is consumed three times (certification
@@ -302,20 +298,19 @@ def knn_join(
     ranked = ranked_round(_first_candidates(pts, feats, radius, cell_zoom))
 
     # certification bound (see module docstring)
-    stats = points.agg(F.min("lat"), F.max("lat")).collect()[0]
+    stats = points.selectExpr("min(lat)", "max(lat)").collect()[0]
     if stats[0] is None:          # no points: nothing to certify
-        return ranked.select(key, "feature_id", "dist2", "rank")
+        return ranked.selectExpr(*out_cols)
     lat_lo, lat_hi = int(stats[0]), int(stats[1])
 
     def certified_keys(ranked_df: DataFrame, r: int) -> DataFrame:
         # conservative: global lat range shrinks cell_min, never inflates
         bound = r * cell_min_extent(cell_zoom, lat_lo, lat_hi, pad=r)
         kth = ranked_df.groupBy(key).agg(
-            F.max("dist2").alias("kth_d2"), F.count("*").alias("n_cand")
-        )
+            F.expr("max(dist2) AS kth_d2"), F.expr("count(*) AS n_cand"))
         return kth.filter(
             (F.col("n_cand") >= k) & (F.col("kth_d2") < bound * bound)
-        ).select(key)
+        ).selectExpr(sql_name(key))
 
     # expanding rings (reference rtree.ml:209-258 best-first analog):
     # each round, only still-uncertified points re-enter at doubled
@@ -336,7 +331,7 @@ def knn_join(
         parts.append(ranked_r.join(ck, key, "left_semi"))
         remaining = remaining.join(ck, key, "left_anti")
 
-    residue_rows = remaining.select(key, "lat", "lon").limit(
+    residue_rows = remaining.selectExpr(sql_name(key), "lat", "lon").limit(
         BRUTE_RESIDUE_LIMIT + 1).collect()
     if len(residue_rows) > BRUTE_RESIDUE_LIMIT:
         raise ValueError(
@@ -346,17 +341,16 @@ def knn_join(
             "cell_zoom instead of risking a quadratic brute pass")
     if residue_rows:
         parts.append(_residue_brute(features, residue_rows, k, key))
-    out = parts[0].select(key, "feature_id", "dist2", "rank")
+    out = parts[0].selectExpr(*out_cols)
     for p in parts[1:]:
-        out = out.unionByName(p.select(key, "feature_id", "dist2", "rank"))
+        out = out.unionByName(p.selectExpr(*out_cols))
     return out
 
 
 def brute_force_knn(points: DataFrame, features: DataFrame, k: int = 1,
                     key: str = "page_id") -> DataFrame:
     """Baseline: broadcast cross-join + window top-k (oracle path)."""
-    feats = features.select(
-        "feature_id", F.col("lat").alias("flat"), F.col("lon").alias("flon")
-    )
-    cand = points.select(key, "lat", "lon").crossJoin(F.broadcast(feats))
-    return _rank_topk(cand, key, k).select(key, "feature_id", "dist2", "rank")
+    feats = features.selectExpr("feature_id", "lat AS flat", "lon AS flon")
+    cand = points.selectExpr(sql_name(key), "lat", "lon").crossJoin(F.broadcast(feats))
+    return _rank_topk(cand, key, k).selectExpr(
+        sql_name(key), "feature_id", "dist2", "rank")

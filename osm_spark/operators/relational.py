@@ -51,16 +51,6 @@ def top_k(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
             .withColumn("rk", F.row_number().over(w)))
 
 
-def group_fold_min(df: DataFrame, key: str, val: str) -> DataFrame:
-    """R15 sort-agg group-min (column_ops.ml:37-59; surfaces.ml:226-230)."""
-    return df.groupBy(key).agg(F.min(val).alias(f"min_{val}"))
-
-
-def group_fold_bitor(df: DataFrame, key: str, val: Column, alias: str) -> DataFrame:
-    """R15 bit-or fold (linear.ml:247 flag bitmasks)."""
-    return df.groupBy(key).agg(F.bit_or(val).alias(alias))
-
-
 def csr_index(df: DataFrame, key: str) -> DataFrame:
     """R16 (column_ops.ml:61-79): per-group count + exclusive prefix-sum
     offset (the CSR 'first row of group' index)."""

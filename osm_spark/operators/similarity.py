@@ -137,7 +137,7 @@ def ivf_centroids(emb: DataFrame, n_cells: int = 16, n_iter: int = 5,
     and stays reproducible in the numpy oracle twin."""
     # pmod, not %: Spark's % truncates toward zero, so a negative key would
     # yield a negative scramble and diverge from a floored-mod numpy/DuckDB
-    # twin (same sign bug geocode_id_cols fixed)
+    # twin (same sign bug the hash geocode, geocode.id_geo_sql, fixed)
     scramble = F.pmod(F.pmod(F.col(key), F.lit(SAMPLE_M)) * F.lit(SAMPLE_A),
                       F.lit(SAMPLE_M))
     rows = (emb.select(key, col).orderBy(scramble, key)

@@ -20,7 +20,7 @@ cells (z-order prefix == slippy tile) as the spatial partitioning key:
      parity and then the holes rule with ``reduceat`` — no per-cell or
      per-ring Python.
 
-JVM keys route, numpy decides: Spark-side cell keys (``with_cell``,
+JVM keys route, numpy decides: Spark-side cell keys (``cell_key_sql``,
 ``polygon_cells``) only route rows to a task or a layer read, so no
 Python runs before any exchange; the mappers' numpy kernels pick the
 cell a point is matched in, and the JVM polygon registration is a padded
@@ -53,8 +53,10 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from osm_spark.geo import kernels as K
+from osm_spark.operators.sqlexpr import sql_name
 
 DEFAULT_CELL_ZOOM = 12
 CKEY_SCALE = 1 << 32      # cell key = cx * CKEY_SCALE + cy
@@ -63,57 +65,47 @@ COARSE_SHIFT = 3          # partitioned-layer cells at z - COARSE_SHIFT
 
 # ---------------------------------------------------------------------------
 # tile/cell keys
+#
+# Each key is ONE SQL expression string: a plan built from ``F.expr`` /
+# ``selectExpr`` strings costs one py4j round trip per call, where the
+# same expression as a chain of ``Column`` calls costs one per node.
 
 
-def tile_x_col(lon_col, z: int):
-    """Integer-exact tile column: (lon+180°)*2^z div 360°."""
-    return F.expr(
-        f"CAST((({lon_col} + {K.LON_OFFSET}L) * {1 << z}L) DIV {K.LON_WORLD}L AS BIGINT)"
-    )
+def tile_x_sql(lon: str, z: int) -> str:
+    """Integer-exact tile column over the SQL ``lon``:
+    (lon+180°)*2^z div 360°."""
+    return (f"CAST((({lon} + {K.LON_OFFSET}L) * {1 << z}L) DIV "
+            f"{K.LON_WORLD}L AS BIGINT)")
 
 
-def tile_y_col(lat_col: str, z: int, pad: float = 0.0):
-    """Mercator tile row ``floor(y + pad)`` as a pure JVM expression: the
+def tile_y_sql(lat: str, z: int, pad: float = 0.0) -> str:
+    """Mercator tile row ``floor(y + pad)`` over the SQL ``lat``: the
     op order of ``K.tile_y_float`` with a cancellation-free asinh,
     ``sign(t)·log(|t| + sqrt(t²+1))`` (Spark's ``asinh`` cancels for
     t << 0: up to 800 rows off near −90° at z12, non-finite at −90°).
     Versus numpy on 2M random lats plus both polar windows: max |Δy|
     3.6e-12 rows at z12, doubling per zoom, no floor mismatch; not
-    bit-exact, so it routes."""
-    t = F.tan(F.col(lat_col) * F.lit(float(K.CONV)))
-    asinh = F.signum(t) * F.log(F.abs(t) + F.sqrt(t * t + F.lit(1.0)))
-    y = (F.lit(1.0) - asinh / F.lit(math.pi)) / F.lit(2.0) * F.lit(float(1 << z))
+    bit-exact, so it routes.  Doubles are written as ``repr`` + ``D``,
+    so each constant parses to the same double."""
+    t = f"tan({lat} * {float(K.CONV)!r}D)"
+    asinh = f"signum({t}) * ln(abs({t}) + sqrt({t} * {t} + 1.0D))"
+    y = f"(1.0D - {asinh} / {math.pi!r}D) / 2.0D * {float(1 << z)!r}D"
     if pad:
-        y = y + F.lit(pad)
-    return F.floor(y).cast("long")
+        y = f"{y} + ({float(pad)!r}D)"
+    return f"CAST(floor({y}) AS BIGINT)"
 
 
-def with_cell(df: DataFrame, z: int = DEFAULT_CELL_ZOOM,
-              lat="lat", lon="lon") -> DataFrame:
-    """Add tile cell columns (cx, cy) at zoom z as JVM expressions.
-    JVM keys route, numpy decides: the mappers recompute the cell."""
-    return df.withColumn("cx", tile_x_col(lon, z)).withColumn(
-        "cy", tile_y_col(lat, z))
+def cell_key_sql(z: int, lat: str = "lat", lon: str = "lon") -> str:
+    """The cell key ``cx * CKEY_SCALE + cy`` at zoom ``z``."""
+    return f"{tile_x_sql(lon, z)} * {CKEY_SCALE} + {tile_y_sql(lat, z)}"
 
 
 # ---------------------------------------------------------------------------
 # polygon side: bbox + covering cells
 
 
-def with_bbox(polys: DataFrame) -> DataFrame:
-    """Add bbox columns from the rings payload (JVM-side array ops)."""
-    lats = F.flatten(F.expr("transform(rings, r -> r.lat)"))
-    lons = F.flatten(F.expr("transform(rings, r -> r.lon)"))
-    return (
-        polys.withColumn("lat_min", F.array_min(lats))
-        .withColumn("lat_max", F.array_max(lats))
-        .withColumn("lon_min", F.array_min(lons))
-        .withColumn("lon_max", F.array_max(lons))
-    )
-
-
 # Row padding ε of polygon_cells' JVM span: it contains numpy's span when
-# ε > |Δy| (tile_y_col), and the JVM cell of every point in the bbox when
+# ε > |Δy| (tile_y_sql), and the JVM cell of every point in the bbox when
 # ε > 2|Δy|.  |Δy| = 3.6e-12 rows at z12 doubling per zoom, so 1e-6 holds
 # for z <= 28; it widens only spans with an edge within 1e-6 rows of a
 # row boundary.
@@ -121,42 +113,42 @@ _CELL_PAD_ROWS = 1e-6
 
 
 def polygon_cells(polys: DataFrame, z: int = DEFAULT_CELL_ZOOM) -> DataFrame:
-    """Explode each polygon to the tile cells covering its bbox.
+    """Explode each polygon to the tile cells (cx, cy) covering its bbox,
+    cx-major.
 
     The quadtree analog of R-tree leaf registration (rtree.ml:90-121).
     Pure JVM: JVM keys route, numpy decides — the row span is padded by
-    ``_CELL_PAD_ROWS`` to contain the span numpy registers.
+    ``_CELL_PAD_ROWS`` to contain the span numpy registers.  One
+    generator per axis, so a polygon's x×y cells stream as rows and
+    never form one array.
     """
-    boxed = with_bbox(polys)
-    boxed = (
-        boxed.withColumn("cx_min", tile_x_col("lon_min", z))
-        .withColumn("cx_max", tile_x_col("lon_max", z))
+    lat = "flatten(transform(rings, r -> r.lat))"
+    lon = "flatten(transform(rings, r -> r.lon))"
+    xs = (f"sequence({tile_x_sql(f'array_min({lon})', z)}, "
+          f"{tile_x_sql(f'array_max({lon})', z)})")
+    return polys.selectExpr(
+        "*", f"explode({xs}) AS cx",
         # north edge = min row
-        .withColumn("cy_min", tile_y_col("lat_max", z, -_CELL_PAD_ROWS))
-        .withColumn("cy_max", tile_y_col("lat_min", z, _CELL_PAD_ROWS))
-    )
-    return (
-        boxed.withColumn("cx", F.explode(F.sequence("cx_min", "cx_max")))
-        .withColumn("cy", F.explode(F.sequence("cy_min", "cy_max")))
-        .drop("cx_min", "cx_max", "cy_min", "cy_max",
-              "lat_min", "lat_max", "lon_min", "lon_max")
-    )
+        f"{tile_y_sql(f'array_max({lat})', z, -_CELL_PAD_ROWS)} AS _cy_min",
+        f"{tile_y_sql(f'array_min({lat})', z, _CELL_PAD_ROWS)} AS _cy_max",
+    ).selectExpr("*", "explode(sequence(_cy_min, _cy_max)) AS cy").drop(
+        "_cy_min", "_cy_max")
 
 
 # ---------------------------------------------------------------------------
 # CSR cell index + flattened PIP kernel (broadcast and partitioned paths)
 
 
-def ring_cols() -> list:
-    """A ``rings`` payload as flat primitive columns: ``roles`` and
-    ``lens`` (vertices) per ring, ``flat_lat`` / ``flat_lon`` per
-    vertex.  JVM-side array ops; the index build consumes these."""
-    return [
-        F.expr("transform(rings, r -> r.role)").alias("roles"),
-        F.expr("transform(rings, r -> size(r.lat))").alias("lens"),
-        F.flatten(F.expr("transform(rings, r -> r.lat)")).alias("flat_lat"),
-        F.flatten(F.expr("transform(rings, r -> r.lon)")).alias("flat_lon"),
-    ]
+# A ``rings`` payload as flat primitive columns (``selectExpr``
+# strings): ``roles`` and ``lens`` (vertices) per ring, ``flat_lat`` /
+# ``flat_lon`` per vertex.  JVM-side array ops; the index build and the
+# geometry mappers consume these.
+RING_SQL = (
+    "transform(rings, r -> r.role) AS roles",
+    "transform(rings, r -> size(r.lat)) AS lens",
+    "flatten(transform(rings, r -> r.lat)) AS flat_lat",
+    "flatten(transform(rings, r -> r.lon)) AS flat_lon",
+)
 
 
 def flat_values(col: pd.Series) -> tuple[np.ndarray, np.ndarray]:
@@ -199,7 +191,7 @@ class CellIndex(NamedTuple):
 
 def _build_group_index_packed(polys_pdf: pd.DataFrame, z: int) -> CellIndex:
     """CSR cell index of a polygon layer from its ``feature_id`` and
-    ``ring_cols`` columns: one concat per column, zero-edge rings and
+    ``RING_SQL`` columns: one concat per column, zero-edge rings and
     ring-less polygons dropped by masks, bboxes by reduceat, and the
     (cell, polygon) registrations expanded and sorted once — no
     per-polygon or per-cell Python."""
@@ -335,6 +327,11 @@ def _pip_points(index: CellIndex, la, lo, pts, c):
     return pair_pt[inside], index.fids[pair_poly[inside]]
 
 
+# the join mappers' output: (page key as ``k``, feature_id)
+_MATCH_SCHEMA = StructType([StructField("k", LongType()),
+                            StructField("feature_id", LongType())])
+
+
 def _point_batch(batch):
     """(keys, lat, lon, valid) of a (key, lat, lon) Arrow batch; a row
     with a NULL coordinate is not valid and matches nothing."""
@@ -406,11 +403,10 @@ def suggest_salt(pages: DataFrame, z: int = DEFAULT_CELL_ZOOM - COARSE_SHIFT,
     1e-4 sample gives the same factor for a fraction of the scan."""
     if sample_frac is not None:
         pages = pages.sample(fraction=sample_frac, seed=7)
-    counts = with_cell(pages, z).groupBy("cx", "cy").count()
-    row = counts.agg(
-        F.max("count").alias("mx"),
-        F.percentile_approx("count", 0.95).alias("p95"),
-    ).first()
+    counts = pages.groupBy(F.expr(f"{tile_x_sql('lon', z)} AS cx"),
+                           F.expr(f"{tile_y_sql('lat', z)} AS cy")).count()
+    row = counts.selectExpr("max(count) AS mx",
+                            "percentile_approx(count, 0.95) AS p95").first()
     if not row or not row.mx or not row.p95:
         return 1
     return max(1, min(MAX_SALT, math.ceil(row.mx / max(row.p95, 1))))
@@ -422,7 +418,7 @@ def broadcast_polygon_index(polys: DataFrame, z: int = DEFAULT_CELL_ZOOM):
     cost amortizes to zero (the reference builds its R-tree once the
     same way, rtree.ml:90-134).  One collect of the flat ring columns,
     then the vectorized CSR build."""
-    cols = polys.select("feature_id", *ring_cols())
+    cols = polys.selectExpr("feature_id", *RING_SQL)
     pdf = pd.DataFrame(cols.collect(), columns=cols.columns)
     return polys.sparkSession.sparkContext.broadcast(
         _build_group_index_packed(pdf, z))
@@ -478,11 +474,8 @@ def write_partitioned_layer(polys: DataFrame, path: str,
     statistics.  Amortized across every join against this layer
     version."""
     zc = max(z - COARSE_SHIFT, 2)
-    cells = polygon_cells(polys.select("feature_id", "rings"), zc).select(
-        (F.col("cx").cast("long") * CKEY_SCALE + F.col("cy")).alias("gkey"),
-        "feature_id",
-        *ring_cols(),
-    )
+    cells = polygon_cells(polys.selectExpr("feature_id", "rings"), zc).selectExpr(
+        f"cx * {CKEY_SCALE} + cy AS gkey", "feature_id", *RING_SQL)
     (cells.repartitionByRange(n_files, "gkey")
      .sortWithinPartitions("gkey")
      .write.mode("overwrite")
@@ -601,16 +594,16 @@ def spatial_join_partitioned(
             f"layer at {layer_path} was written for z={meta['z']}, "
             f"join requested z={z} — cell keys would not align")
     zc = meta["zc"]
-    pts = pages.select(page_key, "lat", "lon")
+    pts = pages.selectExpr(sql_name(page_key), "lat", "lon")
     if not pages_clustered:
         # routing only: the mapper recomputes the cells it reads
-        keys = [tile_x_col("lon", zc) * CKEY_SCALE + tile_y_col("lat", zc)]
+        keys = [F.expr(cell_key_sql(zc))]
         if salt > 1:
-            keys.append(F.pmod(F.xxhash64(page_key), F.lit(salt)))
+            keys.append(F.expr(f"pmod(xxhash64({sql_name(page_key)}), {salt})"))
         pts = pts.repartition(*keys)
     return pts.mapInArrow(
         _partitioned_join_mapper(layer_path, z, zc, how, page_key),
-        "k long, feature_id long",
+        _MATCH_SCHEMA,
     ).withColumnRenamed("k", page_key)
 
 
@@ -660,17 +653,15 @@ def spatial_join(
     if broadcast_polys is None and index is not None:
         broadcast_polys = True      # caller already built the index
     if broadcast_polys is None:
-        nv = polys.select(
-            F.expr("aggregate(transform(rings, r -> size(r.lat)),"
-                   " 0L, (a, x) -> a + x)").alias("nv")
-        ).agg(F.sum("nv").alias("v")).first()
+        nv = polys.selectExpr(
+            "sum(aggregate(transform(rings, r -> size(r.lat)), 0L, (a, x) -> a + x))"
+            " AS v").first()
         broadcast_polys = int(nv.v or 0) <= BROADCAST_MAX_VERTS
 
     if broadcast_polys:
         bc = index if index is not None else broadcast_polygon_index(polys, z)
-        return pages.select(page_key, "lat", "lon").mapInArrow(
-            _broadcast_join_mapper(bc, how),
-            "k long, feature_id long",
+        return pages.selectExpr(sql_name(page_key), "lat", "lon").mapInArrow(
+            _broadcast_join_mapper(bc, how), _MATCH_SCHEMA,
         ).withColumnRenamed("k", page_key)
 
     if layer_path is None:

@@ -26,10 +26,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (IntegerType, LongType, StringType, StructField,
+                               StructType)
 
 from osm_spark.geo import kernels as K
-from osm_spark.operators.spatial_join import (flat_values, ring_cols,
-                                              tile_x_col, tile_y_col)
+from osm_spark.operators.spatial_join import (RING_SQL, flat_values,
+                                              tile_x_sql, tile_y_sql)
+from osm_spark.operators.sqlexpr import sql_name
 
 ZOOM_BANDS = (6, 8, 10, 12)
 BUILDING_CAT = 12  # fixture category id used for the building exception
@@ -56,26 +59,17 @@ def page_tiles(pages_geo: DataFrame, zooms: Iterable[int] = ZOOM_BANDS,
     requested zoom (as whole-stage-codegen expressions — zero Python in
     the plan) and the coarser zooms derived by bit-shifts — exact,
     because tile ids nest:
-    floor(v*2^z) == floor(floor(v*2^zmax) / 2^(zmax-z)) for v >= 0."""
+    floor(v*2^z) == floor(floor(v*2^zmax) / 2^(zmax-z)) for v >= 0.
+    Two selects of SQL strings, one row per zoom from ``inline``."""
     zooms = tuple(zooms)
     zmax = max(zooms)
-    base = pages_geo.select(
-        F.col(key),
-        tile_x_col("lon", zmax).alias("_x"),
-        tile_y_col("lat", zmax).alias("_y"),
-    )
-    structs = [
-        F.struct(
-            F.lit(z).alias("z"),
-            F.shiftright("_x", zmax - z).alias("x"),
-            F.shiftright("_y", zmax - z).alias("y"),
-        )
-        for z in zooms
-    ]
-    return (
-        base.select(F.col(key), F.explode(F.array(*structs)).alias("t"))
-        .select(key, "t.z", "t.x", "t.y")
-    )
+    k = sql_name(key)
+    base = pages_geo.selectExpr(k, f"{tile_x_sql('lon', zmax)} AS _x",
+                                f"{tile_y_sql('lat', zmax)} AS _y")
+    structs = ", ".join(
+        f"named_struct('z', {z}, 'x', shiftright(_x, {zmax - z}), "
+        f"'y', shiftright(_y, {zmax - z}))" for z in zooms)
+    return base.selectExpr(k, f"inline(array({structs}))")
 
 
 def tile_y_rows_df(spark: SparkSession, z: int, lat_min_fp: int, lat_max_fp: int) -> DataFrame:
@@ -197,16 +191,17 @@ def _feature_tiles_pandas(zooms: tuple[int, ...]):
     return fn
 
 
-FEATURE_TILE_SCHEMA = (
-    "feature_id long, category int, band string, z int, "
-    "x_min long, x_max long, y_min long, y_max long, n_pts long"
-)
+FEATURE_TILE_SCHEMA = StructType(
+    [StructField("feature_id", LongType()), StructField("category", IntegerType()),
+     StructField("band", StringType()), StructField("z", IntegerType())]
+    + [StructField(c, LongType())
+       for c in ("x_min", "x_max", "y_min", "y_max", "n_pts")])
 
 
 def feature_tile_spans(polys: DataFrame, zooms: tuple[int, ...] = ZOOM_BANDS) -> DataFrame:
     """Per (feature, band): covering tile span after per-band area filter +
     DP simplification.  One mapInPandas pass over the polygon layer."""
-    return polys.select("feature_id", "category", *ring_cols()).mapInPandas(
+    return polys.selectExpr("feature_id", "category", *RING_SQL).mapInPandas(
         _feature_tiles_pandas(tuple(zooms)), FEATURE_TILE_SCHEMA
     )
 
@@ -235,10 +230,10 @@ def viewport_query(tile_table: DataFrame, z: int, lat_min: int, lat_max: int,
 
 
 def feature_tiles(polys: DataFrame, zooms: tuple[int, ...] = ZOOM_BANDS) -> DataFrame:
-    """Exploded (feature_id, band, z, x, y) tile assignment table."""
-    spans = feature_tile_spans(polys, zooms)
-    return (
-        spans.withColumn("x", F.explode(F.sequence("x_min", "x_max")))
-        .withColumn("y", F.explode(F.sequence("y_min", "y_max")))
-        .select("feature_id", "category", "band", "z", "x", "y")
-    )
+    """Exploded (feature_id, band, z, x, y) tile assignment table.  One
+    generator per axis, so a span streams as rows: its x×y tiles are
+    never one array (a z14 span can hold millions)."""
+    head = ("feature_id", "category", "band", "z")
+    return feature_tile_spans(polys, zooms).selectExpr(
+        *head, "explode(sequence(x_min, x_max)) AS x", "y_min", "y_max",
+    ).selectExpr(*head, "x", "explode(sequence(y_min, y_max)) AS y")

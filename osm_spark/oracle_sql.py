@@ -12,7 +12,7 @@ import numpy as np
 from osm_spark import fixtures as FX
 from osm_spark.geo import kernels as K
 
-# documents geocode CTE — mirrors operators.geocode.geocode_id_cols
+# documents geocode CTE — mirrors operators.geocode.id_geo_sql
 PTS_CTE = (
     "pts AS (SELECT doc_id, "
     f"{FX.LAT0} + ((((doc_id % {FX.SPAN}) + {FX.SPAN}) % {FX.SPAN})"

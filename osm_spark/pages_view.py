@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_spark.operators.geocode import geocode_id_cols
+from osm_spark.operators.geocode import id_geo_sql
 
 
 def documents_as_pages(docs: DataFrame) -> DataFrame:
@@ -17,7 +17,7 @@ def documents_as_pages(docs: DataFrame) -> DataFrame:
     The geo slug in the url carries the hash geocode of doc_id, so the
     standard url geocoder applies.
     """
-    lat, lon = geocode_id_cols(F.col("doc_id"))
+    lat, lon = (F.expr(e) for e in id_geo_sql("`doc_id`"))
     url = F.concat(
         F.lit("https://site"), (F.col("doc_id") % 997).cast("string"),
         F.lit(".example/"), F.col("lang"), F.lit("/geo/"),

@@ -361,6 +361,8 @@ def decode_record(raw: bytes) -> tuple:
             status = int(status_line.split()[1])
         except (IndexError, ValueError):
             status = None
+        if status is not None and not -2**31 <= status < 2**31:
+            status = None  # the http_status column is a 32-bit int
         html = body[bhend + 4:]
     return url, ts, html, rtype, status
 

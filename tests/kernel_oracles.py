@@ -1,22 +1,27 @@
-"""Scalar reference implementations of the flattened geometry kernels.
+"""Reference implementations the engine's fast forms are tested against.
 
 The engine runs one batched pass per Arrow batch
-(``kernels.simplify_ring_int``, ``spatial_join._pip_pack``); these are
-the per-ring / per-cell formulations they replaced, kept here as test
-oracles only.
+(``kernels.simplify_ring_int``, ``spatial_join._pip_pack``); the
+per-ring / per-cell formulations they replaced live here.  So do the
+``Column``-chain forms of the JVM keys and the regexp geocoder, which
+the engine now writes as one SQL expression per derived column.
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
+from pyspark.sql import functions as F
 
+from osm_spark.fixtures import GEO_A, GEO_B, LAT0, LON0, SPAN
 from osm_spark.geo import kernels as K
 
 
 def flat_layer(polys) -> pd.DataFrame:
     """[(feature_id, [(role, lat, lon), ...]), ...] as the flat ring
-    columns (``spatial_join.ring_cols``) the CSR index build reads."""
+    columns (``spatial_join.RING_SQL``) the CSR index build reads."""
 
     def cat(arrs):
         return (np.concatenate([np.asarray(a, np.int64) for a in arrs])
@@ -123,3 +128,87 @@ def pip_cells_reference(polys, la, lo, z: int):
                     in_hole |= odd
             out.update((int(p), int(fid)) for p in pts[in_outer & ~in_hole])
     return out
+
+
+# ---------------------------------------------------------------------------
+# Column-chain forms of the JVM expressions
+
+
+def tile_y_col_chain(lat_col: str, z: int, pad: float = 0.0):
+    """Mercator tile row ``floor(y + pad)`` as a chain of Column calls
+    (``spatial_join.tile_y_sql`` is the one-expression form)."""
+    t = F.tan(F.col(lat_col) * F.lit(float(K.CONV)))
+    asinh = F.signum(t) * F.log(F.abs(t) + F.sqrt(t * t + F.lit(1.0)))
+    y = (F.lit(1.0) - asinh / F.lit(math.pi)) / F.lit(2.0) * F.lit(float(1 << z))
+    if pad:
+        y = y + F.lit(pad)
+    return F.floor(y).cast("long")
+
+
+def page_tiles_chain(pages_geo, zooms, key: str = "page_id"):
+    """``tiles.page_tiles`` as Column calls: x/y at the finest zoom,
+    coarser zooms by shifts, exploded from an array of structs."""
+    zooms = tuple(zooms)
+    zmax = max(zooms)
+    base = pages_geo.select(
+        F.col(key),
+        F.expr(f"CAST(((lon + {K.LON_OFFSET}L) * {1 << zmax}L) DIV "
+               f"{K.LON_WORLD}L AS BIGINT)").alias("_x"),
+        tile_y_col_chain("lat", zmax).alias("_y"),
+    )
+    structs = [
+        F.struct(
+            F.lit(z).alias("z"),
+            F.shiftright("_x", zmax - z).alias("x"),
+            F.shiftright("_y", zmax - z).alias("y"),
+        )
+        for z in zooms
+    ]
+    return (
+        base.select(F.col(key), F.explode(F.array(*structs)).alias("t"))
+        .select(key, "t.z", "t.x", "t.y")
+    )
+
+
+_GEO_RE = r"/geo/(-?\d+)/(-?\d+)/"
+
+
+def geocode_pages_regexp(df, url_col: str = "url"):
+    """``geocode.geocode_pages`` as ``Column`` calls, three
+    ``regexp_extract``: the page id is ``page(\\d+)$``, lat/lon the first
+    ``/geo/<lat>/<lon>/`` match, else the hash geocode of the page id."""
+    page_id = F.regexp_extract(F.col(url_col), r"page(\d+)$", 1).try_cast("long")
+    lat_s = F.regexp_extract(F.col(url_col), _GEO_RE, 1)
+    lon_s = F.regexp_extract(F.col(url_col), _GEO_RE, 2)
+    m = F.pmod(page_id, F.lit(SPAN))
+    lat_h = (F.lit(LAT0) + F.pmod(m * F.lit(GEO_A % SPAN), F.lit(SPAN))).cast("long")
+    lon_h = (F.lit(LON0) + F.pmod(m * F.lit(GEO_B % SPAN), F.lit(SPAN))).cast("long")
+    return (
+        df.withColumn("page_id", page_id)
+        .withColumn("lat", F.when(lat_s != "", lat_s.try_cast("long")).otherwise(lat_h))
+        .withColumn("lon", F.when(lon_s != "", lon_s.try_cast("long")).otherwise(lon_h))
+    )
+
+
+def polygon_cells_chain(polys, z: int, pad_rows: float):
+    """``spatial_join.polygon_cells`` as Column calls: bbox columns,
+    padded cell spans, then one explode per axis."""
+    lats = F.flatten(F.expr("transform(rings, r -> r.lat)"))
+    lons = F.flatten(F.expr("transform(rings, r -> r.lon)"))
+
+    def tile_x(c):
+        return F.expr(f"CAST((({c} + {K.LON_OFFSET}L) * {1 << z}L) DIV "
+                      f"{K.LON_WORLD}L AS BIGINT)")
+
+    boxed = (polys.withColumn("lat_min", F.array_min(lats))
+             .withColumn("lat_max", F.array_max(lats))
+             .withColumn("lon_min", F.array_min(lons))
+             .withColumn("lon_max", F.array_max(lons))
+             .withColumn("cx_min", tile_x("lon_min"))
+             .withColumn("cx_max", tile_x("lon_max"))
+             .withColumn("cy_min", tile_y_col_chain("lat_max", z, -pad_rows))
+             .withColumn("cy_max", tile_y_col_chain("lat_min", z, pad_rows)))
+    return (boxed.withColumn("cx", F.explode(F.sequence("cx_min", "cx_max")))
+            .withColumn("cy", F.explode(F.sequence("cy_min", "cy_max")))
+            .drop("cx_min", "cx_max", "cy_min", "cy_max",
+                  "lat_min", "lat_max", "lon_min", "lon_max"))

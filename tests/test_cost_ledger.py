@@ -1,0 +1,128 @@
+"""Driver cost ledger: how many py4j round trips and Spark jobs each
+geo_tag operator call costs on the driver.
+
+Every ``Column``/``DataFrame`` method call is at least one Python->JVM
+round trip, and building a plan out of hundreds of them was most of the
+driver time between geo_tag's steps.  Both counts are deterministic for
+a given call on a given input, so they are held exactly by
+``tests/data/cost_ledger.json``:
+
+- a count above its ledger entry fails (a plan got more expensive);
+- a count below it fails too, asking for the ledger to be lowered, so
+  the ledger always states today's cost.
+
+Round trips are those the calling thread sends through
+``ClientServerConnection.send_command`` (py4j's object finalizer thread
+is not counted).  Jobs are counted per job group through
+``statusTracker``.  Every call runs once unmeasured first, so one-time
+lookups do not depend on test order.  PySpark caches, per process, the
+first answer to "is DataFrame debugging on" (each ``functions.*`` /
+``Column`` call then records its call site over py4j), and a call made
+with no active session caches "off"; the test clears that cache so the
+counts follow the session's setting (Spark's default, on).
+"""
+
+from __future__ import annotations
+
+import json
+import threading
+from pathlib import Path
+
+import pytest
+import pyspark.errors.utils
+from py4j.clientserver import ClientServerConnection
+
+from osm_spark import fixtures as FX
+from osm_spark.operators import tiles as T
+from osm_spark.operators.geocode import geocode_ids, geocode_pages
+from osm_spark.operators.knn import knn_join
+from osm_spark.operators.spatial_join import (COARSE_SHIFT, DEFAULT_CELL_ZOOM,
+                                             broadcast_polygon_index,
+                                             spatial_join,
+                                             spatial_join_partitioned,
+                                             suggest_salt,
+                                             write_partitioned_layer)
+
+LEDGER = Path(__file__).parent / "data" / "cost_ledger.json"
+N_PAGES = 400
+N_SMALL = 120
+N_FEATS = 64
+
+
+class _Meter:
+    """Counts the round trips the measuring thread sends while on."""
+
+    def __init__(self, monkeypatch):
+        self.n = 0
+        self.on = False
+        self.thread = threading.get_ident()
+        send = ClientServerConnection.send_command
+        meter = self
+
+        def counted(conn, command):
+            if meter.on and threading.get_ident() == meter.thread:
+                meter.n += 1
+            return send(conn, command)
+
+        monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+
+    def measure(self, sc, group: str, fn) -> tuple[int, int]:
+        """(round trips, Spark jobs) of ``fn()``."""
+        sc.setJobGroup(group, group)
+        self.n, self.on = 0, True
+        try:
+            fn()
+        finally:
+            self.on = False
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return self.n, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _calls(spark, tmp: Path) -> dict:
+    """The geo_tag steps (``perfbench/workloads.py``), each as a thunk
+    over the small fixtures; inputs are built outside the thunks."""
+    pages = FX.pages_df(spark, N_PAGES)
+    polys = FX.polygons_df(spark, N_SMALL)
+    geo = geocode_pages(pages).select("page_id", "lat", "lon")
+    feats = geocode_ids(spark.range(N_FEATS).withColumnRenamed("id", "feature_id"),
+                        "feature_id")
+    index = broadcast_polygon_index(polys)
+    layer = str(tmp / "layer")
+    write_partitioned_layer(polys, layer, n_files=8)
+    zc = DEFAULT_CELL_ZOOM - COARSE_SHIFT
+    return {
+        "geocode_pages": lambda: geocode_pages(pages),
+        "spatial_join": lambda: spatial_join(geo, polys, how="left", index=index),
+        "page_tiles": lambda: T.page_tiles(geo),
+        "knn_join": lambda: knn_join(geo, feats, k=1, cell_zoom=8, radius=2),
+        "feature_tiles": lambda: T.feature_tiles(polys),
+        "write_partitioned_layer": lambda: write_partitioned_layer(
+            polys, str(tmp / "layer_w"), n_files=8),
+        "suggest_salt": lambda: suggest_salt(geo, z=zc),
+        "spatial_join_partitioned": lambda: spatial_join_partitioned(
+            geo, layer, how="left", salt=2),
+    }
+
+
+def test_cost_ledger(spark, tmp_path, monkeypatch):
+    want = json.loads(LEDGER.read_text())["calls"]
+    monkeypatch.setattr(pyspark.errors.utils, "_enable_debugging_cache", None)
+    calls = _calls(spark, tmp_path)
+    assert sorted(calls) == sorted(want)
+    for fn in calls.values():
+        fn()
+    meter = _Meter(monkeypatch)
+    sc = spark.sparkContext
+    got = {}
+    for name, fn in calls.items():
+        trips, jobs = meter.measure(sc, f"cost-ledger-{name}", fn)
+        got[name] = {"py4j": trips, "jobs": jobs}
+    table = json.dumps(got, indent=1)
+    for name, g in got.items():
+        for metric in ("py4j", "jobs"):
+            w = want[name][metric]
+            assert g[metric] <= w, (
+                f"{name}: {g[metric]} {metric} > ledger {w}; measured:\n{table}")
+            assert g[metric] == w, (
+                f"{name}: {g[metric]} {metric} < ledger {w}: lower the ledger "
+                f"entry ({LEDGER.name}); measured:\n{table}")

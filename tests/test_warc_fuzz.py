@@ -144,3 +144,16 @@ def test_decode_mapper_rejects_non_w3c_date(tmp_path, date):
     index = _write_records(p, [RECORDS[0], rec], False)
     with pytest.raises(ValueError, match=f"offset {len(RECORDS[0])} "):
         warc._decode_pdf(str(p), index)
+
+
+@pytest.mark.parametrize("status", [b"2147483648", b"-2147483649"])
+def test_decode_mapper_status_outside_int32_is_null(tmp_path, status):
+    """A status code that does not fit the 32-bit ``http_status`` column
+    decodes as NULL; it used to fail the mapper's Int32 cast with a
+    ``TypeError``."""
+    rec = RECORDS[2].replace(b"HTTP/1.1 200 ", b"HTTP/1.1 " + status + b" ", 1)
+    assert rec != RECORDS[2]
+    p = tmp_path / "s.warc"
+    out = warc._decode_pdf(str(p), _write_records(p, [RECORDS[0], rec], False))
+    assert out["http_status"].isna().all()
+    assert out["record_type"].tolist() == ["warcinfo", "response"]
