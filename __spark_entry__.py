@@ -856,7 +856,7 @@ def q_x7_ch_path(spark, sf):
                for r in res.edges.collect()]
     out = []
     for s, t in X7_PAIRS:
-        dist, path = RT.ch_query_path(ch_rows, s, t)
+        dist, path = RT.ch_query(ch_rows, s, t)
         for i, nd in enumerate(path):
             out.append((s, t, i, int(nd), round(dist, 6)))
     point = spark.createDataFrame(
@@ -864,7 +864,7 @@ def q_x7_ch_path(spark, sf):
     ).select(F.lit(0).alias("kind"), "*")
     pairs = spark.createDataFrame(X7B_PAIRS, "src long, dst long") \
         .repartition(8)
-    batch = RT.ch_batch_routes(pairs, res.edges, with_path=True) \
+    batch = RT.ch_batch_routes(pairs, res.edges) \
         .select(F.lit(1).alias("kind"), "*")
     return point.unionByName(batch)
 

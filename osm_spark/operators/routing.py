@@ -12,16 +12,21 @@ DataFrame programs:
   UDF (/root/reference/osm/contraction.ml:261-310, 345-495).  The
   reference searches the full graph with bounds; restricting witnesses
   to the 1-hop subgraph can only ADD shortcuts, never drop a needed
-  one, so shortest-path preservation is unconditional.
+  one, so shortest-path preservation is unconditional.  The distributed
+  rounds and the driver-local finish share one witness routine
+  (``_witness_shortcuts``).
 - X5 independent-set batched contraction: each round contracts every
   node whose (priority, hash, id) beats all 1- and 2-hop neighbours
   (/root/reference/osm/contraction.ml:557-660) — already data-parallel
   in the reference; here it is a driver loop of DataFrame stages with a
-  parquet/Iceberg checkpoint per round (north-rule: resumable, with
-  per-round row-count/byte metrics).
-- X6/X7: rank-ordered output edges + a driver-side bidirectional CH
-  query used by the tests to prove distance preservation vs plain
-  Dijkstra.
+  parquet checkpoint per round (resumable, with per-round
+  row-count/byte metrics).
+- X6/X7: rank-ordered output edges + one bidirectional CH query
+  (``ch_query`` on the driver, ``ch_batch_routes`` per pair in a
+  mapper) returning distance and expanded path.
+
+One Dijkstra loop (``_dijkstra``) serves every search: bounded for the
+witnesses, unbounded for both directions of the CH query.
 
 Priority = depth + 2*edge_growth + 4*orig_edge_growth, the reference's
 formula (contraction.ml:345-423).  The tie-break hash replaces OCaml's
@@ -38,6 +43,7 @@ every round by the checkpoint write+read.
 
 from __future__ import annotations
 
+import heapq
 import json
 import time
 from dataclasses import dataclass, field
@@ -45,7 +51,7 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 BIDIR, FWD, BWD = 3, 2, 1  # highway.ml:218-237 flag values
@@ -165,13 +171,57 @@ _SIM_SCHEMA = (
 # standard CH practice; also caps the among-neighbours join at degree^2
 MAX_SIM_DEGREE = 64
 
+# ``contract``'s distributed rounds run while the active graph has more
+# than LOCAL_THRESHOLD edges, at most MAX_ROUNDS of them; both are read
+# at call time
+MAX_ROUNDS = 60
+LOCAL_THRESHOLD = 10_000
+
+
+def _dijkstra(succ, start: int, limit: float = np.inf):
+    """The one shortest-path loop: Dijkstra from ``start`` over
+    ``succ(x)`` -> iterable of (y, weight), settling nothing farther
+    than ``limit``.  Returns (dist, parent).  Serves the witness
+    searches (bounded, contraction.ml:261-310) and both directions of
+    the CH query (unbounded, routing.ml:49-79)."""
+    dist = {start: 0.0}
+    parent: dict[int, int] = {}
+    pq = [(0.0, start)]
+    while pq:
+        d0, x = heapq.heappop(pq)
+        if d0 > dist.get(x, np.inf) or d0 > limit:
+            continue
+        for y, w in succ(x):
+            nd = d0 + w
+            if nd < dist.get(y, np.inf) and nd <= limit:
+                dist[y] = nd
+                parent[y] = x
+                heapq.heappush(pq, (nd, y))
+    return dist, parent
+
+
+def _witness_shortcuts(ins, outs, succ) -> list[tuple]:
+    """Shortcuts needed to contract v: ``ins`` are its in-edges (u,
+    weight, orig), ``outs`` its out-edges (w, weight, orig), ``succ``
+    the witness graph without v.  Per u, one search bounded by the
+    longest u->v->w; a w it does not reach within u->v->w has no
+    witness and needs the shortcut (u, w, weight, orig)."""
+    shortcuts = []
+    for u, w_uv, o_uv in ins:
+        targets = {w: (w_uv + w_vw, o_uv + o_vw)
+                   for w, w_vw, o_vw in outs if w != u}
+        if not targets:
+            continue
+        dist, _ = _dijkstra(succ, u, max(t[0] for t in targets.values()))
+        shortcuts += [(u, w, sw, so) for w, (sw, so) in targets.items()
+                      if dist.get(w, np.inf) > sw]
+    return shortcuts
+
 
 def _simulate_group(pdf: pd.DataFrame) -> pd.DataFrame:
     """Simulate contracting node v: local witness Dijkstra over the 1-hop
     neighbourhood subgraph (contraction.ml:261-310), emit needed
     shortcuts + growth stats."""
-    import heapq
-
     v = int(pdf["v"].iloc[0])
     inc = pdf[pdf["is_incident"]]
     among = pdf[~pdf["is_incident"]]
@@ -188,35 +238,13 @@ def _simulate_group(pdf: pd.DataFrame) -> pd.DataFrame:
     for s, d, wt in zip(among["src"], among["dst"], among["weight"]):
         adj.setdefault(int(s), []).append((int(d), float(wt)))
 
-    in_pairs = list(zip(in_e["src"].astype(np.int64),
-                        in_e["weight"].astype(float),
-                        in_e["orig"].astype(int)))
-    out_pairs = list(zip(out_e["dst"].astype(np.int64),
-                         out_e["weight"].astype(float),
-                         out_e["orig"].astype(int)))
-    shortcuts = []
-    for u, w_uv, o_uv in in_pairs:
-        targets = {int(w): (w_uv + w_vw, o_uv + o_vw)
-                   for w, w_vw, o_vw in out_pairs if int(w) != int(u)}
-        if not targets:
-            continue
-        limit = max(t[0] for t in targets.values())
-        # bounded Dijkstra from u over the neighbourhood subgraph
-        dist = {int(u): 0.0}
-        pq = [(0.0, int(u))]
-        while pq:
-            d0, x = heapq.heappop(pq)
-            if d0 > dist.get(x, np.inf) or d0 > limit:
-                continue
-            for y, wt in adj.get(x, ()):
-                nd = d0 + wt
-                if nd < dist.get(y, np.inf) and nd <= limit:
-                    dist[y] = nd
-                    heapq.heappush(pq, (nd, y))
-        for w, (sc_w, sc_o) in targets.items():
-            if dist.get(w, np.inf) > sc_w:  # no witness -> shortcut needed
-                shortcuts.append((u, w, sc_w, sc_o))
+    def triples(nodes, w, o):
+        return [(int(n), float(x), int(c)) for n, x, c in zip(nodes, w, o)]
 
+    in_pairs = triples(in_e["src"], in_e["weight"], in_e["orig"])
+    out_pairs = triples(out_e["dst"], out_e["weight"], out_e["orig"])
+    shortcuts = _witness_shortcuts(in_pairs, out_pairs,
+                                   lambda x: adj.get(x, ()))
     return pd.DataFrame(
         {
             "node": [v],
@@ -287,8 +315,6 @@ def _contract_local(rows, rank_offset: int, depths0=None):
     (contraction.ml:439-495) — on a cluster this runs on the driver once
     the distributed rounds have shrunk the graph below the threshold.
     """
-    import heapq
-
     out_e: dict[int, dict[int, tuple]] = {}
     in_e: dict[int, dict[int, tuple]] = {}
     for s, d, w, o, via in rows:
@@ -302,39 +328,11 @@ def _contract_local(rows, rank_offset: int, depths0=None):
     if depths0:
         depth.update({int(k): int(v) for k, v in depths0.items() if int(k) in nodes})
 
-    def witness_limit_dijkstra(u, excl, limit, targets):
-        dist = {u: 0.0}
-        pq = [(0.0, u)]
-        found = {}
-        while pq:
-            d0, x = heapq.heappop(pq)
-            if d0 > dist.get(x, np.inf) or d0 > limit:
-                continue
-            if x in targets:
-                found[x] = d0
-            for y, (w, _, _) in out_e.get(x, {}).items():
-                if y == excl:
-                    continue
-                nd = d0 + w
-                if nd < dist.get(y, np.inf) and nd <= limit:
-                    dist[y] = nd
-                    heapq.heappush(pq, (nd, y))
-        return found
-
     def simulate(v):
         ins = [(u, w, o) for u, (w, o, _) in in_e.get(v, {}).items() if u != v]
         outs = [(w_, wt, o) for w_, (wt, o, _) in out_e.get(v, {}).items() if w_ != v]
-        shortcuts = []
-        for u, w_uv, o_uv in ins:
-            targets = {w_: (w_uv + w_vw, o_uv + o_vw)
-                       for w_, w_vw, o_vw in outs if w_ != u}
-            if not targets:
-                continue
-            limit = max(t[0] for t in targets.values())
-            found = witness_limit_dijkstra(u, v, limit, set(targets))
-            for w_, (sw, so) in targets.items():
-                if found.get(w_, np.inf) > sw:
-                    shortcuts.append((u, w_, sw, so))
+        shortcuts = _witness_shortcuts(ins, outs, lambda x: (
+            (y, w) for y, (w, _, _) in out_e.get(x, {}).items() if y != v))
         eg = len(shortcuts) - len(ins) - len(outs)
         og = sum(s[3] for s in shortcuts) - sum(o for _, _, o in ins) \
             - sum(o for _, _, o in outs)
@@ -377,14 +375,7 @@ def _contract_local(rows, rank_offset: int, depths0=None):
     return frozen, ranks
 
 
-def contract(
-    edges: DataFrame,
-    checkpoint_dir: str | None = None,
-    max_rounds: int = 60,
-    resume: bool = True,
-    local_threshold: int = 10_000,
-    finish_local: bool = True,
-) -> CHResult:
+def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
     """Full CH preprocessing: iterative independent-set contraction
     (contraction.ml:557-660) as a checkpointed DataFrame loop, with a
     driver-local finish for the residual core.
@@ -392,21 +383,25 @@ def contract(
     ``edges``: directed (src, dst, weight).  When ``checkpoint_dir`` is
     set, every round writes delta checkpoints to parquet — the frozen
     output edges and new ranks of that round, plus the full (small,
-    shrinking) active edge set and node depths — and the loop resumes
-    from the last complete round if ``resume``.  Per-round metrics go to
-    ``metrics.jsonl``.  Deltas keep total checkpoint I/O linear in the
-    edge count rather than quadratic in rounds.
+    shrinking) active edge set and node depths — and a later call with
+    the same directory resumes from the last complete round (or returns
+    the finished result once ``final/ranks``, the last write, is
+    complete).  Per-round metrics go to ``metrics.jsonl``.  Deltas keep
+    total checkpoint I/O linear in the edge count rather than quadratic
+    in rounds.
 
     Distributed rounds run while the active graph has more than
-    ``local_threshold`` edges; the long tail (independent sets shrink
-    geometrically, so late rounds touch a tiny core) is finished
-    sequentially on the driver — the per-round cluster overhead would
-    dominate otherwise.  With ``finish_local=False`` and ``max_rounds``
-    hit, leftover nodes get arbitrary top ranks: the result is a valid
-    *resume point*, not a correct CH.
+    ``LOCAL_THRESHOLD`` edges, at most ``MAX_ROUNDS`` of them; the long
+    tail (independent sets shrink geometrically, so late rounds touch a
+    tiny core) is finished sequentially on the driver — the per-round
+    cluster overhead would dominate otherwise.  A residual core above
+    16 * ``LOCAL_THRESHOLD`` edges raises ``RuntimeError`` instead; the
+    checkpointed rounds stay resumable.
     """
     spark = edges.sparkSession
     ckpt = Path(checkpoint_dir) if checkpoint_dir else None
+    if ckpt:
+        ckpt.mkdir(parents=True, exist_ok=True)
     metrics: list[dict] = []
     frozen_parts: list[DataFrame] = []   # per-round frozen-edge deltas
     rank_parts: list[DataFrame] = []     # per-round rank deltas
@@ -429,18 +424,25 @@ def contract(
     start_round = 0
     n_active = None
 
-    if ckpt and resume and (ckpt / "metrics.jsonl").exists():
+    if ckpt and (ckpt / "metrics.jsonl").exists():
         lines = [json.loads(x) for x in
                  (ckpt / "metrics.jsonl").read_text().splitlines() if x]
-        if (ckpt / "final" / "edges" / "_SUCCESS").exists():
-            out = spark.read.parquet(str(ckpt / "final" / "edges"))
-            ranks_all = spark.read.parquet(str(ckpt / "final" / "ranks"))
-            return CHResult(edges=out, ranks=ranks_all, metrics=lines,
-                            rounds=len(lines))
-        complete = [m["round"] for m in lines
-                    if m.get("complete") and not m.get("local_finish")]
-        if complete:
-            k = max(complete)
+        # final/ranks is the last write: without it, final/edges may be
+        # a leftover of a run that died before finishing
+        if (ckpt / "final" / "ranks" / "_SUCCESS").exists():
+            return CHResult(
+                edges=spark.read.parquet(str(ckpt / "final" / "edges")),
+                ranks=spark.read.parquet(str(ckpt / "final" / "ranks")),
+                metrics=lines, rounds=len(lines))
+        k = max((m["round"] for m in lines
+                 if m.get("complete") and not m.get("local_finish")),
+                default=-1)
+        # keep the complete rounds only (drops a finish that never
+        # reached final/ranks; the finish below logs itself again)
+        metrics = [m for m in lines if m["round"] <= k]
+        (ckpt / "metrics.jsonl").write_text(
+            "".join(json.dumps(m) + "\n" for m in metrics))
+        if metrics:
             active = spark.read.parquet(str(ckpt / f"round={k:04d}" / "active"))
             depths = spark.read.parquet(str(ckpt / f"round={k:04d}" / "depths"))
             for j in range(k + 1):
@@ -449,16 +451,14 @@ def contract(
                 rank_parts.append(
                     spark.read.parquet(str(ckpt / f"round={j:04d}" / "ranks")))
             start_round = k + 1
-            metrics = [m for m in lines if m["round"] <= k]
             n_active = metrics[-1]["active_edges_out"]
 
     if n_active is None:
         active = active.localCheckpoint()
         n_active = active.count()
 
-    rnd = start_round
-    for rnd in range(start_round, max_rounds):
-        if n_active == 0 or (finish_local and n_active <= local_threshold):
+    for rnd in range(start_round, MAX_ROUNDS):
+        if n_active <= LOCAL_THRESHOLD:
             break
         t0 = time.time()
         nh = _neighbourhoods(active)
@@ -595,16 +595,16 @@ def contract(
     done = done.select("src", "dst", "weight", "orig", "via")
     rank_offset = (metrics[-1]["round"] + 1) if metrics else 0
 
-    if finish_local and n_active > 0:
-        if n_active > 16 * local_threshold:
+    if n_active > 0:
+        if n_active > 16 * LOCAL_THRESHOLD:
             # a stalled distributed phase (dense core above
-            # MAX_SIM_DEGREE, or max_rounds hit) must not dump an
+            # MAX_SIM_DEGREE, or MAX_ROUNDS hit) must not dump an
             # unbounded residual graph on the driver
             raise RuntimeError(
                 f"distributed contraction stalled with {n_active} active "
-                f"edges (> 16 * local_threshold={local_threshold}); raise "
-                "max_rounds/local_threshold, or pass finish_local=False "
-                "to keep the checkpoint as a resume point")
+                f"edges (> 16 * LOCAL_THRESHOLD={LOCAL_THRESHOLD}); raise "
+                "MAX_ROUNDS/LOCAL_THRESHOLD; a call with the same "
+                "checkpoint_dir resumes from the last complete round")
         # residual core: sequential CH on the driver (see docstring)
         t0 = time.time()
         depth_rows = {r.node: r.depth for r in depths.collect()}
@@ -628,51 +628,33 @@ def contract(
             with open(ckpt / "metrics.jsonl", "a") as f:
                 f.write(json.dumps(m) + "\n")
         metrics.append(m)
-        ranks_all = ranks
-    else:
-        # leftover nodes (max_rounds hit, no local finish): unique top
-        # ranks by id — a resume point, not a correct CH (see docstring)
-        leftover = (
-            active.select(F.col("src").alias("node"))
-            .unionByName(active.select(F.col("dst").alias("node")))
-            .distinct()
-            .join(ranks, "node", "left_anti")
-        )
-        top = leftover.withColumn(
-            "rank",
-            F.lit(2_000_000)
-            + F.row_number().over(Window.orderBy("node")).cast("long"),
-        )
-        ranks_all = ranks.unionByName(top.select("node", "rank"))
-
     all_edges = done.unionByName(
         active.select("src", "dst", "weight", "orig", "via")
     ).dropDuplicates(["src", "dst", "weight"])
-    rk = ranks_all
     out = (
         all_edges
-        .join(rk.select(F.col("node").alias("src"), F.col("rank").alias("rank_src")),
-              "src")
-        .join(rk.select(F.col("node").alias("dst"), F.col("rank").alias("rank_dst")),
-              "dst")
+        .join(ranks.select(F.col("node").alias("src"),
+                           F.col("rank").alias("rank_src")), "src")
+        .join(ranks.select(F.col("node").alias("dst"),
+                           F.col("rank").alias("rank_dst")), "dst")
     )
-    if ckpt and finish_local:
+    if ckpt:
         out.write.mode("overwrite").parquet(str(ckpt / "final" / "edges"))
-        ranks_all.write.mode("overwrite").parquet(str(ckpt / "final" / "ranks"))
+        ranks.write.mode("overwrite").parquet(str(ckpt / "final" / "ranks"))
         out = spark.read.parquet(str(ckpt / "final" / "edges"))
-        ranks_all = spark.read.parquet(str(ckpt / "final" / "ranks"))
-    return CHResult(edges=out, ranks=ranks_all, metrics=metrics,
+        ranks = spark.read.parquet(str(ckpt / "final" / "ranks"))
+    return CHResult(edges=out, ranks=ranks, metrics=metrics,
                     rounds=len(metrics))
 
 
 # ---------------------------------------------------------------------------
-# X7: bidirectional CH query (driver-side, for tests / point lookups)
+# X7: bidirectional CH query (driver-side point query + batch mapper)
 
 
 def _build_upward(rows) -> tuple[dict, dict, dict]:
     """Upward adjacency + best-edge map from CH edge rows
-    (src, dst, weight, via, rank_src, rank_dst) — the shared front half
-    of every CH query flavour (point, path, batch)."""
+    (src, dst, weight, via, rank_src, rank_dst) — the front half of
+    both the point query and the batch mapper."""
     up_fwd: dict[int, list[tuple[int, float]]] = {}
     up_bwd: dict[int, list[tuple[int, float]]] = {}
     edge_map: dict[tuple[int, int], tuple[float, int | None]] = {}
@@ -687,21 +669,19 @@ def _build_upward(rows) -> tuple[dict, dict, dict]:
     return up_fwd, up_bwd, edge_map
 
 
-def ch_query(ch_edges: list[tuple], s: int, t: int) -> float:
-    """Bidirectional Dijkstra over upward edges.
+def ch_query(ch_edges: list[tuple], s: int, t: int) -> tuple[float, list[int]]:
+    """X7 point query: bidirectional upward Dijkstra + recursive
+    shortcut expansion.
 
-    ``ch_edges``: rows (src, dst, weight, rank_src, rank_dst).  Returns
-    the shortest distance s->t (inf if unreachable).  Reference:
-    osm/routing.ml:49-79,148-172 (shortcut expansion not needed for
-    distance-only queries).
+    ``ch_edges``: rows (src, dst, weight, via, rank_src, rank_dst) from
+    ``contract().edges``.  Returns (distance, [s, ..., t]) over ORIGINAL
+    graph nodes; (inf, []) if unreachable.  Reference:
+    osm/routing.ml:49-79 (search), 92-145 (expansion).
     """
-    up_fwd, up_bwd, _ = _build_upward(
-        (src, dst, w, None, r_s, r_d) for src, dst, w, r_s, r_d in ch_edges)
-    best, _meet, _pf, _pb = _bidir_upward(up_fwd, up_bwd, int(s), int(t))
-    return best
+    return _bidir_upward(*_build_upward(ch_edges), int(s), int(t))
 
 
-def expand_ch_edge(edge_map: dict, u: int, v: int) -> list[int]:
+def _expand_edge(edge_map: dict, u: int, v: int) -> list[int]:
     """Recursively unpack the CH edge u->v to the real node sequence
     (excluding u).  The reference resolves the middle node by weight
     matching in its CSR arrays (osm/routing.ml:92-134 expand_edge); our
@@ -710,82 +690,47 @@ def expand_ch_edge(edge_map: dict, u: int, v: int) -> list[int]:
     _, via = edge_map[(u, v)]
     if via is None or via < 0:
         return [v]
-    return expand_ch_edge(edge_map, u, via) + expand_ch_edge(edge_map, via, v)
+    return _expand_edge(edge_map, u, via) + _expand_edge(edge_map, via, v)
 
 
-def ch_query_path(ch_edges: list[tuple], s: int, t: int) -> tuple[float, list[int]]:
-    """X7 with path output: bidirectional upward Dijkstra + recursive
-    shortcut expansion.
-
-    ``ch_edges``: rows (src, dst, weight, via, rank_src, rank_dst) from
-    ``contract().edges``.  Returns (distance, [s, ..., t]) over ORIGINAL
-    graph nodes; ([], inf) if unreachable.  Reference:
-    osm/routing.ml:49-79 (search), 92-145 (expansion).
-    """
-    up_fwd, up_bwd, edge_map = _build_upward(ch_edges)
-    best, meet, pf, pb = _bidir_upward(up_fwd, up_bwd, int(s), int(t))
-    if meet is None:
-        return float("inf"), []
-    return best, _expand_pair_path(edge_map, pf, pb, int(s), int(t), meet)
-
-
-def _bidir_upward(up_fwd: dict, up_bwd: dict, s: int, t: int):
-    """Bidirectional upward Dijkstra (routing.ml:49-79): returns
-    (dist, meet, parents_fwd, parents_bwd); (inf, None, .., ..) if
-    unreachable.  Pure-python on purpose — CH search spaces are tiny
-    (that is the point of CH), so per-query heap work beats any
+def _bidir_upward(up_fwd: dict, up_bwd: dict, edge_map: dict,
+                  s: int, t: int) -> tuple[float, list[int]]:
+    """Bidirectional upward Dijkstra (routing.ml:49-79) and the
+    original-node path s..t through the meeting node (routing.ml:92-145);
+    (inf, []) if unreachable.  Pure-python on purpose — CH search spaces
+    are tiny (that is the point of CH), so per-query heap work beats any
     vectorization that would have to ship frontier state."""
-    import heapq
-
-    def search(adj, start):
-        dist = {start: 0.0}
-        par: dict[int, int] = {}
-        pq = [(0.0, start)]
-        while pq:
-            d0, x = heapq.heappop(pq)
-            if d0 > dist.get(x, np.inf):
-                continue
-            for y, w in adj.get(x, ()):
-                nd = d0 + w
-                if nd < dist.get(y, np.inf):
-                    dist[y] = nd
-                    par[y] = x
-                    heapq.heappush(pq, (nd, y))
-        return dist, par
-
-    df, pf = search(up_fwd, int(s))
-    db, pb = search(up_bwd, int(t))
+    df, pf = _dijkstra(lambda x: up_fwd.get(x, ()), s)
+    db, pb = _dijkstra(lambda x: up_bwd.get(x, ()), t)
     best, meet = np.inf, None
     for x, d in df.items():
         if x in db and d + db[x] < best:
             best, meet = d + db[x], x
-    return float(best), meet, pf, pb
-
-
-def _expand_pair_path(edge_map: dict, pf: dict, pb: dict,
-                      s: int, t: int, meet: int) -> list[int]:
-    """Original-node path s..t through ``meet`` (routing.ml:92-145)."""
-    up_chain = []
+    if meet is None:
+        return float("inf"), []
+    hops = []
     x = meet
     while x != s:
-        up_chain.append((pf[x], x))
+        hops.append((pf[x], x))
         x = pf[x]
-    up_chain.reverse()
-    down_chain = []
+    hops.reverse()
     x = meet
     while x != t:
-        down_chain.append((x, pb[x]))
+        hops.append((x, pb[x]))
         x = pb[x]
     path = [s]
-    for u, v in up_chain + down_chain:
-        path.extend(expand_ch_edge(edge_map, u, v))
-    return path
+    for u, v in hops:
+        path.extend(_expand_edge(edge_map, u, v))
+    return float(best), path
 
 
-def ch_batch_routes(pairs: DataFrame, ch_edges: DataFrame,
-                    with_path: bool = False) -> DataFrame:
-    """X7 at pipeline scale: many (src, dst) queries → distance (and
-    optionally the expanded original-node path) in ONE mapInPandas pass.
+_ROUTE_DTYPES = {"src": "int64", "dst": "int64", "seq": "int64",
+                 "node": "int64", "dist_r": "float64"}
+
+
+def ch_batch_routes(pairs: DataFrame, ch_edges: DataFrame) -> DataFrame:
+    """X7 at pipeline scale: many (src, dst) queries → the expanded
+    original-node path in ONE mapInPandas pass.
 
     The contracted overlay ships to every executor once (broadcast) —
     the same "CH lives in memory, queries stream" design the reference
@@ -795,76 +740,24 @@ def ch_batch_routes(pairs: DataFrame, ch_edges: DataFrame,
     embarrassingly parallel, zero shuffles, zero joins.
 
     ``pairs``: (src, dst) rows.  ``ch_edges``: ``contract().edges``
-    with (src, dst, weight, via, rank_src, rank_dst).  Output
-    ``with_path=False``: (src, dst, dist_r) one row per pair (dist_r =
-    round(dist, 6), inf if unreachable); ``with_path=True``: (src, dst,
-    seq, node, dist_r) exploded hops, same schema as the x7_ch_path
-    driver row (unreachable pairs emit no rows).
+    with (src, dst, weight, via, rank_src, rank_dst).  Output: (src,
+    dst, seq, node, dist_r) one row per path hop, dist_r = round(dist,
+    6) — the hops of ``ch_query``; unreachable pairs emit no rows.
     """
-    import pandas as pd
-
     rows = ch_edges.select("src", "dst", "weight", "via",
                            "rank_src", "rank_dst").collect()
-    up_fwd, up_bwd, edge_map = _build_upward(rows)
-    bc = pairs.sparkSession.sparkContext.broadcast(
-        (up_fwd, up_bwd, edge_map if with_path else None))
+    bc = pairs.sparkSession.sparkContext.broadcast(_build_upward(rows))
 
-    if with_path:
-        schema = "src long, dst long, seq long, node long, dist_r double"
+    def fn(batches):
+        fwd, bwd, emap = bc.value
+        for pdf in batches:
+            out = []
+            for s, t in zip(pdf["src"], pdf["dst"]):
+                d, path = _bidir_upward(fwd, bwd, emap, int(s), int(t))
+                out += [(int(s), int(t), i, int(n), round(d, 6))
+                        for i, n in enumerate(path)]
+            yield pd.DataFrame(out, columns=list(_ROUTE_DTYPES)) \
+                .astype(_ROUTE_DTYPES)
 
-        def fn(batches):
-            fwd, bwd, emap = bc.value
-            for pdf in batches:
-                out = []
-                for s, t in zip(pdf["src"], pdf["dst"]):
-                    s, t = int(s), int(t)
-                    d, meet, pf, pb = _bidir_upward(fwd, bwd, s, t)
-                    if meet is None:
-                        continue
-                    dr = round(d, 6)
-                    for i, nd in enumerate(
-                            _expand_pair_path(emap, pf, pb, s, t, meet)):
-                        out.append((s, t, i, int(nd), dr))
-                yield pd.DataFrame(
-                    out, columns=["src", "dst", "seq", "node", "dist_r"]
-                ) if out else pd.DataFrame({
-                    "src": pd.array([], dtype="int64"),
-                    "dst": pd.array([], dtype="int64"),
-                    "seq": pd.array([], dtype="int64"),
-                    "node": pd.array([], dtype="int64"),
-                    "dist_r": pd.array([], dtype="float64")})
-    else:
-        schema = "src long, dst long, dist_r double"
-
-        def fn(batches):
-            fwd, bwd, _ = bc.value
-            for pdf in batches:
-                ss = pdf["src"].astype("int64")
-                tt = pdf["dst"].astype("int64")
-                dd = [round(_bidir_upward(fwd, bwd, int(s), int(t))[0], 6)
-                      for s, t in zip(ss, tt)]
-                yield pd.DataFrame({"src": ss, "dst": tt,
-                                    "dist_r": pd.array(dd, dtype="float64")})
-
-    return pairs.select("src", "dst").mapInPandas(fn, schema)
-
-
-def dijkstra_ref(edge_rows: list[tuple], s: int) -> dict[int, float]:
-    """Plain-Dijkstra oracle over (src, dst, weight) rows (test baseline)."""
-    import heapq
-
-    adj: dict[int, list[tuple[int, float]]] = {}
-    for src, dst, w in edge_rows:
-        adj.setdefault(int(src), []).append((int(dst), float(w)))
-    dist = {int(s): 0.0}
-    pq = [(0.0, int(s))]
-    while pq:
-        d0, x = heapq.heappop(pq)
-        if d0 > dist.get(x, np.inf):
-            continue
-        for y, w in adj.get(x, ()):
-            nd = d0 + w
-            if nd < dist.get(y, np.inf):
-                dist[y] = nd
-                heapq.heappush(pq, (nd, y))
-    return dist
+    return pairs.select("src", "dst").mapInPandas(
+        fn, "src long, dst long, seq long, node long, dist_r double")

@@ -4,11 +4,13 @@ The engine runs one batched pass per Arrow batch
 (``kernels.simplify_ring_int``, ``spatial_join._pip_pack``); the
 per-ring / per-cell formulations they replaced live here.  So do the
 ``Column``-chain forms of the JVM keys and the regexp geocoder, which
-the engine now writes as one SQL expression per derived column.
+the engine now writes as one SQL expression per derived column, and a
+plain Dijkstra the contraction hierarchy's distances are held to.
 """
 
 from __future__ import annotations
 
+import heapq
 import math
 
 import numpy as np
@@ -212,3 +214,24 @@ def polygon_cells_chain(polys, z: int, pad_rows: float):
             .withColumn("cy", F.explode(F.sequence("cy_min", "cy_max")))
             .drop("cx_min", "cx_max", "cy_min", "cy_max",
                   "lat_min", "lat_max", "lon_min", "lon_max"))
+
+
+def dijkstra_ref(edge_rows: list[tuple], s: int) -> dict[int, float]:
+    """Plain Dijkstra over (src, dst, weight) rows: node -> distance
+    from ``s`` on the original graph.  Its own loop, independent of
+    ``routing._dijkstra``."""
+    adj: dict[int, list[tuple[int, float]]] = {}
+    for src, dst, w in edge_rows:
+        adj.setdefault(int(src), []).append((int(dst), float(w)))
+    dist = {int(s): 0.0}
+    pq = [(0.0, int(s))]
+    while pq:
+        d0, x = heapq.heappop(pq)
+        if d0 > dist.get(x, np.inf):
+            continue
+        for y, w in adj.get(x, ()):
+            nd = d0 + w
+            if nd < dist.get(y, np.inf):
+                dist[y] = nd
+                heapq.heappush(pq, (nd, y))
+    return dist

@@ -1,5 +1,6 @@
 """Driver cost ledger: how many py4j round trips and Spark jobs each
-geo_tag operator call costs on the driver.
+geo_tag operator call, and each routing call (``contract`` with one
+distributed round, ``ch_batch_routes``), costs on the driver.
 
 Every ``Column``/``DataFrame`` method call is at least one Python->JVM
 round trip, and building a plan out of hundreds of them was most of the
@@ -19,7 +20,10 @@ lookups do not depend on test order.  PySpark caches, per process, the
 first answer to "is DataFrame debugging on" (each ``functions.*`` /
 ``Column`` call then records its call site over py4j), and a call made
 with no active session caches "off"; the test clears that cache so the
-counts follow the session's setting (Spark's default, on).
+counts follow the session's setting (Spark's default, on).  ``contract``
+runs one distributed round's stages per round (47 jobs on grid 6), so
+its count waits for the listener bus to drain before reading the job
+group.
 """
 
 from __future__ import annotations
@@ -33,6 +37,7 @@ import pyspark.errors.utils
 from py4j.clientserver import ClientServerConnection
 
 from osm_spark import fixtures as FX
+from osm_spark.operators import routing as RT
 from osm_spark.operators import tiles as T
 from osm_spark.operators.geocode import geocode_ids, geocode_pages
 from osm_spark.operators.knn import knn_join
@@ -75,12 +80,24 @@ class _Meter:
         finally:
             self.on = False
             sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status tracker learns of a job from the listener bus, which
+        # may lag behind a call's last job
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         return self.n, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _calls(spark, tmp: Path) -> dict:
-    """The geo_tag steps (``perfbench/workloads.py``), each as a thunk
-    over the small fixtures; inputs are built outside the thunks."""
+def _contract(edges, monkeypatch):
+    """``contract`` on the grid-6 network with a threshold low enough
+    for at least one distributed round before the local finish."""
+    with monkeypatch.context() as m:
+        m.setattr(RT, "LOCAL_THRESHOLD", 120)
+        return RT.contract(edges)
+
+
+def _calls(spark, tmp: Path, monkeypatch) -> dict:
+    """The geo_tag steps (``perfbench/workloads.py``) and the routing
+    calls, each as a thunk over the small fixtures; inputs are built
+    outside the thunks."""
     pages = FX.pages_df(spark, N_PAGES)
     polys = FX.polygons_df(spark, N_SMALL)
     geo = geocode_pages(pages).select("page_id", "lat", "lon")
@@ -90,6 +107,13 @@ def _calls(spark, tmp: Path) -> dict:
     layer = str(tmp / "layer")
     write_partitioned_layer(polys, layer, n_files=8)
     zc = DEFAULT_CELL_ZOOM - COARSE_SHIFT
+    nodes, refs = FX.road_network_dfs(spark, grid=6)
+    edges = spark.createDataFrame(
+        RT.extract_edges(refs, nodes).select("src", "dst", "weight").collect(),
+        "src long, dst long, weight double")
+    ch = RT.contract(edges).edges.localCheckpoint()
+    pairs = spark.createDataFrame([(i, (i * 7 + 11) % 36) for i in range(36)],
+                                  "src long, dst long")
     return {
         "geocode_pages": lambda: geocode_pages(pages),
         "spatial_join": lambda: spatial_join(geo, polys, how="left", index=index),
@@ -101,13 +125,15 @@ def _calls(spark, tmp: Path) -> dict:
         "suggest_salt": lambda: suggest_salt(geo, z=zc),
         "spatial_join_partitioned": lambda: spatial_join_partitioned(
             geo, layer, how="left", salt=2),
+        "contract": lambda: _contract(edges, monkeypatch),
+        "ch_batch_routes": lambda: RT.ch_batch_routes(pairs, ch),
     }
 
 
 def test_cost_ledger(spark, tmp_path, monkeypatch):
     want = json.loads(LEDGER.read_text())["calls"]
     monkeypatch.setattr(pyspark.errors.utils, "_enable_debugging_cache", None)
-    calls = _calls(spark, tmp_path)
+    calls = _calls(spark, tmp_path, monkeypatch)
     assert sorted(calls) == sorted(want)
     for fn in calls.values():
         fn()

@@ -20,7 +20,8 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 # fast subset: one per family; full set in tools/check_oracles.py
 ORACLE_SUBSET = ["r15_group_fold", "g06_pip_tag", "g22_tile_assign",
-                 "t_minhash_pairs", "s_cosine_topk"]
+                 "t_minhash_pairs", "s_cosine_topk", "x3_x4_ch_local",
+                 "x5_ch_shortcuts", "x7_ch_path"]
 
 
 def test_entry_smoke(spark):

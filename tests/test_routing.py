@@ -10,9 +10,11 @@ local finish) and the pure-local path.
 from __future__ import annotations
 
 import json
+import shutil
 
 import numpy as np
 import pytest
+from kernel_oracles import dijkstra_ref
 
 from osm_spark import fixtures as FX
 from osm_spark.operators import routing as RT
@@ -26,13 +28,18 @@ def graph(spark):
     return edges, rows
 
 
+def _ch_rows(res):
+    return [(r.src, r.dst, r.weight, r.via, r.rank_src, r.rank_dst)
+            for r in res.edges.collect()]
+
+
 def _check_distances(ch_rows, rows, n_sources=5, n_targets=5, seed=7):
     nodes = sorted({s for s, _, _ in rows} | {d for _, d, _ in rows})
     rng = np.random.RandomState(seed)
     for s in rng.choice(nodes, size=n_sources, replace=False):
-        ref = RT.dijkstra_ref(rows, int(s))
+        ref = dijkstra_ref(rows, int(s))
         for t in rng.choice(nodes, size=n_targets, replace=False):
-            got = RT.ch_query(ch_rows, int(s), int(t))
+            got, _ = RT.ch_query(ch_rows, int(s), int(t))
             want = ref.get(int(t), np.inf)
             assert got == pytest.approx(want, rel=1e-9), (s, t)
 
@@ -51,55 +58,73 @@ def test_contraction_local_preserves_distances(graph):
     """Pure driver-local CH (graph below threshold from the start)."""
     edges, rows = graph
     res = RT.contract(edges.select("src", "dst", "weight"))
-    ch_rows = [(r.src, r.dst, r.weight, r.rank_src, r.rank_dst)
-               for r in res.edges.collect()]
     assert res.metrics[-1]["local_finish"]
-    _check_distances(ch_rows, rows)
+    _check_distances(_ch_rows(res), rows)
 
 
-def test_contraction_hybrid_preserves_distances(spark, graph, tmp_path):
+def test_contraction_hybrid_preserves_distances(spark, graph, tmp_path,
+                                                monkeypatch):
     """Distributed rounds + local finish, checkpointed."""
     edges, rows = graph
+    monkeypatch.setattr(RT, "LOCAL_THRESHOLD", 120)
     res = RT.contract(edges.select("src", "dst", "weight"),
-                      checkpoint_dir=str(tmp_path / "ch"),
-                      local_threshold=120)
+                      checkpoint_dir=str(tmp_path / "ch"))
     dist_rounds = [m for m in res.metrics if not m.get("local_finish")]
     assert len(dist_rounds) >= 1
     assert all(m["checkpoint_bytes"] > 0 for m in dist_rounds)
     assert res.metrics[-1]["local_finish"]
-    ch_rows = [(r.src, r.dst, r.weight, r.rank_src, r.rank_dst)
-               for r in res.edges.collect()]
-    _check_distances(ch_rows, rows, n_sources=4, n_targets=4, seed=11)
+    _check_distances(_ch_rows(res), rows, n_sources=4, n_targets=4, seed=11)
 
 
-def test_contraction_resume(spark, graph, tmp_path):
+def test_contraction_resume(spark, graph, tmp_path, monkeypatch):
     edges, rows = graph
     ck = tmp_path / "ch_resume"
-    partial = RT.contract(edges.select("src", "dst", "weight"),
-                          checkpoint_dir=str(ck), max_rounds=2,
-                          local_threshold=0, finish_local=False)
-    assert partial.rounds == 2
+    # an interrupted run: rounds 0-1 reach disk, then the stall guard
+    # (residual core above 16 * LOCAL_THRESHOLD) raises
+    monkeypatch.setattr(RT, "LOCAL_THRESHOLD", 0)
+    monkeypatch.setattr(RT, "MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="stalled"):
+        RT.contract(edges.select("src", "dst", "weight"),
+                    checkpoint_dir=str(ck))
     lines = [json.loads(x) for x in
              (ck / "metrics.jsonl").read_text().splitlines()]
     assert [m["round"] for m in lines] == [0, 1]
     assert all(m["complete"] for m in lines)
 
     # resume from round 2, finish locally; distances still exact
+    monkeypatch.setattr(RT, "LOCAL_THRESHOLD", 120)
+    monkeypatch.setattr(RT, "MAX_ROUNDS", 60)
     full = RT.contract(edges.select("src", "dst", "weight"),
-                       checkpoint_dir=str(ck), local_threshold=120)
+                       checkpoint_dir=str(ck))
     assert full.metrics[0]["round"] == 0  # history retained
     assert full.metrics[-1]["local_finish"]
-    ch_rows = [(r.src, r.dst, r.weight, r.rank_src, r.rank_dst)
-               for r in full.edges.collect()]
-    ref = RT.dijkstra_ref(rows, 0)
+    ch_rows = _ch_rows(full)
+    ref = dijkstra_ref(rows, 0)
     for t in (1, 7, 17, 35):
-        assert RT.ch_query(ch_rows, 0, t) == pytest.approx(
+        assert RT.ch_query(ch_rows, 0, t)[0] == pytest.approx(
             ref.get(t, np.inf), rel=1e-9)
 
     # second resume short-circuits via the final checkpoint
     again = RT.contract(edges.select("src", "dst", "weight"),
                         checkpoint_dir=str(ck))
     assert again.edges.count() == full.edges.count()
+
+
+def test_resume_redoes_finish_when_final_ranks_lost(graph, tmp_path):
+    """``final/ranks`` is written after ``final/edges``: a run that dies
+    between the two leaves a checkpoint whose resume must redo the
+    finish rather than trust ``final/edges``."""
+    edges, rows = graph
+    ck = tmp_path / "ch_lost_ranks"
+    RT.contract(edges.select("src", "dst", "weight"), checkpoint_dir=str(ck))
+    shutil.rmtree(ck / "final" / "ranks")
+    res = RT.contract(edges.select("src", "dst", "weight"),
+                      checkpoint_dir=str(ck))
+    _check_distances(_ch_rows(res), rows, n_sources=3, n_targets=4, seed=5)
+    # the lost finish left no second local-finish line behind
+    again = RT.contract(edges.select("src", "dst", "weight"),
+                        checkpoint_dir=str(ck))
+    assert again.metrics == res.metrics
 
 
 def test_contraction_all_ranked_no_equal_rank_edges(graph):
@@ -112,7 +137,7 @@ def test_contraction_all_ranked_no_equal_rank_edges(graph):
     assert res.edges.filter("rank_src = rank_dst").count() == 0
 
 
-def test_hub_node_deferred_to_local_finish(spark, tmp_path):
+def test_hub_node_deferred_to_local_finish(spark, tmp_path, monkeypatch):
     """A node whose degree exceeds MAX_SIM_DEGREE must never be picked by
     a distributed round (witness sim skipped) — it contracts in the local
     finish, and distances stay exact."""
@@ -125,20 +150,20 @@ def test_hub_node_deferred_to_local_finish(spark, tmp_path):
     for i in range(1, n_spokes):  # rim ring so spokes have alternatives
         rows.extend([(i, i + 1, 0.5), (i + 1, i, 0.5)])
     edges = spark.createDataFrame(rows, "src long, dst long, weight double")
-    res = RT.contract(edges, checkpoint_dir=str(tmp_path / "hub"),
-                      local_threshold=40, max_rounds=6)
+    monkeypatch.setattr(RT, "LOCAL_THRESHOLD", 40)
+    monkeypatch.setattr(RT, "MAX_ROUNDS", 6)
+    res = RT.contract(edges, checkpoint_dir=str(tmp_path / "hub"))
     ranks = {r.node: r.rank for r in res.ranks.collect()}
     dist_rounds = [m for m in res.metrics if not m.get("local_finish")]
     # hub 0 was never contracted by a distributed round (rank >= 1e6 means
     # local finish assigned it)
     assert ranks[0] >= 1_000_000
     assert len(dist_rounds) >= 1
-    ch_rows = [(r.src, r.dst, r.weight, r.rank_src, r.rank_dst)
-               for r in res.edges.collect()]
+    ch_rows = _ch_rows(res)
     plain = [(s, d, w) for s, d, w in rows]
-    ref = RT.dijkstra_ref(plain, 5)
+    ref = dijkstra_ref(plain, 5)
     for t in (0, 1, 20, n_spokes):
-        assert RT.ch_query(ch_rows, 5, t) == pytest.approx(
+        assert RT.ch_query(ch_rows, 5, t)[0] == pytest.approx(
             ref.get(t, float("inf")), rel=1e-9)
 
 
@@ -146,17 +171,15 @@ def test_ch_path_expansion(spark, graph):
     """X7: the expanded node path is a real walk in the ORIGINAL graph
     whose edge weights sum to the exact shortest distance."""
     edges, rows = graph
-    res = RT.contract(edges.select("src", "dst", "weight"))
-    ch_rows = [(r.src, r.dst, r.weight, r.via, r.rank_src, r.rank_dst)
-               for r in res.edges.collect()]
+    ch_rows = _ch_rows(RT.contract(edges.select("src", "dst", "weight")))
     orig = {(s, d): w for s, d, w in rows}
     nodes = sorted({s for s, _, _ in rows})
     rng = np.random.RandomState(11)
     n_checked = 0
     for s in rng.choice(nodes, size=4, replace=False):
-        ref = RT.dijkstra_ref(rows, int(s))
+        ref = dijkstra_ref(rows, int(s))
         for t in rng.choice(nodes, size=4, replace=False):
-            dist, path = RT.ch_query_path(ch_rows, int(s), int(t))
+            dist, path = RT.ch_query(ch_rows, int(s), int(t))
             want = ref.get(int(t), np.inf)
             assert dist == pytest.approx(want, rel=1e-9), (s, t)
             if not np.isfinite(want):
@@ -186,30 +209,25 @@ def test_ch_batch_routes_matches_point_queries(spark, graph):
     pairs = spark.createDataFrame(pair_list, "src long, dst long") \
         .repartition(4)
 
-    # distance-only mode: one row per pair, exact vs plain Dijkstra
-    got_d = {(r.src, r.dst): r.dist_r
-             for r in RT.ch_batch_routes(pairs, res.edges).collect()}
-    assert set(got_d) == set(pair_list)
-    for s, t in pair_list:
-        want = RT.dijkstra_ref(rows, s).get(t, np.inf)
-        if np.isfinite(want):
-            assert got_d[(s, t)] == pytest.approx(round(want, 6), rel=1e-9)
-        else:
-            assert not np.isfinite(got_d[(s, t)])
-
-    # path mode: hops are original edges summing to the exact distance
-    out = RT.ch_batch_routes(pairs, res.edges, with_path=True).collect()
+    # hops are original edges summing to the exact distance
+    out = RT.ch_batch_routes(pairs, res.edges).collect()
     by_pair: dict = {}
     for r in out:
         by_pair.setdefault((r.src, r.dst), []).append(r)
+    # exactly the reachable pairs have rows, their distance exact vs
+    # plain Dijkstra (unreachable pairs emit no rows)
+    want = {(s, t): dijkstra_ref(rows, s).get(t, np.inf) for s, t in pair_list}
+    assert set(by_pair) == {p for p, d in want.items() if np.isfinite(d)}
     n_checked = 0
     for (s, t), hops in by_pair.items():
         hops.sort(key=lambda r: r.seq)
+        assert hops[0].dist_r == pytest.approx(round(want[(s, t)], 6),
+                                               rel=1e-9)
         path = [r.node for r in hops]
         assert path[0] == s and path[-1] == t
         walk = sum(orig[(u, v)] for u, v in zip(path, path[1:]))
         assert walk == pytest.approx(
-            RT.dijkstra_ref(rows, s)[t], rel=1e-9)
+            dijkstra_ref(rows, s)[t], rel=1e-9)
         assert hops[0].dist_r == pytest.approx(round(walk, 6), rel=1e-9)
         n_checked += 1
     assert n_checked >= len(pair_list) - 2  # all reachable pairs present
