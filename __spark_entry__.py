@@ -732,7 +732,8 @@ def q_stream_sessionize(spark, sf):
     drained via availableNow with a flush sentinel (stage_flush_dir),
     so every session of the closed input is emitted and the DuckDB
     sessionize oracle checks the real streaming operator.  The batch
-    twin (sessionize_batch) is retained as a pytest parity check."""
+    twin (``sessionize_batch`` in tests/kernel_oracles.py) is the
+    pytest parity check."""
     import uuid
     from pathlib import Path
 
@@ -778,8 +779,8 @@ def q_t_minhash_pairs(spark, sf):
     band collisions, so the gate must too — a fixture bucket crossing
     MAX_LSH_BUCKET at a larger sf would otherwise diverge (star vs
     all-pairs).  The hot-bucket star path is pinned by
-    tests/test_cluster_multimodal.py (capped-vs-uncapped set algebra +
-    hot_stats counts)."""
+    tests/test_cluster_multimodal.py (star pairs of a degenerate corpus
+    + capped-vs-uncapped set algebra)."""
     return D.minhash_pairs(_t(spark, sf, "documents"), max_bucket=None)
 
 

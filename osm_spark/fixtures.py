@@ -58,17 +58,17 @@ def geocode_ints(ids):
             LON0 + (m * (GEO_B % SPAN)) % SPAN)   # == (id*A)%S exactly
 
 
-def star_ring(cx, cy, r, n, seed, wobble=0.5):
+def star_ring(cx, cy, r, n, seed):
     """Deterministic simple star-shaped closed ring (CCW), integer coords.
 
-    No axis-aligned edges; vertices strictly inside a disc of radius r.
+    No axis-aligned edges; vertex radii vary in [r/2, r).
     Returns (lat_list, lon_list) with first == last.
     """
     lats, lons = [], []
     for i in range(n):
         ang = 2 * math.pi * i / n + 0.1
         h = ((seed * 1_000_003 + i) * GEO_A) % 1000
-        rad = r * (1.0 - wobble + wobble * h / 1000.0)
+        rad = r * (0.5 + 0.5 * h / 1000.0)
         lats.append(cy + int(rad * math.sin(ang)))
         lons.append(cx + int(rad * math.cos(ang)))
     lats.append(lats[0])
@@ -93,12 +93,13 @@ def city_polygons():
     return polys
 
 
-def small_polygons(n_small=1500, id_offset=5):
-    """Small building/park polygons; 70% near city centers (hot cells),
-    includes 2 cell-straddlers and 1 very large polygon (size-class test)."""
+def small_polygons(n_small=1500):
+    """Small building/park polygons (ids from 5, after the cities);
+    70% near city centers (hot cells), includes 2 cell-straddlers and 1
+    very large polygon (size-class test)."""
     polys = []
     for k in range(n_small):
-        fid = id_offset + k
+        fid = 5 + k
         h1 = (k * GEO_A) % SPAN
         h2 = (k * GEO_B) % SPAN
         if k % 10 < 7:  # clustered
@@ -127,7 +128,7 @@ def small_polygons(n_small=1500, id_offset=5):
         )
     # 2 polygons straddling z12 tile-x boundaries (tile width = 360/4096 deg)
     tile_w = 360 * FIXED_POINT // 4096
-    for j, fid in enumerate([id_offset + n_small, id_offset + n_small + 1]):
+    for j, fid in enumerate([5 + n_small, 6 + n_small]):
         # lon tile boundaries sit at -180deg + k*tile_w: shift into the
         # 0-based tile grid BEFORE flooring, then shift back — snapping
         # each straddler onto the distinct boundary nearest SPAN*(j+1)/3
@@ -137,7 +138,7 @@ def small_polygons(n_small=1500, id_offset=5):
         lats, lons = star_ring(edge_lon, LAT0 + SPAN // 2 + j * 1_000_000, 400_000, 9, seed=fid)
         polys.append({"feature_id": fid, "category": 7, "layer": 0, "rings": [{"role": 0, "lat": lats, "lon": lons}]})
     # 1 very large polygon (> small-area cutoff, surfaces.ml:653-657)
-    fid = id_offset + n_small + 2
+    fid = 7 + n_small
     lats, lons = star_ring(LON0 + SPAN // 2, LAT0 + SPAN // 2, 15_000_000, 14, seed=fid)
     polys.append({"feature_id": fid, "category": 3, "layer": 0, "rings": [{"role": 0, "lat": lats, "lon": lons}]})
     return polys
@@ -194,11 +195,6 @@ _WORDS = (
 ).split()
 
 
-def generate_pages(n: int):
-    """Deterministic pages table rows [0, n) — see generate_pages_range."""
-    return generate_pages_range(0, n)
-
-
 def generate_pages_range(start: int, stop: int):
     """Deterministic pages table as a pandas DataFrame (page ids
     [start, stop) — chunkable: the row for page i never depends on the
@@ -233,11 +229,6 @@ def generate_pages_range(start: int, stop: int):
         {"url": urls, "warc_ts": ts.tz_localize(None), "html": htmls,
          "text": texts, "lang": langs}
     )
-
-
-def pages_df(spark, n: int):
-    pdf = generate_pages(n)
-    return spark.createDataFrame(pdf)
 
 
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, text string, "

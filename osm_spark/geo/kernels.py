@@ -20,12 +20,18 @@ the reference pins a semantic edge case we reproduce it exactly:
   rounding of douglas_peucker.ml:88-98.
 - distance: haversine, truncated, with the reference's radius constant
   (units: the reference uses r = 6371*1e6, i.e. millimeters;
-  /root/reference/osm/geometry.ml:26-36).  ``distance_m`` floors to meters.
-- z_order: bit-dilation interleave (/root/reference/osm/geometry.ml:529-538).
+  osm/geometry.ml:26-36).
 - hilbert_d: Hilbert curve index via the standard public xy2d rotation
   algorithm (Wikipedia "Hilbert curve"); serves the same clustering role
   as the reference's table-driven variant (geometry.ml:350-526).  Key
   values are an internal sort order, not part of the output contract.
+
+Queries compute Mercator tile rows and z-order keys as SQL expressions
+(``spatial_join.tile_y_sql``, the ``g10_curve_keys`` zkey column).  The
+per-point forms no query runs — Mercator y, z-order, the 70% quorum
+ring containment, single-polyline Douglas-Peucker and haversine in
+meters — live in tests/kernel_oracles.py as the twins tests hold these
+kernels to.
 """
 
 from __future__ import annotations
@@ -78,28 +84,8 @@ def distance(lat1, lon1, lat2, lon2):
     return np.trunc(2.0 * EARTH_R_MM * np.arcsin(np.sqrt(a))).astype(np.int64)
 
 
-def distance_m(lat1, lon1, lat2, lon2):
-    """Haversine in whole meters (floor of the reference's mm value)."""
-    return distance(lat1, lon1, lat2, lon2) // 1000
-
-
 # ---------------------------------------------------------------------------
 # Web-Mercator / tiles
-
-_COEFF_1 = 180.0 / np.pi * FIXED_POINT
-_COEFF_2 = np.pi / 180.0 / FIXED_POINT / 2.0
-_PI_4 = np.pi / 4.0
-
-
-def lat_to_y(lat_fp):
-    """Mercator y in fixed-point units (osm/geometry.ml:44-48)."""
-    lat = np.asarray(lat_fp, np.float64)
-    return _COEFF_1 * np.log(np.tan(_PI_4 + lat * _COEFF_2))
-
-
-def y_to_lat(y):
-    y = np.asarray(y, np.float64)
-    return (np.arctan(np.exp(y / _COEFF_1)) - _PI_4) / _COEFF_2
 
 
 def tile_x(lon_fp, z):
@@ -296,18 +282,7 @@ def is_simple_polygon(px, py) -> bool:
     return not folds.any()
 
 
-def ring_mostly_in_ring(qx, qy, px, py, quorum: float = 0.7) -> bool:
-    """Quorum containment: >= quorum of (qx,qy) vertices inside ring
-    (px,py) — the overlap-arbitration rule of
-    /root/reference/osm/geometry.ml:314-346 (polygon_mostly_in_polygon,
-    70% threshold used by multipolygons.ml:551-572)."""
-    qx = np.asarray(qx, np.int64)[:-1]  # drop closing dup
-    qy = np.asarray(qy, np.int64)[:-1]
-    inside = points_in_ring(qx, qy, px, py)
-    return bool(inside.sum() >= quorum * len(qx))
-
-
-def catmull_rom(xs, ys, n_sub: int = 8, alpha: float = 0.5):
+def catmull_rom(xs, ys, n_sub: int = 8):
     """Centripetal Catmull-Rom smoothing of an open polyline
     (/root/reference/osm/line_smoothing.ml:93-211, alpha=0.5) —
     render-time operator; returns float arrays of the interpolated
@@ -323,7 +298,7 @@ def catmull_rom(xs, ys, n_sub: int = 8, alpha: float = 0.5):
     for i in range(1, len(px) - 2):
         p = np.stack([px[i - 1:i + 3], py[i - 1:i + 3]], axis=1)
         d = np.sqrt(((p[1:] - p[:-1]) ** 2).sum(axis=1))
-        t = np.concatenate([[0.0], np.cumsum(np.maximum(d, 1e-12) ** alpha)])
+        t = np.concatenate([[0.0], np.cumsum(np.maximum(d, 1e-12) ** 0.5)])
         tq = np.linspace(t[1], t[2], n_sub + 1)[1:]
         # recursive de Boor-style pyramid (standard centripetal CR)
         def lerp(pa, pb, ta, tb):
@@ -404,6 +379,9 @@ def polygon_areas_packed(px, py, starts, lens):
 # ---------------------------------------------------------------------------
 # Space-filling curves
 
+# z-order bit-dilation steps (geometry.ml:529-536); the SQL z-order
+# keys (``oracle_sql.zorder_ctes_duckdb``, the ``g10_curve_keys`` zkey
+# column) unroll this table
 _DILATE_MASKS = (
     (16, 0x0000FFFF0000FFFF),
     (8, 0x00FF00FF00FF00FF),
@@ -413,32 +391,19 @@ _DILATE_MASKS = (
 )
 
 
-def dilate(x):
-    """Bit-dilation (insert a 0 between every bit); geometry.ml:529-536."""
-    x = np.asarray(x, np.uint64)
-    for shift, mask in _DILATE_MASKS:
-        x = (x | (x << np.uint64(shift))) & np.uint64(mask)
-    return x
-
-
-def z_order(x, y):
-    """Morton interleave of two 32-bit values (geometry.ml:538)."""
-    return ((dilate(x) << np.uint64(1)) | dilate(y)).astype(np.int64)
-
-
-def hilbert_d(x, y, order: int = 31):
-    """Hilbert curve index of (x, y), vectorized.
+def hilbert_d(x, y):
+    """Hilbert curve index of (x, y), vectorized, 31 bits per axis (so
+    d fits int64).
 
     Standard xy2d rotation algorithm (public; Wikipedia "Hilbert curve").
     Serves the same spatial-clustering role as the reference's table-driven
     hilbert_coordinate (geometry.ml:514-526); key values themselves are an
     internal sort order, not part of any output contract (SURVEY.md §2 G10).
-    ``order`` bits per axis (<=31 keeps d in int64).
     """
     x = np.asarray(x, np.int64).copy()
     y = np.asarray(y, np.int64).copy()
     d = np.zeros_like(x)
-    s = np.int64(1) << (order - 1)
+    s = np.int64(1) << 30
     while s > 0:
         rx = ((x & s) > 0).astype(np.int64)
         ry = ((y & s) > 0).astype(np.int64)
@@ -529,11 +494,6 @@ def simplify_ring_int(eps, x, y, lens):
         opn = i2 - i1 >= 2
         i1, i2, e2 = i1[opn], i2[opn], e2[opn]
     return keep
-
-
-def douglas_peucker_int(eps: int, x, y):
-    """Keep-mask of one polyline: ``simplify_ring_int`` on a batch of one."""
-    return simplify_ring_int(eps, x, y, [len(x)])
 
 
 # ---------------------------------------------------------------------------

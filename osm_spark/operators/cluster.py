@@ -6,7 +6,7 @@ rtree.ml:90-134, ordering surfaces.ml:404-409).
 key before writing; parquet/Iceberg min-max column statistics on
 (lat, lon) then prune row groups for any spatial range predicate — the
 job the R-tree interior nodes do in the reference.  Verified by
-tests/test_cluster.py, which reads the written row-group stats and
+tests/test_cluster_multimodal.py, which reads the written row-group stats and
 checks the lat/lon extents are tight.
 """
 
@@ -21,55 +21,22 @@ from pyspark.sql.functions import pandas_udf
 from osm_spark.geo import kernels as K
 
 
-def with_hilbert_key(df: DataFrame, lat: str = "lat", lon: str = "lon",
-                     out: str = "hkey") -> DataFrame:
-    """Add the Hilbert key column (vectorized kernel, G10)."""
+def with_hilbert_key(df: DataFrame) -> DataFrame:
+    """Add the ``hkey`` Hilbert key column of ``lat``/``lon``
+    (vectorized kernel, G10)."""
 
     @pandas_udf("long")
     def hk(la: pd.Series, lo: pd.Series) -> pd.Series:
         return pd.Series(K.hilbert_key(la.to_numpy(np.int64),
                                        lo.to_numpy(np.int64)))
 
-    return df.withColumn(out, hk(F.col(lat), F.col(lon)))
+    return df.withColumn("hkey", hk(F.col("lat"), F.col("lon")))
 
 
-def median_split_assign(df: DataFrame, levels: int = 4,
-                        lat: str = "lat", lon: str = "lon",
-                        out: str = "part") -> DataFrame:
-    """G18: recursive median spatial partitioning (the reference's
-    R-tree build splits leaf sets at coordinate medians,
-    rtree.ml:90-134) as log2(P) DataFrame passes.
-
-    Level k splits every current part at its own approximate median of
-    the alternating axis (percentile_approx, one aggregation per level,
-    medians broadcast back) — balanced leaves even under city-level
-    skew, unlike fixed-resolution cells.  Returns df + ``out`` in
-    [0, 2^levels)."""
-    cur = df.withColumn(out, F.lit(0))
-    for lvl in range(levels):
-        axis = lat if lvl % 2 == 0 else lon
-        # NULL coordinates sort into the low branch deterministically —
-        # a NULL comparison would NULL the part key and the next
-        # level's inner join on it would silently DROP the row
-        ax = F.coalesce(F.col(axis),
-                        F.lit(-(1 << 62)).cast("long"))
-        meds = cur.groupBy(out).agg(
-            F.percentile_approx(axis, 0.5).alias("_med"))
-        cur = (
-            cur.join(F.broadcast(meds), out)
-            .withColumn(out, F.col(out) * 2
-                        + (ax > F.coalesce(F.col("_med"), F.lit(1 << 62))
-                           ).cast("int"))
-            .drop("_med")
-        )
-    return cur
-
-
-def cluster_by_hilbert(df: DataFrame, n_partitions: int = 32,
-                       lat: str = "lat", lon: str = "lon") -> DataFrame:
+def cluster_by_hilbert(df: DataFrame, n_partitions: int = 32) -> DataFrame:
     """Hilbert-order the rows: range-partition on the key, sort within
     partitions.  Write the result with ``df.write.parquet`` (or the
     Iceberg writer) to get spatially-pruned scans."""
-    keyed = with_hilbert_key(df, lat, lon)
+    keyed = with_hilbert_key(df)
     return keyed.repartitionByRange(n_partitions, "hkey") \
         .sortWithinPartitions("hkey").drop("hkey")

@@ -15,9 +15,9 @@ Re-expression of the reference's shapefile ring builder
   chains at tails and would drop these.
 
 The chain step is inherently sequential over one connected layer; the
-Spark surface runs it per ``group_col`` partition (default: one global
-group — the planet coastline is ~10^6 segments, driver-scale — while
-everything downstream stays distributed).
+Spark surface runs it as one global group (the planet coastline is
+~10^6 segments, driver-scale — while everything downstream stays
+distributed).
 """
 
 from __future__ import annotations
@@ -113,15 +113,10 @@ def build_rings(segments: list[tuple[np.ndarray, np.ndarray]]):
 RINGS_SCHEMA = "group long, ring_idx int, n_pts int, lats array<long>, lons array<long>"
 
 
-def assemble_coastline(segments: DataFrame, group_col: str | None = None) -> DataFrame:
-    """(seg_id, lats, lons[, group]) -> closed coastline rings
-    (group, ring_idx, n_pts, lats, lons)."""
-    df = segments
-    if group_col is None:
-        df = df.withColumn("group", F.lit(0))
-        group_col = "group"
-    else:
-        df = df.withColumnRenamed(group_col, "group")
+def assemble_coastline(segments: DataFrame) -> DataFrame:
+    """(seg_id, lats, lons) -> closed coastline rings
+    (group, ring_idx, n_pts, lats, lons), all in group 0."""
+    df = segments.withColumn("group", F.lit(0))
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         if "seg_id" in pdf.columns:      # deterministic ring numbering

@@ -30,45 +30,43 @@ def token_hash(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def exact_dedup(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Groups of byte-identical texts: (text_md5, canonical_id, n_dups)."""
     return (
-        df.groupBy(F.md5(F.col(text)).alias("text_md5"))
-        .agg(F.min(key).alias("canonical_id"), F.count("*").alias("n_dups"))
+        df.groupBy(F.md5(F.col("text")).alias("text_md5"))
+        .agg(F.min("doc_id").alias("canonical_id"), F.count("*").alias("n_dups"))
     )
 
 
-def tokens(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
+def tokens(df: DataFrame) -> DataFrame:
     """Distinct whitespace tokens per doc (any run of \\s splits, so
     newline/tab-separated words do not fuse; oracle twin:
     regexp_split_to_array(text, '\\s+'))."""
     return df.select(
-        key, F.explode(F.split(F.col(text), "\\s+")).alias("tok")
+        "doc_id", F.explode(F.split(F.col("text"), "\\s+")).alias("tok")
     ).filter(F.col("tok") != "").distinct()
 
 
-def minhash_signatures(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
+def minhash_signatures(df: DataFrame) -> DataFrame:
     """Per-doc MinHash signature, one column per permutation."""
-    toks = tokens(df, key, text).withColumn(
+    toks = tokens(df).withColumn(
         "h", token_hash(F.col("tok")) % F.lit(MERSENNE)
     )
     aggs = [
         F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(MERSENNE)).alias(f"mh{j}")
         for j, (a, b) in enumerate(MINHASH_PERMS)
     ]
-    return toks.groupBy(key).agg(*aggs)
+    return toks.groupBy("doc_id").agg(*aggs)
 
 
 MAX_LSH_BUCKET = 1000  # all-pairs ceiling: <=N^2/2 candidates per bucket
 
 
-def minhash_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
-                  rows_per_band: int = 2,
-                  max_bucket: int | None = MAX_LSH_BUCKET,
-                  hot_stats: dict | None = None) -> DataFrame:
+def minhash_pairs(df: DataFrame,
+                  max_bucket: int | None = MAX_LSH_BUCKET) -> DataFrame:
     """LSH candidate pairs: docs sharing any band of the signature.
 
-    Bands of ``rows_per_band`` consecutive minhashes; pairs (a < b),
+    Bands of two consecutive minhashes; pairs (a < b),
     distinct.  The classic shingle→minhash→band→bucket-join pipeline.
 
     Hot-bucket guard (web corpora have degenerate boilerplate clusters —
@@ -82,12 +80,11 @@ def minhash_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
     individually verified; callers doing pairwise verification should
     treat hot-bucket groups as "cluster then verify against the
     canonical doc".  ``max_bucket=None`` disables the guard (the oracle
-    twin).  Pass a dict as ``hot_stats`` to run one extra count job that
-    fills ``{'hot_buckets': n, 'hot_rows': m}`` — the logged drop/split
-    evidence.
+    twin).
     """
-    sig = minhash_signatures(df, key, text)
-    n_bands = len(MINHASH_PERMS) // rows_per_band
+    key = "doc_id"
+    sig = minhash_signatures(df)
+    n_bands = len(MINHASH_PERMS) // 2
     bands = sig.select(
         key,
         F.explode(
@@ -96,8 +93,8 @@ def minhash_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
                     F.lit(b).alias("band"),
                     F.concat_ws(
                         "_",
-                        *[F.col(f"mh{b * rows_per_band + r}").cast("string")
-                          for r in range(rows_per_band)],
+                        *[F.col(f"mh{2 * b + r}").cast("string")
+                          for r in range(2)],
                     ).alias("bkey"),
                 )
                 for b in range(n_bands)
@@ -109,12 +106,6 @@ def minhash_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
         w = Window.partitionBy("band", "bkey")
         bands = bands.withColumn("bsz", F.count("*").over(w)).withColumn(
             "bmin", F.min(key).over(w))
-        if hot_stats is not None:
-            row = (bands.filter(F.col("bsz") > max_bucket)
-                   .agg(F.countDistinct("band", "bkey").alias("b"),
-                        F.count("*").alias("r")).collect()[0])
-            hot_stats["hot_buckets"] = row["b"] or 0
-            hot_stats["hot_rows"] = row["r"] or 0
         star = (bands.filter(F.col("bsz") > max_bucket)
                 .select(F.col("bmin").alias("id_a"),
                         F.col(key).alias("id_b"))
@@ -135,29 +126,29 @@ def minhash_pairs(df: DataFrame, key: str = "doc_id", text: str = "text",
     return pairs.distinct()
 
 
-def simhash16(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
+def simhash16(df: DataFrame) -> DataFrame:
     """16-bit SimHash from token hashes: bit i set iff
     sum(+1/-1 over tokens by bit i of token hash) > 0."""
-    toks = tokens(df, key, text).withColumn("h", token_hash(F.col("tok")))
+    toks = tokens(df).withColumn("h", token_hash(F.col("tok")))
     bit_sums = [
         F.sum(
             F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"s{i}")
         for i in range(16)
     ]
-    agg = toks.groupBy(key).agg(*bit_sums)
+    agg = toks.groupBy("doc_id").agg(*bit_sums)
     sim = None
     for i in range(16):
         bit = F.when(F.col(f"s{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0))
         sim = bit if sim is None else sim + bit
-    return agg.select(key, sim.cast("long").alias("simhash"))
+    return agg.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-def ngram_jaccard_consecutive(df: DataFrame, key: str = "doc_id",
-                              text: str = "text") -> DataFrame:
+def ngram_jaccard_consecutive(df: DataFrame) -> DataFrame:
     """Exact token-set Jaccard between each doc and its successor id —
     a bounded, deterministic probe of the Jaccard kernel."""
-    toks = tokens(df, key, text)
+    key = "doc_id"
+    toks = tokens(df)
     t1 = toks.withColumnRenamed(key, "id_a").withColumn("id_b", F.col("id_a") + 1)
     t2 = toks.withColumnRenamed(key, "id_b")
     inter = (
@@ -176,41 +167,6 @@ def ngram_jaccard_consecutive(df: DataFrame, key: str = "doc_id",
         )
         .select("id_a", "id_b", "n_inter", "jaccard")
     )
-
-
-def minhash_dedup_groups(df: DataFrame, key: str = "doc_id", text: str = "text",
-                         verify_threshold: float = 0.7,
-                         max_bucket: int | None = MAX_LSH_BUCKET) -> DataFrame:
-    """End-to-end near-dup: LSH candidates verified by exact Jaccard,
-    keep pairs above threshold.
-
-    ``max_bucket`` passes through to :func:`minhash_pairs`.  Under the
-    default hot-bucket guard, a bucket above the cap contributes STAR
-    candidates only (member, bucket-min) — each star pair is still
-    exactly Jaccard-verified here, but two members of a hot bucket that
-    are near-dups of each other *without* being near-dups of the
-    canonical min (and share no other cool bucket) will not appear as an
-    output pair; they remain connected through the canonical only when
-    both verify against it.  This is the documented cluster-through-
-    the-canonical semantics that keeps a degenerate 100k-doc bucket
-    linear instead of 10^10 pairs.  Pass ``max_bucket=None`` for exact
-    all-pairs verification on corpora known to be bounded."""
-    cand = minhash_pairs(df, key, text, max_bucket=max_bucket)
-    toks = tokens(df, key, text)
-    ta = toks.withColumnRenamed(key, "id_a")
-    tb = toks.withColumnRenamed(key, "id_b")
-    inter = (
-        cand.join(ta, "id_a").join(tb, ["id_b", "tok"])
-        .groupBy("id_a", "id_b").agg(F.count("*").alias("n_inter"))
-    )
-    sizes = toks.groupBy(key).agg(F.count("*").alias("n"))
-    out = (
-        inter.join(sizes.withColumnRenamed(key, "id_a").withColumnRenamed("n", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed(key, "id_b").withColumnRenamed("n", "n_b"), "id_b")
-        .withColumn("jaccard", F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
-        .filter(F.col("jaccard") >= verify_threshold)
-    )
-    return out.select("id_a", "id_b", "jaccard")
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -249,8 +205,6 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
-                         key: str = "doc_id",
-                         src: str = "id_a", dst: str = "id_b",
                          max_iter: int = 30) -> DataFrame:
     """Dedup clusters: connected components of the near-dup pair graph
     by alternating large-star / small-star rounds (Kiveris et al.) —
@@ -261,13 +215,14 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     fixpoint on the canonically-oriented edge set.
 
     At the fixpoint every component is a star centred at its minimum
-    member, stored as (member, min) edges.  Returns (key, comp) with
+    member, stored as (member, min) edges.  Returns (doc_id, comp) with
     comp = min member id of the component (singletons map to
-    themselves).  Raises if ``max_iter`` round pairs did not converge
+    themselves).  ``edges`` are (id_a, id_b) pairs over ``nodes``'
+    ``doc_id``.  Raises if ``max_iter`` round pairs did not converge
     instead of silently returning partial labels.
     """
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()
@@ -294,9 +249,9 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         raise RuntimeError(
             f"connected_components: no fixpoint after {max_iter} "
             f"large-star/small-star round pairs")
-    comp = e.select(F.col("u").alias(key), F.col("v").alias("comp"))
+    comp = e.select(F.col("u").alias("doc_id"), F.col("v").alias("comp"))
     return (
-        nodes.select(key)
-        .join(comp, key, "left")
-        .select(key, F.coalesce("comp", F.col(key)).alias("comp"))
+        nodes.select("doc_id")
+        .join(comp, "doc_id", "left")
+        .select("doc_id", F.coalesce("comp", F.col("doc_id")).alias("comp"))
     )

@@ -32,8 +32,8 @@ def id_geo_sql(id_sql: str) -> tuple[str, str]:
             f"CAST({LON0} + pmod({m} * {GEO_B % SPAN}, {SPAN}) AS BIGINT)")
 
 
-def geocode_pages(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Add ``page_id``, ``lat``, ``lon`` derived from the url.
+def geocode_pages(df: DataFrame) -> DataFrame:
+    """Add ``page_id``, ``lat``, ``lon`` derived from the ``url`` column.
 
     Falls back to the hash geocode of ``page_id`` when no geo slug exists.
     Whatever cannot be derived is NULL, never a task failure: a url
@@ -41,7 +41,7 @@ def geocode_pages(df: DataFrame, url_col: str = "url") -> DataFrame:
     ``long`` (``try_cast`` under ANSI casts).  The patterns reach the
     SQL parser through ``sql_str``, which keeps their backslashes.
     """
-    url = sql_name(url_col)
+    url = "`url`"
     page_id = f"try_cast(regexp_extract({url}, {sql_str(_PAGE_RE)}, 1) AS BIGINT)"
 
     def coord(group: int, hashed: str) -> str:

@@ -138,12 +138,11 @@ def midpoint_in_ring_col(x1, y1, x2, y2, ring_x, ring_y):
     return fn(x1, y1, x2, y2)
 
 
-def smooth_polylines(lines: DataFrame, n_sub: int = 4,
-                     quant: int = 1_000_000) -> DataFrame:
+def smooth_polylines(lines: DataFrame, n_sub: int = 4) -> DataFrame:
     """G14: centripetal Catmull-Rom smoothing (line_smoothing.ml:93-211)
     per line, exploded to (line_id, pt_idx, qx, qy) rows with outputs
-    quantized to int64 at ``quant`` (deterministic IEEE on identical
-    inputs, so the quantization is stable)."""
+    quantized to int64 at 1e6 units per coordinate unit (deterministic
+    IEEE on identical inputs, so the quantization is stable)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -151,8 +150,8 @@ def smooth_polylines(lines: DataFrame, n_sub: int = 4,
             for lid, xs, ys in zip(pdf["line_id"], pdf["xs"], pdf["ys"]):
                 ox, oy = K.catmull_rom(np.asarray(xs, np.int64),
                                        np.asarray(ys, np.int64), n_sub=n_sub)
-                qx = np.floor(ox * quant).astype(np.int64)
-                qy = np.floor(oy * quant).astype(np.int64)
+                qx = np.floor(ox * 1_000_000).astype(np.int64)
+                qy = np.floor(oy * 1_000_000).astype(np.int64)
                 out["line_id"].extend([int(lid)] * len(qx))
                 out["pt_idx"].extend(range(len(qx)))
                 out["qx"].extend(qx.tolist())

@@ -276,7 +276,13 @@ def knn_join(
     larger than ``BRUTE_RESIDUE_LIMIT`` raises (pick a larger radius /
     coarser cell_zoom) instead of risking a quadratic pass — the residue
     brute itself never broadcasts the feature layer (see
-    _residue_brute)."""
+    _residue_brute).  ``2*radius + 1 < 2**cell_zoom`` is required (else
+    ``ValueError``): a wider ring wraps onto itself at the antimeridian
+    and would register a feature twice in one cell."""
+    if 2 * radius + 1 >= (1 << cell_zoom):
+        raise ValueError(
+            f"knn_join: radius={radius} needs 2*radius + 1 < 2**cell_zoom, "
+            f"but cell_zoom={cell_zoom} has {1 << cell_zoom} cells per row")
     # Columnar (Arrow), so overshooting a large layer costs about what a
     # JVM limit().count() does — no per-row Python objects
     probe = features.selectExpr("feature_id", "lat", "lon").limit(
@@ -347,10 +353,11 @@ def knn_join(
     return out
 
 
-def brute_force_knn(points: DataFrame, features: DataFrame, k: int = 1,
-                    key: str = "page_id") -> DataFrame:
-    """Baseline: broadcast cross-join + window top-k (oracle path)."""
+def brute_force_knn(points: DataFrame, features: DataFrame,
+                    k: int = 1) -> DataFrame:
+    """Baseline: broadcast cross-join + window top-k of ``page_id``
+    points (oracle path)."""
     feats = features.selectExpr("feature_id", "lat AS flat", "lon AS flon")
-    cand = points.selectExpr(sql_name(key), "lat", "lon").crossJoin(F.broadcast(feats))
-    return _rank_topk(cand, key, k).selectExpr(
-        sql_name(key), "feature_id", "dist2", "rank")
+    cand = points.selectExpr("page_id", "lat", "lon").crossJoin(F.broadcast(feats))
+    return _rank_topk(cand, "page_id", k).selectExpr(
+        "page_id", "feature_id", "dist2", "rank")

@@ -18,7 +18,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = ("doc_id long, media binary, media_type string, "
                 "width int, height int, duration_ms int")
@@ -26,7 +25,7 @@ MEDIA_SCHEMA = ("doc_id long, media binary, media_type string, "
 N_HIST_BINS = 16
 
 
-def attach_fake_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_fake_media(docs: DataFrame) -> DataFrame:
     """Derive a deterministic opaque media payload + metadata per doc
     (sha-expanded bytes of the text) — the fixture for multimodal tests;
     on real data this column comes straight from the lake."""
@@ -34,7 +33,7 @@ def attach_fake_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             medias, mts, ws, hs, ds = [], [], [], [], []
-            for did, txt in zip(pdf["doc_id"], pdf[text_col]):
+            for did, txt in zip(pdf["doc_id"], pdf["text"]):
                 dig = hashlib.sha256(str(txt).encode()).digest()
                 size = 512 + dig[0] * 7
                 medias.append((dig * (size // 32 + 1))[:size])
@@ -50,20 +49,15 @@ def attach_fake_media(docs: DataFrame, text_col: str = "text") -> DataFrame:
                 "duration_ms": pd.array(ds, dtype="int32"),
             })
 
-    return docs.select("doc_id", text_col).mapInPandas(fn, MEDIA_SCHEMA)
+    return docs.select("doc_id", "text").mapInPandas(fn, MEDIA_SCHEMA)
 
 
-def byte_histogram_features(media_df: DataFrame,
-                            bins: int = N_HIST_BINS) -> DataFrame:
-    """(doc_id, features array<long>): byte-value histogram of the
-    payload — a real, deterministic feature extractor (the shape every
-    decode-based extractor plugs into)."""
-
-    if not (1 <= bins <= 256 and bins & (bins - 1) == 0):
-        raise ValueError(
-            f"bins must be a power of two in [1, 256], got {bins} "
-            "(the bucketing is a byte right-shift)")
-    shift = int(np.log2(256 // bins)) if bins < 256 else 0
+def byte_histogram_features(media_df: DataFrame) -> DataFrame:
+    """(doc_id, features array<long>): ``N_HIST_BINS``-bin byte-value
+    histogram of the payload — a real, deterministic feature extractor
+    (the shape every decode-based extractor plugs into)."""
+    bins = N_HIST_BINS
+    shift = int(np.log2(256 // bins))   # the bucketing is a byte right-shift
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -296,8 +290,8 @@ def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
     return img[yi][:, xi]
 
 
-def decode_and_resize(media_df: DataFrame, width: int, height: int,
-                      fake: bool = False) -> DataFrame:
+def decode_and_resize(media_df: DataFrame, width: int,
+                      height: int) -> DataFrame:
     """Image decode + resize to width*height grayscale bytes.
 
     Real decode path: numpy-only BMP (BI_RGB 24/32bpp), binary netpbm
@@ -305,10 +299,7 @@ def decode_and_resize(media_df: DataFrame, width: int, height: int,
     (osm_spark.operators.jpeg) decoders + nearest-neighbor resize — no
     external libs; that covers the dominant Common-Crawl media formats.
     Anything else (progressive JPEG, WebP, GIF, ...) falls back to PIL
-    when available and raises ``NotImplementedError`` otherwise.
-    ``fake=True`` keeps the clearly-marked deterministic fake
-    (sha256-expanded bytes) for plumbing tests over arbitrary
-    payloads."""
+    when available and raises ``NotImplementedError`` otherwise."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import io
 
@@ -324,13 +315,7 @@ def decode_and_resize(media_df: DataFrame, width: int, height: int,
             out = []
             for blob in pdf["media"]:
                 b = bytes(blob)
-                if fake:
-                    # DETERMINISTIC FAKE (not a real decode): expand the
-                    # payload hash to width*height grayscale bytes
-                    seed = hashlib.sha256(b).digest()
-                    n = width * height
-                    out.append((seed * (n // 32 + 1))[:n])
-                elif b[:2] == b"BM":
+                if b[:2] == b"BM":
                     out.append(resize_nearest(
                         decode_bmp_gray(b), width, height).tobytes())
                 elif b[:2] in (b"P6", b"P5"):
@@ -366,8 +351,7 @@ def decode_and_resize(media_df: DataFrame, width: int, height: int,
                     raise NotImplementedError(
                         "only BMP/netpbm/PNG/baseline-JPEG decode is built "
                         "in; this payload needs PIL (not available in this "
-                        "environment); use fake=True to exercise the "
-                        "plumbing, or byte_histogram_features for "
+                        "environment); use byte_histogram_features for "
                         "byte-level features")
                 else:
                     img = Image.open(io.BytesIO(b)).convert(

@@ -36,24 +36,22 @@ FALSE_SET = ["no", "0", "false"]
 TRUE_SET = ["yes", "1", "true"]
 
 
-def apply_profile(way_tags: DataFrame, speeds: dict[str, float] | None = None,
-                  way_col: str = "way") -> DataFrame:
+def apply_profile(way_tags: DataFrame) -> DataFrame:
     """(way, key, val) tag rows -> (way, speed, oneway) for routable
-    ways only.  One shuffle (the tag pivot); everything else is
-    whole-stage-codegen expressions."""
-    speeds = speeds or CAR_SPEED
+    ways only, speeds from ``CAR_SPEED``.  One shuffle (the tag pivot);
+    everything else is whole-stage-codegen expressions."""
 
     def tag(name):
         return F.max(F.when(F.col("key") == name, F.col("val")))
 
-    t = way_tags.groupBy(way_col).agg(
+    t = way_tags.groupBy("way").agg(
         tag("highway").alias("highway"),
         tag("area").alias("area"),
         tag("access").alias("access"),
         tag("oneway").alias("oneway_tag"),
     )
     speed = F.element_at(
-        F.create_map(*[F.lit(x) for kv in speeds.items() for x in kv]),
+        F.create_map(*[F.lit(x) for kv in CAR_SPEED.items() for x in kv]),
         F.col("highway"),
     )
     routable = (
@@ -78,16 +76,6 @@ def apply_profile(way_tags: DataFrame, speeds: dict[str, float] | None = None,
     )
     return (
         t.filter(routable)
-        .select(way_col, speed.alias("speed"), oneway.alias("oneway"))
+        .select("way", speed.alias("speed"), oneway.alias("oneway"))
     )
 
-
-def profiled_way_refs(way_refs: DataFrame, profile: DataFrame,
-                      way_col: str = "way") -> DataFrame:
-    """Join the profile onto the refs list, shaped for
-    ``routing.extract_edges`` (carries speed + oneway per ref row;
-    non-routable ways drop out via the inner join)."""
-    # plain equi-join: AQE broadcasts when the profile side is small;
-    # a forced broadcast would break past Spark's 8 GB table limit on
-    # a planet extract (~10^8 routable ways)
-    return way_refs.join(profile, way_col)

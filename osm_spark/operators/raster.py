@@ -184,8 +184,7 @@ MAX_GROUP_RANK = 127
 
 
 def composite_cells(cells: DataFrame,
-                    group_rank: dict[int, int] | None = None,
-                    remap_ids: bool | None = None) -> DataFrame:
+                    group_rank: dict[int, int] | None = None) -> DataFrame:
     """Painter's-order raster compositing: ONE winning (feature_id,
     category) per cell when filled features overlap.
 
@@ -216,8 +215,8 @@ def composite_cells(cells: DataFrame,
 
     Real OSM way/relation ids routinely exceed the 24-bit paint-key
     field, so the operator is TOTAL over ids: when any feature_id falls
-    outside [0, 2^24) (auto-probed with one column-pruned scan;
-    ``remap_ids`` forces/forbids it), the tiebreak field becomes
+    outside [0, 2^24) (probed with one column-pruned scan), the
+    tiebreak field becomes
     ``dense_rank() over (order by feature_id)`` on the per-feature
     frame instead of the raw id.  The rank preserves the id order, so
     winners are bit-identical to the raw-id semantics, and it always
@@ -258,17 +257,14 @@ def composite_cells(cells: DataFrame,
         grp = F.lit(0).cast("long")
     area = (cells.groupBy("feature_id")
             .agg(F.count("*").alias("area_cells")))
-    if remap_ids is None:
-        # probe the id extremes from the tiny per-feature aggregate, not
-        # the raw cells frame.  The localCheckpoint only deduplicates the
-        # area subtree (this probe and the paint-key join below share
-        # it); the join's raw `cells` side still recomputes the upstream
-        # lineage (often a full rasterize) in the final action
-        area = area.localCheckpoint(eager=False)
-        ext = area.agg(F.min("feature_id"), F.max("feature_id")).collect()[0]
-        remap_ids = ext[0] is not None and (
-            int(ext[0]) < 0 or int(ext[1]) >= FID_CAP)
-    if remap_ids:
+    # probe the id extremes from the tiny per-feature aggregate, not
+    # the raw cells frame.  The localCheckpoint only deduplicates the
+    # area subtree (this probe and the paint-key join below share
+    # it); the join's raw `cells` side still recomputes the upstream
+    # lineage (often a full rasterize) in the final action
+    area = area.localCheckpoint(eager=False)
+    ext = area.agg(F.min("feature_id"), F.max("feature_id")).collect()[0]
+    if ext[0] is not None and (int(ext[0]) < 0 or int(ext[1]) >= FID_CAP):
         from pyspark.sql import Window
         area = area.withColumn(
             "fid_key",

@@ -29,10 +29,10 @@ def set_diff(a: DataFrame, b: DataFrame, key: str) -> DataFrame:
 
 
 def join_with_defaults(
-    a: DataFrame, b: DataFrame, key: str, defaults: dict[str, object], how: str = "left"
+    a: DataFrame, b: DataFrame, key: str, defaults: dict[str, object]
 ) -> DataFrame:
-    """R11 outer join with fill values (database/join.ml:35-57)."""
-    out = a.join(b, key, how)
+    """R11 left outer join with fill values (database/join.ml:35-57)."""
+    out = a.join(b, key, "left")
     for c, v in defaults.items():
         out = out.withColumn(c, F.coalesce(F.col(c), F.lit(v)))
     return out

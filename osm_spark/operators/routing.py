@@ -77,14 +77,13 @@ def _hash_col(c):
 
 
 def extract_edges(way_refs: DataFrame, nodes: DataFrame,
-                  speeds: dict[int, int] | None = None,
                   speed_col: str | None = None) -> DataFrame:
     """way_refs(way_id, seq, node_id) + ways' category/oneway + node coords
     -> directed weighted edges.
 
     ``way_refs`` must also carry ``oneway`` (int: 0 both, 1 forward,
     -1 backward) plus either ``category`` (int, mapped through
-    ``speeds``) or — when ``speed_col`` is given, e.g. from
+    ``DEFAULT_SPEEDS``) or — when ``speed_col`` is given, e.g. from
     ``profile.apply_profile`` — a direct per-way speed column.  Output
     columns: (src, dst, length_mm, weight, flags) with one row per
     traversable direction; weight = length / speed (reference:
@@ -92,7 +91,6 @@ def extract_edges(way_refs: DataFrame, nodes: DataFrame,
     """
     from osm_spark.geo import kernels as K
 
-    speeds = speeds or DEFAULT_SPEEDS
     cat_cols = [speed_col] if speed_col else ["category"]
     w = Window.partitionBy("way_id").orderBy("seq")
     segs = (
@@ -123,7 +121,7 @@ def extract_edges(way_refs: DataFrame, nodes: DataFrame,
         speed_expr = F.col(speed_col)
     else:
         speed_expr = F.element_at(
-            F.create_map(*[F.lit(x) for kv in speeds.items() for x in kv]),
+            F.create_map(*[F.lit(x) for kv in DEFAULT_SPEEDS.items() for x in kv]),
             F.col("category"),
         )
     segs = (
@@ -620,7 +618,6 @@ def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
             [(int(n), int(r)) for n, r in rank_map.items()], "node long, rank long")
         done = done.unionByName(local_done)
         ranks = ranks.unionByName(local_ranks)
-        active = active.filter(F.lit(False))
         m = {"round": rank_offset, "local_finish": True,
              "core_edges": len(core_rows), "core_nodes": len(rank_map),
              "wall_s": round(time.time() - t0, 3), "complete": True}
@@ -628,11 +625,10 @@ def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
             with open(ckpt / "metrics.jsonl", "a") as f:
                 f.write(json.dumps(m) + "\n")
         metrics.append(m)
-    all_edges = done.unionByName(
-        active.select("src", "dst", "weight", "orig", "via")
-    ).dropDuplicates(["src", "dst", "weight"])
+    # every active edge is in ``done`` by now: the last round left none,
+    # or the local finish froze them all
     out = (
-        all_edges
+        done.dropDuplicates(["src", "dst", "weight"])
         .join(ranks.select(F.col("node").alias("src"),
                            F.col("rank").alias("rank_src")), "src")
         .join(ranks.select(F.col("node").alias("dst"),

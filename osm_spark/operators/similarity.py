@@ -25,26 +25,25 @@ SAMPLE_M = 1 << 31             # (key%M)*A < 2^63: exact in int64
 QUANT = 1_000_000
 
 
-def _quantized_components(emb: DataFrame, key: str = "vec_id",
-                          col: str = "embedding") -> DataFrame:
+def _quantized_components(emb: DataFrame) -> DataFrame:
     # floor (not round): identical across engines regardless of half-rule
     return emb.select(
-        key, F.posexplode(col).alias("idx", "v")
+        "vec_id", F.posexplode("embedding").alias("idx", "v")
     ).withColumn("q", F.floor(F.col("v").cast("double") * QUANT).cast("long")).drop("v")
 
 
-def _norms(comp: DataFrame, key: str) -> DataFrame:
-    return comp.groupBy(key).agg(F.sum(F.col("q") * F.col("q")).alias("norm2"))
+def _norms(comp: DataFrame) -> DataFrame:
+    return comp.groupBy("vec_id").agg(F.sum(F.col("q") * F.col("q")).alias("norm2"))
 
 
-def _with_cosine(dots: DataFrame, norms: DataFrame, key: str,
+def _with_cosine(dots: DataFrame, norms: DataFrame,
                  a_name: str, b_name: str) -> DataFrame:
     """Attach the exact-arithmetic cosine to (a_name, b_name, dot) rows:
     int64 quantized dot over int64 norms, float only at the final
     divide.  THE single home of the module's exactness contract — every
     top-k / near-dup variant and its oracle twin go through here."""
-    na = norms.select(F.col(key).alias(a_name), F.col("norm2").alias("na"))
-    nb = norms.select(F.col(key).alias(b_name), F.col("norm2").alias("nb"))
+    na = norms.select(F.col("vec_id").alias(a_name), F.col("norm2").alias("na"))
+    nb = norms.select(F.col("vec_id").alias(b_name), F.col("norm2").alias("nb"))
     return (
         dots.join(na, a_name).join(nb, b_name)
         .withColumn("cosine", F.col("dot") / (F.sqrt("na") * F.sqrt("nb")))
@@ -52,17 +51,17 @@ def _with_cosine(dots: DataFrame, norms: DataFrame, key: str,
 
 
 def _pair_cosines(cand: DataFrame, comp: DataFrame, norms: DataFrame,
-                  key: str, a_name: str, b_name: str) -> DataFrame:
+                  a_name: str, b_name: str) -> DataFrame:
     """Cosine for an explicit candidate-pair set (the scale paths:
     LSH buckets, IVF cells) — dot products only for candidate pairs."""
-    a = comp.select(F.col(key).alias(a_name), "idx", F.col("q").alias("qa"))
-    b = comp.select(F.col(key).alias(b_name), "idx", F.col("q").alias("qb"))
+    a = comp.select(F.col("vec_id").alias(a_name), "idx", F.col("q").alias("qa"))
+    b = comp.select(F.col("vec_id").alias(b_name), "idx", F.col("q").alias("qb"))
     dots = (
         cand.join(a, [a_name]).join(b, [b_name, "idx"])
         .groupBy(a_name, b_name)
         .agg(F.sum(F.col("qa") * F.col("qb")).alias("dot"))
     )
-    return _with_cosine(dots, norms, key, a_name, b_name)
+    return _with_cosine(dots, norms, a_name, b_name)
 
 
 def _topk(cos: DataFrame, k: int) -> DataFrame:
@@ -75,60 +74,32 @@ def _topk(cos: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(emb: DataFrame, k: int = 3, key: str = "vec_id",
-                col: str = "embedding") -> DataFrame:
+def cosine_topk(emb: DataFrame, k: int = 3) -> DataFrame:
     """Exact top-k cosine neighbors for every vector (self-join).
 
     Output: (vec_id, neighbor_id, cosine, rank); ties broken by
     neighbor id (deterministic).
     """
-    comp = _quantized_components(emb, key, col)
-    norms = _norms(comp, key)
-    a = comp.select(F.col(key).alias("vec_id"), "idx", F.col("q").alias("qa"))
-    b = comp.select(F.col(key).alias("neighbor_id"), "idx", F.col("q").alias("qb"))
+    comp = _quantized_components(emb)
+    norms = _norms(comp)
+    a = comp.select("vec_id", "idx", F.col("q").alias("qa"))
+    b = comp.select(F.col("vec_id").alias("neighbor_id"), "idx", F.col("q").alias("qb"))
     dots = (
         a.join(b, "idx")
         .filter(F.col("vec_id") != F.col("neighbor_id"))
         .groupBy("vec_id", "neighbor_id")
         .agg(F.sum(F.col("qa") * F.col("qb")).alias("dot"))
     )
-    return _topk(_with_cosine(dots, norms, key, "vec_id", "neighbor_id"), k)
+    return _topk(_with_cosine(dots, norms, "vec_id", "neighbor_id"), k)
 
 
-def cosine_near_dup(emb: DataFrame, threshold: float = 0.95,
-                    key: str = "vec_id", col: str = "embedding") -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: (id_a < id_b, cosine)
-    with cosine >= threshold.  Same exact quantized arithmetic as
-    cosine_topk so the pair set is engine-reproducible.
+def ivf_centroids(emb: DataFrame, n_cells: int = 16) -> np.ndarray:
+    """Deterministic IVF coarse quantizer: five Lloyd k-means iterations
+    on a 2,048-row sample from seed 42, driver-side numpy (the training
+    set is a sample — tiny regardless of table size; assignment below
+    is the distributed part).
 
-    ALL-PAIRS (N²·dim before the groupBy) — the exact small-N oracle
-    twin.  The scale path is ``cosine_near_dup_bucketed``: identical
-    verify arithmetic over LSH-candidate pairs only."""
-    comp = _quantized_components(emb, key, col)
-    norms = _norms(comp, key)
-    a = comp.select(F.col(key).alias("id_a"), "idx", F.col("q").alias("qa"))
-    b = comp.select(F.col(key).alias("id_b"), "idx", F.col("q").alias("qb"))
-    dots = (
-        a.join(b, "idx")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.sum(F.col("qa") * F.col("qb")).alias("dot"))
-    )
-    return (
-        _with_cosine(dots, norms, key, "id_a", "id_b")
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def ivf_centroids(emb: DataFrame, n_cells: int = 16, n_iter: int = 5,
-                  sample: int = 2048, seed: int = 42,
-                  key: str = "vec_id", col: str = "embedding") -> np.ndarray:
-    """Deterministic IVF coarse quantizer: Lloyd k-means on a seeded
-    sample, driver-side numpy (the training set is a sample — tiny
-    regardless of table size; assignment below is the distributed part).
-
-    The sample is the top-``sample`` rows under a deterministic KEY
+    The sample is the top 2,048 rows under a deterministic KEY
     SCRAMBLE ((key mod 2^31) * 2654435761 mod 2^31 — injective on
     key mod 2^31), not the key-ordered prefix: ids usually correlate
     with content (ordered ingest, per-source ranges), and training on
@@ -138,14 +109,14 @@ def ivf_centroids(emb: DataFrame, n_cells: int = 16, n_iter: int = 5,
     # pmod, not %: Spark's % truncates toward zero, so a negative key would
     # yield a negative scramble and diverge from a floored-mod numpy/DuckDB
     # twin (same sign bug the hash geocode, geocode.id_geo_sql, fixed)
-    scramble = F.pmod(F.pmod(F.col(key), F.lit(SAMPLE_M)) * F.lit(SAMPLE_A),
+    scramble = F.pmod(F.pmod(F.col("vec_id"), F.lit(SAMPLE_M)) * F.lit(SAMPLE_A),
                       F.lit(SAMPLE_M))
-    rows = (emb.select(key, col).orderBy(scramble, key)
-            .limit(sample).collect())
+    rows = (emb.select("vec_id", "embedding").orderBy(scramble, "vec_id")
+            .limit(2048).collect())
     X = np.array([np.asarray(r[1], np.float64) for r in rows])
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     C = X[rng.choice(len(X), size=min(n_cells, len(X)), replace=False)]
-    for _ in range(n_iter):
+    for _ in range(5):
         d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
         a = d.argmin(axis=1)
         for c in range(len(C)):
@@ -155,9 +126,9 @@ def ivf_centroids(emb: DataFrame, n_cells: int = 16, n_iter: int = 5,
     return C
 
 
-def ivf_assign(emb: DataFrame, centroids: np.ndarray, nprobe: int = 1,
-               key: str = "vec_id", col: str = "embedding") -> DataFrame:
-    """(key, cell): nearest-centroid assignment (nprobe cells per vector),
+def ivf_assign(emb: DataFrame, centroids: np.ndarray,
+               nprobe: int = 1) -> DataFrame:
+    """(vec_id, cell): nearest-centroid assignment (nprobe cells per vector),
     vectorized pandas UDF over the broadcast centroid matrix."""
     from pyspark.sql.functions import pandas_udf
 
@@ -172,29 +143,28 @@ def ivf_assign(emb: DataFrame, centroids: np.ndarray, nprobe: int = 1,
         top = np.argsort(d, axis=1)[:, :npb]
         return pd.Series([r.astype(int).tolist() for r in top])
 
-    return emb.select(key, F.explode(cells(F.col(col))).alias("cell"))
+    return emb.select("vec_id", F.explode(cells(F.col("embedding"))).alias("cell"))
 
 
-def ivf_topk(emb: DataFrame, k: int = 3, n_cells: int = 16, nprobe: int = 2,
-             key: str = "vec_id", col: str = "embedding") -> DataFrame:
+def ivf_topk(emb: DataFrame, k: int = 3, n_cells: int = 16,
+             nprobe: int = 2) -> DataFrame:
     """Approximate top-k via IVF cells: candidates = pairs sharing any of
     the query's ``nprobe`` nearest cells; same exact quantized ranking as
     cosine_topk.  The candidate-set shrink is ~n_cells/nprobe² — the
     inverted-file scale path alongside ``lsh_topk``."""
-    C = ivf_centroids(emb, n_cells, key=key, col=col)
-    assign = ivf_assign(emb, C, nprobe=nprobe, key=key, col=col)
-    comp = _quantized_components(emb, key, col)
-    norms = _norms(comp, key)
-    ca = assign.select(F.col(key).alias("vec_id"), "cell")
-    cb = assign.select(F.col(key).alias("neighbor_id"), "cell")
+    C = ivf_centroids(emb, n_cells)
+    assign = ivf_assign(emb, C, nprobe=nprobe)
+    comp = _quantized_components(emb)
+    norms = _norms(comp)
+    cb = assign.select(F.col("vec_id").alias("neighbor_id"), "cell")
     cand = (
-        ca.join(cb, "cell")
+        assign.join(cb, "cell")
         .filter(F.col("vec_id") != F.col("neighbor_id"))
         .select("vec_id", "neighbor_id")
         .distinct()
     )
     return _topk(
-        _pair_cosines(cand, comp, norms, key, "vec_id", "neighbor_id"), k)
+        _pair_cosines(cand, comp, norms, "vec_id", "neighbor_id"), k)
 
 
 def lsh_planes(dim: int, n_planes: int, table: int = 0) -> list[list[int]]:
@@ -236,72 +206,71 @@ def lsh_bucket_col(col: str, planes: list[list[int]]):
     return bucket
 
 
-def lsh_buckets(emb: DataFrame, n_planes: int = 4, n_tables: int = 4,
-                key: str = "vec_id", col: str = "embedding",
-                dim: int | None = None) -> DataFrame:
-    """(key, table, bucket): multi-table LSH bucket assignment — one JVM
-    projection, no shuffle.  ``dim`` hoistable to avoid the plan-time
-    ``first()`` in production pipelines."""
+def lsh_buckets(emb: DataFrame, n_planes: int, n_tables: int,
+                dim: int | None) -> DataFrame:
+    """(vec_id, table, bucket): multi-table LSH bucket assignment — one
+    JVM projection, no shuffle.  ``dim`` hoistable to avoid the
+    plan-time ``first()`` in production pipelines."""
     if dim is None:
-        dim = len(emb.select(col).first()[0])
+        dim = len(emb.select("embedding").first()[0])
     return emb.select(
-        key,
+        "vec_id",
         F.explode(
             F.array(*[
                 F.struct(
                     F.lit(t).alias("table"),
-                    lsh_bucket_col(col, lsh_planes(dim, n_planes, table=t)).alias("bucket"),
+                    lsh_bucket_col("embedding", lsh_planes(dim, n_planes, table=t)).alias("bucket"),
                 )
                 for t in range(n_tables)
             ])
         ).alias("tb"),
-    ).select(key, "tb.table", "tb.bucket")
+    ).select("vec_id", "tb.table", "tb.bucket")
 
 
 def cosine_near_dup_bucketed(emb: DataFrame, threshold: float = 0.95,
-                             n_planes: int = 2, n_tables: int = 8,
-                             key: str = "vec_id", col: str = "embedding",
                              dim: int | None = None) -> DataFrame:
-    """Near-duplicate pairs at scale: candidates = pairs sharing an LSH
-    bucket in ANY table (bucket equi-join — no all-pairs self-join in
-    the plan), then the SAME exact quantized cosine verify as
-    ``cosine_near_dup``.  Approximate by LSH recall
-    (1-(1-p^b)^L); recall vs the all-pairs twin is pytest-gated."""
-    buckets = lsh_buckets(emb, n_planes, n_tables, key, col, dim)
-    ba = buckets.select(F.col(key).alias("id_a"), "table", "bucket")
-    bb = buckets.select(F.col(key).alias("id_b"), "table", "bucket")
+    """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine) with
+    cosine >= threshold, at scale: candidates = pairs sharing a bucket
+    of 2 LSH planes in ANY of 8 tables (bucket equi-join — no all-pairs
+    self-join in the plan), then the exact quantized cosine verify of
+    ``cosine_topk``, so the pair set is engine-reproducible.  Approximate
+    by LSH recall (1-(1-p^b)^L); recall vs the all-pairs twin in
+    ``tests/kernel_oracles.py`` is pytest-gated."""
+    buckets = lsh_buckets(emb, 2, 8, dim)
+    ba = buckets.select(F.col("vec_id").alias("id_a"), "table", "bucket")
+    bb = buckets.select(F.col("vec_id").alias("id_b"), "table", "bucket")
     cand = (
         ba.join(bb, ["table", "bucket"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    comp = _quantized_components(emb, key, col)
-    norms = _norms(comp, key)
+    comp = _quantized_components(emb)
+    norms = _norms(comp)
     return (
-        _pair_cosines(cand, comp, norms, key, "id_a", "id_b")
+        _pair_cosines(cand, comp, norms, "id_a", "id_b")
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
 
 
-def lsh_topk(emb: DataFrame, k: int = 3, n_planes: int = 4, n_tables: int = 4,
-             key: str = "vec_id", col: str = "embedding",
+def lsh_topk(emb: DataFrame, k: int = 3, n_planes: int = 4,
              dim: int | None = None) -> DataFrame:
     """Approximate top-k: rank only within random-hyperplane buckets.
 
-    Multi-table LSH: ``n_tables`` independent plane sets; a pair is a
-    candidate if it shares a bucket in ANY table (recall ≈ 1-(1-p)^L).
-    Same exact quantized ranking as cosine_topk, restricted to candidate
-    peers — the candidate-set shrink that makes 100 TB ANN tractable
-    (bucket count 2^n_planes scales the self-join down quadratically;
-    the table loop multiplies cost linearly, recall exponentially).
+    Multi-table LSH: 4 independent sets of ``n_planes`` planes; a pair
+    is a candidate if it shares a bucket in ANY table (recall ≈
+    1-(1-p)^L).  Same exact quantized ranking as cosine_topk, restricted
+    to candidate peers — the candidate-set shrink that makes 100 TB ANN
+    tractable (bucket count 2^n_planes scales the self-join down
+    quadratically; the table loop multiplies cost linearly, recall
+    exponentially).
     """
-    buckets = lsh_buckets(emb, n_planes, n_tables, key, col, dim)
-    comp = _quantized_components(emb, key, col)
-    norms = _norms(comp, key)
-    ba = buckets.select(F.col(key).alias("vec_id"), "table", "bucket")
-    bb = buckets.select(F.col(key).alias("neighbor_id"), "table", "bucket")
+    buckets = lsh_buckets(emb, n_planes, 4, dim)
+    comp = _quantized_components(emb)
+    norms = _norms(comp)
+    ba = buckets.select("vec_id", "table", "bucket")
+    bb = buckets.select(F.col("vec_id").alias("neighbor_id"), "table", "bucket")
     cand = (
         ba.join(bb, ["table", "bucket"])
         .filter(F.col("vec_id") != F.col("neighbor_id"))
@@ -309,4 +278,4 @@ def lsh_topk(emb: DataFrame, k: int = 3, n_planes: int = 4, n_tables: int = 4,
         .distinct()
     )
     return _topk(
-        _pair_cosines(cand, comp, norms, key, "vec_id", "neighbor_id"), k)
+        _pair_cosines(cand, comp, norms, "vec_id", "neighbor_id"), k)

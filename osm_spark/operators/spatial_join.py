@@ -95,9 +95,9 @@ def tile_y_sql(lat: str, z: int, pad: float = 0.0) -> str:
     return f"CAST(floor({y}) AS BIGINT)"
 
 
-def cell_key_sql(z: int, lat: str = "lat", lon: str = "lon") -> str:
-    """The cell key ``cx * CKEY_SCALE + cy`` at zoom ``z``."""
-    return f"{tile_x_sql(lon, z)} * {CKEY_SCALE} + {tile_y_sql(lat, z)}"
+def cell_key_sql(z: int) -> str:
+    """The cell key ``cx * CKEY_SCALE + cy`` of ``lat``/``lon`` at zoom ``z``."""
+    return f"{tile_x_sql('lon', z)} * {CKEY_SCALE} + {tile_y_sql('lat', z)}"
 
 
 # ---------------------------------------------------------------------------
@@ -387,22 +387,15 @@ def _broadcast_join_mapper(bc, how: str):
 MAX_SALT = 64             # suggest_salt's upper clamp
 
 
-def suggest_salt(pages: DataFrame, z: int = DEFAULT_CELL_ZOOM - COARSE_SHIFT,
-                 sample_frac: float | None = None) -> int:
+def suggest_salt(pages: DataFrame,
+                 z: int = DEFAULT_CELL_ZOOM - COARSE_SHIFT) -> int:
     """Salt factor from the measured cell histogram (SURVEY.md §7: hot
     cells are cities by construction; the factor is computed, not
     guessed): replicate enough that the hottest cell's share lands near
     the p95 cell.  Measure at the zoom the salt will apply to — the
-    default is the partitioned layer's coarse zoom for the default
-    ``z``.  Clamped to [1, ``MAX_SALT``]; AQE skew-join remains the
-    runtime backstop.  One JVM aggregate: the cells only count rows, so
-    no Python runs.
-
-    ``sample_frac`` estimates the histogram from a deterministic
-    sample — the max/p95 RATIO is scale-free, so at 10^12 pages a
-    1e-4 sample gives the same factor for a fraction of the scan."""
-    if sample_frac is not None:
-        pages = pages.sample(fraction=sample_frac, seed=7)
+    default is the partitioned layer's coarse zoom.  Clamped to
+    [1, ``MAX_SALT``]; AQE skew-join remains the runtime backstop.  One
+    JVM aggregate: the cells only count rows, so no Python runs."""
     counts = pages.groupBy(F.expr(f"{tile_x_sql('lon', z)} AS cx"),
                            F.expr(f"{tile_y_sql('lat', z)} AS cy")).count()
     row = counts.selectExpr("max(count) AS mx",
@@ -412,7 +405,7 @@ def suggest_salt(pages: DataFrame, z: int = DEFAULT_CELL_ZOOM - COARSE_SHIFT,
     return max(1, min(MAX_SALT, math.ceil(row.mx / max(row.p95, 1))))
 
 
-def broadcast_polygon_index(polys: DataFrame, z: int = DEFAULT_CELL_ZOOM):
+def broadcast_polygon_index(polys: DataFrame):
     """Collect + cell-index a polygon layer and broadcast it.  Build once
     per layer version and reuse across joins — at 10^12 pages the build
     cost amortizes to zero (the reference builds its R-tree once the
@@ -421,7 +414,7 @@ def broadcast_polygon_index(polys: DataFrame, z: int = DEFAULT_CELL_ZOOM):
     cols = polys.selectExpr("feature_id", *RING_SQL)
     pdf = pd.DataFrame(cols.collect(), columns=cols.columns)
     return polys.sparkSession.sparkContext.broadcast(
-        _build_group_index_packed(pdf, z))
+        _build_group_index_packed(pdf, DEFAULT_CELL_ZOOM))
 
 
 # polygon layers up to this many total vertices broadcast (CSR index:
@@ -466,14 +459,14 @@ def _read_layer_meta(path: str) -> dict:
 
 
 def write_partitioned_layer(polys: DataFrame, path: str,
-                            z: int = DEFAULT_CELL_ZOOM,
                             n_files: int = 32) -> str:
     """One-time layer build (the R-tree bulk load, rtree.ml:90-134):
     explode polygons to covering COARSE cells, sort by the coarse key,
     write parquet so per-partition isin reads prune by row-group
     statistics.  Amortized across every join against this layer
     version."""
-    zc = max(z - COARSE_SHIFT, 2)
+    z = DEFAULT_CELL_ZOOM
+    zc = z - COARSE_SHIFT
     cells = polygon_cells(polys.selectExpr("feature_id", "rings"), zc).selectExpr(
         f"cx * {CKEY_SCALE} + cy AS gkey", "feature_id", *RING_SQL)
     (cells.repartitionByRange(n_files, "gkey")
@@ -568,7 +561,6 @@ def _partitioned_join_mapper(layer_path: str, z: int, zc: int, how: str,
 def spatial_join_partitioned(
     pages: DataFrame,
     layer_path: str,
-    z: int = DEFAULT_CELL_ZOOM,
     how: str = "inner",
     page_key: str = "page_id",
     salt: int = 1,
@@ -589,10 +581,11 @@ def spatial_join_partitioned(
     join.  Returns (page_key, feature_id) like ``spatial_join``."""
     _check_how(how)
     meta = _read_layer_meta(layer_path)
+    z = DEFAULT_CELL_ZOOM
     if meta["z"] != z:
         raise ValueError(
             f"layer at {layer_path} was written for z={meta['z']}, "
-            f"join requested z={z} — cell keys would not align")
+            f"the join reads z={z} — cell keys would not align")
     zc = meta["zc"]
     pts = pages.selectExpr(sql_name(page_key), "lat", "lon")
     if not pages_clustered:
@@ -616,14 +609,9 @@ def _check_how(how: str) -> None:
 def spatial_join(
     pages: DataFrame,
     polys: DataFrame,
-    z: int = DEFAULT_CELL_ZOOM,
     how: str = "inner",
-    broadcast_polys: bool | None = None,
-    salt: int | None = None,
     page_key: str = "page_id",
     index=None,
-    layer_path: str | None = None,
-    pages_clustered: bool = False,
 ) -> DataFrame:
     """PIP-join pages (with lat/lon columns) to a polygon layer.
 
@@ -632,43 +620,38 @@ def spatial_join(
     ``how`` is ``'inner'`` or ``'left'``; anything else raises
     ``ValueError``.
 
-    Strategy (``broadcast_polys=None`` auto-picks from the measured
-    layer size — one cheap aggregate over the polygon side only):
+    Strategy (a passed ``index`` — a ``broadcast_polygon_index`` —
+    always broadcasts; otherwise one cheap aggregate over the polygon
+    side measures the layer size):
 
     - **broadcast**: ships a CSR cell index to every executor once
       and PIP-tags pages in a single mapInArrow pass —
       zero shuffles, zero joins.  Right whenever the CSR index fits
       comfortably in executor memory (``BROADCAST_MAX_VERTS``).
-    - **partitioned disk-index** (every other case):
-      ``spatial_join_partitioned`` against ``layer_path``, a
-      ``write_partitioned_layer`` output.  Without one, the layer is
-      written once per call to a ``tempfile.mkdtemp`` directory (the
-      executors read it, so it must be on a filesystem they share);
-      pass a built ``layer_path`` to reuse it across joins.  ``salt`` spreads hot
-      (city) cells over tasks (``suggest_salt(pages)`` derives it from
-      the measured cell histogram); with ``pages_clustered=True`` the
-      exchange is skipped entirely.
+    - **partitioned disk-index** (every other case): the layer is
+      written once per call with ``write_partitioned_layer`` to a
+      ``tempfile.mkdtemp`` directory (the executors read it, so it must
+      be on a filesystem they share), then joined by
+      ``spatial_join_partitioned``.  To reuse a layer across joins, or
+      to salt hot (city) cells (``suggest_salt``), write the layer once
+      and call ``spatial_join_partitioned`` directly.
     """
     _check_how(how)
-    if broadcast_polys is None and index is not None:
-        broadcast_polys = True      # caller already built the index
-    if broadcast_polys is None:
+    if index is None:
         nv = polys.selectExpr(
             "sum(aggregate(transform(rings, r -> size(r.lat)), 0L, (a, x) -> a + x))"
             " AS v").first()
-        broadcast_polys = int(nv.v or 0) <= BROADCAST_MAX_VERTS
+        if int(nv.v or 0) <= BROADCAST_MAX_VERTS:
+            index = broadcast_polygon_index(polys)
 
-    if broadcast_polys:
-        bc = index if index is not None else broadcast_polygon_index(polys, z)
+    if index is not None:
         return pages.selectExpr(sql_name(page_key), "lat", "lon").mapInArrow(
-            _broadcast_join_mapper(bc, how), _MATCH_SCHEMA,
+            _broadcast_join_mapper(index, how), _MATCH_SCHEMA,
         ).withColumnRenamed("k", page_key)
 
-    if layer_path is None:
-        # the returned join is lazy: its scratch layer lives until exit
-        layer_path = tempfile.mkdtemp(prefix="osm_layer_")
-        atexit.register(shutil.rmtree, layer_path, ignore_errors=True)
-        write_partitioned_layer(polys, layer_path, z)
-    return spatial_join_partitioned(
-        pages, layer_path, z=z, how=how, page_key=page_key,
-        salt=salt or 1, pages_clustered=pages_clustered)
+    # the returned join is lazy: its scratch layer lives until exit
+    layer_path = tempfile.mkdtemp(prefix="osm_layer_")
+    atexit.register(shutil.rmtree, layer_path, ignore_errors=True)
+    write_partitioned_layer(polys, layer_path)
+    return spatial_join_partitioned(pages, layer_path, how=how,
+                                    page_key=page_key)

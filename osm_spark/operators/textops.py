@@ -90,8 +90,8 @@ _QUALITY_COLS = (("n_chars2", "int", "Int32"), ("n_tokens", "bigint", "Int64"),
                  ("stop_ratio", "double", "Float64"))
 
 
-def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Quality scoring: raw length (n_chars2 — the documents table
+def with_quality(df: DataFrame) -> DataFrame:
+    """Quality scoring of the ``text`` column: raw length (n_chars2 — the documents table
     already has n_chars), token count, mean token length, stopword
     ratio (``quality_py`` per row, one struct UDF per row)."""
 
@@ -101,7 +101,7 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
         return pd.DataFrame({c: pd.array(list(v), dtype=dt)
                              for (c, _, dt), v in zip(_QUALITY_COLS, cols)})
 
-    q = quality(F.col(text_col))
+    q = quality(F.col("text"))
     return df.withColumns({c: q[c] for c, _, _ in _QUALITY_COLS})
 
 

@@ -32,7 +32,6 @@ from pyspark.sql.types import (IntegerType, LongType, StringType, StructField,
 from osm_spark.geo import kernels as K
 from osm_spark.operators.spatial_join import (RING_SQL, flat_values,
                                               tile_x_sql, tile_y_sql)
-from osm_spark.operators.sqlexpr import sql_name
 
 ZOOM_BANDS = (6, 8, 10, 12)
 BUILDING_CAT = 12  # fixture category id used for the building exception
@@ -51,9 +50,9 @@ SMALL_AREA = math.trunc(8.0 * (1e7 / (256.0 / 360.0 * 2.0**15.5)) ** 2)
 # page tiles
 
 
-def page_tiles(pages_geo: DataFrame, zooms: Iterable[int] = ZOOM_BANDS,
-               key: str = "page_id") -> DataFrame:
-    """(key, z, x, y) for each zoom — one scan, pure JVM.
+def page_tiles(pages_geo: DataFrame,
+               zooms: Iterable[int] = ZOOM_BANDS) -> DataFrame:
+    """(page_id, z, x, y) for each zoom — one scan, pure JVM.
 
     Single mercator evaluation: x/y are computed once at the finest
     requested zoom (as whole-stage-codegen expressions — zero Python in
@@ -63,13 +62,12 @@ def page_tiles(pages_geo: DataFrame, zooms: Iterable[int] = ZOOM_BANDS,
     Two selects of SQL strings, one row per zoom from ``inline``."""
     zooms = tuple(zooms)
     zmax = max(zooms)
-    k = sql_name(key)
-    base = pages_geo.selectExpr(k, f"{tile_x_sql('lon', zmax)} AS _x",
+    base = pages_geo.selectExpr("page_id", f"{tile_x_sql('lon', zmax)} AS _x",
                                 f"{tile_y_sql('lat', zmax)} AS _y")
     structs = ", ".join(
         f"named_struct('z', {z}, 'x', shiftright(_x, {zmax - z}), "
         f"'y', shiftright(_y, {zmax - z}))" for z in zooms)
-    return base.selectExpr(k, f"inline(array({structs}))")
+    return base.selectExpr("page_id", f"inline(array({structs}))")
 
 
 def tile_y_rows_df(spark: SparkSession, z: int, lat_min_fp: int, lat_max_fp: int) -> DataFrame:

@@ -85,9 +85,9 @@ def tile_x_sql(zooms=(8, 12)) -> str:
     return f"CASE {branches} END"
 
 
-def knn_features(n: int = 32, offset: int = 7777):
+def knn_features(n: int = 32):
     ids = np.arange(n, dtype=np.int64)
-    lat, lon = FX.geocode_ints(ids + offset)
+    lat, lon = FX.geocode_ints(ids + 7777)
     return list(zip(ids.tolist(), lat.tolist(), lon.tolist()))
 
 
@@ -96,7 +96,7 @@ def knn_features_values(n: int = 32) -> str:
 
 
 # --- z-order bit-dilation steps: THE kernel's table, not a copy — the
-# oracle's validity rests on bit-matching kernels.dilate, so a second
+# oracle's validity rests on bit-matching that table, so a second
 # hand-maintained (shift, mask) list would be a silent drift hazard
 _DILATE = K._DILATE_MASKS
 
@@ -178,7 +178,7 @@ MINHASH_TOKS_CTE = (
 TOKEN_HASH_DUCKDB = "(('0x' || substr(md5(tok), 1, 8))::BIGINT)"
 
 
-def hilbert_ctes_duckdb(order: int = 31) -> tuple[str, str]:
+def hilbert_ctes_duckdb() -> tuple[str, str]:
     """Unrolled xy2d Hilbert rotation (kernels.hilbert_d, the standard
     public algorithm) as a DuckDB CTE chain over `pts` — one (h, g) CTE
     pair per bit level.  Returns (ctes, last_cte_name); the final CTE
@@ -188,7 +188,7 @@ def hilbert_ctes_duckdb(order: int = 31) -> tuple[str, str]:
         f"(lon + {K.LON_OFFSET}) >> 1 AS y, CAST(0 AS BIGINT) AS d FROM pts)"
     ]
     k = 0
-    s = 1 << (order - 1)
+    s = 1 << 30                        # kernels.hilbert_d: 31 bits per axis
     while s > 0:
         parts.append(
             f"h{k} AS (SELECT doc_id, x, y, d, "

@@ -357,13 +357,10 @@ def decode_block(data: bytes) -> pd.DataFrame:
     return out.frame()
 
 
-def decode_blocks(spark: SparkSession, path: str,
-                  index: DataFrame | None = None) -> DataFrame:
+def decode_blocks(spark: SparkSession, path: str) -> DataFrame:
     """Parallel decode: mapInPandas over the blob index; each worker
     range-reads and decodes its own blobs."""
-    if index is None:
-        index = blob_index(spark, path)
-    data = index.filter("type = 'OSMData'").select("offset", "size")
+    data = blob_index(spark, path).filter("type = 'OSMData'").select("offset", "size")
     # spread blobs across workers (the index DF is tiny)
     data = data.repartition(max(spark.sparkContext.defaultParallelism, 2))
 

@@ -113,13 +113,10 @@ def decode_record(content: bytes) -> list[tuple[int, np.ndarray, np.ndarray]]:
 SHP_SCHEMA = "rec_num int, part int, lats array<long>, lons array<long>"
 
 
-def read_shp(spark: SparkSession, path: str,
-             index: DataFrame | None = None) -> DataFrame:
+def read_shp(spark: SparkSession, path: str) -> DataFrame:
     """Shapefile -> (rec_num, part, lats, lons) polyline/ring rows,
     decoded in parallel over the record index."""
-    if index is None:
-        index = shp_index(spark, path)
-    index = index.repartition(max(spark.sparkContext.defaultParallelism, 2))
+    index = shp_index(spark, path).repartition(max(spark.sparkContext.defaultParallelism, 2))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         with open(path, "rb") as f:

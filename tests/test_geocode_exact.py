@@ -66,7 +66,7 @@ def test_geocode_edge_urls_match_regexp(spark):
 
 
 def test_geocode_fixture_urls_match_regexp(spark):
-    urls = FX.generate_pages(2_000)["url"].tolist()
+    urls = FX.generate_pages_range(0, 2_000)["url"].tolist()
     df = spark.createDataFrame(list(enumerate(urls)), "i long, url string")
     rows = _rows(geocode_pages(df))
     assert rows == _rows(geocode_pages_regexp(df))

@@ -62,7 +62,7 @@ def test_profile_to_edges_end_to_end(spark, pbf_tables):
     from osm_spark.operators import routing as RT
 
     prof = P.apply_profile(pbf_tables["way_tags"])
-    refs = P.profiled_way_refs(pbf_tables["way_refs"], prof).selectExpr(
+    refs = pbf_tables["way_refs"].join(prof, "way").selectExpr(
         "way AS way_id", "seq", "node AS node_id", "speed", "oneway")
     nodes = pbf_tables["nodes"].selectExpr("node AS node_id", "lat", "lon")
     edges = RT.extract_edges(refs, nodes, speed_col="speed")

@@ -22,7 +22,8 @@ from osm_spark.sources import pbf, pbf_fixture
 from tools.make_goldens import (scalar_is_simple, scalar_pip,
                                 scalar_seg_intersect)
 
-from kernel_oracles import dp_scalar, flat_layer, pip_cells_reference
+from kernel_oracles import (douglas_peucker_int, dp_scalar, flat_layer,
+                            pip_cells_reference)
 
 coord = st.integers(min_value=-1000, max_value=1000)
 
@@ -101,7 +102,7 @@ def test_douglas_peucker_endpoints_and_eps(pts, eps):
     definition's guarantee, douglas_peucker.ml:73-127)."""
     xs = np.array([p[0] for p in pts], np.int64)
     ys = np.array([p[1] for p in pts], np.int64)
-    keep = K.douglas_peucker_int(eps, xs, ys)
+    keep = douglas_peucker_int(eps, xs, ys)
     assert keep[0] and keep[-1]
     kept_idx = np.nonzero(keep)[0]
     import math
@@ -217,7 +218,7 @@ def test_batched_dp_matches_scalar_oracle(lines):
     assert keep.tolist() == np.concatenate(want).tolist()
     for e, x, y, w in zip(eps, xs, ys, want):
         if len(x):
-            assert K.douglas_peucker_int(e, x, y).tolist() == w.tolist()
+            assert douglas_peucker_int(e, x, y).tolist() == w.tolist()
 
 
 PIP_Z = 12

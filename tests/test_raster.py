@@ -255,13 +255,6 @@ def test_composite_real_osm_ids_beyond_24_bits(spark):
     assert got[(1, 1)] == (big + 9, 2)
     assert got[(0, 0)] == (big + 7, 1)
     assert set(out.feature_id) <= {big + 7, big + 8, big + 9}
-    # forcing remap off still raises loudly on oversized ids
-    import pytest as _pt
-    from osm_spark.operators.raster import composite_cells
-    df = spark.createDataFrame(rows,
-        "feature_id long, category int, layer int, cx long, cy long")
-    with _pt.raises(Exception, match="paint key"):
-        composite_cells(df, remap_ids=False).collect()
 
 
 def test_composite_over_rasterized_overlap(spark):

@@ -1,0 +1,166 @@
+"""The public surface of ``osm_spark`` is what its callers use.
+
+Pure ``ast``; no Spark session.  The callers are the package itself,
+``__spark_entry__.py``, ``bench.py``, ``tools/`` and ``perfbench/``
+(not its tests).  Two rules:
+
+(a) every public top-level function or class in ``osm_spark/`` is
+    referenced (a ``Name``, an ``Attribute`` or an import alias) by a
+    caller, outside its own definition;
+(b) every optional parameter of a public top-level function is passed,
+    by keyword or by position, at some caller's call.  A call made with
+    ``*args`` sets every positional parameter; one made with ``**kw``
+    sets every parameter.
+
+Names are matched as written, not resolved through imports.  The fix
+for a failure is to delete the function or the parameter (inlining its
+default), or to name it in ``ALLOWED`` with the reason it stays.  An
+allowed function is exempt from both rules.
+"""
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+PACKAGE = ROOT / "osm_spark"
+
+# {"module.function" or "module.function(param=)": why it stays}
+ALLOWED = {
+    "metrics.Pipeline":
+        "S5 lineage/metrics component; test_metrics and "
+        "test_text_invariant drive it, no query does",
+    "warc.stream_warc_pages":
+        "S1b streaming WARC ingest; test_warc drives it",
+    "profile.apply_profile":
+        "routing profile from raw tags (profile_car.ml); test_profile "
+        "feeds it to extract_edges",
+    "routing.extract_edges(speed_col=)":
+        "the per-way speed column apply_profile produces",
+    "cluster.cluster_by_hilbert":
+        "G15 Hilbert-clustered storage layout that "
+        "spatial_join_partitioned(pages_clustered=) joins without an "
+        "exchange; the row-group pruning test drives it",
+    "io.write_table":
+        "R1/R2 Iceberg-or-parquet sink; test_metrics drives the parquet "
+        "form, tests/test_iceberg.py (a documented skip) the catalog form",
+    "routing.contract(checkpoint_dir=)":
+        "deployment path: a resumable contraction; the resume tests "
+        "drive it",
+    "dedup.connected_components(max_iter=)":
+        "tests hold the O(log n) round bound and the no-fixpoint error",
+    "jpeg.encode_baseline(dri=)":
+        "restart-interval streams for the decoder's RST marker tests",
+    "similarity.lsh_topk(n_planes=)":
+        "the recall test's 2-plane buckets (the query runs 4 planes)",
+    "raster.composite_cells(group_rank=)":
+        "the renderer's group paint order (osm_display.ml:908-915); the "
+        "raster differential tests drive it",
+}
+
+
+def caller_files():
+    perf = ROOT / "perfbench"
+    return (sorted(PACKAGE.rglob("*.py")) + sorted((ROOT / "tools").rglob("*.py"))
+            + [p for p in sorted(perf.rglob("*.py"))
+               if p.relative_to(perf).parts[0] not in ("tests", "_work")]
+            + [ROOT / "__spark_entry__.py", ROOT / "bench.py"])
+
+
+def _parse(path):
+    return ast.parse(path.read_text(), filename=str(path))
+
+
+def public_defs():
+    """{"module.name": def node} of the public top-level defs."""
+    defs = {}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in _parse(path).body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)) \
+                    and not node.name.startswith("_"):
+                qual = f"{path.stem}.{node.name}"
+                assert qual not in defs, f"two public defs named {qual}"
+                defs[qual] = node
+    return defs
+
+
+def _usage(files, defs):
+    """(names referenced, [(callee name, ast.Call)]) over ``files``; a
+    public def's own body does not count for its own name."""
+    own = {id(node): node.name for node in defs.values()}
+    names, calls = set(), []
+    for path in files:
+        for top in _parse(path).body:
+            self_name = own.get(id(top))
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    ref = node.id
+                elif isinstance(node, ast.Attribute):
+                    ref = node.attr
+                elif isinstance(node, ast.alias):
+                    ref = node.name.rsplit(".", 1)[-1]
+                elif isinstance(node, ast.Call):
+                    f = node.func
+                    ref = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                    if ref is not None and ref != self_name:
+                        calls.append((ref, node))
+                    continue
+                else:
+                    continue
+                if ref != self_name:
+                    names.add(ref)
+    return names, calls
+
+
+def optional_params(fn):
+    """[(name, positional index or None)] of the parameters with defaults."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = [(p.arg, i) for i, p in enumerate(pos)
+           if i >= len(pos) - len(a.defaults)]
+    return out + [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                  if d is not None]
+
+
+def _sets(call, name, idx):
+    if any(k.arg is None for k in call.keywords):        # **kw
+        return True
+    if any(k.arg == name for k in call.keywords):
+        return True
+    if idx is None:
+        return False
+    return idx < len(call.args) or any(
+        isinstance(x, ast.Starred) for x in call.args)
+
+
+def surface(files=None):
+    """(public names no caller references, optional parameters no
+    caller sets, every public optional parameter), as ALLOWED keys."""
+    defs = public_defs()
+    names, calls = _usage(caller_files() if files is None else files, defs)
+    by_callee = {}
+    for callee, call in calls:
+        by_callee.setdefault(callee, []).append(call)
+    unreferenced = sorted(q for q, node in defs.items() if node.name not in names)
+    unset, optional = [], []
+    for qual, node in defs.items():
+        if isinstance(node, ast.ClassDef):
+            continue
+        for name, idx in optional_params(node):
+            key = f"{qual}({name}=)"
+            optional.append(key)
+            if not any(_sets(c, name, idx) for c in by_callee.get(node.name, ())):
+                unset.append(key)
+    return unreferenced, sorted(unset), optional
+
+
+def test_public_surface_is_reached():
+    unreferenced, unset, _ = surface()
+    missing = [q for q in unreferenced + unset
+               if q not in ALLOWED and q.split("(")[0] not in ALLOWED]
+    assert not missing, (
+        "public names or optional parameters no caller outside tests/ "
+        "uses; delete them, or add them to ALLOWED with a reason: "
+        + ", ".join(missing))
+    stale = sorted(set(ALLOWED) - set(unreferenced) - set(unset))
+    assert not stale, f"ALLOWED entries a caller now uses: {stale}"
+    assert len(ALLOWED) <= 15

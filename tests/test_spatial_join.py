@@ -8,10 +8,11 @@ import pytest
 
 from osm_spark import fixtures as FX
 from osm_spark.geo import kernels as K
+from osm_spark.operators import spatial_join as SJ
 from osm_spark.operators.geocode import geocode_pages
 from osm_spark.operators.spatial_join import spatial_join
 
-from kernel_oracles import flat_layer
+from kernel_oracles import flat_layer, pages_df
 
 N_PAGES = 400
 N_SMALL = 120
@@ -36,9 +37,17 @@ def brute_force_matches(page_ids, lats, lons, polys):
     return out
 
 
+def scratch_layer_join(monkeypatch, pages, polys, **kw):
+    """``spatial_join`` on its partitioned path, over the scratch layer
+    it writes itself (the measured layer is above a zero vertex limit)."""
+    with monkeypatch.context() as m:
+        m.setattr(SJ, "BROADCAST_MAX_VERTS", 0)
+        return spatial_join(pages, polys, **kw)
+
+
 @pytest.fixture(scope="module")
 def fixture_data(spark):
-    pages = FX.pages_df(spark, N_PAGES)
+    pages = pages_df(spark, N_PAGES)
     polys = FX.polygons_df(spark, N_SMALL)
     geo = geocode_pages(pages)
     rows = geo.select("page_id", "lat", "lon").collect()
@@ -50,20 +59,18 @@ def fixture_data(spark):
 
 
 @pytest.mark.parametrize(
-    "kw",
-    [
-        {"broadcast_polys": True},
-        {"broadcast_polys": False},
-        {"broadcast_polys": False, "salt": 4},
-    ],
-    ids=["broadcast", "scratch_layer", "scratch_layer_salted"],
-)
-def test_spatial_join_matches_bruteforce(spark, fixture_data, kw):
+    "path", ["broadcast", "scratch_layer", "scratch_layer_salted"])
+def test_spatial_join_matches_bruteforce(spark, fixture_data, path,
+                                         monkeypatch, tmp_path):
     geo, polys, oracle = fixture_data
-    got = {
-        (r.page_id, r.feature_id)
-        for r in spatial_join(geo, polys, **kw).collect()
-    }
+    if path == "broadcast":
+        df = spatial_join(geo, polys)
+    elif path == "scratch_layer":
+        df = scratch_layer_join(monkeypatch, geo, polys)
+    else:       # salting takes a written layer: spatial_join has no salt
+        layer = SJ.write_partitioned_layer(polys, str(tmp_path / "layer"))
+        df = SJ.spatial_join_partitioned(geo, layer, salt=4)
+    got = {(r.page_id, r.feature_id) for r in df.collect()}
     assert got == oracle
     assert len(got) > N_PAGES * 0.4  # skewed fixture: most pages hit a city
 
@@ -83,7 +90,7 @@ def test_text_passthrough_byte_identical(spark):
     """North-rule invariant: text survives the pipeline byte-identical."""
     import hashlib
 
-    pdf = FX.generate_pages(50)
+    pdf = FX.generate_pages_range(0, 50)
     before = {u: hashlib.sha256(t.encode()).hexdigest() for u, t in zip(pdf.url, pdf.text)}
     pages = spark.createDataFrame(pdf)
     geo = geocode_pages(pages)
@@ -93,11 +100,11 @@ def test_text_passthrough_byte_identical(spark):
     assert after == before
 
 
-def test_broadcast_and_scratch_layer_paths_agree(spark):
-    """The zero-shuffle broadcast index path and the salted partitioned
-    path over a scratch layer (``broadcast_polys=False``, no
-    ``layer_path``) are alternative physical plans of the SAME logical
-    join — their match sets must be identical."""
+def test_broadcast_and_scratch_layer_paths_agree(spark, monkeypatch):
+    """The zero-shuffle broadcast index path and the partitioned path
+    over a scratch layer (a layer above ``BROADCAST_MAX_VERTS``) are
+    alternative physical plans of the SAME logical join — their match
+    sets must be identical."""
     from osm_spark import fixtures as FX
     from osm_spark.operators.geocode import geocode_ids
     from osm_spark.operators.spatial_join import spatial_join
@@ -108,8 +115,8 @@ def test_broadcast_and_scratch_layer_paths_agree(spark):
     a = {(r.doc_id, r.feature_id) for r in
          spatial_join(docs, polys, page_key="doc_id").collect()}
     b = {(r.doc_id, r.feature_id) for r in
-         spatial_join(docs, polys, page_key="doc_id",
-                      broadcast_polys=False, salt=4).collect()}
+         scratch_layer_join(monkeypatch, docs, polys,
+                            page_key="doc_id").collect()}
     assert a == b
     assert len(a) > 50
 
@@ -203,7 +210,7 @@ def test_partitioned_mapper_streams_bounded(spark, tmp_path, monkeypatch):
     assert total == len(a)
 
 
-def test_many_ring_multipolygon_both_paths(spark):
+def test_many_ring_multipolygon_both_paths(spark, monkeypatch):
     """A feature with >16 rings (1 outer + 20 holes) next to a second
     feature: exercises ring identity in the scratch-layer partitioned
     path (round-1 bug: ring_key = feature_id*16 + ring_idx collided
@@ -242,9 +249,9 @@ def test_many_ring_multipolygon_both_paths(spark):
     exp.add((pid, 8))
     pts_df = spark.createDataFrame(pts, "doc_id long, lat long, lon long")
     got_b = {(r.doc_id, r.feature_id) for r in spatial_join(
-        pts_df, polys, page_key="doc_id", broadcast_polys=True).collect()}
-    got_c = {(r.doc_id, r.feature_id) for r in spatial_join(
-        pts_df, polys, page_key="doc_id", broadcast_polys=False, salt=3).collect()}
+        pts_df, polys, page_key="doc_id").collect()}
+    got_c = {(r.doc_id, r.feature_id) for r in scratch_layer_join(
+        monkeypatch, pts_df, polys, page_key="doc_id").collect()}
     assert got_b == exp
     assert got_c == exp
 
@@ -257,7 +264,7 @@ def test_suggest_salt_detects_hot_cells(spark):
     from pyspark.sql import functions as F
     from osm_spark import fixtures as FX
 
-    skewed = FX.pages_df(spark, 4000)
+    skewed = pages_df(spark, 4000)
     from osm_spark.operators.geocode import geocode_pages
 
     s = suggest_salt(geocode_pages(skewed).select("page_id", "lat", "lon"))
@@ -267,22 +274,6 @@ def test_suggest_salt_detects_hot_cells(spark):
         spark.range(4000).withColumnRenamed("id", "doc_id"), "doc_id")
     s_u = suggest_salt(uniform.select("doc_id", "lat", "lon"))
     assert s_u <= max(2, s)  # hash-uniform layout needs (almost) no salt
-
-
-def test_suggest_salt_sampled_matches_full(spark):
-    """The max/p95 ratio is scale-free: a deterministic sample gives
-    (nearly) the same factor as the full histogram — the 10^12-page
-    estimation path."""
-    from osm_spark import fixtures as FX
-    from osm_spark.operators.geocode import geocode_pages
-    from osm_spark.operators.spatial_join import suggest_salt
-
-    pages = geocode_pages(FX.pages_df(spark, 20000)).select(
-        "page_id", "lat", "lon")
-    full = suggest_salt(pages)
-    sampled = suggest_salt(pages, sample_frac=0.25)
-    assert sampled > 1
-    assert abs(sampled - full) <= max(2, full // 2)
 
 
 # ------------------------------------------------- review regressions
@@ -379,14 +370,17 @@ def test_pip_pack_memory_bounded_by_chunk_in_dense_cell(monkeypatch):
 
 
 def test_partitioned_layer_z_mismatch_raises(spark, tmp_path):
+    """A layer whose sidecar records another cell zoom than the join
+    reads is refused by name instead of matching nothing."""
     from osm_spark.operators.spatial_join import (
         spatial_join_partitioned, write_partitioned_layer)
 
     path = str(tmp_path / "layer")
-    write_partitioned_layer(FX.polygons_df(spark, 5).limit(3), path, z=12)
-    pages = geocode_pages(FX.pages_df(spark, 50))
-    with pytest.raises(ValueError, match="z=12"):
-        spatial_join_partitioned(pages, path, z=14)
+    write_partitioned_layer(FX.polygons_df(spark, 5).limit(3), path)
+    SJ._write_layer_meta(path, SJ.DEFAULT_CELL_ZOOM + 2, 11)
+    pages = geocode_pages(pages_df(spark, 50))
+    with pytest.raises(ValueError, match=f"z={SJ.DEFAULT_CELL_ZOOM + 2}"):
+        spatial_join_partitioned(pages, path)
 
 
 def test_partitioned_layer_without_meta_raises(spark, tmp_path):
@@ -396,7 +390,7 @@ def test_partitioned_layer_without_meta_raises(spark, tmp_path):
 
     path = str(tmp_path / "not_a_layer")
     FX.polygons_df(spark, 3).write.parquet(path)
-    pages = geocode_pages(FX.pages_df(spark, 20))
+    pages = geocode_pages(pages_df(spark, 20))
     with pytest.raises(ValueError, match="not_a_layer"):
         spatial_join_partitioned(pages, path)
 
@@ -422,7 +416,7 @@ def _rect(fid, la0, la1, lo0, lo1):
     return (fid, [(0, [la0, la0, la1, la1, la0], [lo0, lo1, lo1, lo0, lo0])])
 
 
-def test_row_boundaries_exact_on_every_path(spark, tmp_path):
+def test_row_boundaries_exact_on_every_path(spark, tmp_path, monkeypatch):
     """Points at numpy row boundaries (b-1, b, b+1) of the fine z12 and
     the coarse z9 grid, against rectangles whose bbox edges sit on those
     boundaries: the JVM-routed partitioned, clustered and scratch-layer
@@ -461,13 +455,9 @@ def test_row_boundaries_exact_on_every_path(spark, tmp_path):
 
     layer = write_partitioned_layer(layer_df, str(tmp_path / "layer"))
     got = {
-        "broadcast": pairs(spatial_join(docs, layer_df, page_key="doc_id",
-                                        broadcast_polys=True)),
-        "scratch_layer": pairs(spatial_join(
-            docs, layer_df, page_key="doc_id", broadcast_polys=False)),
-        "scratch_layer_salted": pairs(spatial_join(
-            docs, layer_df, page_key="doc_id", broadcast_polys=False,
-            salt=3)),
+        "broadcast": pairs(spatial_join(docs, layer_df, page_key="doc_id")),
+        "scratch_layer": pairs(scratch_layer_join(
+            monkeypatch, docs, layer_df, page_key="doc_id")),
     }
     for kw in ({}, {"salt": 3}, {"pages_clustered": True}):
         got[f"partitioned{kw}"] = pairs(spatial_join_partitioned(
@@ -580,7 +570,7 @@ def test_underivable_geocode_is_null_not_a_task_failure(spark, tmp_path):
     urls = ["page", "", "https://x.example/page99999999999999999999",
             "https://x.example/en/geo/99999999999999999999/1/page987654321"]
     bad = spark.createDataFrame([(u,) for u in urls], "url string")
-    pages = geocode_pages(FX.pages_df(spark, 300).select("url").union(bad))
+    pages = geocode_pages(pages_df(spark, 300).select("url").union(bad))
     got = {r.url: (r.page_id, r.lat, r.lon) for r in pages.collect()}
     for u in urls[:3]:
         assert got[u] == (None, None, None), (u, got[u])
@@ -593,8 +583,9 @@ def test_underivable_geocode_is_null_not_a_task_failure(spark, tmp_path):
         pages.where("page_id IS NOT NULL AND lat IS NOT NULL"), polys,
         how="inner").collect()}
     assert want
-    for kw in ({}, {"broadcast_polys": False, "layer_path": layer}):
-        rows = spatial_join(pages, polys, how="left", **kw).collect()
+    for join in (spatial_join(pages, polys, how="left"),
+                 SJ.spatial_join_partitioned(pages, layer, how="left")):
+        rows = join.collect()
         assert sorted((r.page_id is None, r.feature_id is None)
                       for r in rows if r.page_id is None) == [(True, True)] * 3
         assert {r.page_id for r in rows if r.feature_id is not None} == want
@@ -602,12 +593,10 @@ def test_underivable_geocode_is_null_not_a_task_failure(spark, tmp_path):
 
 
 def test_unmaterialized_layer_takes_partitioned_path(spark, monkeypatch):
-    """A non-broadcast join without ``layer_path`` — asked for, or picked
-    because the measured vertex count is above ``BROADCAST_MAX_VERTS`` —
+    """A join whose measured vertex count is above ``BROADCAST_MAX_VERTS``
     writes a scratch layer and runs the partitioned mapper: one
     MapInArrow after a cell-key exchange, no grouped-map cogroup, and
     the broadcast path's match set."""
-    from osm_spark.operators import spatial_join as SJ
     from osm_spark.operators.geocode import geocode_ids
 
     docs = geocode_ids(
@@ -617,25 +606,19 @@ def test_unmaterialized_layer_takes_partitioned_path(spark, monkeypatch):
     def pairs(df):
         return {(r.doc_id, r.feature_id) for r in df.collect()}
 
-    want = pairs(SJ.spatial_join(docs, polys, page_key="doc_id",
-                                 how="left", broadcast_polys=True))
+    want = pairs(SJ.spatial_join(docs, polys, page_key="doc_id", how="left"))
     assert len(want) > 50
-    joins = [lambda: SJ.spatial_join(docs, polys, page_key="doc_id",
-                                     how="left", broadcast_polys=False)]
     monkeypatch.setattr(SJ, "BROADCAST_MAX_VERTS", 10)
-    joins.append(lambda: SJ.spatial_join(docs, polys, page_key="doc_id",
-                                         how="left", salt=2))
-    for join in joins:
-        df = join()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("MapInArrow") == 1, plan
-        assert "FlatMapCoGroupsInPandas" not in plan, plan
-        assert "REPARTITION_BY_COL" in plan, plan
-        assert pairs(df) == want
+    df = SJ.spatial_join(docs, polys, page_key="doc_id", how="left")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+    assert "REPARTITION_BY_COL" in plan, plan
+    assert pairs(df) == want
 
 
 @pytest.mark.parametrize("how", ["outer", "leftouter", "right", "LEFT"])
-def test_unsupported_how_raises(spark, tmp_path, how):
+def test_unsupported_how_raises(spark, tmp_path, monkeypatch, how):
     """Only 'inner' and 'left' exist; any other ``how`` is refused by
     name on every path instead of silently running an inner join."""
     from osm_spark.operators.spatial_join import (spatial_join,
@@ -644,13 +627,10 @@ def test_unsupported_how_raises(spark, tmp_path, how):
 
     polys = FX.polygons_df(spark, 5)
     layer = write_partitioned_layer(polys, str(tmp_path / "layer"))
-    pages = geocode_pages(FX.pages_df(spark, 20))
+    pages = geocode_pages(pages_df(spark, 20))
     for join in (
             lambda: spatial_join(pages, polys, how=how),
-            lambda: spatial_join(pages, polys, how=how,
-                                 broadcast_polys=False),
-            lambda: spatial_join(pages, polys, how=how,
-                                 broadcast_polys=False, layer_path=layer),
+            lambda: scratch_layer_join(monkeypatch, pages, polys, how=how),
             lambda: spatial_join_partitioned(pages, layer, how=how)):
         with pytest.raises(ValueError, match=f"'{how}'"):
             join()

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from osm_spark.streaming import events as SE
 
+from kernel_oracles import sessionize_batch
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -41,7 +43,7 @@ def test_windowed_counts_stream_equals_batch(spark, events_dir):
 def test_sessionize_stream_closed_sessions_match_batch(spark, events_dir):
     gap = 28800  # 8h; median per-user gap in fixture is ~7.3h
     batch = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    bt = SE.sessionize_batch(batch, gap_s=gap)
+    bt = sessionize_batch(batch, gap_s=gap)
     # drop each user's final session: the stream can't close it without
     # a watermark advance past its timeout (bounded single-batch input)
     from pyspark.sql import Window
@@ -71,7 +73,7 @@ def test_sessionize_stream_closed_sessions_match_batch(spark, events_dir):
 
 def test_sessionize_batch_properties(spark):
     batch = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    sess = SE.sessionize_batch(batch, gap_s=28800)
+    sess = sessionize_batch(batch, gap_s=28800)
     agg = sess.agg(F.sum("n_events").alias("n"),
                    F.sum("sum_cents").alias("c")).first()
     raw = batch.agg(
@@ -98,7 +100,7 @@ def test_sessionize_flush_full_parity(tmp_path, spark):
            for r in got_df.collect()}
     batch = spark.read.parquet(f"{SF_DIR}/events.parquet")
     want = {(r.user_id, r.session_start, r.n_events, r.sum_cents)
-            for r in SE.sessionize_batch(batch, gap_s=gap).collect()}
+            for r in sessionize_batch(batch, gap_s=gap).collect()}
     assert got == want
     assert not any(u == SE.FLUSH_SENTINEL_USER for u, *_ in got)
 
@@ -146,5 +148,5 @@ def test_sessionize_stream_late_event_parity(tmp_path, spark):
     union = spark.read.parquet(str(d / "b1.parquet")) \
         .unionByName(spark.read.parquet(str(d / "b2.parquet")))
     all_batch = {(r.user_id, r.session_start, r.n_events, r.sum_cents)
-                 for r in SE.sessionize_batch(union, gap_s=gap).collect()}
+                 for r in sessionize_batch(union, gap_s=gap).collect()}
     assert got <= all_batch

@@ -13,6 +13,8 @@ from osm_spark.metrics import Pipeline
 from osm_spark.operators.geocode import geocode_pages
 from osm_spark.operators.spatial_join import spatial_join
 
+from kernel_oracles import pages_df
+
 
 def _digests(df):
     rows = df.select("url", "text", "html").collect()
@@ -24,7 +26,7 @@ def _digests(df):
 
 
 def test_text_and_html_byte_identity_through_pipeline(spark, tmp_path):
-    pages = FX.pages_df(spark, 500)
+    pages = pages_df(spark, 500)
     want = _digests(pages)
 
     pl = Pipeline(spark, str(tmp_path / "pl"), "invariant")

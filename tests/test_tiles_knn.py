@@ -12,14 +12,14 @@ from osm_spark.operators import tiles as T
 from osm_spark.operators.geocode import geocode_ids, geocode_pages
 from osm_spark.operators.knn import brute_force_knn, knn_join
 
-from kernel_oracles import dp_scalar
+from kernel_oracles import dp_scalar, pages_df
 
 N_PAGES = 300
 
 
 @pytest.fixture(scope="module")
 def geo_pages(spark):
-    return geocode_pages(FX.pages_df(spark, N_PAGES))
+    return geocode_pages(pages_df(spark, N_PAGES))
 
 
 def test_page_tiles_match_kernel(spark, geo_pages):
@@ -229,6 +229,26 @@ def test_knn_antimeridian_paths(spark, monkeypatch, limits):
     assert {(p, f) for p, rank, f, _ in got if rank == 1} == {(1, 7), (2, 9)}
 
 
+@pytest.mark.parametrize("limits", [{}, {"BROADCAST_FEATURE_LIMIT": 0}],
+                         ids=["broadcast", "cells"])
+def test_knn_radius_wider_than_cell_row_raises(spark, monkeypatch, limits):
+    """A ring of 2*radius + 1 >= 2**cell_zoom cells wraps onto itself:
+    on the cell path a feature would sit twice in one cell and a k=2
+    result could rank the same feature_id twice.  Refused by name on
+    every path."""
+    for name, value in limits.items():
+        monkeypatch.setattr(KNN, name, value)
+    pts = spark.createDataFrame(
+        [(1, 100_000_000, 100_000_000)], "page_id long, lat long, lon long")
+    feats = spark.createDataFrame(
+        [(7, 100_000_000, 110_000_000), (8, 200_000_000, 900_000_000)],
+        "feature_id long, lat long, lon long")
+    with pytest.raises(ValueError, match=r"radius=1 .*cell_zoom=1\b"):
+        knn_join(pts, feats, k=2, cell_zoom=1, radius=1).collect()
+    got = knn_join(pts, feats, k=2, cell_zoom=2, radius=1).collect()
+    assert sorted((r.rank, r.feature_id) for r in got) == [(1, 7), (2, 8)]
+
+
 # ------------------------------------------------- review regressions
 
 def test_knn_broadcast_duplicate_feature_ties(spark):
@@ -326,6 +346,9 @@ def test_knn_auto_probe_runs_one_job(spark, geo_pages):
         out = knn_join(geo_pages, feats, k=2)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker hears of a job through the listener bus, which
+    # can lag the action that ran it
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(sc.statusTracker().getJobIdsForGroup("knn-auto-probe")) == 1
     got = {(r.page_id, r.rank, r.feature_id, r.dist2) for r in out.collect()}
     want = {(r.page_id, r.rank, r.feature_id, r.dist2)

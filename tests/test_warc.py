@@ -5,11 +5,46 @@ extraction invariant."""
 
 from __future__ import annotations
 
+import gzip
+
 import pytest
 from pyspark.sql import functions as F
 
 from osm_spark.operators.textops import extract_text_col
 from osm_spark.sources import warc, warc_fixture as WF
+
+from kernel_oracles import iter_warc_index
+
+
+def _write_scaled(path: str, n_pages: int, text_repeat: int) -> str:
+    """``n_pages`` response records (html padded by ``text_repeat``
+    filler phrases), one gzip member per record, plus the ``.cdx`` side
+    file — the Common-Crawl layout at more than fixture size."""
+    filler = " lorem ipsum web text corpus segment" * text_repeat
+    with open(path, "wb") as f, open(path + ".cdx", "w") as cdx:
+        off = 0
+        for i in range(n_pages):
+            html = WF.page_html(f"page {i}{filler}", i)
+            http = (f"HTTP/1.1 200 OK\r\n"
+                    f"Content-Type: text/html; charset=utf-8\r\n"
+                    f"Content-Length: {len(html)}\r\n\r\n").encode() + html
+            rec = WF._record(
+                "response",
+                {"WARC-Target-URI": f"https://w{i % 997}.example/geo/"
+                                    f"{400000000 + i % 40000000}/"
+                                    f"{i % 40000000}/page{i}",
+                 "WARC-Date":
+                 f"2025-01-01T{i // 3600 % 24:02d}:"
+                 f"{i // 60 % 60:02d}:{i % 60:02d}Z",
+                 "WARC-Record-ID":
+                 f"<urn:uuid:00000000-0000-0000-0001-{i:012d}>",
+                 "Content-Type": "application/http; msgtype=response"},
+                http)
+            member = gzip.compress(rec, 1, mtime=0)
+            f.write(member)
+            cdx.write(f"{off} {len(member)}\n")
+            off += len(member)
+    return path
 
 
 @pytest.fixture(scope="module", params=["plain", "gz"])
@@ -59,11 +94,11 @@ def test_cdx_side_file_index_equivalent(spark, tmp_path):
     """A <path>.cdx side file (the production Common-Crawl layout)
     replaces the streaming member walk; decode output is identical."""
     p = WF.write_sample(str(tmp_path / "s.warc.gz"))
-    walked = list(warc.iter_warc_index(p))
+    walked = list(iter_warc_index(p))
     with open(p + ".cdx", "w") as f:
         for off, size, _c in walked:
             f.write(f"{off} {size}\n")
-    via_cdx = list(warc.iter_warc_index(p))
+    via_cdx = list(iter_warc_index(p))
     assert via_cdx == walked
     texts = warc.read_warc_pages(spark, p).select("url").collect()
     assert len(texts) == len(WF.expected_pages())
@@ -74,7 +109,7 @@ def test_cdx_extra_and_short_tokens(spark, tmp_path):
     driver walker; short/garbage lines are dropped, not NULL rows that
     crash the decoder."""
     p = WF.write_sample(str(tmp_path / "s.warc.gz"))
-    walked = list(warc.iter_warc_index(p))
+    walked = list(iter_warc_index(p))
     with open(p + ".cdx", "w") as f:
         for off, size, _c in walked:
             f.write(f"{off} {size} sha1:ABCDEF example.org/x\n")
@@ -110,7 +145,7 @@ def test_stream_warc_pages_landing_dir(spark, tmp_path):
     for k in range(2):
         p = str(land / f"crawl{k}.warc.gz")
         WF.write_sample(p)
-        walked = list(warc.iter_warc_index(p))   # before the cdx exists
+        walked = list(iter_warc_index(p))   # before the cdx exists
         with open(p + ".cdx", "w") as f:
             for off, size, _c in walked:
                 f.write(f"{off} {size}\n")
@@ -192,7 +227,7 @@ def test_stream_spatial_join_tile_counts_match_batch(spark, tmp_path):
     for k in range(2):
         p = str(land / f"crawl{k}.warc.gz")
         WF.write_sample(p)
-        walked = list(warc.iter_warc_index(p))  # before the cdx exists
+        walked = list(iter_warc_index(p))  # before the cdx exists
         with open(p + ".cdx", "w") as f:
             for off, size, _c in walked:
                 f.write(f"{off} {size}\n")
@@ -242,7 +277,7 @@ def test_empty_cdx_side_file_distrusted(spark, tmp_path):
     p = str(tmp_path / "part.warc.gz")
     WF.write_sample(p)
     open(p + ".cdx", "w").close()   # truncated side file
-    walked = list(warc.iter_warc_index(p))
+    walked = list(iter_warc_index(p))
     assert len(walked) == 1 + 2 * WF.N_PAGES  # warcinfo + req/resp per page
     assert warc.warc_index(spark, p).count() == len(walked)
     assert warc.read_warc_pages(spark, p).count() > 0
@@ -255,7 +290,7 @@ def test_malformed_cdx_side_file_distrusted(spark, tmp_path):
     WF.write_sample(p)
     with open(p + ".cdx", "w") as f:
         f.write("garbage lines\nnot numbers here\n")
-    walked = list(warc.iter_warc_index(p))
+    walked = list(iter_warc_index(p))
     assert len(walked) == 1 + 2 * WF.N_PAGES
     assert warc.warc_index(spark, p).count() == len(walked)
 
@@ -268,13 +303,13 @@ def test_partially_malformed_cdx_distrusted(spark, tmp_path):
     the corrupt line sits mid-file, past any head-of-file check."""
     p = str(tmp_path / "partial.warc.gz")
     WF.write_sample(p)
-    good = list(warc.iter_warc_index(p))
+    good = list(iter_warc_index(p))
     assert len(good) == 1 + 2 * WF.N_PAGES
     lines = [f"{o} {s}" for o, s, _ in good]
     lines[len(lines) // 2] = "99x9 480"           # one bit-corrupted line
     with open(p + ".cdx", "w") as f:
         f.write("\n".join(lines) + "\n")
-    assert list(warc.iter_warc_index(p)) == good
+    assert list(iter_warc_index(p)) == good
     assert warc.warc_index(spark, p).count() == len(good)
 
 
@@ -283,12 +318,12 @@ def test_cdx_out_of_range_line_distrusted(spark, tmp_path, bad):
     """A negative or int64-overflowing cdx number distrusts the side
     file like any other malformed line (walk; zero records lost)."""
     p = WF.write_sample(str(tmp_path / "oor.warc.gz"))
-    good = list(warc.iter_warc_index(p))
+    good = list(iter_warc_index(p))
     lines = [f"{o} {s}" for o, s, _ in good]
     lines[1] = bad
     with open(p + ".cdx", "w") as f:
         f.write("\n".join(lines) + "\n")
-    assert list(warc.iter_warc_index(p)) == good
+    assert list(iter_warc_index(p)) == good
     assert warc.warc_index(spark, p).count() == len(good)
 
 
@@ -333,10 +368,10 @@ def test_distributed_gz_walk_matches_serial(spark, tmp_path, monkeypatch):
     """Chunked member-resync walk (ranges + magic verify) must produce
     exactly the serial walker's (offset, size) set."""
     p = str(tmp_path / "dist.warc.gz")
-    WF.write_scaled(p, n_pages=300, text_repeat=3)
+    _write_scaled(p, n_pages=300, text_repeat=3)
     import os as _os
     _os.remove(p + ".cdx") if _os.path.exists(p + ".cdx") else None
-    serial = {(o, s) for o, s, _ in warc.iter_warc_index(p)}
+    serial = {(o, s) for o, s, _ in iter_warc_index(p)}
     # chunk far smaller than the file so many ranges must resync
     fsize = _os.path.getsize(p)
     monkeypatch.setattr(warc, "_WALK_CHUNK", max(fsize // 7, 1024))
@@ -380,7 +415,7 @@ def test_plain_index_walk_bad_content_length_raises(tmp_path, name):
     p = tmp_path / "bad.warc"
     p.write_bytes(_BAD_RECORDS[name] + b"\r\n\r\n")
     with pytest.raises(ValueError, match="Content-Length"):
-        list(warc.iter_warc_index(str(p)))
+        list(iter_warc_index(str(p)))
 
 
 def test_plain_index_walk_content_length_past_eof_raises(tmp_path):
@@ -391,7 +426,7 @@ def test_plain_index_walk_content_length_past_eof_raises(tmp_path):
         p.write_bytes(b"WARC/1.0\r\nContent-Length: " + clen.encode()
                       + b"\r\n\r\nbody\r\n\r\n")
         with pytest.raises(ValueError, match="past the end"):
-            list(warc.iter_warc_index(str(p)))
+            list(iter_warc_index(str(p)))
 
 
 def _flip(path: str, at: int, n: int) -> None:
@@ -406,10 +441,10 @@ def test_gz_walk_corrupt_member_raises_value_error(tmp_path):
     """The serial gzip walk names the corrupt member's offset in a
     ValueError (not a bare zlib.error)."""
     p = WF.write_sample(str(tmp_path / "c.warc.gz"))
-    off, size, _ = list(warc.iter_warc_index(p))[3]
+    off, size, _ = list(iter_warc_index(p))[3]
     _flip(p, off + size // 2, 20)
     with pytest.raises(ValueError, match=f"offset {off}"):
-        list(warc.iter_warc_index(p))
+        list(iter_warc_index(p))
 
 
 @pytest.mark.parametrize("case", ["corrupt_member", "size_cuts_member"])
@@ -419,7 +454,7 @@ def test_decode_bad_member_raises_value_error(tmp_path, case):
     import pandas as pd
 
     p = WF.write_sample(str(tmp_path / "d.warc.gz"))
-    off, size, _ = list(warc.iter_warc_index(p))[3]
+    off, size, _ = list(iter_warc_index(p))[3]
     if case == "corrupt_member":
         _flip(p, off + size // 2, 20)
     else:
@@ -434,9 +469,9 @@ def test_decode_bad_member_raises_value_error(tmp_path, case):
 def scaled_gz(tmp_path):
     """(path, cdx rows) of a 301-record .warc.gz; its cdx side file
     exists."""
-    p = WF.write_scaled(str(tmp_path / "sc.warc.gz"), n_pages=301,
-                        text_repeat=3)
-    return p, list(warc.iter_warc_index(p))
+    p = _write_scaled(str(tmp_path / "sc.warc.gz"), n_pages=301,
+                      text_repeat=3)
+    return p, list(iter_warc_index(p))
 
 
 def test_decode_plan_has_no_exchange(spark, scaled_gz):

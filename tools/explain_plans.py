@@ -99,10 +99,9 @@ def main():
         "row-group pruning.  The polygon side never shuffles and is "
         "bounded by disk, not executor memory; salt spreads hot cells "
         "at the cost of duplicate layer reads, never shuffle bytes.  "
-        "Layers above the broadcast limit (`broadcast_polys=None` "
-        "measures the vertex count and broadcasts below ~2M vertices) "
-        "take this path; without a `layer_path`, `spatial_join` first "
-        "writes the layer to a scratch directory.",
+        "`spatial_join` measures the layer's vertex count and broadcasts "
+        "up to `BROADCAST_MAX_VERTS` (2M); a larger layer takes this "
+        "path, after `spatial_join` writes it to a scratch directory.",
         must_contain=("Exchange", "MapInArrow", "REPARTITION_BY_COL"),
         must_not=("EvalPython",),
     )
