@@ -7,33 +7,35 @@ cell neighborhoods + exact re-check, instead of a priority queue.
 Metric: squared planar fixed-point distance
 ``d2 = (lat-flat)^2 + (lon-flon)^2`` (int64, exact — so results are
 reproducible bit-for-bit across engines).  A haversine re-rank UDF can
-be layered on top when a metric in meters is needed.
+be layered on top when a metric in meters is needed.  A point or
+feature with a NULL ``lat`` or ``lon`` matches nothing.
 
 Two scale paths, chosen from the measured feature count:
 
 - up to ``BROADCAST_FEATURE_LIMIT`` features, the layer itself is the
   broadcast (three int64 arrays, ≤ 4.8 MB) and points stream through
   one numpy block kernel (``_knn_block``);
-- above it, the cell-ring path.  Round 0 registers every feature in
-  every cell within Chebyshev radius R of its own and broadcasts that:
-  (2R+1)² rows of five longs per feature, so its memory grows with the
-  layer (≥ 5M rows at R=2 on any layer past the limit) and is not
-  bounded by a constant.
+- above it, the cell-ring path: rounds at radius R, 2R, 4R, … in which
+  the still-uncertified POINTS explode into the cells within Chebyshev
+  radius r of their own and equi-join the features keyed at their own
+  cell.  The feature side never explodes.
 
-Exactness guarantee of the cell path: a query point whose best
-candidate lies strictly closer than ``R * cell_min`` (the smallest cell
-dimension in fixed-point units) cannot be beaten by any unregistered
-feature (those are ≥ R cells away).  Points that fail that bound — or
-found no candidate at all — retry through expanding rings (radius
-doubles each round, reference rtree.ml best-first analog): the
-still-uncertified POINTS explode into the wider ring and equi-join
-features keyed at their own cell, so the feature side never re-explodes
-or re-broadcasts.  Only a guarded-small final residue takes a brute
-pass, and that pass broadcasts the RESIDUE POINTS (at most
-``BRUTE_RESIDUE_LIMIT``) and streams features through the same block
-kernel with per-batch partial top-k.  At production scale the fallback
-fraction is tuned to ~0 by picking ``cell_zoom``/``radius`` from the
-feature density histogram.
+Memory bound: no path force-broadcasts anything that grows with the
+feature layer.  The driver holds at most the probe's
+``BROADCAST_FEATURE_LIMIT`` + 1 collected feature rows and the
+residue's ``BRUTE_RESIDUE_LIMIT`` + 1 points; any other broadcast is
+the planner's (or AQE's) own, under ``autoBroadcastJoinThreshold``.
+
+Exactness guarantee of the cell path: a query point whose k-th
+candidate lies strictly closer than ``r * cell_min`` (the smallest cell
+dimension in fixed-point units) cannot be beaten by any feature outside
+its ring (those are ≥ r cells away).  Points that fail that bound — or
+found fewer than k candidates — go to the next round (radius doubles,
+reference rtree.ml best-first analog).  Only a guarded-small final
+residue takes a brute pass, and that pass broadcasts the RESIDUE POINTS
+(at most ``BRUTE_RESIDUE_LIMIT``) and streams features through the same
+block kernel with per-batch partial top-k.  The caller picks
+``cell_zoom``/``radius`` so that the residue stays small.
 """
 
 from __future__ import annotations
@@ -68,16 +70,16 @@ def _rank_topk(cand: DataFrame, key: str, k: int) -> DataFrame:
                                   "flat", "flon", f"{_DIST2_SQL} AS dist2"), key, k)
 
 
-def cell_min_extent(cell_zoom: int, lat_min_fp: int, lat_max_fp: int,
-                    pad: int = 1) -> int:
+def _cell_min_extent(cell_zoom: int, lat_min_fp: int, lat_max_fp: int,
+                     radius: int) -> int:
     """Smallest cell dimension (fp units) over the latitude range,
-    padded ``pad`` rows each way.  Certification must pass
-    ``pad=radius``: the separating band between a point and the nearest
-    UNREGISTERED feature spans up to ``radius`` rows beyond the point's
-    own, and mercator rows shrink (in latitude units) toward the poles,
-    so a 1-row pad would overestimate the bound and falsely certify."""
+    padded ``radius`` rows each way: the separating band between a point
+    and the nearest feature outside its ring spans up to ``radius`` rows
+    beyond the point's own, and mercator rows shrink (in latitude units)
+    toward the poles, so a smaller pad would overestimate the bound and
+    falsely certify."""
     rows, bounds = K.tile_y_boundaries(cell_zoom, lat_min_fp, lat_max_fp,
-                                       pad=pad)
+                                       pad=radius)
     h = min(hi - lo for hi, lo in zip(bounds, bounds[1:]))
     w = K.LON_WORLD // (1 << cell_zoom)
     return min(h, w)
@@ -179,11 +181,12 @@ def _knn_broadcast_frame(points: DataFrame, feats, k: int,
     lat, lon) frame: the feature arrays ship to each executor once and
     every point batch runs ``_knn_block`` against them.  Zero shuffles,
     zero joins."""
-    bc = points.sparkSession.sparkContext.broadcast(
-        tuple(_cols(feats, "feature_id", "lat", "lon")))
+    bc = points.sparkSession.sparkContext.broadcast(tuple(_cols(
+        feats.dropna(subset=["lat", "lon"]), "feature_id", "lat", "lon")))
 
     def fn(batches):
         for pdf in batches:
+            pdf = pdf.dropna(subset=["lat", "lon"])
             yield _knn_block(pdf.iloc[:, 0].to_numpy(),
                              *_cols(pdf, "lat", "lon"), *bc.value, k)
 
@@ -227,6 +230,11 @@ def _ring(df: DataFrame, radius: int, cell_zoom: int) -> DataFrame:
     ).selectExpr(*(shifted.get(c, sql_name(c)) for c in df.columns))
 
 
+def _located(df: DataFrame) -> DataFrame:
+    """The rows of ``df`` with both coordinates set."""
+    return df.where("lat IS NOT NULL AND lon IS NOT NULL")
+
+
 def _cell_frames(points: DataFrame, features: DataFrame, cell_zoom: int,
                  key: str):
     """(points, features) keyed by their cell (cx, cy); features carry
@@ -236,24 +244,6 @@ def _cell_frames(points: DataFrame, features: DataFrame, cell_zoom: int,
             f"{tile_y_sql('lat', cell_zoom)} AS cy")
     return (points.selectExpr(sql_name(key), "lat", "lon", *cell),
             features.selectExpr("feature_id", "lat AS flat", "lon AS flon", *cell))
-
-
-def _first_candidates(pts: DataFrame, feats: DataFrame, radius: int,
-                      cell_zoom: int) -> DataFrame:
-    """Round-0 candidates: the features, registered in their ring,
-    broadcast ((2*radius+1)² rows per feature) and equi-joined with the
-    points at the points' own cell — pages never shuffle."""
-    return pts.join(F.broadcast(_ring(feats, radius, cell_zoom)),
-                    ["cx", "cy"], "inner")
-
-
-def _ring_candidates(pts: DataFrame, feats: DataFrame, radius: int,
-                     cell_zoom: int) -> DataFrame:
-    """Retry-round candidates: explode the (small, uncertified) POINT
-    side into the Chebyshev ring and equi-join features keyed at their
-    own cell — same candidate set as feature-side registration at the
-    same radius, but the big side never re-explodes or broadcasts."""
-    return _ring(pts, radius, cell_zoom).join(feats, ["cx", "cy"], "inner")
 
 
 def knn_join(
@@ -278,7 +268,7 @@ def knn_join(
     brute itself never broadcasts the feature layer (see
     _residue_brute).  ``2*radius + 1 < 2**cell_zoom`` is required (else
     ``ValueError``): a wider ring wraps onto itself at the antimeridian
-    and would register a feature twice in one cell."""
+    and would pair a point with the same feature twice."""
     if 2 * radius + 1 >= (1 << cell_zoom):
         raise ValueError(
             f"knn_join: radius={radius} needs 2*radius + 1 < 2**cell_zoom, "
@@ -290,51 +280,35 @@ def knn_join(
     if len(probe) <= BROADCAST_FEATURE_LIMIT:
         return _knn_broadcast_frame(points, probe, k, key)
 
+    points, features = _located(points), _located(features)
     pts, feats = _cell_frames(points, features, cell_zoom, key)
-    out_cols = (sql_name(key), "feature_id", "dist2", "rank")
+    # certification bound (see module docstring): the global lat range
+    # shrinks cell_min, never inflates it; with no points, any range does
+    lo, hi = pts.selectExpr("min(lat)", "max(lat)").collect()[0]
+    lat_lo, lat_hi = (0, 0) if lo is None else (int(lo), int(hi))
 
-    def ranked_round(cand: DataFrame) -> DataFrame:
-        # each round's ranked frame is consumed three times (certification
-        # agg, left_semi keep, left_anti carry-over) and the residue guard
-        # below drives the whole cascade eagerly — truncate lineage per
-        # round so those uses and the caller's action share one
-        # materialization (same per-round idiom as CH contraction)
-        return _rank_topk(cand, key, k).localCheckpoint(eager=False)
-
-    ranked = ranked_round(_first_candidates(pts, feats, radius, cell_zoom))
-
-    # certification bound (see module docstring)
-    stats = points.selectExpr("min(lat)", "max(lat)").collect()[0]
-    if stats[0] is None:          # no points: nothing to certify
-        return ranked.selectExpr(*out_cols)
-    lat_lo, lat_hi = int(stats[0]), int(stats[1])
-
-    def certified_keys(ranked_df: DataFrame, r: int) -> DataFrame:
-        # conservative: global lat range shrinks cell_min, never inflates
-        bound = r * cell_min_extent(cell_zoom, lat_lo, lat_hi, pad=r)
-        kth = ranked_df.groupBy(key).agg(
-            F.expr("max(dist2) AS kth_d2"), F.expr("count(*) AS n_cand"))
-        return kth.filter(
-            (F.col("n_cand") >= k) & (F.col("kth_d2") < bound * bound)
-        ).selectExpr(sql_name(key))
-
-    # expanding rings (reference rtree.ml:209-258 best-first analog):
-    # each round, only still-uncertified points re-enter at doubled
-    # radius; the certified-key joins are left to AQE (it broadcasts
-    # small runtime sides itself — no forced broadcast of a key set
-    # whose size we can't bound at 10^12 pages)
-    ck = certified_keys(ranked, radius)
-    parts = [ranked.join(ck, key, "left_semi")]
-    remaining = pts.join(ck, key, "left_anti")
-    r = radius
-    for _ in range(MAX_EXPANSIONS):
-        r *= 2
+    # one round per radius r = radius, 2·radius, … (reference
+    # rtree.ml:209-258 best-first analog).  Each round's ranked frame is
+    # consumed three times (certification agg, left_semi keep, left_anti
+    # carry-over) and the residue guard below drives the whole cascade
+    # eagerly — truncate lineage per round so those uses and the caller's
+    # action share one materialization (same per-round idiom as CH
+    # contraction).  The certified-key joins are left to AQE (it
+    # broadcasts small runtime sides itself — no forced broadcast of a
+    # key set whose size we can't bound at 10^12 pages).
+    parts, remaining = [], pts
+    for i in range(1 + MAX_EXPANSIONS):
+        r = radius << i
         if 2 * r + 1 >= (1 << cell_zoom):
             break  # ring would wrap onto itself; residue pass is exact
-        ranked_r = ranked_round(
-            _ring_candidates(remaining, feats, r, cell_zoom))
-        ck = certified_keys(ranked_r, r)
-        parts.append(ranked_r.join(ck, key, "left_semi"))
+        cand = _ring(remaining, r, cell_zoom).join(feats, ["cx", "cy"], "inner")
+        ranked = _rank_topk(cand, key, k).localCheckpoint(eager=False)
+        bound = r * _cell_min_extent(cell_zoom, lat_lo, lat_hi, r)
+        kth = ranked.groupBy(key).agg(F.expr("max(dist2) AS kth_d2"),
+                                      F.expr("count(*) AS n_cand"))
+        ck = kth.filter(f"n_cand >= {k} AND kth_d2 < {bound * bound}"
+                        ).selectExpr(sql_name(key))
+        parts.append(ranked.join(ck, key, "left_semi"))
         remaining = remaining.join(ck, key, "left_anti")
 
     residue_rows = remaining.selectExpr(sql_name(key), "lat", "lon").limit(
@@ -347,6 +321,7 @@ def knn_join(
             "cell_zoom instead of risking a quadratic brute pass")
     if residue_rows:
         parts.append(_residue_brute(features, residue_rows, k, key))
+    out_cols = (sql_name(key), "feature_id", "dist2", "rank")
     out = parts[0].selectExpr(*out_cols)
     for p in parts[1:]:
         out = out.unionByName(p.selectExpr(*out_cols))
@@ -357,7 +332,8 @@ def brute_force_knn(points: DataFrame, features: DataFrame,
                     k: int = 1) -> DataFrame:
     """Baseline: broadcast cross-join + window top-k of ``page_id``
     points (oracle path)."""
-    feats = features.selectExpr("feature_id", "lat AS flat", "lon AS flon")
-    cand = points.selectExpr("page_id", "lat", "lon").crossJoin(F.broadcast(feats))
+    feats = _located(features).selectExpr("feature_id", "lat AS flat", "lon AS flon")
+    cand = _located(points).selectExpr("page_id", "lat", "lon").crossJoin(
+        F.broadcast(feats))
     return _rank_topk(cand, "page_id", k).selectExpr(
         "page_id", "feature_id", "dist2", "rank")

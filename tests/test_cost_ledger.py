@@ -1,6 +1,8 @@
 """Driver cost ledger: how many py4j round trips and Spark jobs each
-geo_tag operator call, and each routing call (``contract`` with one
-distributed round, ``ch_batch_routes``), costs on the driver.
+geo_tag operator call, the same ``knn_join`` call on its large-layer
+cell-ring path (``knn_join_cells``), and each routing call
+(``contract`` with one distributed round, ``ch_batch_routes``), costs on
+the driver.
 
 Every ``Column``/``DataFrame`` method call is at least one Python->JVM
 round trip, and building a plan out of hundreds of them was most of the
@@ -21,9 +23,10 @@ first answer to "is DataFrame debugging on" (each ``functions.*`` /
 ``Column`` call then records its call site over py4j), and a call made
 with no active session caches "off"; the test clears that cache so the
 counts follow the session's setting (Spark's default, on).  ``contract``
-runs one distributed round's stages per round (47 jobs on grid 6), so
-its count waits for the listener bus to drain before reading the job
-group.
+runs one distributed round's stages per round (47 jobs on grid 6), and
+``knn_join_cells`` runs its ring rounds and residue pass inside the
+call (its residue guard collects), so each count waits for the listener
+bus to drain before reading the job group.
 """
 
 from __future__ import annotations
@@ -37,6 +40,7 @@ import pyspark.errors.utils
 from py4j.clientserver import ClientServerConnection
 
 from osm_spark import fixtures as FX
+from osm_spark.operators import knn as KNN
 from osm_spark.operators import routing as RT
 from osm_spark.operators import tiles as T
 from osm_spark.operators.geocode import geocode_ids, geocode_pages
@@ -96,10 +100,18 @@ def _contract(edges, monkeypatch):
         return RT.contract(edges)
 
 
+def _knn_cells(geo, feats, monkeypatch):
+    """geo_tag's ``knn_join`` call with the broadcast limit just under
+    the layer, so the cell-ring path answers it."""
+    with monkeypatch.context() as m:
+        m.setattr(KNN, "BROADCAST_FEATURE_LIMIT", N_FEATS - 1)
+        return knn_join(geo, feats, k=1, cell_zoom=8, radius=2)
+
+
 def _calls(spark, tmp: Path, monkeypatch) -> dict:
-    """The geo_tag steps (``perfbench/workloads.py``) and the routing
-    calls, each as a thunk over the small fixtures; inputs are built
-    outside the thunks."""
+    """The geo_tag steps (``perfbench/workloads.py``), its ``knn_join``
+    step on the cell-ring path, and the routing calls, each as a thunk
+    over the small fixtures; inputs are built outside the thunks."""
     pages = pages_df(spark, N_PAGES)
     polys = FX.polygons_df(spark, N_SMALL)
     geo = geocode_pages(pages).select("page_id", "lat", "lon")
@@ -121,6 +133,7 @@ def _calls(spark, tmp: Path, monkeypatch) -> dict:
         "spatial_join": lambda: spatial_join(geo, polys, how="left", index=index),
         "page_tiles": lambda: T.page_tiles(geo),
         "knn_join": lambda: knn_join(geo, feats, k=1, cell_zoom=8, radius=2),
+        "knn_join_cells": lambda: _knn_cells(geo, feats, monkeypatch),
         "feature_tiles": lambda: T.feature_tiles(polys),
         "write_partitioned_layer": lambda: write_partitioned_layer(
             polys, str(tmp / "layer_w"), n_files=8),

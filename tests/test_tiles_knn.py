@@ -282,6 +282,29 @@ def test_knn_join_empty_points_exact(spark, monkeypatch):
     assert out.count() == 0
 
 
+@pytest.mark.parametrize("limits", [{}, {"BROADCAST_FEATURE_LIMIT": 0}],
+                         ids=["broadcast", "cells"])
+def test_knn_null_coordinates_match_nothing(spark, monkeypatch, limits):
+    """``geocode_pages`` emits NULL coordinates for pages it cannot place:
+    such a point gets no row, and such a feature is never a candidate
+    (not ranked as if it sat at 0, nor cast from NaN to int64), on every
+    path and in the brute-force oracle."""
+    for name, value in limits.items():
+        monkeypatch.setattr(KNN, name, value)
+    pts = spark.createDataFrame(
+        [(1, 0, 0), (2, None, 0), (3, 0, None), (4, None, None)],
+        "page_id long, lat long, lon long")
+    feats = spark.createDataFrame(
+        [(10, 0, 5), (11, None, 0), (12, 0, None), (13, 0, 10)],
+        "feature_id long, lat long, lon long")
+    want = {(1, 1, 10, 25), (1, 2, 13, 100)}
+    got = {(r.page_id, r.rank, r.feature_id, r.dist2)
+           for r in knn_join(pts, feats, k=2).collect()}
+    assert got == want
+    assert {(r.page_id, r.rank, r.feature_id, r.dist2)
+            for r in brute_force_knn(pts, feats, k=2).collect()} == want
+
+
 def test_knn_point_at_exact_antimeridian(spark, monkeypatch):
     """lon = +180 deg exactly: the point's cell wraps to column 0 and
     still finds the feature registered across the seam."""

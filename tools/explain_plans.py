@@ -191,35 +191,39 @@ def main():
         must_contain=("AdaptiveSparkPlan",), must_not=("CartesianProduct",),
     )
 
-    # 4. kNN cell path, one unfolded piece of each kind: knn_join
-    # checkpoints every round, so its own plan shows checkpoint scans
+    # 4. kNN cell path, one unfolded piece of each kind (a ring round,
+    # the residue pass): knn_join checkpoints every round, so its own
+    # plan shows checkpoint scans
     from osm_spark.operators import knn as KNN
 
     feats = geocode_ids(spark.range(64).withColumnRenamed("id", "feature_id"),
                         "feature_id")
     pts, cfeats = KNN._cell_frames(geo, feats, 8, "doc_id")
     no_brute = ("CartesianProduct", "BroadcastNestedLoopJoin")
+    # planned with autoBroadcastJoinThreshold off (the 64-feature
+    # fixture would be broadcast under it): only a forced broadcast
+    # could remain
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     section(
-        "kNN — cell path, round 0",
-        KNN._rank_topk(KNN._first_candidates(pts, cfeats, 1, 8), "doc_id", 1),
-        "Features register in every cell within Chebyshev radius R of "
-        "their own and broadcast (`BroadcastExchange` + "
-        "BroadcastHashJoin); pages never shuffle for candidate "
-        "generation, and the only wide op is the per-point top-k window.  "
-        "Memory bound: the broadcast holds (2R+1)² rows of five longs per "
-        "feature, so it grows with the layer — this path runs only above "
-        "`BROADCAST_FEATURE_LIMIT` (200k features), i.e. ≥ 5M rows at "
-        "R=2.",
-        must_contain=("BroadcastHashJoin",), must_not=no_brute,
+        "kNN — cell path, ring round",
+        KNN._rank_topk(KNN._ring(pts, 2, 8).join(cfeats, ["cx", "cy"], "inner"),
+                       "doc_id", 1),
+        "Every round, the first included, has this shape: the "
+        "still-uncertified points explode into the cells within "
+        "Chebyshev radius r of their own (`Generate`) and equi-join the "
+        "features keyed at their own cell, then a window keeps each "
+        "point's top k.  The feature side never explodes, and nothing "
+        "sized by the layer is force-broadcast.  Planned with "
+        "`autoBroadcastJoinThreshold=-1`, so that only a forced "
+        "broadcast could show: there is no `BroadcastExchange` and both "
+        "sides shuffle.  Under the default threshold the planner (or "
+        "AQE, from a side's runtime size) may still broadcast a small "
+        "side itself.",
+        must_contain=("Generate",),
+        must_not=no_brute + ("BroadcastExchange",),
     )
-    section(
-        "kNN — cell path, one retry round",
-        KNN._rank_topk(KNN._ring_candidates(pts, cfeats, 2, 8), "doc_id", 1),
-        "Uncertified points explode into the doubled ring and equi-join "
-        "the features keyed at their own cell; the feature side never "
-        "re-explodes or re-broadcasts.",
-        must_not=no_brute,
-    )
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     section(
         "kNN — residue pass",
         KNN._residue_brute(feats, geo.select("doc_id", "lat", "lon")
