@@ -6,15 +6,15 @@ delta decode, 269-290 ways, 331-357 relations;
 /root/reference/generic/protobuf.ml wire decoder) — built from the
 public PBF/protobuf wire format, not a port:
 
-1. ``blob_index`` — ONE cheap sequential metadata pass over the file
-   reads only the 4-byte header lengths + BlobHeaders and seeks past
-   the payloads, yielding a (offset, size, type) DataFrame.  For a
+1. ``iter_blob_index`` — ONE cheap sequential metadata pass over the
+   file reads only the 4-byte header lengths + BlobHeaders and seeks
+   past the payloads, yielding (type, offset, size) per blob.  For a
    planet file (~70 GB, ~100k blobs) this touches a few MB.
-2. ``decode_blocks`` — mapInPandas over the index: every executor
-   opens the file, range-reads ITS blobs, zlib-inflates and decodes
-   them with numpy-vectorized varint kernels.  Decode parallelism ==
-   blob count, the same unit of work the PBF format itself defines.
-   (On object stores the open+seek becomes a ranged GET — same shape.)
+2. ``decode_blocks`` — mapInPandas over the OSMData blobs' offset
+   index (contiguous slices, no exchange): every task span-reads ITS
+   blobs, zlib-inflates and decodes them with numpy-vectorized varint
+   kernels.  Index, reads and opener are the byte-range skeleton of
+   ``sources/ranges.py`` (ranged GETs on object stores).
 3. ``pbf_tables`` — split the single union-schema decode output into
    the normalized base tables of SURVEY.md §1.2 (nodes, tags, ways,
    way_refs, relations, members).  One decode pass, cache-friendly.
@@ -35,6 +35,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from osm_spark.sources import ranges as R
+
 # ---------------------------------------------------------------------------
 # protobuf wire format (public spec) — minimal decoder
 
@@ -53,26 +55,33 @@ def _uvarint(b, i: int) -> tuple[int, int]:
 
 def fields(b) -> dict[int, list]:
     """tag -> values (ints for varint/fixed, bytes slices for
-    length-delimited)."""
+    length-delimited).  ``ValueError`` naming the byte offset of a
+    field that is truncated or has an unsupported wire type."""
     out: dict[int, list] = {}
     i, n = 0, len(b)
     while i < n:
-        k, i = _uvarint(b, i)
-        tag, wt = k >> 3, k & 7
-        if wt == 0:
-            v, i = _uvarint(b, i)
-        elif wt == 2:
-            ln, i = _uvarint(b, i)
-            v = b[i:i + ln]
-            i += ln
-        elif wt == 5:
-            v = int.from_bytes(b[i:i + 4], "little")
-            i += 4
-        elif wt == 1:
-            v = int.from_bytes(b[i:i + 8], "little")
-            i += 8
-        else:  # pragma: no cover - malformed input
-            raise ValueError(f"unsupported wire type {wt}")
+        at = i
+        try:
+            k, i = _uvarint(b, i)
+            tag, wt = k >> 3, k & 7
+            if wt == 0:
+                v, i = _uvarint(b, i)
+            elif wt == 2:
+                ln, i = _uvarint(b, i)
+                v = b[i:i + ln]
+                i += ln
+            elif wt == 5:
+                v = int.from_bytes(b[i:i + 4], "little")
+                i += 4
+            elif wt == 1:
+                v = int.from_bytes(b[i:i + 8], "little")
+                i += 8
+            else:
+                raise ValueError(f"unsupported wire type {wt} at byte {at}")
+        except IndexError:
+            i = n + 1
+        if i > n:
+            raise ValueError(f"truncated protobuf field at byte {at}")
         out.setdefault(tag, []).append(v)
     return out
 
@@ -132,33 +141,39 @@ def decode_packed_many(bufs: list, signed: bool, delta: bool = False):
 def iter_blob_index(path: str):
     """Yield (type, data_offset, data_size) per blob — metadata-only
     sequential pass (4-byte big-endian header length, BlobHeader, seek
-    past the Blob payload; parser.ml:67-84 framing)."""
-    with open(path, "rb") as f:
-        while True:
+    past the Blob payload; parser.ml:67-84 framing).  ``ValueError``
+    naming the offset of a header or payload that runs past the end of
+    the file, or of a BlobHeader without a type or datasize."""
+    fsize = R.file_size(path)
+    with R.open_input(path) as f:
+        off = 0
+        while off < fsize:
             hl = f.read(4)
-            if len(hl) < 4:
-                return
-            m = fields(f.read(int.from_bytes(hl, "big")))
-            typ = bytes(m[1][0]).decode()
-            datasize = m[3][0]
-            off = f.tell()
-            yield typ, off, datasize
-            f.seek(off + datasize)
+            n = int.from_bytes(hl, "big")
+            if len(hl) < 4 or off + 4 + n > fsize:
+                raise ValueError(f"BlobHeader at offset {off} of {path} "
+                                 "runs past the end of the file")
+            m = fields(f.read(n))
+            typ, datasize = m.get(1, [None])[0], m.get(3, [None])[0]
+            if not isinstance(typ, bytes) or not isinstance(datasize, int):
+                raise ValueError(f"BlobHeader at offset {off} of {path} "
+                                 "has no type or datasize")
+            off += 4 + n
+            if off + datasize > fsize:
+                raise ValueError(f"blob at offset {off} of {path}: datasize "
+                                 f"{datasize} runs past the end of the file")
+            yield typ.decode(), off, datasize
+            off += datasize
+            f.seek(off)
 
 
-def blob_index(spark: SparkSession, path: str) -> DataFrame:
-    rows = [(t, o, s) for t, o, s in iter_blob_index(path)]
-    return spark.createDataFrame(rows, "type string, offset long, size long")
-
-
-def read_blob(f, offset: int, size: int) -> bytes:
-    """Range-read one Blob message and return its inflated payload.
+def read_blob(blob: bytes) -> bytes:
+    """One Blob message's inflated payload.
 
     Codecs: raw (field 1), zlib (3), lzma (4, stdlib); lz4 (6) and
     zstd (7) only if their libraries are importable — otherwise a
     clear error naming the codec instead of a bare KeyError."""
-    f.seek(offset)
-    m = fields(f.read(size))
+    m = fields(blob)
     if 1 in m:  # raw
         return bytes(m[1][0])
     raw_size = m.get(2, [16384])[0]    # optional hint, sizing only
@@ -271,11 +286,17 @@ class _Rows:
         return pd.DataFrame(cols)
 
 
+def _joined(fs: list[dict], tag: int) -> list[bytes]:
+    """Each message's ``tag`` field: a packed field may arrive as several
+    key-value chunks, and protobuf semantics are concatenation."""
+    return [b"".join(bytes(x) for x in f.get(tag, ())) for f in fs]
+
+
 def decode_block(data: bytes) -> pd.DataFrame:
     """One PrimitiveBlock -> union-schema DataFrame."""
     blk = fields(data)
-    strings = [bytes(s).decode("utf-8")
-               for s in fields(blk[1][0]).get(1, [])]
+    sarr = np.asarray([bytes(s).decode("utf-8")
+                       for s in fields(blk[1][0]).get(1, [])], dtype=object)
 
     def s64(u: int) -> int:  # plain int64 varint (offsets may be negative)
         return u - (1 << 64) if u >= (1 << 63) else u
@@ -284,14 +305,24 @@ def decode_block(data: bytes) -> pd.DataFrame:
     lat_off = s64(blk.get(19, [0])[0])
     lon_off = s64(blk.get(20, [0])[0])
     out = _Rows()
+
+    def entities(bufs: list, kind: int, tag_kind: int):
+        """Ways or relations, batch-decoded: their rows and their key/val
+        tag rows; returns the decoded messages and their ids."""
+        fs = [fields(b) for b in bufs]
+        ids = np.fromiter((f[1][0] for f in fs), np.int64, len(fs))
+        ks, kcnt, _ = decode_packed_many(_joined(fs, 2), signed=False)
+        vs, _, _ = decode_packed_many(_joined(fs, 3), signed=False)
+        out.add(len(ids), kind=kind, id=ids)
+        out.add(len(ks), kind=tag_kind, id=np.repeat(ids, kcnt),
+                key=list(sarr[ks]), val=list(sarr[vs]))
+        return fs, ids
+
     for grp_buf in blk.get(2, []):
         grp = fields(grp_buf)
         for dense_buf in grp.get(2, []):           # DenseNodes
             dn = fields(dense_buf)
-            # a packed field may arrive as several key-value chunks;
-            # protobuf semantics are concatenation (same as joined()
-            # on the ways/relations path)
-            cat = lambda tag: b"".join(bytes(x) for x in dn.get(tag, ()))
+            cat = lambda tag: _joined([dn], tag)[0]
             ids = np.cumsum(packed_sint64(cat(1)))
             lat = np.cumsum(packed_sint64(cat(8)))
             lon = np.cumsum(packed_sint64(cat(9)))
@@ -308,69 +339,47 @@ def decode_block(data: bytes) -> pd.DataFrame:
                 nz = np.nonzero(kv)[0]
                 pairs = nz.reshape(-1, 2) if len(nz) else nz.reshape(0, 2)
                 tag_node = node_of[pairs[:, 0]]
-                sarr = np.asarray(strings, dtype=object)
                 out.add(len(pairs), kind=KIND_NODE_TAG,
                         id=ids[tag_node],
                         key=list(sarr[kv[pairs[:, 0]]]),
                         val=list(sarr[kv[pairs[:, 1]]]))
-        way_bufs = grp.get(3, [])                   # Ways, batch-decoded
-        if way_bufs:
-            sarr = np.asarray(strings, dtype=object)
-            wfs = [fields(b) for b in way_bufs]
-
-            def joined(fs, tag):
-                return [b"".join(bytes(x) for x in f.get(tag, ()))
-                        for f in fs]
-
-            wids = np.fromiter((f[1][0] for f in wfs), np.int64, len(wfs))
-            out.add(len(wids), kind=KIND_WAY, id=wids)
+        if 3 in grp:                                # Ways
+            wfs, wids = entities(grp[3], KIND_WAY, KIND_WAY_TAG)
             refs, rcnt, seq = decode_packed_many(
-                joined(wfs, 8), signed=True, delta=True)
+                _joined(wfs, 8), signed=True, delta=True)
             out.add(len(refs), kind=KIND_WAY_REF,
                     id=np.repeat(wids, rcnt), ref=refs, seq=seq)
-            ks, kcnt, _ = decode_packed_many(joined(wfs, 2), signed=False)
-            vs, _, _ = decode_packed_many(joined(wfs, 3), signed=False)
-            out.add(len(ks), kind=KIND_WAY_TAG, id=np.repeat(wids, kcnt),
-                    key=list(sarr[ks]), val=list(sarr[vs]))
-        rel_bufs = grp.get(4, [])                   # Relations, batch-decoded
-        if rel_bufs:
-            sarr = np.asarray(strings, dtype=object)
-            rfs = [fields(b) for b in rel_bufs]
-
-            def joined(fs, tag):
-                return [b"".join(bytes(x) for x in f.get(tag, ()))
-                        for f in fs]
-
-            rids = np.fromiter((f[1][0] for f in rfs), np.int64, len(rfs))
-            out.add(len(rids), kind=KIND_REL, id=rids)
+        if 4 in grp:                                # Relations
+            rfs, rids = entities(grp[4], KIND_REL, KIND_REL_TAG)
             mids, mcnt, seq = decode_packed_many(
-                joined(rfs, 9), signed=True, delta=True)
-            types, _, _ = decode_packed_many(joined(rfs, 10), signed=False)
-            roles, _, _ = decode_packed_many(joined(rfs, 8), signed=False)
+                _joined(rfs, 9), signed=True, delta=True)
+            types, _, _ = decode_packed_many(_joined(rfs, 10), signed=False)
+            roles, _, _ = decode_packed_many(_joined(rfs, 8), signed=False)
             out.add(len(mids), kind=KIND_REL_MEMBER,
                     id=np.repeat(rids, mcnt), ref=mids, seq=seq,
                     mtype=types, role=list(sarr[roles]))
-            ks, kcnt, _ = decode_packed_many(joined(rfs, 2), signed=False)
-            vs, _, _ = decode_packed_many(joined(rfs, 3), signed=False)
-            out.add(len(ks), kind=KIND_REL_TAG, id=np.repeat(rids, kcnt),
-                    key=list(sarr[ks]), val=list(sarr[vs]))
     return out.frame()
 
 
 def decode_blocks(spark: SparkSession, path: str) -> DataFrame:
-    """Parallel decode: mapInPandas over the blob index; each worker
-    range-reads and decodes its own blobs."""
-    data = blob_index(spark, path).filter("type = 'OSMData'").select("offset", "size")
-    # spread blobs across workers (the index DF is tiny)
-    data = data.repartition(max(spark.sparkContext.defaultParallelism, 2))
+    """Parallel decode: mapInPandas over the OSMData blobs' offset
+    index; each task span-reads and decodes its own blobs."""
+    rows = [(o, n) for t, o, n in iter_blob_index(path) if t == "OSMData"]
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        with open(path, "rb") as f:
-            for pdf in batches:
-                for off, size in zip(pdf["offset"], pdf["size"]):
-                    yield decode_block(read_blob(f, int(off), int(size)))
+        for pdf in batches:
+            offs = pdf["offset"].to_numpy()
+            blobs = R.read_spans(path, offs, pdf["size"].to_numpy())
+            for off, blob in zip(offs, blobs):
+                try:
+                    frame = decode_block(read_blob(blob))
+                except (ValueError, zlib.error) as e:
+                    raise ValueError(
+                        f"blob at offset {off} of {path}: {e}") from e
+                yield frame
 
-    return data.mapInPandas(fn, DECODE_SCHEMA)
+    return R.offset_index(spark, rows, "offset long, size long") \
+        .mapInPandas(fn, DECODE_SCHEMA)
 
 
 def pbf_tables(decoded: DataFrame) -> dict[str, DataFrame]:

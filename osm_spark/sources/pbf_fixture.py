@@ -15,6 +15,7 @@ relations with typed members + roles.
 from __future__ import annotations
 
 import zlib
+from pathlib import Path
 
 # ---------------------------------------------------------------------------
 # deterministic content
@@ -202,10 +203,10 @@ def _sid(strings: list[str], s: str) -> int:
         return len(strings) - 1
 
 
-def _encode_data_blob(block: bytes) -> bytes:
+def _encode_blob(block: bytes, typ: bytes = b"OSMData") -> bytes:
     z = zlib.compress(block)
     blob = _f_varint(2, len(block)) + _f_bytes(3, z)
-    header = _f_bytes(1, b"OSMData") + _f_varint(3, len(blob))
+    header = _f_bytes(1, typ) + _f_varint(3, len(blob))
     return len(header).to_bytes(4, "big") + header + blob
 
 
@@ -229,7 +230,7 @@ def write_sample_pbf(path: str) -> None:
                  + _f_packed(9, _delta(lons), True)
                  + _f_packed(10, kv, False))
         group = _f_bytes(2, dense)
-        blobs.append(_encode_data_blob(_encode_block(
+        blobs.append(_encode_blob(_encode_block(
             strings, [group], b["granularity"], b["lat_off"], b["lon_off"])))
 
     strings = [""]
@@ -248,15 +249,8 @@ def write_sample_pbf(path: str) -> None:
         r += _f_packed(9, _delta([m for _, m, _ in members]), True)
         r += _f_packed(10, [mt for mt, _, _ in members], False)
         group += _f_bytes(4, r)
-    blobs.append(_encode_data_blob(_encode_block(strings, [group], 100, 0, 0)))
+    blobs.append(_encode_blob(_encode_block(strings, [group], 100, 0, 0)))
 
     hdr_block = _f_bytes(4, b"OsmSchema-V0.6") + _f_bytes(5, b"DenseNodes")
-    z = zlib.compress(hdr_block)
-    blob = _f_varint(2, len(hdr_block)) + _f_bytes(3, z)
-    header = _f_bytes(1, b"OSMHeader") + _f_varint(3, len(blob))
-    framing = len(header).to_bytes(4, "big") + header + blob
-
-    with open(path, "wb") as f:
-        f.write(framing)
-        for bl in blobs:
-            f.write(bl)
+    Path(path).write_bytes(_encode_blob(hdr_block, b"OSMHeader")
+                           + b"".join(blobs))

@@ -1,20 +1,18 @@
 """ESRI shapefile source: record index + parallel range-read decode.
 
-Paths are opened with plain ``open()`` — local or fuse/NFS-mounted
-storage; for object stores, mount or plug an fsspec-style opener.
-
 Re-expression of the reference's coastline reader
 (/root/reference/osm/coastline.ml:36-169) from the public shapefile
 spec, generalized: the reference handles only single-part PolyLine
 (type 3); this source reads PolyLine (3) and Polygon (5) with any part
-count.  Same two-stage shape as the PBF source:
+count.  Same two-stage shape as the PBF source, on the byte-range
+skeleton of ``sources/ranges.py`` (reads through ``pyarrow.fs``):
 
-1. ``shp_index`` — sequential metadata pass over record headers
-   (8 bytes each, content skipped by seek) -> (rec_num, offset, length)
-   DataFrame; uses the .shx offset index instead when present (one
-   read, no seeking).
-2. ``read_shp`` — mapInPandas over the index: executors range-read
-   and decode their own records into (rec_num, part, lats, lons) rows.
+1. ``iter_record_index`` — (offset, size, rec_num) per record from the
+   .shx offset index (one read), else from a pass over the .shp record
+   headers (8 bytes each, content skipped by seek).
+2. ``read_shp`` — mapInPandas over that index in contiguous offset
+   slices: each task span-reads and decodes its own records into
+   (rec_num, part, lats, lons) rows.
 
 Coordinates are degrees×1e7 fixed-point int64 (reference multiplies by
 1e7 and stays in floats, coastline.ml:135-140; we round to the
@@ -29,6 +27,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from osm_spark.sources import ranges as R
+
 MAGIC = 9994
 POINT, POLYLINE, POLYGON, MULTIPOINT = 1, 3, 5, 8
 # Z/M variants share the xy layout with their base type; the trailing
@@ -39,73 +39,86 @@ POLY_TYPES = {3, 5, 13, 15, 23, 25}
 FIXED = 10_000_000.0
 
 
-def _read_header(f) -> int:
-    hdr = f.read(100)
-    magic = struct.unpack(">i", hdr[0:4])[0]
-    if magic != MAGIC:
-        raise ValueError(f"not a shapefile (magic {magic})")
-    return struct.unpack("<i", hdr[32:36])[0]      # shape type
+def _check_header(hdr: bytes, path: str) -> None:
+    magic = int.from_bytes(hdr[:4], "big", signed=True)
+    if magic != MAGIC or len(hdr) < 100:
+        raise ValueError(f"{path}: not a shapefile header (magic {magic}, "
+                         f"{len(hdr)} bytes)")
 
 
 def iter_record_index(path: str):
-    """(rec_num, content_offset, content_bytes) per record —
-    header-only sequential pass."""
+    """(content_offset, content_bytes, rec_num) per record — from the
+    .shx, else a header-only sequential pass over the .shp.
+    ``ValueError`` naming the offset of a record header or content that
+    runs past the end of the .shp."""
     shx = path[:-4] + ".shx" if path.endswith(".shp") else None
-    import os
-
-    if shx and os.path.exists(shx):
-        with open(shx, "rb") as f:
-            _read_header(f)
+    fsize = R.file_size(path)
+    if shx and R.exists(shx):
+        with R.open_input(shx) as f:
             data = f.read()
+        _check_header(data, shx)
+        data = data[100:]
         # distrust a suspicious side file (same contract as warc.py's
         # empty-cdx rule): an empty or truncated .shx next to a
         # non-trivial .shp is a partial write — fall through to the
         # .shp record walk rather than silently dropping records
-        if len(data) % 8 == 0 and (
-                len(data) > 0 or os.path.getsize(path) <= 100):
-            for i in range(0, len(data), 8):
-                off_w, len_w = struct.unpack(">ii", data[i:i + 8])
-                yield i // 8 + 1, off_w * 2 + 8, len_w * 2
+        if len(data) % 8 == 0 and (len(data) > 0 or fsize <= 100):
+            for num, (off_w, len_w) in enumerate(
+                    struct.iter_unpack(">ii", data), start=1):
+                yield off_w * 2 + 8, len_w * 2, num
             return
-    with open(path, "rb") as f:
-        _read_header(f)
-        while True:
+    with R.open_input(path) as f:
+        _check_header(f.read(100), path)
+        off = 100
+        while off < fsize:
             rh = f.read(8)
-            if len(rh) < 8:
-                return
-            num, clen_w = struct.unpack(">ii", rh)
-            off = f.tell()
-            yield num, off, clen_w * 2
-            f.seek(off + clen_w * 2)
+            size = int.from_bytes(rh[4:], "big", signed=True) * 2
+            if len(rh) < 8 or size < 0 or off + 8 + size > fsize:
+                raise ValueError(f"shapefile record at offset {off} of "
+                                 f"{path} runs past the end of the file")
+            yield off + 8, size, int.from_bytes(rh[:4], "big", signed=True)
+            off += 8 + size
+            f.seek(off)
 
 
-def shp_index(spark: SparkSession, path: str) -> DataFrame:
-    rows = list(iter_record_index(path))
-    return spark.createDataFrame(rows, "rec_num int, offset long, length long")
+def _unpack(fmt: str, content: bytes, at: int) -> tuple:
+    try:
+        return struct.unpack_from(fmt, content, at)
+    except struct.error as e:
+        raise ValueError(f"truncated shape record at byte {at}") from e
 
 
 def decode_record(content: bytes) -> list[tuple[int, np.ndarray, np.ndarray]]:
-    """One record content -> [(part_idx, lat_fp, lon_fp)]."""
-    typ = struct.unpack("<i", content[0:4])[0]
+    """One record content -> [(part_idx, lat_fp, lon_fp)].
+    ``ValueError`` on truncated content, a negative count, or part
+    starts that are not ascending within the points."""
+    typ, = _unpack("<i", content, 0)
     if typ == 0:                                   # null shape
         return []
     if typ in POINT_TYPES:                         # x, y at offset 4
-        x, y = struct.unpack("<2d", content[4:20])
+        x, y = _unpack("<2d", content, 4)
         return [(0, np.array([round(y * FIXED)], np.int64),
                  np.array([round(x * FIXED)], np.int64))]
     if typ in MULTIPOINT_TYPES:                    # bbox, n, points
-        n = struct.unpack("<i", content[36:40])[0]
+        n, = _unpack("<i", content, 36)
+        if n < 0:
+            raise ValueError(f"negative point count {n} in shape record")
         pts = np.frombuffer(content, "<f8", n * 2, 40)
         return [(0, np.rint(pts[1::2] * FIXED).astype(np.int64),
                  np.rint(pts[0::2] * FIXED).astype(np.int64))]
     if typ not in POLY_TYPES:
         raise ValueError(f"unsupported shape type {typ}")
-    num_parts, num_points = struct.unpack("<ii", content[36:44])
+    num_parts, num_points = _unpack("<ii", content, 36)
+    if min(num_parts, num_points) < 0:
+        raise ValueError("negative part or point count in shape record")
     parts = np.frombuffer(content, "<i4", num_parts, 44)
     pts = np.frombuffer(content, "<f8", num_points * 2, 44 + 4 * num_parts)
     lon = np.rint(pts[0::2] * FIXED).astype(np.int64)
     lat = np.rint(pts[1::2] * FIXED).astype(np.int64)
     bounds = np.append(parts, num_points)
+    if len(parts) and (parts[0] < 0 or (np.diff(bounds) < 0).any()):
+        raise ValueError("shape record part starts are not ascending "
+                         "within its points")
     return [(i, lat[s:e], lon[s:e])
             for i, (s, e) in enumerate(zip(bounds[:-1], bounds[1:]))]
 
@@ -116,85 +129,29 @@ SHP_SCHEMA = "rec_num int, part int, lats array<long>, lons array<long>"
 def read_shp(spark: SparkSession, path: str) -> DataFrame:
     """Shapefile -> (rec_num, part, lats, lons) polyline/ring rows,
     decoded in parallel over the record index."""
-    index = shp_index(spark, path).repartition(max(spark.sparkContext.defaultParallelism, 2))
+    rows = list(iter_record_index(path))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        with open(path, "rb") as f:
-            for pdf in batches:
-                recs, parts, las, los = [], [], [], []
-                for num, off, ln in zip(pdf["rec_num"], pdf["offset"],
-                                        pdf["length"]):
-                    f.seek(int(off))
-                    for p, la, lo in decode_record(f.read(int(ln))):
-                        recs.append(int(num))
-                        parts.append(p)
-                        las.append(la.tolist())
-                        los.append(lo.tolist())
-                yield pd.DataFrame({
-                    "rec_num": pd.array(recs, dtype="int32"),
-                    "part": pd.array(parts, dtype="int32"),
-                    "lats": las, "lons": los,
-                })
+        for pdf in batches:
+            recs, parts, las, los = [], [], [], []
+            offs = pdf["offset"].to_numpy()
+            contents = R.read_spans(path, offs, pdf["size"].to_numpy())
+            for num, off, content in zip(pdf["rec_num"], offs, contents):
+                try:
+                    decoded = decode_record(content)
+                except ValueError as e:
+                    raise ValueError(f"shapefile record at offset {off} "
+                                     f"of {path}: {e}") from e
+                for p, la, lo in decoded:
+                    recs.append(int(num))
+                    parts.append(p)
+                    las.append(la.tolist())
+                    los.append(lo.tolist())
+            yield pd.DataFrame({
+                "rec_num": pd.array(recs, dtype="int32"),
+                "part": pd.array(parts, dtype="int32"),
+                "lats": las, "lons": los,
+            })
 
-    return index.mapInPandas(fn, SHP_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# fixture writer (independent of the reader: struct-packed by spec)
-
-
-def write_shp(path: str, shapes: list[tuple[int, list[list[tuple[float, float]]]]]):
-    """shapes: [(shape_type, [part=[(lon_deg, lat_deg), ...], ...])].
-    Writes .shp and the matching .shx index."""
-    if not shapes:
-        raise ValueError("write_shp needs at least one shape")
-    records = []
-    for num, (typ, parts) in enumerate(shapes, start=1):
-        flat = [p for part in parts for p in part]
-        if not flat:
-            raise ValueError(f"shape {num} has no points")
-        xs = [x for x, _ in flat]
-        ys = [y for _, y in flat]
-        content = struct.pack("<i", typ)
-        if typ == POINT:                 # x, y only — no bbox, no parts
-            if len(flat) != 1:
-                raise ValueError(
-                    f"shape {num}: POINT holds exactly one point, got "
-                    f"{len(flat)} (use MULTIPOINT)")
-            content += struct.pack("<2d", *flat[0])
-        elif typ == MULTIPOINT:          # bbox + count + points
-            content += struct.pack("<4d", min(xs), min(ys), max(xs), max(ys))
-            content += struct.pack("<i", len(flat))
-            for x, y in flat:
-                content += struct.pack("<2d", x, y)
-        else:
-            content += struct.pack("<4d", min(xs), min(ys), max(xs), max(ys))
-            content += struct.pack("<ii", len(parts), len(flat))
-            off = 0
-            for part in parts:
-                content += struct.pack("<i", off)
-                off += len(part)
-            for x, y in flat:
-                content += struct.pack("<2d", x, y)
-        records.append((num, content))
-
-    def header(total_words: int) -> bytes:
-        h = struct.pack(">i", MAGIC) + b"\x00" * 20
-        h += struct.pack(">i", total_words)
-        h += struct.pack("<ii", 1000, shapes[0][0])
-        h += struct.pack("<8d", 0, 0, 0, 0, 0, 0, 0, 0)
-        return h
-
-    body = b""
-    shx_body = b""
-    off_words = 50
-    for num, content in records:
-        body += struct.pack(">ii", num, len(content) // 2) + content
-        shx_body += struct.pack(">ii", off_words, len(content) // 2)
-        off_words += 4 + len(content) // 2
-    with open(path, "wb") as f:
-        f.write(header(50 + len(body) // 2))
-        f.write(body)
-    with open(path[:-4] + ".shx", "wb") as f:
-        f.write(header(50 + len(shx_body) // 2))
-        f.write(shx_body)
+    return R.offset_index(spark, rows, "offset long, size long, rec_num int") \
+        .mapInPandas(fn, SHP_SCHEMA)

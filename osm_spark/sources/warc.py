@@ -1,8 +1,6 @@
 """WARC source (ISO 28500 / Common-Crawl layout): record index +
-parallel Arrow-batched decode.
-
-The same two-pass shape as the PBF source (sources/pbf.py — the
-reference's streaming-parser re-expression, parser.ml:67-84):
+parallel Arrow-batched decode, on the byte-range skeleton of the PBF
+and shapefile sources (``sources/ranges.py``):
 
 1. ``warc_index`` — ONE cheap metadata pass yields
    (offset, size, compressed) per record, built on the driver from one
@@ -15,16 +13,9 @@ reference's streaming-parser re-expression, parser.ml:67-84):
    with member-magic resync at or above WALK_DISTRIBUTED_MIN bytes
    (``warc_index_gz_distributed``).  The decode contract
    (offset, size) is identical either way.
-
-All reads route through pyarrow.fs (``_open_input``), so the same
-code does ranged GETs on ``s3://``-style object stores and plain
-seeks on local files.
-2. ``decode_records`` — mapInPandas over the index: every executor
-   range-reads ITS records (a ranged GET on object stores), gunzips
-   members where needed, and parses WARC headers + the embedded HTTP
-   response into typed columns.  The index is a local relation sorted
-   by offset and split in order across ``defaultParallelism`` tasks, so
-   each task owns one contiguous byte region of the file.
+2. ``decode_records`` — mapInPandas over the index: every task
+   span-reads ITS records, gunzips members, and parses WARC headers +
+   the embedded HTTP response into typed columns.
 
 Output schema mirrors BASELINE.json's input hint: (url, warc_ts,
 html binary, record_type, http_status) — ``text``/``lang`` are derived
@@ -41,57 +32,21 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osm_spark.sources import ranges as R
+
 CRLF2 = b"\r\n\r\n"
-
-
-def _pa_fs(path: str):
-    """(pyarrow FileSystem, path-within-fs) for local paths and object
-    stores — the executor-side analog of metrics._FS (executors have no
-    py4j bridge to the JVM Hadoop FileSystem, so reads route through
-    pyarrow.fs: LocalFileSystem for bare paths, S3/GCS/Hadoop for URIs;
-    ``s3a://`` is normalized to pyarrow's ``s3://``)."""
-    from pyarrow import fs as pafs
-
-    uri = path
-    if uri.startswith("s3a://") or uri.startswith("s3n://"):
-        uri = "s3://" + uri.split("://", 1)[1]
-    if "://" in uri:
-        return pafs.FileSystem.from_uri(uri)
-    return pafs.LocalFileSystem(), uri
-
-
-def _open_input(path: str):
-    """Seekable binary reader for ``path`` on any pyarrow filesystem
-    (ranged reads on object stores)."""
-    fsys, rel = _pa_fs(path)
-    return fsys.open_input_file(rel)
-
-
-def _finfo(path: str):
-    """pyarrow FileInfo for ``path`` (.size; .is_file; type NotFound
-    when absent)."""
-    fsys, rel = _pa_fs(path)
-    return fsys.get_file_info(rel)
-
-
-def _exists(path: str) -> bool:
-    from pyarrow import fs as pafs
-
-    return _finfo(path).type != pafs.FileType.NotFound
-
-
-def _fsize(path: str) -> int:
-    info = _finfo(path)
-    return int(info.size or 0)
 
 # warc_ts is NTZ: WARC-Date is an explicit UTC instant; storing the
 # UTC wall time tz-free keeps every downstream epoch computation
 # session-timezone-independent (same convention as the events table)
 WARC_SCHEMA = ("url string, warc_ts timestamp_ntz, html binary, "
+               "record_type string, http_status int")
+# read_warc_pages_text's projection: html reduced to its text in the
+# decode mapper
+TEXT_SCHEMA = ("url string, warc_ts timestamp_ntz, text string, "
                "record_type string, http_status int")
 
 # WARC-Date is a W3C-DTF date (WARC 1.1 §5.4), fractions to the
@@ -137,11 +92,11 @@ def _cdx_rows(path: str) -> list[tuple[int, int, bool]] | None:
     non-empty warc (a partial landing-dir write) is distrusted too.
     The walk that replaces it costs one pass but never loses records."""
     cdx = path + ".cdx"
-    if not _exists(cdx):
+    if not R.exists(cdx):
         return None
     compressed = path.endswith(".gz")
     rows = []
-    with _open_input(cdx) as f:
+    with R.open_input(cdx) as f:
         for line in f.read().decode("utf-8", "replace").splitlines():
             parts = line.split()
             if not parts:
@@ -153,7 +108,7 @@ def _cdx_rows(path: str) -> list[tuple[int, int, bool]] | None:
             if not (0 <= off < 1 << 63 and 0 <= size < 1 << 63):
                 return None
             rows.append((off, size, compressed))
-    return rows if rows or _fsize(path) == 0 else None
+    return rows if rows or R.file_size(path) == 0 else None
 
 
 def _walk(path: str) -> Iterator[tuple[int, int, bool]]:
@@ -161,12 +116,12 @@ def _walk(path: str) -> Iterator[tuple[int, int, bool]]:
     for a ``.warc.gz`` (one member per record, the Common-Crawl
     layout); for a plain ``.warc``, each record's header block and a
     seek past its body by ``Content-Length``."""
-    fsize = _fsize(path)
+    fsize = R.file_size(path)
     if path.endswith(".gz"):
         for off, n in _walk_range(path, 0, fsize, fsize):
             yield off, n, True
         return
-    with _open_input(path) as f:
+    with R.open_input(path) as f:
         off = 0
         while True:
             f.seek(off)
@@ -271,7 +226,7 @@ def _walk_range(path: str, start: int, end: int,
     [start, end) — each range is independent, so ranges partition the
     member set exactly; the last member may extend past ``end``.
     ``ValueError`` on a corrupt or truncated member."""
-    with _open_input(path) as f:
+    with R.open_input(path) as f:
         pos = 0 if start == 0 else _first_member_at(f, start, end, fsize)
         if pos is not None:
             yield from _members(f, pos, end)
@@ -286,7 +241,7 @@ def warc_index_gz_distributed(spark: SparkSession,
     tasks instead of an O(file) driver pass.  The collected members
     must tile [0, fsize) exactly, so a resync false positive raises
     ``ValueError`` instead of mis-slicing records."""
-    fsize = _fsize(path)
+    fsize = R.file_size(path)
     ranges = [(a, min(a + _WALK_CHUNK, fsize))
               for a in range(0, max(fsize, 1), _WALK_CHUNK)]
     rows = sorted(spark.sparkContext.parallelize(ranges, len(ranges))
@@ -306,30 +261,25 @@ def warc_index(spark: SparkSession, path: str) -> DataFrame:
     The rows come from exactly one source, built on the driver: the
     trusted cdx side file (``_cdx_rows``); else the gzip walk —
     driver-serial, or distributed at or above WALK_DISTRIBUTED_MIN
-    bytes — or the plain walk.  They are sorted by offset and handed to
-    Spark as one Arrow table, which becomes a local relation: its scan
-    needs no Python worker, no sampling job and no exchange, and splits
-    the rows in order into min(records, ``defaultParallelism``)
-    partitions whose sizes differ by at most one row.
+    bytes — or the plain walk.  ``ranges.offset_index`` hands them to
+    Spark sorted by offset, as one local relation split in order into
+    min(records, ``defaultParallelism``) contiguous partitions.
 
     Driver memory: the index of ONE file, one row per record, is held
     on the driver: ~230 bytes per record at peak on the Python side
     (measured on a 150k-record cdx with offsets above 2**32: 212 B
-    while the cdx is parsed — its lines and row tuples — then 24 B of
-    int64 row and 16 B of Arrow row), so ~10 MB for a 45k-record
+    while the cdx is parsed — its lines and row tuples — then the int64
+    and Arrow copies of the row), so ~10 MB for a 45k-record
     Common-Crawl file; the JVM keeps the local relation's rows
     (32 bytes of fields each)."""
     rows = _cdx_rows(path)
     if rows is None:
-        big_gz = path.endswith(".gz") and _fsize(path) >= WALK_DISTRIBUTED_MIN
+        big_gz = (path.endswith(".gz")
+                  and R.file_size(path) >= WALK_DISTRIBUTED_MIN)
         rows = (warc_index_gz_distributed(spark, path) if big_gz
                 else list(_walk(path)))
-    a = np.array(rows, dtype=np.int64).reshape(-1, 3)
-    a = a[np.argsort(a[:, 0], kind="stable")]
-    index = pa.table({"offset": a[:, 0], "size": a[:, 1],
-                      "compressed": a[:, 2].astype(bool)})
-    return spark.createDataFrame(
-        index, "offset long, size long, compressed boolean")
+    return R.offset_index(spark, rows,
+                          "offset long, size long, compressed boolean")
 
 
 def decode_record(raw: bytes) -> tuple:
@@ -359,116 +309,59 @@ def decode_record(raw: bytes) -> tuple:
     return url, ts, html, rtype, status
 
 
-_SPAN_BYTES = 8 << 20        # coalesced read span (one ranged GET)
-
-
-_TEXT_SCHEMA_COLS = {
-    "url": "url string", "warc_ts": "warc_ts timestamp_ntz",
-    "html": "html binary", "text": "text string",
-    "record_type": "record_type string", "http_status": "http_status int",
-}
-
-
 def decode_records(spark: SparkSession, path: str,
-                   columns: tuple[str, ...] | None = None) -> DataFrame:
-    """Parallel decode: mapInPandas over ``warc_index``; each worker
-    range-reads and parses its own records.
-
-    The index arrives sorted by offset in contiguous slices, one per
-    task, so every task owns a contiguous byte region with no sampling
-    job or exchange, and each pandas batch's records are read as a few
-    coalesced ~8 MB span reads instead of one seek+read per record —
-    on an object store that is the difference between 10k GETs and a
-    handful of ranged GETs per task.
-
-    ``columns`` projects INSIDE the decode mapper: a text-only pipeline
-    passes ``("url", "warc_ts", "text")`` and the html bytes are
-    reduced to extracted text (textops.extract_text_py — the
-    byte-identical twin of the JVM extractor) before the Arrow
-    boundary, roughly halving the mapper's Arrow transfer.  Default
-    (None) keeps the full WARC_SCHEMA byte-identity contract."""
-    if columns is not None:
-        bad = [c for c in columns if c not in _TEXT_SCHEMA_COLS]
-        if bad:
-            raise ValueError(f"unknown decode columns: {bad}")
-        schema = ", ".join(_TEXT_SCHEMA_COLS[c] for c in columns)
-    else:
-        schema = WARC_SCHEMA
-
+                   text: bool = False) -> DataFrame:
+    """Parallel decode: mapInPandas over ``warc_index``; each task
+    span-reads and parses the records of its contiguous byte region.
+    Columns are WARC_SCHEMA (the byte-identity contract), or with
+    ``text`` TEXT_SCHEMA: html reduced to its text in the mapper by
+    textops.extract_text_py, the byte-identical twin of the JVM
+    extractor, roughly halving the mapper's Arrow transfer."""
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield _decode_pdf(path, pdf, columns)
+            yield _decode_pdf(path, pdf, text)
 
-    return warc_index(spark, path).mapInPandas(fn, schema)
+    return warc_index(spark, path).mapInPandas(
+        fn, TEXT_SCHEMA if text else WARC_SCHEMA)
 
 
 def _decode_pdf(path: str, pdf: pd.DataFrame,
-                columns: tuple[str, ...] | None = None) -> pd.DataFrame:
+                text: bool = False) -> pd.DataFrame:
     """Decode one index batch (offset, size, compressed) of ``path``
-    into typed WARC_SCHEMA columns via span-coalesced range reads."""
+    into WARC_SCHEMA columns, or TEXT_SCHEMA ones with ``text``."""
     from osm_spark.operators import textops as TX
 
-    want = tuple(columns) if columns is not None else None
-    want_text = want is not None and "text" in want
-    keep_html = want is None or "html" in want
     pdf = pdf.sort_values("offset")
     offs = pdf["offset"].to_numpy()
-    ends = offs + pdf["size"].to_numpy()
-    urls, tss, htmls, types, stats, texts = [], [], [], [], [], []
     comp = pdf["compressed"].to_numpy()
-    with _open_input(path) as f:
-        # greedy span grouping: cut where the next record would push
-        # the span past _SPAN_BYTES (records are adjacent, so spans
-        # are dense).  Each span is parsed as soon as it is read, so
-        # raw-byte residency stays at ONE span, not the whole batch.
-        s = 0
-        for i in range(1, len(offs) + 1):
-            if i == len(offs) or ends[i - 1] - offs[s] > _SPAN_BYTES:
-                f.seek(int(offs[s]))
-                buf = memoryview(f.read(int(ends[i - 1] - offs[s])))
-                base = int(offs[s])
-                for j in range(s, i):
-                    raw = bytes(buf[int(offs[j]) - base:
-                                    int(ends[j]) - base])
-                    if comp[j]:
-                        try:
-                            raw = zlib.decompress(raw, wbits=31)
-                        except zlib.error as e:
-                            raise ValueError(
-                                f"corrupt gzip member at offset {offs[j]} "
-                                f"of {path}: {e}") from e
-                    url, ts, html, rtype, status = decode_record(raw)
-                    if ts and not _W3C_DTF.fullmatch(ts):
-                        raise ValueError(
-                            f"WARC-Date {ts!r} of the record at offset "
-                            f"{offs[j]} of {path} is not a W3C-DTF date")
-                    urls.append(url)
-                    tss.append(pd.Timestamp(ts) if ts else pd.NaT)
-                    if want_text:
-                        texts.append(TX.extract_text_py(html)
-                                     if html is not None else None)
-                    if keep_html:
-                        htmls.append(html)
-                    types.append(rtype)
-                    stats.append(status)
-                s = i
+    urls, tss, bodies, types, stats = [], [], [], [], []
+    for off, c, raw in zip(offs, comp, R.read_spans(
+            path, offs, pdf["size"].to_numpy())):
+        if c:
+            try:
+                raw = zlib.decompress(raw, wbits=31)
+            except zlib.error as e:
+                raise ValueError(f"corrupt gzip member at offset {off} "
+                                 f"of {path}: {e}") from e
+        url, ts, html, rtype, status = decode_record(raw)
+        if ts and not _W3C_DTF.fullmatch(ts):
+            raise ValueError(f"WARC-Date {ts!r} of the record at offset "
+                             f"{off} of {path} is not a W3C-DTF date")
+        urls.append(url)
+        tss.append(pd.Timestamp(ts) if ts else pd.NaT)
+        bodies.append(TX.extract_text_py(html)
+                      if text and html is not None else html)
+        types.append(rtype)
+        stats.append(status)
     ts = pd.Series(tss, dtype="datetime64[ns, UTC]") \
         .dt.tz_convert("UTC").dt.tz_localize(None)
-    full = {
+    return pd.DataFrame({
         "url": urls,
         "warc_ts": ts,
+        "text" if text else "html": bodies,
         "record_type": types,
         "http_status": pd.array(stats, dtype="Int32"),
-    }
-    if keep_html:
-        full["html"] = htmls
-    if want_text:
-        full["text"] = texts
-    if want is None:
-        return pd.DataFrame({k: full[k] for k in
-                             ("url", "warc_ts", "html", "record_type",
-                              "http_status")})
-    return pd.DataFrame({k: full[k] for k in want})
+    })
 
 
 def stream_warc_pages(spark: SparkSession, landing_dir: str) -> DataFrame:
@@ -520,27 +413,18 @@ def read_warc_pages(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_warc_pages_text(spark: SparkSession, path: str) -> DataFrame:
-    """Text-only pages: (url, warc_ts, text, lang) with extraction run
-    INSIDE the decode mapper (extract_text_py, the byte-identical twin
-    of the JVM extractor) so html bytes never cross the Arrow boundary
-    — about half the mapper transfer of ``read_warc_pages_full`` for
-    pipelines that only need text.  lang is a projection over the text
-    column (``langid_col``), not part of the mapper: a ``select`` without
-    it prunes it, and with ``with_quality``/``fingerprint_udf`` it rides
-    the same Arrow pass.
-
-    This is the DEFAULT reader for composed pipelines (e2e_warc_geo
-    uses it): 1→4 chain efficiency measured 0.89 here vs 0.62 when
-    html rides through Arrow (BENCH/ANALYSIS.md).  Use
-    ``read_warc_pages``/``read_warc_pages_full`` only when downstream
-    stages genuinely need raw html bytes — media extraction
-    (multimodal.py), link-graph parsing, or the byte-identity contract
-    itself (s2_warc_pages)."""
+    """Text-only pages: (url, warc_ts, text, lang), the text extracted
+    INSIDE the decode mapper (``decode_records(text=True)``), so html
+    bytes never cross the Arrow boundary.  lang is a projection over
+    the text column (``langid_col``): a ``select`` without it prunes it,
+    and with ``with_quality``/``fingerprint_udf`` it rides their Arrow
+    pass.  The DEFAULT reader for composed pipelines (e2e_warc_geo):
+    1→4 chain efficiency 0.89 vs 0.62 when html rides through Arrow
+    (BENCH/ANALYSIS.md); read html only where a stage needs its bytes
+    (media extraction, link graphs, the s2_warc_pages contract)."""
     from osm_spark.operators import textops as TX
 
-    recs = decode_records(
-        spark, path,
-        columns=("url", "warc_ts", "text", "record_type", "http_status"))
+    recs = decode_records(spark, path, text=True)
     return (recs.filter("record_type = 'response' AND http_status = 200")
             .select("url", "warc_ts", "text",
                     TX.langid_col(F.col("text")).alias("lang")))
@@ -552,8 +436,6 @@ def read_warc_pages_full(spark: SparkSession, path: str) -> DataFrame:
     text via the JVM extractor (byte-identity invariant), lang via the
     marker-word language id (``langid_col``, one pandas UDF over the
     extracted text)."""
-    from pyspark.sql import functions as F
-
     from osm_spark.operators import textops as TX
 
     p = read_warc_pages(spark, path)

@@ -13,6 +13,7 @@ record ``.warc.gz``.
 from __future__ import annotations
 
 import gzip
+from pathlib import Path
 
 N_PAGES = 24
 
@@ -98,13 +99,9 @@ def write_sample(path: str) -> str:
     """Write the fixture; ``path`` ending in .gz gets one gzip member
     per record (the Common-Crawl layout)."""
     recs = _records()
-    with open(path, "wb") as f:
-        if path.endswith(".gz"):
-            for r in recs:
-                f.write(gzip.compress(r, mtime=0))
-        else:
-            for r in recs:
-                f.write(r)
+    if path.endswith(".gz"):
+        recs = [gzip.compress(r, mtime=0) for r in recs]
+    Path(path).write_bytes(b"".join(recs))
     return path
 
 

@@ -1,8 +1,9 @@
 """Driver cost ledger: how many py4j round trips and Spark jobs each
 geo_tag operator call, the same ``knn_join`` call on its large-layer
-cell-ring path (``knn_join_cells``), and each routing call
-(``contract`` with one distributed round, ``ch_batch_routes``), costs on
-the driver.
+cell-ring path (``knn_join_cells``), each routing call (``contract``
+with one distributed round, ``ch_batch_routes``), the ingest_warc chain
+(``ingest_warc``) and each byte-range source decode (``decode_blocks``,
+``read_shp``, each with its ``count()``) costs on the driver.
 
 Every ``Column``/``DataFrame`` method call is at least one Python->JVM
 round trip, and building a plan out of hundreds of them was most of the
@@ -41,6 +42,7 @@ from py4j.clientserver import ClientServerConnection
 
 from osm_spark import fixtures as FX
 from osm_spark.operators import knn as KNN
+from osm_spark.operators import textops as TX
 from osm_spark.operators import routing as RT
 from osm_spark.operators import tiles as T
 from osm_spark.operators.geocode import geocode_ids, geocode_pages
@@ -51,6 +53,9 @@ from osm_spark.operators.spatial_join import (COARSE_SHIFT, DEFAULT_CELL_ZOOM,
                                              spatial_join_partitioned,
                                              suggest_salt,
                                              write_partitioned_layer)
+from osm_spark.sources import pbf, pbf_fixture, shapefile, shp_fixture
+from osm_spark.sources import warc_fixture
+from osm_spark.sources.warc import read_warc_pages_text
 
 from kernel_oracles import pages_df
 
@@ -108,10 +113,22 @@ def _knn_cells(geo, feats, monkeypatch):
         return knn_join(geo, feats, k=1, cell_zoom=8, radius=2)
 
 
+def _ingest_warc(spark, warc: str, out: str) -> None:
+    """perfbench's ingest_warc chain: text pages, quality columns and
+    fingerprint, written to parquet."""
+    from pyspark.sql import functions as F
+
+    pages = read_warc_pages_text(spark, warc)
+    TX.with_quality(pages).withColumn(
+        "fp", TX.fingerprint_udf()(F.col("text"))).write.mode(
+        "overwrite").parquet(out)
+
+
 def _calls(spark, tmp: Path, monkeypatch) -> dict:
     """The geo_tag steps (``perfbench/workloads.py``), its ``knn_join``
-    step on the cell-ring path, and the routing calls, each as a thunk
-    over the small fixtures; inputs are built outside the thunks."""
+    step on the cell-ring path, the routing calls, the ingest_warc chain
+    and the PBF and shapefile decodes, each as a thunk over the small
+    fixtures; inputs are built outside the thunks."""
     pages = pages_df(spark, N_PAGES)
     polys = FX.polygons_df(spark, N_SMALL)
     geo = geocode_pages(pages).select("page_id", "lat", "lon")
@@ -128,6 +145,11 @@ def _calls(spark, tmp: Path, monkeypatch) -> dict:
     ch = RT.contract(edges).edges.localCheckpoint()
     pairs = spark.createDataFrame([(i, (i * 7 + 11) % 36) for i in range(36)],
                                   "src long, dst long")
+    warc = warc_fixture.write_sample(str(tmp / "sample.warc.gz"))
+    osm = str(tmp / "sample.osm.pbf")
+    pbf_fixture.write_sample_pbf(osm)
+    shp = str(tmp / "coastline.shp")
+    shp_fixture.write_sample_shp(shp)
     return {
         "geocode_pages": lambda: geocode_pages(pages),
         "spatial_join": lambda: spatial_join(geo, polys, how="left", index=index),
@@ -142,6 +164,9 @@ def _calls(spark, tmp: Path, monkeypatch) -> dict:
             geo, layer, how="left", salt=2),
         "contract": lambda: _contract(edges, monkeypatch),
         "ch_batch_routes": lambda: RT.ch_batch_routes(pairs, ch),
+        "ingest_warc": lambda: _ingest_warc(spark, warc, str(tmp / "pages")),
+        "decode_blocks": lambda: pbf.decode_blocks(spark, osm).count(),
+        "read_shp": lambda: shapefile.read_shp(spark, shp).count(),
     }
 
 

@@ -125,3 +125,39 @@ def test_dense_packed_fields_split_across_chunks():
     tags = pdf[pdf["kind"] == KIND_NODE_TAG].sort_values("id")
     assert list(tags["id"]) == [10, 12]
     assert set(tags["key"]) == {"amenity"} and set(tags["val"]) == {"cafe"}
+
+
+@pytest.mark.parametrize("cut", [6, 10, 20])
+def test_blob_index_truncated_file_raises_value_error(tmp_path, cut):
+    """A file cut inside a BlobHeader (6, 10 bytes) or inside the blob
+    payload it announces (20 bytes) raises a ValueError naming the
+    offset, not a KeyError or a blob that runs past the end."""
+    full = tmp_path / "sample.osm.pbf"
+    pbf_fixture.write_sample_pbf(str(full))
+    p = tmp_path / "cut.osm.pbf"
+    p.write_bytes(full.read_bytes()[:cut])
+    with pytest.raises(ValueError, match="offset"):
+        list(pbf.iter_blob_index(str(p)))
+
+
+@pytest.mark.parametrize("raw", [b"\x08\xff", b"\x08", b"\x12\x05ab",
+                                 b"\x0d\x01\x02"])
+def test_fields_truncated_message_raises_value_error(raw):
+    """A truncated varint, length-delimited or fixed-width field."""
+    with pytest.raises(ValueError, match="byte"):
+        pbf.fields(raw)
+
+
+def test_decode_corrupt_blob_raises_value_error(spark, tmp_path):
+    """A corrupt zlib payload fails the decode mapper with a ValueError
+    naming the blob's offset."""
+    full = tmp_path / "sample.osm.pbf"
+    pbf_fixture.write_sample_pbf(str(full))
+    data = bytearray(full.read_bytes())
+    _t, off, size = [b for b in pbf.iter_blob_index(str(full))
+                     if b[0] == "OSMData"][0]
+    data[off + size - 8:off + size] = b"\xff" * 8
+    p = tmp_path / "corrupt.osm.pbf"
+    p.write_bytes(bytes(data))
+    with pytest.raises(Exception, match=f"blob at offset {off} "):
+        pbf.decode_blocks(spark, str(p)).collect()

@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pytest
 
 from osm_spark.sources import shapefile as SHP
+from osm_spark.sources import shp_fixture as SF
 
 
 @pytest.fixture()
@@ -19,7 +22,7 @@ def shp_path(tmp_path):
         ]),
     ]
     p = tmp_path / "layer.shp"
-    SHP.write_shp(str(p), shapes)
+    SF.write_shp(str(p), shapes)
     return str(p)
 
 
@@ -74,7 +77,7 @@ def test_point_multipoint_and_z_variants(spark, tmp_path):
         (SHP.MULTIPOINT, [[(0.0, 0.0), (1.0, 2.0), (-3.0, 4.0)]]),
     ]
     p = tmp_path / "pts.shp"
-    SHP.write_shp(str(p), shapes)
+    SF.write_shp(str(p), shapes)
     rows = {(r.rec_num, r.part): (list(r.lats), list(r.lons))
             for r in SHP.read_shp(spark, str(p)).collect()}
     assert rows[(1, 0)] == ([-332_500_000], [125_000_000])
@@ -101,5 +104,64 @@ def test_write_shp_point_rejects_multiple_points(tmp_path):
     import pytest
 
     with pytest.raises(ValueError, match="exactly one point"):
-        SHP.write_shp(str(tmp_path / "bad"),
+        SF.write_shp(str(tmp_path / "bad"),
                       [(SHP.POINT, [[(1.0, 2.0), (3.0, 4.0)]])])
+
+
+@pytest.mark.parametrize("raw", [
+    b"\x01\x00",
+    b"\x01\x00\x00\x00\x00",
+    b"\x08\x00\x00\x00" + b"\x00" * 32 + b"\xff\xff\xff\x7f",
+    b"\x03\x00\x00\x00" + b"\x00" * 32 + b"\xff\xff\xff\xff\x00\x00\x00\x00",
+], ids=["short_type", "short_point", "multipoint_count_past_end",
+        "negative_part_count"])
+def test_decode_record_untrusted_bytes_raise_value_error(raw):
+    """Truncated content, a point count past the record, a negative
+    part count: ValueError, not struct.error or a whole-buffer read."""
+    with pytest.raises(ValueError):
+        SHP.decode_record(raw)
+
+
+def test_decode_record_descending_parts_raise_value_error(tmp_path):
+    """Part starts past the record's points (0, 5 over 4 points)."""
+    p = str(tmp_path / "two.shp")
+    SF.write_shp(p, [(SHP.POLYLINE, [[(0.0, 0.0), (1.0, 1.0)],
+                                     [(2.0, 2.0), (3.0, 3.0)]])])
+    (off, size, _num), = SHP.iter_record_index(p)
+    with open(p, "rb") as f:
+        content = f.read()[off:off + size]
+    bad = content[:44] + struct.pack("<ii", 0, 5) + content[52:]
+    with pytest.raises(ValueError, match="ascending"):
+        SHP.decode_record(bad)
+
+
+@pytest.mark.parametrize("cut", [99, 104, 120])
+def test_record_walk_truncated_file_raises_value_error(shp_path, tmp_path,
+                                                       cut):
+    """Without a .shx, a file cut inside its header, a record header or
+    a record's content raises a ValueError (the walk used to stop
+    silently or yield a record that runs past the end)."""
+    p = tmp_path / "cut.shp"
+    with open(shp_path, "rb") as f:
+        p.write_bytes(f.read()[:cut])
+    with pytest.raises(ValueError):
+        list(SHP.iter_record_index(str(p)))
+
+
+def test_shx_offset_past_end_fails_decode_with_value_error(spark, shp_path,
+                                                          tmp_path):
+    """A .shx entry pointing past the end of the .shp fails the decode
+    mapper with a ValueError naming the offset."""
+    import os
+    import shutil
+
+    d = tmp_path / "past"
+    d.mkdir()
+    shutil.copy(shp_path, d / "layer.shp")
+    with open(shp_path[:-4] + ".shx", "rb") as f:
+        shx = bytearray(f.read())
+    shx[-8:-4] = struct.pack(">i", os.path.getsize(shp_path) // 2)
+    (d / "layer.shx").write_bytes(bytes(shx))
+    last = list(SHP.iter_record_index(str(d / "layer.shp")))[-1][0]
+    with pytest.raises(Exception, match=f"offset {last} .* outside the file"):
+        SHP.read_shp(spark, str(d / "layer.shp")).collect()

@@ -1,7 +1,8 @@
 """WARC source (Common-Crawl layout): encode -> decode round trip
 against the independent fixture writer's ground truth, plain and
 gzip-member-per-record variants, plus the byte-identical text
-extraction invariant."""
+extraction invariant; and the byte-range skeleton all three sources
+(WARC, PBF, shapefile) decode over: offset index slices and plans."""
 
 from __future__ import annotations
 
@@ -11,7 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_spark.operators.textops import extract_text_col
-from osm_spark.sources import warc, warc_fixture as WF
+from osm_spark.sources import pbf, pbf_fixture, ranges, warc
+from osm_spark.sources import shapefile as SHP, shp_fixture as SF
+from osm_spark.sources import warc_fixture as WF
 
 from kernel_oracles import iter_warc_index
 
@@ -474,18 +477,48 @@ def scaled_gz(tmp_path):
     return p, list(iter_warc_index(p))
 
 
-def test_decode_plan_has_no_exchange(spark, scaled_gz):
-    plan = (warc.decode_records(spark, scaled_gz[0])
-            ._jdf.queryExecution().executedPlan().toString())
+@pytest.fixture(params=["warc", "pbf", "shp"])
+def source(request, tmp_path):
+    """(decode, path, index rows) of one byte-range source: the
+    301-record .warc.gz, the 3-blob sample PBF, a 301-record
+    shapefile."""
+    if request.param == "warc":
+        return warc.decode_records, *request.getfixturevalue("scaled_gz")
+    if request.param == "pbf":
+        p = str(tmp_path / "sample.osm.pbf")
+        pbf_fixture.write_sample_pbf(p)
+        rows = [(o, n) for t, o, n in pbf.iter_blob_index(p)
+                if t == "OSMData"]
+        return pbf.decode_blocks, p, rows
+    p = str(tmp_path / "lines.shp")
+    SF.write_shp(p, [(SHP.POLYLINE, [[(i * 0.01, 1.0), (i * 0.01, 2.0)]])
+                     for i in range(301)])
+    return SHP.read_shp, p, list(SHP.iter_record_index(p))
+
+
+def test_decode_plan_has_no_exchange(spark, source):
+    decode, p, _rows = source
+    plan = decode(spark, p)._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan and "Exchange" not in plan
 
 
-def test_index_slices_are_contiguous_and_balanced(spark, scaled_gz):
+def test_index_slices_are_contiguous_and_balanced(spark, source,
+                                                  monkeypatch):
     """Each index partition — the decode task's input — is one
-    contiguous offset range, and partition sizes differ by <= 1 row."""
-    p, rows = scaled_gz
-    parts = warc.warc_index(spark, p).rdd.glom().collect()
-    assert len(parts) == spark.sparkContext.defaultParallelism
+    contiguous offset range, there are min(records,
+    defaultParallelism) of them, and their sizes differ by <= 1 row."""
+    decode, p, rows = source
+    seen = []
+    real = ranges.offset_index
+
+    def spy(*args):
+        seen.append(real(*args))
+        return seen[-1]
+
+    monkeypatch.setattr(ranges, "offset_index", spy)
+    decode(spark, p)
+    parts = seen[0].rdd.glom().collect()
+    assert len(parts) == min(len(rows), spark.sparkContext.defaultParallelism)
     assert [tuple(r) for part in parts for r in part] == sorted(rows)
     sizes = [len(part) for part in parts]
     assert max(sizes) - min(sizes) <= 1

@@ -128,11 +128,11 @@ def _write_records(path, recs: list[bytes], compressed: bool) -> pd.DataFrame:
 @FUZZ
 @given(st.lists(st.sampled_from(RECORDS).flatmap(mutated), min_size=1,
                 max_size=4),
-       st.booleans(), st.sampled_from([None, ("url", "warc_ts", "text")]))
-def test_decode_mapper_fuzz(fuzz_dir, recs, compressed, columns):
+       st.booleans(), st.booleans())
+def test_decode_mapper_fuzz(fuzz_dir, recs, compressed, text):
     p = fuzz_dir / ("m.warc.gz" if compressed else "m.warc")
     index = _write_records(p, recs, compressed)
-    _contract(warc._decode_pdf, str(p), index, columns)
+    _contract(warc._decode_pdf, str(p), index, text)
 
 
 @pytest.mark.parametrize("date", ["now", "today", "0000"])

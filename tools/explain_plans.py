@@ -132,7 +132,8 @@ def main():
         must_not=("CartesianProduct", "BroadcastNestedLoopJoin"),
     )
 
-    # 3c. PBF source: parallel blob decode is a MapInPandas over the index
+    # 3c. PBF source: parallel blob decode is a MapInPandas over the
+    # offset index, a local relation (the byte-range skeleton)
     from osm_spark.sources import pbf
 
     pbf_path = REPO / "data" / "fixtures" / "sample.osm.pbf"
@@ -141,10 +142,14 @@ def main():
         section(
             "PBF decode — parallel blob ranges",
             dec,
-            "The blob index (tiny) shuffles once to spread blobs across "
-            "executors; decode itself is one `MapInPandas` — parallelism "
-            "== blob count, no data shuffle of the decoded rows.",
-            must_contain=("MapInPandas",),
+            "`MapInPandas` over a `LocalTableScan`: the blob index is "
+            "built on the driver and handed to Spark as one offset-sorted "
+            "Arrow table, whose scan splits it in order into "
+            "min(blobs, `defaultParallelism`) contiguous slices — no "
+            "exchange anywhere; each task span-reads its own blobs "
+            "(`sources/ranges.py`, the skeleton the shapefile and WARC "
+            "sources share).",
+            must_contain=("MapInPandas",), must_not=("Exchange",),
         )
 
     # 3d. WARC source + the composed webtext chain
@@ -157,12 +162,12 @@ def main():
     section(
         "WARC decode — parallel record ranges",
         wdec,
-        "Same two-pass shape as PBF: the record index (tiny — in "
-        "production read from cdx side files) spreads ranges across "
-        "executors; decode is one `MapInPandas` doing ranged reads + "
-        "per-member gunzip — parallelism == record count, decoded pages "
-        "are never shuffled.",
-        must_contain=("MapInPandas",),
+        "Same byte-range skeleton as PBF: the record index (in "
+        "production read from cdx side files) is a `LocalTableScan` "
+        "split in contiguous offset slices; decode is one `MapInPandas` "
+        "doing coalesced span reads + per-member gunzip — no exchange, "
+        "decoded pages are never shuffled.",
+        must_contain=("MapInPandas",), must_not=("Exchange",),
     )
     section(
         "WARC decode — text-only projection",
