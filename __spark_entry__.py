@@ -13,6 +13,7 @@ dependent float sums.
 from __future__ import annotations
 
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -38,6 +39,7 @@ from osm_spark.operators.spatial_join import spatial_join
 from osm_spark.pages_view import documents_as_pages
 from osm_spark.streaming import events as SE
 
+DATA = Path(__file__).resolve().parent / "data"   # cached fixtures, layers
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -208,17 +210,16 @@ def q_g06_pip_tag(spark, sf):
     the coarse cell key, per-partition row-group-pruned layer range
     reads, byte-bounded span-group matching.  The single oracle checks
     the two paths produce IDENTICAL match sets."""
-    from pathlib import Path
-
-    from osm_spark.operators.spatial_join import (spatial_join_partitioned,
+    from osm_spark.operators.spatial_join import (is_written_layer,
+                                                  spatial_join_partitioned,
                                                   write_partitioned_layer)
 
     docs = _geo_docs(spark, sf)
     polys = _city_polys_df(spark)
     bcast = spatial_join(docs, polys, how="left", page_key="doc_id").select(
         F.lit(0).cast("long").alias("path"), "doc_id", "feature_id")
-    layer = Path(__file__).resolve().parent / "data" / "driver_player_city"
-    if not (layer / "_osm_layer_meta.json").exists():
+    layer = DATA / "driver_player_city"
+    if not is_written_layer(str(layer)):
         write_partitioned_layer(polys, str(layer))
     part = spatial_join_partitioned(
         docs, str(layer), how="left", page_key="doc_id").select(
@@ -567,27 +568,18 @@ def q_c_tag_dsl(spark, sf):
 # --- sources (S1: OSM PBF) ---------------------------------------------
 
 
-def _pbf_fixture_path() -> str:
-    from pathlib import Path
+def _fixture_path(name: str) -> str:
+    """``data/fixtures/<name>``: the sample PBF, shapefile or WARC,
+    written once by its fixture writer."""
+    from osm_spark.sources import pbf_fixture, shp_fixture, warc_fixture
 
-    from osm_spark.sources import pbf_fixture
-
-    p = Path(__file__).resolve().parent / "data" / "fixtures" / "sample.osm.pbf"
+    write = {"sample.osm.pbf": pbf_fixture.write_sample_pbf,
+             "coastline.shp": shp_fixture.write_sample_shp,
+             "sample.warc.gz": warc_fixture.write_sample}[name]
+    p = DATA / "fixtures" / name
     if not p.exists():
         p.parent.mkdir(parents=True, exist_ok=True)
-        pbf_fixture.write_sample_pbf(str(p))
-    return str(p)
-
-
-def _shp_fixture_path() -> str:
-    from pathlib import Path
-
-    from osm_spark.sources import shp_fixture
-
-    p = Path(__file__).resolve().parent / "data" / "fixtures" / "coastline.shp"
-    if not p.exists():
-        p.parent.mkdir(parents=True, exist_ok=True)
-        shp_fixture.write_sample_shp(str(p))
+        write(str(p))
     return str(p)
 
 
@@ -596,7 +588,7 @@ def q_s3_shp_coastline(spark, sf):
     from osm_spark.operators import coastline as CL
     from osm_spark.sources import shapefile as SHP
 
-    segs = SHP.read_shp(spark, _shp_fixture_path()).select(
+    segs = SHP.read_shp(spark, _fixture_path("coastline.shp")).select(
         (F.col("rec_num").cast("long") * 100 + F.col("part")).alias("seg_id"),
         "lats", "lons")
     out = CL.assemble_coastline(segs)
@@ -609,7 +601,7 @@ def q_s3_shp_coastline(spark, sf):
 def q_s1_pbf_nodes(spark, sf):
     from osm_spark.sources import pbf
 
-    return pbf.read_pbf(spark, _pbf_fixture_path())["nodes"]
+    return pbf.read_pbf(spark, _fixture_path("sample.osm.pbf"))["nodes"]
 
 
 def q_s1_pbf_refs_members(spark, sf):
@@ -617,7 +609,7 @@ def q_s1_pbf_refs_members(spark, sf):
     probe (kind 0 = way ref, kind 1 = relation member)."""
     from osm_spark.sources import pbf
 
-    t = pbf.read_pbf(spark, _pbf_fixture_path())
+    t = pbf.read_pbf(spark, _fixture_path("sample.osm.pbf"))
     wr = t["way_refs"].select(
         F.lit(0).alias("kind"), F.col("way").alias("id"), "seq",
         F.col("node").alias("ref"),
@@ -630,18 +622,6 @@ def q_s1_pbf_refs_members(spark, sf):
     return wr.unionByName(rm)
 
 
-def _warc_fixture_path() -> str:
-    from pathlib import Path
-
-    from osm_spark.sources import warc_fixture
-
-    p = Path(__file__).resolve().parent / "data" / "fixtures" / "sample.warc.gz"
-    if not p.exists():
-        p.parent.mkdir(parents=True, exist_ok=True)
-        warc_fixture.write_sample(str(p))
-    return str(p)
-
-
 def q_s2_warc_pages(spark, sf):
     """WARC source (Common-Crawl gzip-member layout) -> pages with the
     byte-identical extracted text (input_hint invariant): record index,
@@ -649,7 +629,7 @@ def q_s2_warc_pages(spark, sf):
     html->text extraction."""
     from osm_spark.sources import warc
 
-    pages = warc.read_warc_pages(spark, _warc_fixture_path())
+    pages = warc.read_warc_pages(spark, _fixture_path("sample.warc.gz"))
     return pages.select(
         "url",
         F.expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 "
@@ -676,7 +656,7 @@ def q_e2e_warc_geo(spark, sf):
     reader: it IS the byte-identity contract row and needs html."""
     from osm_spark.sources import warc
 
-    pages = warc.read_warc_pages_text(spark, _warc_fixture_path())
+    pages = warc.read_warc_pages_text(spark, _fixture_path("sample.warc.gz"))
     geo = geocode_pages(pages.select("url", "text"))
     # tile assignment fused as a broadcast range-join + integer column
     # expression (zero exchange over pages, integer-exact like
@@ -703,9 +683,8 @@ def q_e2e_warc_geo(spark, sf):
 def _events_stream_dir(sf: str) -> str:
     """File-source directory for the events table (symlinked once)."""
     import os
-    from pathlib import Path
 
-    d = Path(__file__).resolve().parent / "data" / (
+    d = DATA / (
         "stream_" + sf.strip("/").replace("/", "_"))
     d.mkdir(parents=True, exist_ok=True)
     link = d / "events.parquet"
@@ -735,10 +714,9 @@ def q_stream_sessionize(spark, sf):
     twin (``sessionize_batch`` in tests/kernel_oracles.py) is the
     pytest parity check."""
     import uuid
-    from pathlib import Path
 
     gap_s, wm_s = 28800, 7200
-    d = Path(__file__).resolve().parent / "data" / (
+    d = DATA / (
         "stream_flush_" + sf.strip("/").replace("/", "_"))
     marker = d / "_FLUSH_STAGED"
     if not marker.exists():
@@ -887,7 +865,7 @@ def q_e2e_pbf_tiles(spark, sf):
     from osm_spark.operators import category as CAT
     from osm_spark.sources import pbf
 
-    t = pbf.read_pbf(spark, _pbf_fixture_path())
+    t = pbf.read_pbf(spark, _fixture_path("sample.osm.pbf"))
     mp_rels = (t["rel_tags"]
                .filter("key = 'type' AND val = 'multipolygon'")
                .select("relation").distinct())
@@ -1157,9 +1135,8 @@ def _golden_sql(name: str) -> str:
     independent scalar re-computation).  Valid because these queries read
     only deterministic in-repo fixtures — no sf tables."""
     import json
-    from pathlib import Path
 
-    p = Path(__file__).resolve().parent / "data" / "goldens" / f"{name}.json"
+    p = DATA / "goldens" / f"{name}.json"
     g = json.loads(p.read_text())
     cols, types = g["columns"], g["types"]
 
@@ -1215,7 +1192,6 @@ def _ivf_oracle_sql() -> str | None:
     (tools/check_oracles.py --sf ...) stay hash-exact too; returns
     None (-> rows-only) if that input is absent."""
     import os
-    from pathlib import Path
 
     import numpy as np
 

@@ -67,8 +67,8 @@ def main():
     from osm_spark.operators.geocode import geocode_ids, geocode_pages
     from osm_spark.operators.knn import knn_join
     from osm_spark.operators.spatial_join import (
-        broadcast_polygon_index, spatial_join, spatial_join_partitioned,
-        write_partitioned_layer)
+        broadcast_polygon_index, is_written_layer, spatial_join,
+        spatial_join_partitioned, write_partitioned_layer)
     from osm_spark.session import get_spark
 
     cpus_n = os.cpu_count() if cpus == "*" else int(cpus)
@@ -108,7 +108,7 @@ def main():
     layer_path = str(Path(__file__).resolve().parent / "data" /
                      f"bench_player_{N_SMALL_POLYS}")
     if ((not only_set or "spatial_join_partitioned" in only_set)
-            and not (Path(layer_path) / "_osm_layer_meta.json").exists()):
+            and not is_written_layer(layer_path)):
         write_partitioned_layer(polys, layer_path)
 
     queries = [

@@ -15,10 +15,11 @@ materializing its output column directory.  The Spark-first equivalent:
   ``lineage/`` with its input stages (the lineage DAG edge list),
   row count, partition histogram, bytes written, and wall time.
 
-All filesystem access goes through the JVM Hadoop FileSystem bound to
-``base_dir``'s scheme, so checkpoints/resume/byte accounting work the
-same on local paths and on ``s3a://``/``hdfs://`` URIs (the lineage log
-is one immutable file per record — object stores have no append).
+The side files (lineage records, ``_schema.json``, the ``_SUCCESS``
+check and byte counts) go through ``osm_spark.sources.ranges``, the one
+``pyarrow.fs`` layer, so they work the same on local paths, ``file:``
+and ``s3a://`` URIs; a bare path is the local disk (the lineage log is
+one immutable file per record — object stores have no append).
 
 At 100 TB the only extra cost per stage is one count-style aggregation
 over data Spark already materializes for the checkpoint.
@@ -33,6 +34,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osm_spark.sources import ranges as R
+
 
 def partition_stats(df: DataFrame) -> list[dict]:
     """[{partition, rows}] for the DataFrame's current partitioning.
@@ -46,61 +49,6 @@ def partition_stats(df: DataFrame) -> list[dict]:
     return [{"partition": r.partition, "rows": r.rows} for r in rows]
 
 
-class _FS:
-    """Thin wrapper over the JVM Hadoop FileSystem for ``base``'s
-    scheme — one code path for file:/, s3a:/, hdfs:/ checkpoints."""
-
-    def __init__(self, spark: SparkSession, base: str):
-        jvm = spark._jvm
-        self._Path = jvm.org.apache.hadoop.fs.Path
-        self._io = jvm.org.apache.commons.io.IOUtils
-        self._base = self._Path(base)
-        self._fs = self._base.getFileSystem(
-            spark._jsc.hadoopConfiguration())
-
-    def child(self, *parts: str):
-        p = self._base
-        for x in parts:
-            p = self._Path(p, x)
-        return p
-
-    def exists(self, *parts: str) -> bool:
-        return bool(self._fs.exists(self.child(*parts)))
-
-    def mkdirs(self) -> None:
-        self._fs.mkdirs(self._base)
-
-    def dir_bytes(self, *parts: str) -> int:
-        try:
-            return int(self._fs.getContentSummary(
-                self.child(*parts)).getLength())
-        except Exception:
-            return 0
-
-    def read_text(self, *parts: str) -> str:
-        # commons-io drains the stream JVM-side: py4j does not copy
-        # Java-mutated byte[] buffers back into a Python bytearray
-        st = self._fs.open(self.child(*parts))
-        try:
-            return self._io.toString(st, "UTF-8")
-        finally:
-            st.close()
-
-    def write_text(self, text: str, *parts: str) -> None:
-        st = self._fs.create(self.child(*parts), True)
-        try:
-            st.write(bytearray(text.encode("utf-8")))
-        finally:
-            st.close()
-
-    def list_names(self, *parts: str) -> list[str]:
-        p = self.child(*parts)
-        if not self._fs.exists(p):
-            return []
-        return sorted(str(s.getPath().getName())
-                      for s in self._fs.listStatus(p))
-
-
 class Pipeline:
     """Resumable checkpointed stage runner with lineage logging."""
 
@@ -108,34 +56,26 @@ class Pipeline:
         self.spark = spark
         self.base_dir = base_dir.rstrip("/")
         self.name = name
-        self._fs = _FS(spark, self.base_dir)
-        self._fs.mkdirs()
-        self._log_dir = "lineage"
+        self._log_dir = f"{self.base_dir}/lineage"
         self._log_seq = 0
 
     def _log(self, rec: dict):
-        """One immutable file per record under ``lineage/`` — O(1) per
-        append and atomic at record granularity on any FileSystem
-        (object stores have no append; the old whole-file rewrite was
-        O(n²) over stages and two pipelines sharing ``base_dir`` could
-        lose each other's records on a racing rewrite).  File names are
-        ``<ns-timestamp>-<seq>-<stage>.json`` so a lexicographic listing
-        is append order."""
+        """One immutable file per record under ``lineage/``: O(1) per
+        append and atomic per record on any filesystem, so pipelines
+        sharing ``base_dir`` never lose each other's records.  Names are
+        ``<ns-timestamp>-<seq>-<stage>.json``: listing order is append
+        order."""
         rec = {"pipeline": self.name, "ts": round(time.time(), 3), **rec}
         self._log_seq += 1
         safe = re.sub(r"[^A-Za-z0-9_.-]", "_", str(rec.get("stage", "")))[:64]
         fname = f"{time.time_ns():020d}-{self._log_seq:04d}-{safe}.json"
-        self._fs.write_text(json.dumps(rec), self._log_dir, fname)
+        R.write_text(f"{self._log_dir}/{fname}", json.dumps(rec))
 
     def lineage(self) -> list[dict]:
         """All lineage records in append order, one per file under
         ``lineage/``."""
-        recs: list[dict] = []
-        for name in self._fs.list_names(self._log_dir):
-            if name.endswith(".json"):
-                recs.append(json.loads(
-                    self._fs.read_text(self._log_dir, name)))
-        return recs
+        return [json.loads(R.read_text(f"{self._log_dir}/{n}"))
+                for n in R.list_names(self._log_dir) if n.endswith(".json")]
 
     def stage(self, name: str, fn, inputs: list[str] | tuple[str, ...] = (),
               partition_by: list[str] | None = None) -> DataFrame:
@@ -147,14 +87,14 @@ class Pipeline:
         upstream stages (the lineage DAG edges).
         """
         out = f"{self.base_dir}/{name}"
-        if self._fs.exists(name, "_SUCCESS"):
+        if R.exists(f"{out}/_SUCCESS"):
             self._log({"stage": name, "inputs": list(inputs), "resumed": True,
-                       "bytes": self._fs.dir_bytes(name)})
+                       "bytes": R.tree_bytes(out)})
             schema = None
-            if self._fs.exists(name, "_schema.json"):
+            if R.exists(f"{out}/_schema.json"):
                 from pyspark.sql.types import StructType
                 schema = StructType.fromJson(
-                    json.loads(self._fs.read_text(name, "_schema.json")))
+                    json.loads(R.read_text(f"{out}/_schema.json")))
             return self._read_back(out, schema)
         t0 = time.time()
         df = fn()
@@ -166,8 +106,8 @@ class Pipeline:
         if partition_by:
             # pin the producer's schema for resumed reads too — first
             # run and resume must return identical column types/order
-            self._fs.write_text(json.dumps(schema.jsonValue()),
-                                name, "_schema.json")
+            R.write_text(f"{out}/_schema.json",
+                         json.dumps(schema.jsonValue()))
         back = self._read_back(out, schema if partition_by else None)
         pstats = partition_stats(back)
         n_rows = sum(p["rows"] for p in pstats)
@@ -180,7 +120,7 @@ class Pipeline:
             "rows": n_rows, "partitions": n_parts,
             "rows_max_partition": rows_max,
             "skew": round(rows_max * n_parts / n_rows, 3) if n_rows else 0.0,
-            "bytes": self._fs.dir_bytes(name),
+            "bytes": R.tree_bytes(out),
             "wall_s": round(time.time() - t0, 3),
             "partition_rows": pstats,
         })

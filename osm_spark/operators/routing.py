@@ -47,12 +47,13 @@ import heapq
 import json
 import time
 from dataclasses import dataclass, field
-from pathlib import Path
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from osm_spark.sources import ranges as R
 
 BIDIR, FWD, BWD = 3, 2, 1  # highway.ml:218-237 flag values
 
@@ -297,8 +298,10 @@ class CHResult:
     rounds: int = 0
 
 
-def _dir_bytes(p: Path) -> int:
-    return sum(f.stat().st_size for f in p.rglob("*") if f.is_file())
+def _write_log(log: str, metrics: list[dict]) -> None:
+    """Rewrite the round log whole: object stores have no append, and
+    the log holds one short line per round."""
+    R.write_text(log, "".join(json.dumps(m) + "\n" for m in metrics))
 
 
 def _contract_local(rows, rank_offset: int, depths0=None):
@@ -397,9 +400,8 @@ def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
     checkpointed rounds stay resumable.
     """
     spark = edges.sparkSession
-    ckpt = Path(checkpoint_dir) if checkpoint_dir else None
-    if ckpt:
-        ckpt.mkdir(parents=True, exist_ok=True)
+    ckpt = checkpoint_dir.rstrip("/") if checkpoint_dir else None
+    log = f"{ckpt}/metrics.jsonl" if ckpt else None
     metrics: list[dict] = []
     frozen_parts: list[DataFrame] = []   # per-round frozen-edge deltas
     rank_parts: list[DataFrame] = []     # per-round rank deltas
@@ -422,15 +424,14 @@ def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
     start_round = 0
     n_active = None
 
-    if ckpt and (ckpt / "metrics.jsonl").exists():
-        lines = [json.loads(x) for x in
-                 (ckpt / "metrics.jsonl").read_text().splitlines() if x]
+    if ckpt and R.exists(log):
+        lines = [json.loads(x) for x in R.read_text(log).splitlines() if x]
         # final/ranks is the last write: without it, final/edges may be
         # a leftover of a run that died before finishing
-        if (ckpt / "final" / "ranks" / "_SUCCESS").exists():
+        if R.exists(f"{ckpt}/final/ranks/_SUCCESS"):
             return CHResult(
-                edges=spark.read.parquet(str(ckpt / "final" / "edges")),
-                ranks=spark.read.parquet(str(ckpt / "final" / "ranks")),
+                edges=spark.read.parquet(f"{ckpt}/final/edges"),
+                ranks=spark.read.parquet(f"{ckpt}/final/ranks"),
                 metrics=lines, rounds=len(lines))
         k = max((m["round"] for m in lines
                  if m.get("complete") and not m.get("local_finish")),
@@ -438,16 +439,15 @@ def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
         # keep the complete rounds only (drops a finish that never
         # reached final/ranks; the finish below logs itself again)
         metrics = [m for m in lines if m["round"] <= k]
-        (ckpt / "metrics.jsonl").write_text(
-            "".join(json.dumps(m) + "\n" for m in metrics))
+        _write_log(log, metrics)
         if metrics:
-            active = spark.read.parquet(str(ckpt / f"round={k:04d}" / "active"))
-            depths = spark.read.parquet(str(ckpt / f"round={k:04d}" / "depths"))
+            active = spark.read.parquet(f"{ckpt}/round={k:04d}/active")
+            depths = spark.read.parquet(f"{ckpt}/round={k:04d}/depths")
             for j in range(k + 1):
                 frozen_parts.append(
-                    spark.read.parquet(str(ckpt / f"round={j:04d}" / "frozen")))
+                    spark.read.parquet(f"{ckpt}/round={j:04d}/frozen"))
                 rank_parts.append(
-                    spark.read.parquet(str(ckpt / f"round={j:04d}" / "ranks")))
+                    spark.read.parquet(f"{ckpt}/round={j:04d}/ranks"))
             start_round = k + 1
             n_active = metrics[-1]["active_edges_out"]
 
@@ -550,15 +550,15 @@ def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
         )
 
         if ckpt:
-            rd = ckpt / f"round={rnd:04d}"
-            frozen.write.mode("overwrite").parquet(str(rd / "frozen"))
-            new_ranks.write.mode("overwrite").parquet(str(rd / "ranks"))
-            active_next.write.mode("overwrite").parquet(str(rd / "active"))
-            depths_next.write.mode("overwrite").parquet(str(rd / "depths"))
-            frozen_parts.append(spark.read.parquet(str(rd / "frozen")))
-            rank_parts.append(spark.read.parquet(str(rd / "ranks")))
-            active = spark.read.parquet(str(rd / "active"))
-            depths = spark.read.parquet(str(rd / "depths"))
+            rd = f"{ckpt}/round={rnd:04d}"
+            frozen.write.mode("overwrite").parquet(f"{rd}/frozen")
+            new_ranks.write.mode("overwrite").parquet(f"{rd}/ranks")
+            active_next.write.mode("overwrite").parquet(f"{rd}/active")
+            depths_next.write.mode("overwrite").parquet(f"{rd}/depths")
+            frozen_parts.append(spark.read.parquet(f"{rd}/frozen"))
+            rank_parts.append(spark.read.parquet(f"{rd}/ranks"))
+            active = spark.read.parquet(f"{rd}/active")
+            depths = spark.read.parquet(f"{rd}/depths")
         else:
             frozen_parts.append(frozen.localCheckpoint())
             rank_parts.append(new_ranks.localCheckpoint())
@@ -574,11 +574,10 @@ def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
             "wall_s": round(time.time() - t0, 3),
             "complete": True,
         }
-        if ckpt:
-            m["checkpoint_bytes"] = _dir_bytes(ckpt / f"round={rnd:04d}")
-            with open(ckpt / "metrics.jsonl", "a") as f:
-                f.write(json.dumps(m) + "\n")
         metrics.append(m)
+        if ckpt:
+            m["checkpoint_bytes"] = R.tree_bytes(rd)
+            _write_log(log, metrics)
         n_active = n_active_out
         if n_sel == 0:
             break
@@ -621,10 +620,9 @@ def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
         m = {"round": rank_offset, "local_finish": True,
              "core_edges": len(core_rows), "core_nodes": len(rank_map),
              "wall_s": round(time.time() - t0, 3), "complete": True}
-        if ckpt:
-            with open(ckpt / "metrics.jsonl", "a") as f:
-                f.write(json.dumps(m) + "\n")
         metrics.append(m)
+        if ckpt:
+            _write_log(log, metrics)
     # every active edge is in ``done`` by now: the last round left none,
     # or the local finish froze them all
     out = (
@@ -635,10 +633,10 @@ def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
                            F.col("rank").alias("rank_dst")), "dst")
     )
     if ckpt:
-        out.write.mode("overwrite").parquet(str(ckpt / "final" / "edges"))
-        ranks.write.mode("overwrite").parquet(str(ckpt / "final" / "ranks"))
-        out = spark.read.parquet(str(ckpt / "final" / "edges"))
-        ranks = spark.read.parquet(str(ckpt / "final" / "ranks"))
+        out.write.mode("overwrite").parquet(f"{ckpt}/final/edges")
+        ranks.write.mode("overwrite").parquet(f"{ckpt}/final/ranks")
+        out = spark.read.parquet(f"{ckpt}/final/edges")
+        ranks = spark.read.parquet(f"{ckpt}/final/ranks")
     return CHResult(edges=out, ranks=ranks, metrics=metrics,
                     rounds=len(metrics))
 

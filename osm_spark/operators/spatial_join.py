@@ -41,10 +41,8 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-import atexit
+import json
 import math
-import shutil
-import tempfile
 from typing import NamedTuple
 
 import numpy as np
@@ -57,6 +55,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from osm_spark.geo import kernels as K
 from osm_spark.operators.sqlexpr import sql_name
+from osm_spark.sources import ranges as R
 
 DEFAULT_CELL_ZOOM = 12
 CKEY_SCALE = 1 << 32      # cell key = cx * CKEY_SCALE + cy
@@ -437,25 +436,26 @@ BROADCAST_MAX_VERTS = 2_000_000
 _LAYER_META = "_osm_layer_meta.json"
 
 
-def _write_layer_meta(path: str, z: int, zc: int) -> None:
-    import json
-    import os
+def _meta_path(path: str) -> str:
+    return f"{path.rstrip('/')}/{_LAYER_META}"
 
-    with open(os.path.join(path, _LAYER_META), "w") as fh:
-        json.dump({"z": z, "zc": zc}, fh)
+
+def is_written_layer(path: str) -> bool:
+    """Whether ``path`` holds a ``write_partitioned_layer`` output (its
+    key-geometry sidecar is there)."""
+    return R.exists(_meta_path(path))
+
+
+def _write_layer_meta(path: str, z: int, zc: int) -> None:
+    R.write_text(_meta_path(path), json.dumps({"z": z, "zc": zc}))
 
 
 def _read_layer_meta(path: str) -> dict:
-    import json
-    import os
-
-    p = os.path.join(path, _LAYER_META)
-    if not os.path.exists(p):
+    if not is_written_layer(path):
         raise ValueError(
             f"{path} has no {_LAYER_META}: not a write_partitioned_layer "
             "output")
-    with open(p) as fh:
-        return json.load(fh)
+    return json.loads(R.read_text(_meta_path(path)))
 
 
 def write_partitioned_layer(polys: DataFrame, path: str,
@@ -496,7 +496,8 @@ def _partitioned_join_mapper(layer_path: str, z: int, zc: int, how: str,
     def fn(batches):
         import pyarrow.dataset as pads
 
-        dataset = pads.dataset(layer_path, format="parquet")
+        fsys, rel = R._pa_fs(layer_path)
+        dataset = pads.dataset(rel, format="parquet", filesystem=fsys)
         # lazy per-partition layer-index cache: the exchange routed
         # whole coarse cells here; the first span group reads (and prunes
         # by row-group stats on the gkey-sorted file) the numpy coarse
@@ -629,9 +630,11 @@ def spatial_join(
       zero shuffles, zero joins.  Right whenever the CSR index fits
       comfortably in executor memory (``BROADCAST_MAX_VERTS``).
     - **partitioned disk-index** (every other case): the layer is
-      written once per call with ``write_partitioned_layer`` to a
-      ``tempfile.mkdtemp`` directory (the executors read it, so it must
-      be on a filesystem they share), then joined by
+      written once per call with ``write_partitioned_layer`` to a new
+      ``osm_layer_*`` directory under the session's
+      ``spark.sql.warehouse.dir`` (the executors read it, so the
+      warehouse must be a filesystem they share; it is deleted when the
+      driver exits, so collect the join before that), then joined by
       ``spatial_join_partitioned``.  To reuse a layer across joins, or
       to salt hot (city) cells (``suggest_salt``), write the layer once
       and call ``spatial_join_partitioned`` directly.
@@ -650,8 +653,8 @@ def spatial_join(
         ).withColumnRenamed("k", page_key)
 
     # the returned join is lazy: its scratch layer lives until exit
-    layer_path = tempfile.mkdtemp(prefix="osm_layer_")
-    atexit.register(shutil.rmtree, layer_path, ignore_errors=True)
+    layer_path = R.scratch_dir(
+        pages.sparkSession.conf.get("spark.sql.warehouse.dir"), "osm_layer_")
     write_partitioned_layer(polys, layer_path)
     return spatial_join_partitioned(pages, layer_path, how=how,
                                     page_key=page_key)

@@ -89,10 +89,13 @@ def fields(b) -> dict[int, list]:
 def packed_uint64(buf) -> np.ndarray:
     """Packed varints -> uint64 array, numpy-vectorized (no per-value
     Python): bytes grouped at continuation-bit boundaries, 7-bit limbs
-    shifted by in-group position, summed with add.reduceat."""
+    shifted by in-group position, summed with add.reduceat.
+    ``ValueError`` when the bytes end inside a varint."""
     a = np.frombuffer(bytes(buf), np.uint8).astype(np.int64)
     if not len(a):
         return np.empty(0, np.int64)
+    if a[-1] & 0x80:
+        raise ValueError("packed varint truncated at the last byte")
     ends = np.nonzero((a & 0x80) == 0)[0]
     starts = np.concatenate(([0], ends[:-1] + 1))
     pos = np.arange(len(a)) - np.repeat(starts, ends - starts + 1)
@@ -113,7 +116,9 @@ def decode_packed_many(bufs: list, signed: bool, delta: bool = False):
     once, then per-buffer positions / segmented delta-cumsum via
     repeat/cumsum — no per-entity Python or numpy-call overhead.
 
-    Returns (values, counts per buffer, within-buffer positions)."""
+    Returns (values, counts per buffer, within-buffer positions).
+    ``ValueError`` when a buffer ends inside a varint (it would
+    otherwise fold into the next buffer's first value)."""
     nb = len(bufs)
     big = b"".join(bufs)
     if not big:
@@ -122,6 +127,8 @@ def decode_packed_many(bufs: list, signed: bool, delta: bool = False):
     blens = np.fromiter((len(b) for b in bufs), np.int64, nb)
     boff = np.concatenate(([0], np.cumsum(blens)))
     a = np.frombuffer(big, np.uint8)
+    if (a[boff[1:][blens > 0] - 1] & 0x80).any():
+        raise ValueError("packed varint truncated at the end of a buffer")
     cum_terms = np.concatenate(([0], np.cumsum((a & 0x80) == 0)))
     counts = cum_terms[boff[1:]] - cum_terms[boff[:-1]]
     vals = packed_sint64(big) if signed else packed_uint64(big)
@@ -293,10 +300,21 @@ def _joined(fs: list[dict], tag: int) -> list[bytes]:
 
 
 def decode_block(data: bytes) -> pd.DataFrame:
-    """One PrimitiveBlock -> union-schema DataFrame."""
+    """One PrimitiveBlock -> union-schema DataFrame.  ``ValueError``
+    naming what is missing for a block without a string table, a way or
+    relation without an id, or a string id past the table."""
     blk = fields(data)
+    if 1 not in blk:
+        raise ValueError("PrimitiveBlock has no string table")
     sarr = np.asarray([bytes(s).decode("utf-8")
                        for s in fields(blk[1][0]).get(1, [])], dtype=object)
+
+    def strings(sid: np.ndarray) -> list:
+        bad = (sid < 0) | (sid >= len(sarr))
+        if bad.any():
+            raise ValueError(f"string id {sid[bad][0]} outside the "
+                             f"{len(sarr)}-entry string table")
+        return list(sarr[sid])
 
     def s64(u: int) -> int:  # plain int64 varint (offsets may be negative)
         return u - (1 << 64) if u >= (1 << 63) else u
@@ -306,16 +324,18 @@ def decode_block(data: bytes) -> pd.DataFrame:
     lon_off = s64(blk.get(20, [0])[0])
     out = _Rows()
 
-    def entities(bufs: list, kind: int, tag_kind: int):
+    def entities(bufs: list, kind: int, tag_kind: int, what: str):
         """Ways or relations, batch-decoded: their rows and their key/val
         tag rows; returns the decoded messages and their ids."""
         fs = [fields(b) for b in bufs]
+        if any(1 not in f for f in fs):
+            raise ValueError(f"a {what} without an id")
         ids = np.fromiter((f[1][0] for f in fs), np.int64, len(fs))
         ks, kcnt, _ = decode_packed_many(_joined(fs, 2), signed=False)
         vs, _, _ = decode_packed_many(_joined(fs, 3), signed=False)
         out.add(len(ids), kind=kind, id=ids)
         out.add(len(ks), kind=tag_kind, id=np.repeat(ids, kcnt),
-                key=list(sarr[ks]), val=list(sarr[vs]))
+                key=strings(ks), val=strings(vs))
         return fs, ids
 
     for grp_buf in blk.get(2, []):
@@ -341,23 +361,23 @@ def decode_block(data: bytes) -> pd.DataFrame:
                 tag_node = node_of[pairs[:, 0]]
                 out.add(len(pairs), kind=KIND_NODE_TAG,
                         id=ids[tag_node],
-                        key=list(sarr[kv[pairs[:, 0]]]),
-                        val=list(sarr[kv[pairs[:, 1]]]))
+                        key=strings(kv[pairs[:, 0]]),
+                        val=strings(kv[pairs[:, 1]]))
         if 3 in grp:                                # Ways
-            wfs, wids = entities(grp[3], KIND_WAY, KIND_WAY_TAG)
+            wfs, wids = entities(grp[3], KIND_WAY, KIND_WAY_TAG, "way")
             refs, rcnt, seq = decode_packed_many(
                 _joined(wfs, 8), signed=True, delta=True)
             out.add(len(refs), kind=KIND_WAY_REF,
                     id=np.repeat(wids, rcnt), ref=refs, seq=seq)
         if 4 in grp:                                # Relations
-            rfs, rids = entities(grp[4], KIND_REL, KIND_REL_TAG)
+            rfs, rids = entities(grp[4], KIND_REL, KIND_REL_TAG, "relation")
             mids, mcnt, seq = decode_packed_many(
                 _joined(rfs, 9), signed=True, delta=True)
             types, _, _ = decode_packed_many(_joined(rfs, 10), signed=False)
             roles, _, _ = decode_packed_many(_joined(rfs, 8), signed=False)
             out.add(len(mids), kind=KIND_REL_MEMBER,
                     id=np.repeat(rids, mcnt), ref=mids, seq=seq,
-                    mtype=types, role=list(sarr[roles]))
+                    mtype=types, role=strings(roles))
     return out.frame()
 
 

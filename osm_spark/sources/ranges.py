@@ -14,10 +14,16 @@ yields each record's byte range, then each worker reads its own.
    exchange runs before it.
 3. Span reader: ``read_spans`` reads a batch's records as a few
    coalesced ~8 MB spans and yields each record's bytes in order.
+4. Side files: a layer's meta, ``contract``'s round log, ``Pipeline``
+   lineage and byte counts, scratch layers — so a path's scheme is
+   decided here only.  A bare path is the local disk: a cluster whose
+   ``fs.defaultFS`` is not local must pass full URIs.
 """
 
 from __future__ import annotations
 
+import atexit
+import uuid
 from collections.abc import Iterator
 
 import numpy as np
@@ -29,13 +35,14 @@ SPAN_BYTES = 8 << 20        # coalesced read span (one ranged GET)
 
 
 def _pa_fs(path: str):
-    """(pyarrow FileSystem, path-within-fs): executors have no py4j
-    bridge to the JVM Hadoop FileSystem (metrics._FS), so reads route
-    through pyarrow.fs; ``s3a://`` is normalized to ``s3://``."""
+    """(pyarrow FileSystem, path-within-fs): the one path-to-filesystem
+    mapping (executors have no py4j bridge to the JVM).  A bare path,
+    ``file:/x`` (Spark's spelling) and ``file:///x`` are the local
+    disk; ``s3a://`` becomes ``s3://``."""
     uri = path
     if uri.startswith("s3a://") or uri.startswith("s3n://"):
         uri = "s3://" + uri.split("://", 1)[1]
-    if "://" in uri:
+    if "://" in uri or uri.startswith("file:"):
         return pafs.FileSystem.from_uri(uri)
     return pafs.LocalFileSystem(), uri
 
@@ -58,6 +65,54 @@ def exists(path: str) -> bool:
 
 def file_size(path: str) -> int:
     return int(_info(path).size or 0)
+
+
+def read_text(path: str) -> str:
+    """The whole of a small UTF-8 side file."""
+    with open_input(path) as f:
+        return f.read().decode("utf-8")
+
+
+def write_text(path: str, text: str) -> None:
+    """Create or replace a small UTF-8 side file, and its directory
+    (object stores have no append: a log is rewritten whole)."""
+    fsys, rel = _pa_fs(path)
+    fsys.create_dir(rel.rpartition("/")[0] or ".", recursive=True)
+    with fsys.open_output_stream(rel) as f:
+        f.write(text.encode("utf-8"))
+
+
+def _tree(path: str, recursive: bool) -> list:
+    fsys, rel = _pa_fs(path)
+    return fsys.get_file_info(pafs.FileSelector(
+        rel, recursive=recursive, allow_not_found=True))
+
+
+def list_names(path: str) -> list[str]:
+    """Sorted entry names of directory ``path``; [] when it is missing."""
+    return sorted(i.base_name for i in _tree(path, False))
+
+
+def tree_bytes(path: str) -> int:
+    """Total file bytes under ``path``: 0 when it is missing; any other
+    error propagates."""
+    return sum(i.size for i in _tree(path, True)
+               if i.type == pafs.FileType.File)
+
+
+def delete_tree(path: str) -> None:
+    """Remove directory ``path`` and everything under it, if it exists."""
+    fsys, rel = _pa_fs(path)
+    if fsys.get_file_info(rel).type != pafs.FileType.NotFound:
+        fsys.delete_dir(rel)
+
+
+def scratch_dir(parent: str, prefix: str) -> str:
+    """A new unique directory name under ``parent``, whose tree is
+    deleted with ``delete_tree`` when the interpreter exits."""
+    path = f"{parent.rstrip('/')}/{prefix}{uuid.uuid4().hex}"
+    atexit.register(delete_tree, path)
+    return path
 
 
 def offset_index(spark: SparkSession, rows: list[tuple[int, ...]],

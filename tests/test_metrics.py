@@ -16,6 +16,17 @@ def test_partition_stats_sums_to_count(spark):
 
 
 def test_pipeline_stage_metrics_and_resume(spark, tmp_path):
+    _stage_metrics_and_resume(spark, str(tmp_path / "pl"))
+
+
+def test_pipeline_over_file_uri(spark, tmp_path):
+    """The same stages and resume with a ``file://`` base directory."""
+    _stage_metrics_and_resume(spark, (tmp_path / "pl").as_uri())
+    assert (tmp_path / "pl" / "a" / "_SUCCESS").exists()
+    assert len(list((tmp_path / "pl" / "lineage").glob("*.json"))) == 4
+
+
+def _stage_metrics_and_resume(spark, base):
     calls = {"a": 0, "b": 0}
 
     def make(pl):
@@ -32,7 +43,7 @@ def test_pipeline_stage_metrics_and_resume(spark, tmp_path):
 
         return pl.stage("b", stage_b, inputs=["a"])
 
-    pl1 = Pipeline(spark, str(tmp_path / "pl"), "test")
+    pl1 = Pipeline(spark, base, "test")
     out1 = make(pl1).collect()
     assert calls == {"a": 1, "b": 1}
     recs = pl1.lineage()
@@ -44,7 +55,7 @@ def test_pipeline_stage_metrics_and_resume(spark, tmp_path):
     assert recs[1]["inputs"] == ["a"]
 
     # resume: stage fns must NOT run again; results identical
-    pl2 = Pipeline(spark, str(tmp_path / "pl"), "test")
+    pl2 = Pipeline(spark, base, "test")
     out2 = make(pl2).collect()
     assert calls == {"a": 1, "b": 1}
     assert sorted(map(tuple, out1)) == sorted(map(tuple, out2))

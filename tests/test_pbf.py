@@ -9,6 +9,7 @@ from pathlib import Path
 import pytest
 
 from osm_spark.sources import pbf, pbf_fixture
+from osm_spark.sources.pbf_fixture import _f_bytes, _f_packed, _f_varint
 
 FIXTURE = Path(__file__).resolve().parent.parent / "data" / "fixtures" / "sample.osm.pbf"
 
@@ -161,3 +162,43 @@ def test_decode_corrupt_blob_raises_value_error(spark, tmp_path):
     p.write_bytes(bytes(data))
     with pytest.raises(Exception, match=f"blob at offset {off} "):
         pbf.decode_blocks(spark, str(p)).collect()
+
+
+
+def _block(*groups: bytes) -> bytes:
+    """A PrimitiveBlock with the string table ["", "highway"]."""
+    table = b"".join(_f_bytes(1, s) for s in (b"", b"highway"))
+    return _f_bytes(1, table) + b"".join(_f_bytes(2, g) for g in groups)
+
+
+def _way(wid=None, val=1) -> bytes:
+    """A way (or relation) message with one key/val tag pair."""
+    return ((b"" if wid is None else _f_varint(1, wid))
+            + _f_packed(2, [1], zig=False) + _f_packed(3, [val], zig=False))
+
+
+@pytest.mark.parametrize("block, missing", [
+    (b"", "string table"),
+    (_block(_f_bytes(3, _way())), "way without an id"),
+    (_block(_f_bytes(4, _way())), "relation without an id"),
+    (_block(_f_bytes(3, _way(wid=5, val=9))), "string id 9"),
+], ids=["empty", "way_no_id", "relation_no_id", "string_id_past_table"])
+def test_decode_block_missing_parts_raise_value_error(block, missing):
+    """A block without a string table, a way or relation without an id,
+    or a string id past the table is a ValueError naming it, not a
+    KeyError or IndexError."""
+    with pytest.raises(ValueError, match=missing):
+        pbf.decode_block(block)
+
+
+def test_truncated_packed_varint_raises_value_error():
+    """Packed bytes that end on a continuation bit are refused: alone,
+    and at the end of one buffer of many, where the cut varint would
+    otherwise fold into the next buffer's first value."""
+    with pytest.raises(ValueError, match="truncated"):
+        pbf.packed_uint64(b"\x01\x80")
+    with pytest.raises(ValueError, match="end of a buffer"):
+        pbf.decode_packed_many([b"\x01\x80", b"\x01"], signed=False)
+    vals, counts, _ = pbf.decode_packed_many([b"\x01", b"", b"\x96\x01"],
+                                             signed=False)
+    assert vals.tolist() == [1, 150] and counts.tolist() == [1, 0, 1]

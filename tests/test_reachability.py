@@ -16,6 +16,11 @@ Names are matched as written, not resolved through imports.  The fix
 for a failure is to delete the function or the parameter (inlining its
 default), or to name it in ``ALLOWED`` with the reason it stays.  An
 allowed function is exempt from both rules.
+
+A third rule keeps one filesystem layer: ``osm_spark/operators/`` and
+``osm_spark/metrics.py`` reach files only through
+``osm_spark/sources/ranges.py`` — no builtin ``open(``, ``os.path``,
+``pathlib``, ``tempfile``, ``shutil`` or ``atexit``.
 """
 
 import ast
@@ -164,3 +169,41 @@ def test_public_surface_is_reached():
     stale = sorted(set(ALLOWED) - set(unreferenced) - set(unset))
     assert not stale, f"ALLOWED entries a caller now uses: {stale}"
     assert len(ALLOWED) <= 15
+
+
+SIDE_FILE_MODULES = {"os.path", "pathlib", "tempfile", "shutil", "atexit"}
+
+
+def side_file_code(path):
+    """[(line, what)] of the filesystem code outside ``ranges`` in one
+    file: a builtin ``open(`` call, an ``os.path`` attribute, or an
+    import from one of ``SIDE_FILE_MODULES``."""
+    hits = []
+    for node in ast.walk(_parse(path)):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Name) \
+                and node.func.id == "open":
+            hits.append((node.lineno, "open("))
+            continue
+        if isinstance(node, ast.Attribute) and node.attr == "path" \
+                and isinstance(node.value, ast.Name) and node.value.id == "os":
+            hits.append((node.lineno, "os.path"))
+            continue
+        if isinstance(node, ast.Import):
+            names = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            names = [f"{node.module}.{a.name}" for a in node.names]
+        else:
+            continue
+        hits += [(node.lineno, n) for n in names
+                 if any(n == m or n.startswith(m + ".")
+                        for m in SIDE_FILE_MODULES)]
+    return hits
+
+
+def test_side_files_go_through_ranges():
+    files = sorted((PACKAGE / "operators").rglob("*.py")) + [PACKAGE / "metrics.py"]
+    bad = [f"{p.relative_to(ROOT)}:{line} {what}"
+           for p in files for line, what in side_file_code(p)]
+    assert not bad, (
+        "filesystem code outside osm_spark/sources/ranges.py; use its "
+        "helpers instead: " + ", ".join(bad))

@@ -127,6 +127,34 @@ def test_resume_redoes_finish_when_final_ranks_lost(graph, tmp_path):
     assert again.metrics == res.metrics
 
 
+def test_contraction_resume_over_file_uri(graph, tmp_path, monkeypatch):
+    """A ``file://`` checkpoint directory is one directory: the rounds,
+    ``metrics.jsonl`` and ``final/`` all land under it, the second call
+    returns the finished result from ``final/``, and nothing is made
+    relative to the working directory."""
+    edges, rows = graph
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    monkeypatch.setattr(RT, "LOCAL_THRESHOLD", 120)
+    ck = tmp_path / "ch_uri"
+    full = RT.contract(edges.select("src", "dst", "weight"),
+                       checkpoint_dir=ck.as_uri())
+    dist_rounds = [m for m in full.metrics if not m.get("local_finish")]
+    assert dist_rounds and all(m["checkpoint_bytes"] > 0 for m in dist_rounds)
+    lines = [json.loads(x) for x in
+             (ck / "metrics.jsonl").read_text().splitlines()]
+    assert lines == full.metrics
+
+    again = RT.contract(edges.select("src", "dst", "weight"),
+                        checkpoint_dir=ck.as_uri())
+    assert again.metrics == full.metrics
+    assert again.edges.inputFiles()
+    assert all("/final/edges/" in f for f in again.edges.inputFiles())
+    _check_distances(_ch_rows(again), rows, n_sources=3, n_targets=4, seed=3)
+    assert list(cwd.iterdir()) == []
+
+
 def test_contraction_all_ranked_no_equal_rank_edges(graph):
     edges, _ = graph
     res = RT.contract(edges.select("src", "dst", "weight"))

@@ -11,6 +11,7 @@ from osm_spark.geo import kernels as K
 from osm_spark.operators import spatial_join as SJ
 from osm_spark.operators.geocode import geocode_pages
 from osm_spark.operators.spatial_join import spatial_join
+from osm_spark.sources import ranges as R
 
 from kernel_oracles import flat_layer, pages_df
 
@@ -59,20 +60,51 @@ def fixture_data(spark):
 
 
 @pytest.mark.parametrize(
-    "path", ["broadcast", "scratch_layer", "scratch_layer_salted"])
+    "path", ["broadcast", "scratch_layer", "scratch_layer_salted",
+             "file_uri_layer"])
 def test_spatial_join_matches_bruteforce(spark, fixture_data, path,
                                          monkeypatch, tmp_path):
     geo, polys, oracle = fixture_data
     if path == "broadcast":
         df = spatial_join(geo, polys)
     elif path == "scratch_layer":
+        # the scratch layer is a new layer under the session's warehouse,
+        # where executors on other hosts read it, not in the driver's /tmp
+        wh = spark.conf.get("spark.sql.warehouse.dir")
+        before = set(R.list_names(wh))
         df = scratch_layer_join(monkeypatch, geo, polys)
-    else:       # salting takes a written layer: spatial_join has no salt
+        new = sorted(set(R.list_names(wh)) - before)
+        assert len(new) == 1 and new[0].startswith("osm_layer_"), new
+        assert SJ.is_written_layer(f"{wh}/{new[0]}")
+    elif path == "scratch_layer_salted":
+        # salting takes a written layer: spatial_join has no salt
         layer = SJ.write_partitioned_layer(polys, str(tmp_path / "layer"))
         df = SJ.spatial_join_partitioned(geo, layer, salt=4)
+    else:       # sidecar and layer reads go through the sources' opener
+        layer = SJ.write_partitioned_layer(polys, (tmp_path / "l").as_uri())
+        assert SJ.is_written_layer(layer)
+        df = SJ.spatial_join_partitioned(geo, layer)
     got = {(r.page_id, r.feature_id) for r in df.collect()}
     assert got == oracle
     assert len(got) > N_PAGES * 0.4  # skewed fixture: most pages hit a city
+
+
+def test_scratch_dir_removed_at_exit(tmp_path):
+    """A scratch directory, here under a ``file://`` parent, is deleted
+    with everything in it when its interpreter exits."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = ("import sys; from osm_spark.sources import ranges as R; "
+            "p = R.scratch_dir(sys.argv[1], 'osm_layer_'); "
+            "R.write_text(p + '/part', 'x'); print(p)")
+    out = subprocess.run(
+        [sys.executable, "-c", code, tmp_path.as_uri()], check=True,
+        capture_output=True, text=True,
+        cwd=Path(__file__).resolve().parents[1])
+    assert out.stdout.startswith(tmp_path.as_uri() + "/osm_layer_")
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_left_join_keeps_unmatched(spark, fixture_data):

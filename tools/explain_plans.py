@@ -77,11 +77,12 @@ def main():
 
     # 3. partitioned disk-index path: hash exchange variant + the
     # zero-shuffle clustered variant
-    from osm_spark.operators.spatial_join import (spatial_join_partitioned,
+    from osm_spark.operators.spatial_join import (is_written_layer,
+                                                 spatial_join_partitioned,
                                                  write_partitioned_layer)
 
     layer_path = REPO / "data" / "plans_layer"
-    if not (layer_path / "_osm_layer_meta.json").exists():
+    if not is_written_layer(str(layer_path)):
         write_partitioned_layer(FX.polygons_df(spark, 500), str(layer_path))
     sjp = spatial_join_partitioned(geo, str(layer_path), page_key="doc_id",
                                    salt=2)
@@ -157,7 +158,7 @@ def main():
 
     import __spark_entry__ as entrymod
 
-    warc_path = entrymod._warc_fixture_path()
+    warc_path = entrymod._fixture_path("sample.warc.gz")
     wdec = warc.read_warc_pages(spark, warc_path)
     section(
         "WARC decode — parallel record ranges",
