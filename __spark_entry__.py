@@ -1705,7 +1705,7 @@ def _oracle_sql_base() -> dict[str, str]:
                      CAST(floor(CAST(unnest(embedding) AS DOUBLE) * {SIM.QUANT}) AS BIGINT) AS q
               FROM embeddings),
             norms AS (SELECT vec_id, sum(q * q) AS norm2 FROM comp GROUP BY vec_id),
-            tp(t, p) AS (VALUES {", ".join(f"({t}, {p})" for t in range(8) for p in range(2))}),
+            tp(t, p) AS (VALUES {", ".join(f"({t}, {p})" for t in range(8) for p in range(SIM.LSH_PLANES))}),
             pdots AS (
               SELECT c.vec_id, t.t, t.p,
                      sum(c.q * (CASE WHEN (strpos('0123456789abcdef',
@@ -1743,7 +1743,7 @@ def _oracle_sql_base() -> dict[str, str]:
                      CAST(floor(CAST(unnest(embedding) AS DOUBLE) * {SIM.QUANT}) AS BIGINT) AS q
               FROM embeddings),
             norms AS (SELECT vec_id, sum(q * q) AS norm2 FROM comp GROUP BY vec_id),
-            tp(t, p) AS (VALUES {", ".join(f"({t}, {p})" for t in range(4) for p in range(4))}),
+            tp(t, p) AS (VALUES {", ".join(f"({t}, {p})" for t in range(4) for p in range(SIM.LSH_PLANES))}),
             pdots AS (
               SELECT c.vec_id, t.t, t.p,
                      sum(c.q * (CASE WHEN (strpos('0123456789abcdef',

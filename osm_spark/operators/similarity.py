@@ -23,6 +23,9 @@ SAMPLE_A = 2654435761          # Knuth multiplicative scramble
 SAMPLE_M = 1 << 31             # (key%M)*A < 2^63: exact in int64
 
 QUANT = 1_000_000
+# hyperplanes per LSH table (2^LSH_PLANES buckets): the recall test gates
+# lsh_topk's top-1 recall > 0.6 at this count; 4 planes gave 0.41
+LSH_PLANES = 2
 
 
 def _quantized_components(emb: DataFrame) -> DataFrame:
@@ -206,11 +209,11 @@ def lsh_bucket_col(col: str, planes: list[list[int]]):
     return bucket
 
 
-def lsh_buckets(emb: DataFrame, n_planes: int, n_tables: int,
-                dim: int | None) -> DataFrame:
-    """(vec_id, table, bucket): multi-table LSH bucket assignment — one
-    JVM projection, no shuffle.  ``dim`` hoistable to avoid the
-    plan-time ``first()`` in production pipelines."""
+def lsh_buckets(emb: DataFrame, n_tables: int, dim: int | None) -> DataFrame:
+    """(vec_id, table, bucket): multi-table LSH bucket assignment over
+    ``LSH_PLANES`` planes per table — one JVM projection, no shuffle.
+    ``dim`` hoistable to avoid the plan-time ``first()`` in production
+    pipelines."""
     if dim is None:
         dim = len(emb.select("embedding").first()[0])
     return emb.select(
@@ -219,7 +222,7 @@ def lsh_buckets(emb: DataFrame, n_planes: int, n_tables: int,
             F.array(*[
                 F.struct(
                     F.lit(t).alias("table"),
-                    lsh_bucket_col("embedding", lsh_planes(dim, n_planes, table=t)).alias("bucket"),
+                    lsh_bucket_col("embedding", lsh_planes(dim, LSH_PLANES, table=t)).alias("bucket"),
                 )
                 for t in range(n_tables)
             ])
@@ -231,12 +234,12 @@ def cosine_near_dup_bucketed(emb: DataFrame, threshold: float = 0.95,
                              dim: int | None = None) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine) with
     cosine >= threshold, at scale: candidates = pairs sharing a bucket
-    of 2 LSH planes in ANY of 8 tables (bucket equi-join — no all-pairs
-    self-join in the plan), then the exact quantized cosine verify of
-    ``cosine_topk``, so the pair set is engine-reproducible.  Approximate
-    by LSH recall (1-(1-p^b)^L); recall vs the all-pairs twin in
-    ``tests/kernel_oracles.py`` is pytest-gated."""
-    buckets = lsh_buckets(emb, 2, 8, dim)
+    of ``LSH_PLANES`` planes in ANY of 8 tables (bucket equi-join — no
+    all-pairs self-join in the plan), then the exact quantized cosine
+    verify of ``cosine_topk``, so the pair set is engine-reproducible.
+    Approximate by LSH recall (1-(1-p^b)^L); recall vs the all-pairs twin
+    in ``tests/kernel_oracles.py`` is pytest-gated."""
+    buckets = lsh_buckets(emb, 8, dim)
     ba = buckets.select(F.col("vec_id").alias("id_a"), "table", "bucket")
     bb = buckets.select(F.col("vec_id").alias("id_b"), "table", "bucket")
     cand = (
@@ -254,19 +257,18 @@ def cosine_near_dup_bucketed(emb: DataFrame, threshold: float = 0.95,
     )
 
 
-def lsh_topk(emb: DataFrame, k: int = 3, n_planes: int = 4,
-             dim: int | None = None) -> DataFrame:
+def lsh_topk(emb: DataFrame, k: int = 3, dim: int | None = None) -> DataFrame:
     """Approximate top-k: rank only within random-hyperplane buckets.
 
-    Multi-table LSH: 4 independent sets of ``n_planes`` planes; a pair
+    Multi-table LSH: 4 independent sets of ``LSH_PLANES`` planes; a pair
     is a candidate if it shares a bucket in ANY table (recall ≈
     1-(1-p)^L).  Same exact quantized ranking as cosine_topk, restricted
     to candidate peers — the candidate-set shrink that makes 100 TB ANN
-    tractable (bucket count 2^n_planes scales the self-join down
+    tractable (bucket count 2^LSH_PLANES scales the self-join down
     quadratically; the table loop multiplies cost linearly, recall
     exponentially).
     """
-    buckets = lsh_buckets(emb, n_planes, 4, dim)
+    buckets = lsh_buckets(emb, 4, dim)
     comp = _quantized_components(emb)
     norms = _norms(comp)
     ba = buckets.select("vec_id", "table", "bucket")

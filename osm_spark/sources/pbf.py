@@ -302,7 +302,9 @@ def _joined(fs: list[dict], tag: int) -> list[bytes]:
 def decode_block(data: bytes) -> pd.DataFrame:
     """One PrimitiveBlock -> union-schema DataFrame.  ``ValueError``
     naming what is missing for a block without a string table, a way or
-    relation without an id, or a string id past the table."""
+    relation without an id, a string id past the table, DenseNodes whose
+    id, lat and lon lengths differ, or a DenseNodes ``keys_vals`` that
+    splits a key/val pair or names a node past its ids."""
     blk = fields(data)
     if 1 not in blk:
         raise ValueError("PrimitiveBlock has no string table")
@@ -346,6 +348,9 @@ def decode_block(data: bytes) -> pd.DataFrame:
             ids = np.cumsum(packed_sint64(cat(1)))
             lat = np.cumsum(packed_sint64(cat(8)))
             lon = np.cumsum(packed_sint64(cat(9)))
+            if not len(ids) == len(lat) == len(lon):
+                raise ValueError(f"DenseNodes with {len(ids)} ids, {len(lat)} "
+                                 f"lats and {len(lon)} lons")
             lat_fp = _trunc_div100(lat_off + granularity * lat)
             lon_fp = _trunc_div100(lon_off + granularity * lon)
             out.add(len(ids), kind=KIND_NODE, id=ids,
@@ -357,7 +362,13 @@ def decode_block(data: bytes) -> pd.DataFrame:
                 node_of[zeros[:-1] + 1] = 1
                 node_of = np.cumsum(node_of)
                 nz = np.nonzero(kv)[0]
-                pairs = nz.reshape(-1, 2) if len(nz) else nz.reshape(0, 2)
+                if (np.bincount(node_of[nz]) % 2).any():
+                    raise ValueError("DenseNodes keys_vals with an odd "
+                                     "number of string ids for a node")
+                if len(nz) and node_of[nz[-1]] >= len(ids):
+                    raise ValueError(f"DenseNodes keys_vals names node "
+                                     f"{node_of[nz[-1]]} of {len(ids)} ids")
+                pairs = nz.reshape(-1, 2)
                 tag_node = node_of[pairs[:, 0]]
                 out.add(len(pairs), kind=KIND_NODE_TAG,
                         id=ids[tag_node],

@@ -9,15 +9,19 @@ plain Dijkstra the contraction hierarchy's distances are held to, and
 the per-point, all-pairs and batch twins no query runs: the Mercator
 and Morton kernels, the quorum ring containment, the all-pairs cosine
 near-dup, the batch sessionizer and the driver-side WARC record index.
+The physical-plan readers the plan-shape tests and the cost ledger
+share close the file.
 """
 
 from __future__ import annotations
 
 import heapq
 import math
+import re
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark import fixtures as FX
@@ -356,3 +360,79 @@ def iter_warc_index(path: str) -> list[tuple[int, int, bool]]:
 
     rows = warc._cdx_rows(path)
     return list(warc._walk(path)) if rows is None else rows
+
+
+# ---------------------------------------------------------------------------
+# Physical plans
+
+
+def executed_plan(df) -> str:
+    """``df``'s executed physical plan as Spark prints it, one node per
+    line; an adaptive plan that has not run shows its initial plan."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def new_plans(spark, action) -> list[str]:
+    """Physical plan descriptions (``explain("formatted")`` text, final
+    after adaptive re-planning) of the SQL executions ``action`` runs,
+    oldest first.  The status store lists executions by id and evicts
+    the oldest, so new ones are picked by id, not by list position."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    last = execs.last().executionId() if execs.size() else -1
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = store.executionsList()
+    plans = []
+    for i in range(execs.size() - 1, -1, -1):
+        e = execs.apply(i)
+        if e.executionId() <= last:
+            break
+        plans.append(e.physicalPlanDescription())
+    return plans[::-1]
+
+
+def call_plans(spark, fn) -> list[str]:
+    """The plans of one operator call: those of the executions ``fn()``
+    runs, plus the executed plan of the DataFrame it returns, if any."""
+    out = []
+    plans = new_plans(spark, lambda: out.append(fn()))
+    if isinstance(out[0], DataFrame):
+        plans.append(executed_plan(out[0]))
+    return plans
+
+
+# a node line: tree prefix, optional whole-stage-codegen mark ("* " in
+# formatted text, "*(1) " in executed_plan's), then the node name
+_NODE = re.compile(r"[ :|+-]*(?:\*(?:\(\d+\))? *)?(\w+)")
+_PYTHON = re.compile(r"Python|Pandas|InArrow")
+
+
+def _node_names(plan: str) -> list[str]:
+    """The node names of ``plan``'s tree (either text form).  Formatted
+    text stops at the blank line before its per-node details; an
+    adaptive plan's ``== Initial Plan ==`` branch is skipped, so a
+    re-planned node counts once."""
+    lines = plan.splitlines()
+    if lines and lines[0].startswith("== Physical Plan =="):
+        lines = lines[1:lines.index("", 1)] if "" in lines[1:] else lines[1:]
+    names, skip_below = [], None
+    for line in lines:
+        depth = len(line) - len(line.lstrip(" :|"))
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = depth if "== Initial Plan ==" in line else None
+        m = _NODE.match(line)     # "== ... Plan ==" lines match no name
+        if m:
+            names.append(m.group(1))
+    return names
+
+
+def plan_node_counts(plans) -> dict[str, int]:
+    """Shuffle ``Exchange``, ``BroadcastExchange`` and Python-worker
+    (``ArrowEvalPython``, ``MapInPandas``, ``MapInArrow``, ...) nodes
+    over ``plans``."""
+    names = [n for p in plans for n in _node_names(p)]
+    return {"exchange": names.count("Exchange"),
+            "broadcast": names.count("BroadcastExchange"),
+            "python": sum(bool(_PYTHON.search(n)) for n in names)}

@@ -3,7 +3,8 @@ geo_tag operator call, the same ``knn_join`` call on its large-layer
 cell-ring path (``knn_join_cells``), each routing call (``contract``
 with one distributed round, ``ch_batch_routes``), the ingest_warc chain
 (``ingest_warc``) and each byte-range source decode (``decode_blocks``,
-``read_shp``, each with its ``count()``) costs on the driver.
+``read_shp``, each with its ``count()``) costs on the driver, and the
+shape of the plans it runs.
 
 Every ``Column``/``DataFrame`` method call is at least one Python->JVM
 round trip, and building a plan out of hundreds of them was most of the
@@ -28,6 +29,14 @@ runs one distributed round's stages per round (47 jobs on grid 6), and
 ``knn_join_cells`` runs its ring rounds and residue pass inside the
 call (its residue guard collects), so each count waits for the listener
 bus to drain before reading the job group.
+
+A second pass counts each call's plan nodes: shuffle ``Exchange``,
+``BroadcastExchange`` and Python-worker nodes (``ArrowEvalPython``,
+``MapInPandas``, ``MapInArrow``, ...), over the plans of the SQL
+executions the call runs plus the executed plan of the frame it
+returns — each a unit of cost of the kind CIDR 2022's Python-UDF cost
+model counts.  The pass runs after the round trips and jobs are read,
+so reading plans moves neither count.
 """
 
 from __future__ import annotations
@@ -57,7 +66,7 @@ from osm_spark.sources import pbf, pbf_fixture, shapefile, shp_fixture
 from osm_spark.sources import warc_fixture
 from osm_spark.sources.warc import read_warc_pages_text
 
-from kernel_oracles import pages_df
+from kernel_oracles import call_plans, pages_df, plan_node_counts
 
 LEDGER = Path(__file__).parent / "data" / "cost_ledger.json"
 N_PAGES = 400
@@ -183,9 +192,11 @@ def test_cost_ledger(spark, tmp_path, monkeypatch):
     for name, fn in calls.items():
         trips, jobs = meter.measure(sc, f"cost-ledger-{name}", fn)
         got[name] = {"py4j": trips, "jobs": jobs}
+    for name, fn in calls.items():
+        got[name].update(plan_node_counts(call_plans(spark, fn)))
     table = json.dumps(got, indent=1)
     for name, g in got.items():
-        for metric in ("py4j", "jobs"):
+        for metric in ("py4j", "jobs", "exchange", "broadcast", "python"):
             w = want[name][metric]
             assert g[metric] <= w, (
                 f"{name}: {g[metric]} {metric} > ledger {w}; measured:\n{table}")

@@ -71,7 +71,7 @@ def test_lsh_topk_recall_vs_exact(spark):
     exact = {(r.vec_id, r.neighbor_id) for r in cosine_topk(emb, k=1).collect()}
     approx = {
         (r.vec_id, r.neighbor_id)
-        for r in lsh_topk(emb, k=1, n_planes=2).collect()
+        for r in lsh_topk(emb, k=1).collect()
     }
     # every vector got neighbors; multi-table LSH recall must be strong
     assert {v for v, _ in approx} == {v for v, _ in exact}

@@ -177,16 +177,29 @@ def _way(wid=None, val=1) -> bytes:
             + _f_packed(2, [1], zig=False) + _f_packed(3, [val], zig=False))
 
 
+def _dense(ids, lats, lons, keys_vals=None) -> bytes:
+    """A DenseNodes message (delta coding is irrelevant to lengths)."""
+    return _f_bytes(2, _f_packed(1, ids, zig=True) + _f_packed(8, lats, zig=True)
+                    + _f_packed(9, lons, zig=True)
+                    + (b"" if keys_vals is None
+                       else _f_packed(10, keys_vals, zig=False)))
+
+
 @pytest.mark.parametrize("block, missing", [
     (b"", "string table"),
     (_block(_f_bytes(3, _way())), "way without an id"),
     (_block(_f_bytes(4, _way())), "relation without an id"),
     (_block(_f_bytes(3, _way(wid=5, val=9))), "string id 9"),
-], ids=["empty", "way_no_id", "relation_no_id", "string_id_past_table"])
+    (_block(_dense([1, 1, 1], [5, 5], [7, 7, 7])), "3 ids, 2 lats"),
+    (_block(_dense([1], [5], [7], [1, 1, 0, 1, 1, 0])), "names node 1 of 1"),
+    (_block(_dense([1], [5], [7], [1, 1, 1, 0])), "keys_vals with an odd"),
+], ids=["empty", "way_no_id", "relation_no_id", "string_id_past_table",
+        "dense_short_lats", "dense_tags_past_ids", "dense_odd_keys_vals"])
 def test_decode_block_missing_parts_raise_value_error(block, missing):
     """A block without a string table, a way or relation without an id,
-    or a string id past the table is a ValueError naming it, not a
-    KeyError or IndexError."""
+    a string id past the table, or DenseNodes whose columns disagree in
+    length is a ValueError naming it, not a KeyError, IndexError or
+    numpy broadcast/reshape error."""
     with pytest.raises(ValueError, match=missing):
         pbf.decode_block(block)
 

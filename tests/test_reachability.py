@@ -45,6 +45,9 @@ ALLOWED = {
         "G15 Hilbert-clustered storage layout that "
         "spatial_join_partitioned(pages_clustered=) joins without an "
         "exchange; the row-group pruning test drives it",
+    "spatial_join.spatial_join_partitioned(pages_clustered=)":
+        "G15 zero-exchange join over that Hilbert-clustered layout; the "
+        "clustered-join test and test_plans' no-Exchange row drive it",
     "io.write_table":
         "R1/R2 Iceberg-or-parquet sink; test_metrics drives the parquet "
         "form, tests/test_iceberg.py (a documented skip) the catalog form",
@@ -55,8 +58,6 @@ ALLOWED = {
         "tests hold the O(log n) round bound and the no-fixpoint error",
     "jpeg.encode_baseline(dri=)":
         "restart-interval streams for the decoder's RST marker tests",
-    "similarity.lsh_topk(n_planes=)":
-        "the recall test's 2-plane buckets (the query runs 4 planes)",
     "raster.composite_cells(group_rank=)":
         "the renderer's group paint order (osm_display.ml:908-915); the "
         "raster differential tests drive it",

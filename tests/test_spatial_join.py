@@ -13,7 +13,7 @@ from osm_spark.operators.geocode import geocode_pages
 from osm_spark.operators.spatial_join import spatial_join
 from osm_spark.sources import ranges as R
 
-from kernel_oracles import flat_layer, pages_df
+from kernel_oracles import executed_plan, flat_layer, new_plans, pages_df
 
 N_PAGES = 400
 N_SMALL = 120
@@ -522,23 +522,6 @@ def _mercator_y(lat_fp, z: int) -> np.ndarray:
     return (1.0 - np.arcsinh(np.tan(y)) / np.pi) / 2.0 * float(1 << z)
 
 
-def _new_plans(spark, action) -> list[str]:
-    """Physical plans of the SQL executions ``action`` runs, picked by
-    execution id: the status store evicts old executions, so list
-    positions shift."""
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def executions():
-        execs = store.executionsList()
-        return [execs.apply(i) for i in range(execs.size())]
-
-    last = max((e.executionId() for e in executions()), default=-1)
-    action()
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    return [e.physicalPlanDescription() for e in executions()
-            if e.executionId() > last]
-
-
 def test_cell_keys_run_no_python_before_exchange(spark, tmp_path):
     """Routing keys are JVM expressions: suggest_salt and
     write_partitioned_layer run no Python UDF, and the partitioned join's
@@ -556,14 +539,13 @@ def test_cell_keys_run_no_python_before_exchange(spark, tmp_path):
     for action in (
             lambda: suggest_salt(docs, z=12 - COARSE_SHIFT),
             lambda: write_partitioned_layer(polys, path)):
-        plans = _new_plans(spark, action)
+        plans = new_plans(spark, action)
         assert plans
         for plan in plans:
             assert "EvalPython" not in plan, plan
     for kw in ({}, {"salt": 3}):
-        plan = spatial_join_partitioned(
-            docs, path, page_key="doc_id",
-            **kw)._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(spatial_join_partitioned(
+            docs, path, page_key="doc_id", **kw))
         assert "EvalPython" not in plan, plan
         assert plan.count("MapInArrow") == 1, plan
         assert "REPARTITION_BY_COL" in plan, plan   # no fixed count: AQE sizes it
@@ -642,7 +624,7 @@ def test_unmaterialized_layer_takes_partitioned_path(spark, monkeypatch):
     assert len(want) > 50
     monkeypatch.setattr(SJ, "BROADCAST_MAX_VERTS", 10)
     df = SJ.spatial_join(docs, polys, page_key="doc_id", how="left")
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert plan.count("MapInArrow") == 1, plan
     assert "FlatMapCoGroupsInPandas" not in plan, plan
     assert "REPARTITION_BY_COL" in plan, plan

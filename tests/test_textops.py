@@ -12,6 +12,8 @@ from osm_spark.operators import textops as TX
 from osm_spark.sources import warc
 from osm_spark.sources import warc_fixture as WF
 
+from kernel_oracles import executed_plan
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -171,10 +173,6 @@ def test_fingerprint_all_empty_batch(spark):
 # --- plan shape ----------------------------------------------------------------
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 @pytest.fixture(scope="module")
 def warc_path(tmp_path_factory):
     p = str(tmp_path_factory.mktemp("warc") / "sample.warc.gz")
@@ -188,7 +186,7 @@ def test_text_chain_crosses_arrow_once(spark, warc_path):
     pages = warc.read_warc_pages_text(spark, warc_path)
     df = TX.with_quality(pages).withColumn(
         "fp", TX.fingerprint_udf()(F.col("text")))
-    plan = _plan(df)
+    plan = executed_plan(df)
     assert plan.count("ArrowEvalPython") == 1, plan
     node = next(ln for ln in plan.splitlines() if "ArrowEvalPython" in ln)
     assert node.count("quality(") == 1 and "langid(" in node \
@@ -196,6 +194,6 @@ def test_text_chain_crosses_arrow_once(spark, warc_path):
 
 
 def test_text_projection_runs_no_python_udf(spark, warc_path):
-    plan = _plan(warc.read_warc_pages_text(spark, warc_path)
-                 .select("url", "text"))
+    plan = executed_plan(warc.read_warc_pages_text(spark, warc_path)
+                         .select("url", "text"))
     assert "ArrowEvalPython" not in plan, plan

@@ -16,7 +16,7 @@ from osm_spark.sources import pbf, pbf_fixture, ranges, warc
 from osm_spark.sources import shapefile as SHP, shp_fixture as SF
 from osm_spark.sources import warc_fixture as WF
 
-from kernel_oracles import iter_warc_index
+from kernel_oracles import executed_plan, iter_warc_index
 
 
 def _write_scaled(path: str, n_pages: int, text_repeat: int) -> str:
@@ -498,7 +498,7 @@ def source(request, tmp_path):
 
 def test_decode_plan_has_no_exchange(spark, source):
     decode, p, _rows = source
-    plan = decode(spark, p)._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(decode(spark, p))
     assert "MapInPandas" in plan and "Exchange" not in plan
 
 
