@@ -17,8 +17,9 @@ Two scale paths, chosen from the measured feature count:
   one numpy block kernel (``_knn_block``);
 - above it, the cell-ring path: rounds at radius R, 2R, 4R, … in which
   the still-uncertified POINTS explode into the cells within Chebyshev
-  radius r of their own and equi-join the features keyed at their own
-  cell.  The feature side never explodes.
+  radius r of their own and left-join the features keyed at their own
+  cell (the feature side never explodes), until a round certifies
+  every point it is given: one ranked frame per round.
 
 Memory bound: no path force-broadcasts anything that grows with the
 feature layer.  The driver holds at most the probe's
@@ -57,17 +58,16 @@ _DIST2_SQL = (f"(lat - flat) * (lat - flat) + least({_DLON}, {K.LON_WORLD} - {_D
               f" * least({_DLON}, {K.LON_WORLD} - {_DLON})")
 
 
+def _by_dist(key: str) -> str:
+    """A window of each key's rows by (dist2, feature_id), NULLs last."""
+    return f"PARTITION BY {sql_name(key)} ORDER BY dist2 NULLS LAST, feature_id"
+
+
 def _top_k(df: DataFrame, key: str, k: int) -> DataFrame:
     """The rows of ``df`` ranked 1..k per ``key`` by (dist2,
     feature_id), with their ``rank``."""
-    return df.selectExpr(
-        "*", f"row_number() OVER (PARTITION BY {sql_name(key)} "
-        "ORDER BY dist2, feature_id) AS rank").filter(f"rank <= {k}")
-
-
-def _rank_topk(cand: DataFrame, key: str, k: int) -> DataFrame:
-    return _top_k(cand.selectExpr(sql_name(key), "lat", "lon", "feature_id",
-                                  "flat", "flon", f"{_DIST2_SQL} AS dist2"), key, k)
+    return df.selectExpr("*", f"row_number() OVER ({_by_dist(key)}) AS rank"
+                         ).filter(f"rank <= {k}")
 
 
 def _cell_min_extent(cell_zoom: int, lat_min_fp: int, lat_max_fp: int,
@@ -217,17 +217,17 @@ def _residue_brute(features: DataFrame, residue_rows, k: int,
 
 
 def _ring(df: DataFrame, radius: int, cell_zoom: int) -> DataFrame:
-    """Each row of ``df`` once per cell within Chebyshev ``radius`` of
-    its own (cx, cy).  cx wraps at the antimeridian (dist2 already
-    wraps dlon); cy does not (no pole wrap) — out-of-range rows never
-    match.  Needs 2*radius+1 < 2**cell_zoom, so wrapped cx values stay
-    distinct (no duplicate candidates)."""
+    """Each row of ``df`` once per cell (cx, cy) within Chebyshev
+    ``radius`` of the cell of its (lat, lon).  cx wraps at the
+    antimeridian (dist2 already wraps dlon); cy does not (no pole wrap)
+    — out-of-range rows never match.  Needs 2*radius+1 < 2**cell_zoom,
+    so wrapped cx values stay distinct (no duplicate candidates)."""
     off = f"sequence({-radius}, {radius})"
-    shifted = {"cx": f"pmod(cx + dx, {1 << cell_zoom}) AS cx", "cy": "cy + dy AS cy"}
     return df.selectExpr(
-        "*", f"inline(flatten(transform({off}, dx -> transform({off}, "
-        "dy -> named_struct('dx', dx, 'dy', dy)))))",
-    ).selectExpr(*(shifted.get(c, sql_name(c)) for c in df.columns))
+        "*", *_cell(cell_zoom), f"inline(flatten(transform({off}, dx -> "
+        f"transform({off}, dy -> named_struct('dx', dx, 'dy', dy)))))",
+    ).selectExpr(*map(sql_name, df.columns),
+                 f"pmod(cx + dx, {1 << cell_zoom}) AS cx", "cy + dy AS cy")
 
 
 def _located(df: DataFrame) -> DataFrame:
@@ -235,15 +235,11 @@ def _located(df: DataFrame) -> DataFrame:
     return df.where("lat IS NOT NULL AND lon IS NOT NULL")
 
 
-def _cell_frames(points: DataFrame, features: DataFrame, cell_zoom: int,
-                 key: str):
-    """(points, features) keyed by their cell (cx, cy); features carry
-    their coordinates as (flat, flon).  pmod folds a coordinate at
-    exactly +180° (cx == 2^z) onto cell 0, as ``_ring`` wraps."""
-    cell = (f"pmod({tile_x_sql('lon', cell_zoom)}, {1 << cell_zoom}) AS cx",
+def _cell(cell_zoom: int) -> tuple[str, str]:
+    """The (cx, cy) cell of a row's (lat, lon).  pmod folds a coordinate
+    at exactly +180° (cx == 2^z) onto cell 0, as ``_ring`` wraps."""
+    return (f"pmod({tile_x_sql('lon', cell_zoom)}, {1 << cell_zoom}) AS cx",
             f"{tile_y_sql('lat', cell_zoom)} AS cy")
-    return (points.selectExpr(sql_name(key), "lat", "lon", *cell),
-            features.selectExpr("feature_id", "lat AS flat", "lon AS flon", *cell))
 
 
 def knn_join(
@@ -268,7 +264,9 @@ def knn_join(
     brute itself never broadcasts the feature layer (see
     _residue_brute).  ``2*radius + 1 < 2**cell_zoom`` is required (else
     ``ValueError``): a wider ring wraps onto itself at the antimeridian
-    and would pair a point with the same feature twice."""
+    and would pair a point with the same feature twice; so is ``k >= 1``."""
+    if k < 1:
+        raise ValueError(f"knn_join: k={k} must be at least 1")
     if 2 * radius + 1 >= (1 << cell_zoom):
         raise ValueError(
             f"knn_join: radius={radius} needs 2*radius + 1 < 2**cell_zoom, "
@@ -281,38 +279,40 @@ def knn_join(
         return _knn_broadcast_frame(points, probe, k, key)
 
     points, features = _located(points), _located(features)
-    pts, feats = _cell_frames(points, features, cell_zoom, key)
+    pts = points.selectExpr(sql_name(key), "lat", "lon")
+    feats = features.selectExpr("feature_id", "lat AS flat", "lon AS flon",
+                                *_cell(cell_zoom))
     # certification bound (see module docstring): the global lat range
     # shrinks cell_min, never inflates it; with no points, any range does
     lo, hi = pts.selectExpr("min(lat)", "max(lat)").collect()[0]
     lat_lo, lat_hi = (0, 0) if lo is None else (int(lo), int(hi))
 
     # one round per radius r = radius, 2·radius, … (reference
-    # rtree.ml:209-258 best-first analog).  Each round's ranked frame is
-    # consumed three times (certification agg, left_semi keep, left_anti
-    # carry-over) and the residue guard below drives the whole cascade
-    # eagerly — truncate lineage per round so those uses and the caller's
-    # action share one materialization (same per-round idiom as CH
-    # contraction).  The certified-key joins are left to AQE (it
-    # broadcasts small runtime sides itself — no forced broadcast of a
-    # key set whose size we can't bound at 10^12 pages).
+    # rtree.ml:209-258 best-first analog).  The left join gives every
+    # point a row (NULL dist2 for an empty ring cell); the k-th dist2 of
+    # its top k (NULL: fewer than k candidates) decides ``ok``.  From one
+    # checkpoint, the ok points' top k is the round's part and the others'
+    # rank-1 rows the next round's points.  Ranking first cuts each
+    # point's rows to k before the shuffle (WindowGroupLimit).
+    kth = (f"nth_value(dist2, {k}) OVER ({_by_dist(key)} ROWS BETWEEN"
+           " UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)")
     parts, remaining = [], pts
     for i in range(1 + MAX_EXPANSIONS):
         r = radius << i
         if 2 * r + 1 >= (1 << cell_zoom):
             break  # ring would wrap onto itself; residue pass is exact
-        cand = _ring(remaining, r, cell_zoom).join(feats, ["cx", "cy"], "inner")
-        ranked = _rank_topk(cand, key, k).localCheckpoint(eager=False)
         bound = r * _cell_min_extent(cell_zoom, lat_lo, lat_hi, r)
-        kth = ranked.groupBy(key).agg(F.expr("max(dist2) AS kth_d2"),
-                                      F.expr("count(*) AS n_cand"))
-        ck = kth.filter(f"n_cand >= {k} AND kth_d2 < {bound * bound}"
-                        ).selectExpr(sql_name(key))
-        parts.append(ranked.join(ck, key, "left_semi"))
-        remaining = remaining.join(ck, key, "left_anti")
-
-    residue_rows = remaining.selectExpr(sql_name(key), "lat", "lon").limit(
-        BRUTE_RESIDUE_LIMIT + 1).collect()
+        cand = _ring(remaining, r, cell_zoom).join(feats, ["cx", "cy"], "left")
+        ranked = _top_k(cand.selectExpr(sql_name(key), "lat", "lon", "feature_id",
+                                        f"{_DIST2_SQL} AS dist2"), key, k).selectExpr(
+            "*", f"coalesce({kth} < {bound * bound}, false) AS ok"
+        ).localCheckpoint(eager=False)
+        parts.append(ranked.where("ok"))
+        remaining = ranked.where("NOT ok AND rank = 1").selectExpr(
+            sql_name(key), "lat", "lon")
+        residue_rows = remaining.limit(BRUTE_RESIDUE_LIMIT + 1).collect()
+        if not residue_rows:
+            break
     if len(residue_rows) > BRUTE_RESIDUE_LIMIT:
         raise ValueError(
             f"knn_join: >{BRUTE_RESIDUE_LIMIT} points still uncertified "
@@ -334,6 +334,6 @@ def brute_force_knn(points: DataFrame, features: DataFrame,
     points (oracle path)."""
     feats = _located(features).selectExpr("feature_id", "lat AS flat", "lon AS flon")
     cand = _located(points).selectExpr("page_id", "lat", "lon").crossJoin(
-        F.broadcast(feats))
-    return _rank_topk(cand, "page_id", k).selectExpr(
-        "page_id", "feature_id", "dist2", "rank")
+        F.broadcast(feats)).selectExpr("page_id", "feature_id",
+                                       f"{_DIST2_SQL} AS dist2")
+    return _top_k(cand, "page_id", k)

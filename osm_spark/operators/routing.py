@@ -53,6 +53,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm_spark.operators.geomops import haversine_col
 from osm_spark.sources import ranges as R
 
 BIDIR, FWD, BWD = 3, 2, 1  # highway.ml:218-237 flag values
@@ -90,8 +91,6 @@ def extract_edges(way_refs: DataFrame, nodes: DataFrame,
     traversable direction; weight = length / speed (reference:
     highway.ml:192-246).
     """
-    from osm_spark.geo import kernels as K
-
     cat_cols = [speed_col] if speed_col else ["category"]
     w = Window.partitionBy("way_id").orderBy("seq")
     segs = (
@@ -113,11 +112,6 @@ def extract_edges(way_refs: DataFrame, nodes: DataFrame,
                 & F.col("dst_lat").isNotNull())
     )
 
-    @F.pandas_udf("long")
-    def hav_mm(a: pd.Series, b: pd.Series, c: pd.Series, d: pd.Series) -> pd.Series:
-        return pd.Series(K.distance(a.to_numpy(), b.to_numpy(),
-                                    c.to_numpy(), d.to_numpy()))
-
     if speed_col:
         speed_expr = F.col(speed_col)
     else:
@@ -127,7 +121,7 @@ def extract_edges(way_refs: DataFrame, nodes: DataFrame,
         )
     segs = (
         segs.withColumn("length_mm",
-                        hav_mm("src_lat", "src_lon", "dst_lat", "dst_lon"))
+                        haversine_col("src_lat", "src_lon", "dst_lat", "dst_lon"))
         .withColumn("speed", F.coalesce(speed_expr, F.lit(50)))
         .withColumn("weight", F.col("length_mm") / (F.col("speed") * 1000.0))
         .withColumn(

@@ -1,15 +1,18 @@
-"""Driver cost ledger: how many py4j round trips and Spark jobs each
-geo_tag operator call, the same ``knn_join`` call on its large-layer
-cell-ring path (``knn_join_cells``), each routing call (``contract``
-with one distributed round, ``ch_batch_routes``), the ingest_warc chain
-(``ingest_warc``) and each byte-range source decode (``decode_blocks``,
-``read_shp``, each with its ``count()``) costs on the driver, and the
-shape of the plans it runs.
+"""Driver cost ledger: how many py4j round trips, driver collects and
+Spark jobs each geo_tag operator call, the same ``knn_join`` call on
+its large-layer cell-ring path (``knn_join_cells``), each routing call
+(``contract`` with one distributed round, ``ch_batch_routes``), the
+ingest_warc chain (``ingest_warc``) and each byte-range source decode
+(``decode_blocks``, ``read_shp``, each with its ``count()``) costs on
+the driver, and the shape of the plans it runs.
 
 Every ``Column``/``DataFrame`` method call is at least one Python->JVM
 round trip, and building a plan out of hundreds of them was most of the
-driver time between geo_tag's steps.  Both counts are deterministic for
-a given call on a given input, so they are held exactly by
+driver time between geo_tag's steps.  Among those round trips, a call
+of ``collectToPython``, ``collectAsArrowToPython`` or
+``toPythonIterator`` is a driver collect: it pulls rows to the driver,
+so each is a memory bound to state.  All three counts are deterministic
+for a given call on a given input, so they are held exactly by
 ``tests/data/cost_ledger.json``:
 
 - a count above its ledger entry fails (a plan got more expensive);
@@ -26,9 +29,9 @@ first answer to "is DataFrame debugging on" (each ``functions.*`` /
 with no active session caches "off"; the test clears that cache so the
 counts follow the session's setting (Spark's default, on).  ``contract``
 runs one distributed round's stages per round (47 jobs on grid 6), and
-``knn_join_cells`` runs its ring rounds and residue pass inside the
-call (its residue guard collects), so each count waits for the listener
-bus to drain before reading the job group.
+``knn_join_cells`` runs its ring rounds inside the call (each round's
+carry-over probe collects), so each count waits for the listener bus to
+drain before reading the job group.
 
 A second pass counts each call's plan nodes: shuffle ``Exchange``,
 ``BroadcastExchange`` and Python-worker nodes (``ArrowEvalPython``,
@@ -74,11 +77,16 @@ N_SMALL = 120
 N_FEATS = 64
 
 
+# the JVM methods behind DataFrame.collect, toPandas and toLocalIterator
+COLLECTS = {"collectToPython", "collectAsArrowToPython", "toPythonIterator"}
+
+
 class _Meter:
-    """Counts the round trips the measuring thread sends while on."""
+    """Counts the round trips the measuring thread sends while on, and
+    among them the driver collects."""
 
     def __init__(self, monkeypatch):
-        self.n = 0
+        self.n = self.collects = 0
         self.on = False
         self.thread = threading.get_ident()
         send = ClientServerConnection.send_command
@@ -87,14 +95,17 @@ class _Meter:
         def counted(conn, command):
             if meter.on and threading.get_ident() == meter.thread:
                 meter.n += 1
+                # a call command is "c", target id, method name, args...
+                head = command.split("\n", 3)
+                meter.collects += head[0] == "c" and head[2] in COLLECTS
             return send(conn, command)
 
         monkeypatch.setattr(ClientServerConnection, "send_command", counted)
 
-    def measure(self, sc, group: str, fn) -> tuple[int, int]:
-        """(round trips, Spark jobs) of ``fn()``."""
+    def measure(self, sc, group: str, fn) -> dict[str, int]:
+        """Round trips, Spark jobs and driver collects of ``fn()``."""
         sc.setJobGroup(group, group)
-        self.n, self.on = 0, True
+        self.n, self.collects, self.on = 0, 0, True
         try:
             fn()
         finally:
@@ -103,7 +114,8 @@ class _Meter:
         # the status tracker learns of a job from the listener bus, which
         # may lag behind a call's last job
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return self.n, len(sc.statusTracker().getJobIdsForGroup(group))
+        return {"py4j": self.n, "collects": self.collects,
+                "jobs": len(sc.statusTracker().getJobIdsForGroup(group))}
 
 
 def _contract(edges, monkeypatch):
@@ -190,13 +202,13 @@ def test_cost_ledger(spark, tmp_path, monkeypatch):
     sc = spark.sparkContext
     got = {}
     for name, fn in calls.items():
-        trips, jobs = meter.measure(sc, f"cost-ledger-{name}", fn)
-        got[name] = {"py4j": trips, "jobs": jobs}
+        got[name] = meter.measure(sc, f"cost-ledger-{name}", fn)
     for name, fn in calls.items():
         got[name].update(plan_node_counts(call_plans(spark, fn)))
     table = json.dumps(got, indent=1)
     for name, g in got.items():
-        for metric in ("py4j", "jobs", "exchange", "broadcast", "python"):
+        for metric in ("py4j", "collects", "jobs", "exchange", "broadcast",
+                       "python"):
             w = want[name][metric]
             assert g[metric] <= w, (
                 f"{name}: {g[metric]} {metric} > ledger {w}; measured:\n{table}")

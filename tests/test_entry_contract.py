@@ -13,6 +13,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entry_mod
+from osm_spark.operators import knn as KNN
 from tools.check_oracles import TABLES, table_hash
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -21,7 +22,11 @@ SF_ORACLE = "/root/testdata/sf0.01"
 # fast subset: one per family; full set in tools/check_oracles.py
 ORACLE_SUBSET = ["r15_group_fold", "g06_pip_tag", "g22_tile_assign",
                  "t_minhash_pairs", "s_cosine_topk", "x3_x4_ch_local",
-                 "x5_ch_shortcuts", "x7_ch_path"]
+                 "x5_ch_shortcuts", "x7_ch_path", "g17_knn"]
+# g17_knn's 32 features take the broadcast path; run it once more on the
+# cell-ring path
+ORACLE_CASES = [(n, {}) for n in ORACLE_SUBSET] + [
+    ("g17_knn", {"BROADCAST_FEATURE_LIMIT": 0})]
 
 
 def test_entry_smoke(spark):
@@ -53,8 +58,11 @@ def duck():
     return con
 
 
-@pytest.mark.parametrize("name", ORACLE_SUBSET)
-def test_oracle_parity_subset(spark, duck, name):
+@pytest.mark.parametrize("name, limits", ORACLE_CASES,
+                         ids=ORACLE_SUBSET + ["g17_knn_cells"])
+def test_oracle_parity_subset(spark, duck, monkeypatch, name, limits):
+    for attr, value in limits.items():
+        monkeypatch.setattr(KNN, attr, value)
     sdf = entry_mod.queries()[name](spark, SF_ORACLE)
     srows = [tuple(r) for r in sdf.collect()]
     res = duck.sql(entry_mod.oracle_sql()[name])

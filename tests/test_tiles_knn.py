@@ -235,7 +235,7 @@ def test_knn_radius_wider_than_cell_row_raises(spark, monkeypatch, limits):
     """A ring of 2*radius + 1 >= 2**cell_zoom cells wraps onto itself:
     on the cell path a feature would sit twice in one cell and a k=2
     result could rank the same feature_id twice.  Refused by name on
-    every path."""
+    every path, at call time, as is a k below 1."""
     for name, value in limits.items():
         monkeypatch.setattr(KNN, name, value)
     pts = spark.createDataFrame(
@@ -245,6 +245,9 @@ def test_knn_radius_wider_than_cell_row_raises(spark, monkeypatch, limits):
         "feature_id long, lat long, lon long")
     with pytest.raises(ValueError, match=r"radius=1 .*cell_zoom=1\b"):
         knn_join(pts, feats, k=2, cell_zoom=1, radius=1).collect()
+    for k in (0, -1):
+        with pytest.raises(ValueError, match=rf"\bk={k}\b"):
+            knn_join(pts, feats, k=k, cell_zoom=2, radius=1)
     got = knn_join(pts, feats, k=2, cell_zoom=2, radius=1).collect()
     assert sorted((r.rank, r.feature_id) for r in got) == [(1, 7), (2, 8)]
 
