@@ -18,9 +18,12 @@ DataFrame programs:
 - X5 independent-set batched contraction: each round contracts every
   node whose (priority, hash, id) beats all 1- and 2-hop neighbours
   (/root/reference/osm/contraction.ml:557-660) — already data-parallel
-  in the reference; here it is a driver loop of DataFrame stages with a
-  parquet checkpoint per round (resumable, with per-round
-  row-count/byte metrics).
+  in the reference; here it is a driver loop of DataFrame stages: the
+  key's minimum spread twice over the closed adjacency picks the set,
+  and one frame of the active edges tagged with their selected
+  endpoint's depth gives the frozen edges, the survivors and the depth
+  update.  Each round's outputs go to parquet when checkpointing
+  (resumable, with per-round row-count/byte metrics).
 - X6/X7: rank-ordered output edges + one bidirectional CH query
   (``ch_query`` on the driver, ``ch_batch_routes`` per pair in a
   mapper) returning distance and expanded path.
@@ -37,8 +40,11 @@ Scale notes (100 TB target): every per-round stage is a key-partitioned
 join or aggregation — no driver-side graph state.  The neighbourhood
 gather is two self-joins on node id; AQE skew-split covers hub nodes.
 Priorities are recomputed for all active nodes each round (the
-independent set touches most neighbourhoods anyway); lineage is cut
-every round by the checkpoint write+read.
+independent set touches most neighbourhoods anyway).  Lineage is cut
+every round: the selected nodes and the tagged edge frame are local
+checkpoints, and the round's outputs (frozen edges, ranks, active
+edges, depths) go through ``_persist`` — a parquet write+read under
+``round=NNNN/`` when checkpointing, else a local checkpoint.
 """
 
 from __future__ import annotations
@@ -66,12 +72,21 @@ HASH_MOD = 1 << 31
 DEFAULT_SPEEDS = {0: 130, 1: 110, 2: 90, 3: 70, 4: 50, 5: 30, 6: 10}
 
 
-def _hash_col(c):
-    # reduce mod FIRST: ids can exceed 2^33 (planet OSM), and
-    # id * HASH_A would overflow int64; (v % M) * A stays < 2^63 and
-    # ((v % M) * A) % M == (v * A) % M exactly (same documented rule
-    # as the _contract_local twin, which uses Python bignums)
-    return ((F.col(c) % F.lit(HASH_MOD)) * F.lit(HASH_A)) % F.lit(HASH_MOD)
+# a node's contraction key (priority, hash, id) — unique per node, so
+# the independent set below has no ties.  The hash reduces mod FIRST:
+# ids can exceed 2^33 (planet OSM), and id * HASH_A would overflow int64;
+# (v % M) * A stays < 2^63 and ((v % M) * A) % M == (v * A) % M exactly
+# (same documented rule as the _contract_local twin, which uses Python
+# bignums).  Deferred hubs report n_shortcuts=0, which would otherwise
+# give them the MINIMAL key in their neighbourhood and permanently block
+# every node within 2 hops; a maximal key keeps neighbours selectable
+# (hubs contract in the local finish).
+_KEY_SQL = (
+    f"struct(IF(deferred, {1 << 62}, depth"
+    " + 2 * (n_shortcuts - n_in - n_out) + 4 * (orig_shortcuts - orig_in_out))"
+    f" AS priority, ((node % {HASH_MOD}) * {HASH_A}) % {HASH_MOD} AS h,"
+    " node AS id)"
+)
 
 
 # ---------------------------------------------------------------------------
@@ -298,6 +313,15 @@ def _write_log(log: str, metrics: list[dict]) -> None:
     R.write_text(log, "".join(json.dumps(m) + "\n" for m in metrics))
 
 
+def _persist(df: DataFrame, rd: str | None, name: str) -> DataFrame:
+    """Cut ``df``'s lineage: parquet at ``rd/name``, read back, when
+    checkpointing to ``rd`` (resumable); else a local checkpoint."""
+    if rd is None:
+        return df.localCheckpoint()
+    df.write.mode("overwrite").parquet(f"{rd}/{name}")
+    return df.sparkSession.read.parquet(f"{rd}/{name}")
+
+
 def _contract_local(rows, rank_offset: int, depths0=None):
     """Sequential CH finish for the small residual core graph.
 
@@ -455,109 +479,61 @@ def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
         t0 = time.time()
         nh = _neighbourhoods(active)
         sim = nh.groupBy("v").applyInPandas(_simulate_group, _SIM_SCHEMA)
-        prio = (
-            sim.join(depths, "node", "left")
-            .fillna({"depth": 0})
-            .withColumn(
-                "priority",
-                # deferred hubs report n_shortcuts=0, which would otherwise
-                # give them the MINIMAL key in their neighbourhood and
-                # permanently block every node within 2 hops; a maximal
-                # key keeps neighbours selectable (hubs contract in the
-                # local finish)
-                F.when(F.col("deferred"), F.lit(1 << 62)).otherwise(
-                    F.col("depth")
-                    + 2 * (F.col("n_shortcuts") - F.col("n_in") - F.col("n_out"))
-                    + 4 * (F.col("orig_shortcuts") - F.col("orig_in_out"))
-                ),
-            )
-            .withColumn("h", _hash_col("node"))
-            .withColumn("key", F.struct("priority", "h", F.col("node").alias("id")))
-        )
-        # independent set: key(v) strictly minimal over 1- and 2-hop nbrs
-        nbr = (
-            active.select(F.col("src").alias("v"), F.col("dst").alias("n"))
-            .unionByName(
-                active.select(F.col("dst").alias("v"), F.col("src").alias("n")))
-            .distinct()
-        )
-        keyed = prio.select(F.col("node").alias("n"), F.col("key").alias("nkey"))
-        m1 = nbr.join(keyed, "n").groupBy("v").agg(F.min("nkey").alias("m1"))
-        # min over {key(n), m1(n)} for n in nbrs(v) — covers 2-hop incl. v itself
-        n_all = (
-            nbr.join(keyed, "n")
-            .join(m1.select(F.col("v").alias("n"), F.col("m1").alias("nm1")), "n", "left")
-            .groupBy("v")
-            .agg(F.least(F.min("nkey"), F.min("nm1")).alias("m2"))
-        )
+        prio = (sim.join(depths, "node", "left").fillna({"depth": 0})
+                .selectExpr("*", f"{_KEY_SQL} AS key"))
+        # independent set: key(v) minimal over its closed 2-hop
+        # neighbourhood = the min spread twice over the closed adjacency
+        # (each edge both ways plus (v, v); keys are unique)
+        adj = active.selectExpr(
+            "stack(4, src, dst, dst, src, src, src, dst, dst) AS (v, n)")
+        spread = prio.selectExpr("node AS n", "key AS m")
+        for _ in range(2):
+            spread = adj.join(spread, "n").groupBy("v").agg(
+                F.expr("min(m) AS m")).withColumnRenamed("v", "n")
         selected = (
-            prio.join(n_all, prio["node"] == n_all["v"], "left")
-            .filter(~F.col("deferred"))
-            .filter(F.col("m2").isNull() | (F.col("key") <= F.col("m2")))
+            prio.join(spread.withColumnRenamed("n", "node"), "node")
+            .where("NOT deferred AND key = m")
             .select("node", "shortcuts", "depth")
             .localCheckpoint()  # one action: full sim + selection
         )
-        sel_nodes = selected.select("node")
-
-        new_ranks = sel_nodes.withColumn("rank", F.lit(rnd).cast("long"))
-        # edges incident to a selected endpoint freeze this round; selected
-        # nodes are pairwise non-adjacent, so the two branches are disjoint
-        frozen = (
-            active.join(sel_nodes.withColumnRenamed("node", "src"), "src", "left_semi")
-            .unionByName(
-                active.join(sel_nodes.withColumnRenamed("node", "dst"),
-                            "dst", "left_semi")
-                .join(sel_nodes.withColumnRenamed("node", "src"),
-                      "src", "left_anti"))
-            .withColumn("rank_src", F.lit(rnd).cast("long"))
+        # every active edge tagged with its selected endpoint's depth
+        # (selected nodes are pairwise non-adjacent: at most one side set)
+        tagged = (
+            active.join(selected.selectExpr("node AS src", "depth AS d_src"),
+                        "src", "left")
+            .join(selected.selectExpr("node AS dst", "depth AS d_dst"),
+                  "dst", "left")
+            .localCheckpoint()
         )
-        shortcuts = (
-            selected.select(F.col("node").alias("via_n"),
-                            F.explode("shortcuts").alias("s"))
-            .select(
-                F.col("s.u").alias("src"), F.col("s.w").alias("dst"),
-                F.col("s.weight").alias("weight"),
-                F.col("s.orig").alias("orig"), F.col("via_n").alias("via"),
-            )
-        )
-        survivors = (
-            active.join(sel_nodes.withColumnRenamed("node", "src"), "src", "left_anti")
-            .join(sel_nodes.withColumnRenamed("node", "dst"), "dst", "left_anti")
-        )
+        edge_cols = ("src", "dst", "weight", "orig", "via")
+        frozen = tagged.where("d_src IS NOT NULL OR d_dst IS NOT NULL")
+        shortcuts = (selected.selectExpr("node AS via", "inline(shortcuts)")
+                     .selectExpr("u AS src", "w AS dst", "weight", "orig", "via"))
         active_next = (
-            survivors.unionByName(shortcuts)
+            tagged.where("d_src IS NULL AND d_dst IS NULL").select(*edge_cols)
+            .unionByName(shortcuts)
             .groupBy("src", "dst")
-            .agg(F.min_by(F.struct("weight", "orig", "via"), "weight").alias("e"))
-            .select("src", "dst", "e.weight", "e.orig", "e.via")
+            .agg(F.expr("min_by(struct(weight, orig, via), weight) AS e"))
+            .selectExpr("src", "dst", "e.*")
         )
         # depth(n) = max(depth(n), depth(contracted neighbour)+1)  (X5 update)
-        touched = (
-            nbr.join(selected.select(F.col("node").alias("n"), "depth"), "n")
-            .groupBy("v").agg((F.max("depth") + 1).alias("new_depth"))
-            .withColumnRenamed("v", "node")
-        )
+        touched = frozen.selectExpr(
+            "IF(d_src IS NULL, src, dst) AS node",
+            "coalesce(d_src, d_dst) + 1 AS d").groupBy("node").agg(
+            F.expr("max(d) AS new_depth"))
         depths_next = (
-            depths.join(sel_nodes, "node", "left_anti")
+            depths.join(selected.select("node"), "node", "left_anti")
             .join(touched, "node", "left")
-            .select("node",
-                    F.greatest("depth", F.coalesce("new_depth", F.lit(0))).alias("depth"))
+            .selectExpr("node", "greatest(depth, coalesce(new_depth, 0)) AS depth")
         )
 
-        if ckpt:
-            rd = f"{ckpt}/round={rnd:04d}"
-            frozen.write.mode("overwrite").parquet(f"{rd}/frozen")
-            new_ranks.write.mode("overwrite").parquet(f"{rd}/ranks")
-            active_next.write.mode("overwrite").parquet(f"{rd}/active")
-            depths_next.write.mode("overwrite").parquet(f"{rd}/depths")
-            frozen_parts.append(spark.read.parquet(f"{rd}/frozen"))
-            rank_parts.append(spark.read.parquet(f"{rd}/ranks"))
-            active = spark.read.parquet(f"{rd}/active")
-            depths = spark.read.parquet(f"{rd}/depths")
-        else:
-            frozen_parts.append(frozen.localCheckpoint())
-            rank_parts.append(new_ranks.localCheckpoint())
-            active = active_next.localCheckpoint()
-            depths = depths_next.localCheckpoint()
+        rd = f"{ckpt}/round={rnd:04d}" if ckpt else None
+        frozen_parts.append(_persist(frozen.selectExpr(
+            *edge_cols, f"CAST({rnd} AS BIGINT) AS rank_src"), rd, "frozen"))
+        rank_parts.append(_persist(selected.selectExpr(
+            "node", f"CAST({rnd} AS BIGINT) AS rank"), rd, "ranks"))
+        active = _persist(active_next, rd, "active")
+        depths = _persist(depths_next, rd, "depths")
 
         n_sel = selected.count()
         n_active_out = active.count()
@@ -617,20 +593,16 @@ def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
         metrics.append(m)
         if ckpt:
             _write_log(log, metrics)
-    # every active edge is in ``done`` by now: the last round left none,
-    # or the local finish froze them all
+    # every active edge is in ``done`` exactly once by now: a round
+    # freezes an edge as it drops it from ``active``, the local finish
+    # freezes the rest
     out = (
-        done.dropDuplicates(["src", "dst", "weight"])
-        .join(ranks.select(F.col("node").alias("src"),
-                           F.col("rank").alias("rank_src")), "src")
-        .join(ranks.select(F.col("node").alias("dst"),
-                           F.col("rank").alias("rank_dst")), "dst")
+        done.join(ranks.selectExpr("node AS src", "rank AS rank_src"), "src")
+        .join(ranks.selectExpr("node AS dst", "rank AS rank_dst"), "dst")
     )
     if ckpt:
-        out.write.mode("overwrite").parquet(f"{ckpt}/final/edges")
-        ranks.write.mode("overwrite").parquet(f"{ckpt}/final/ranks")
-        out = spark.read.parquet(f"{ckpt}/final/edges")
-        ranks = spark.read.parquet(f"{ckpt}/final/ranks")
+        out = _persist(out, f"{ckpt}/final", "edges")
+        ranks = _persist(ranks, f"{ckpt}/final", "ranks")
     return CHResult(edges=out, ranks=ranks, metrics=metrics,
                     rounds=len(metrics))
 

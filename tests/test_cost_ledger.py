@@ -28,7 +28,7 @@ first answer to "is DataFrame debugging on" (each ``functions.*`` /
 ``Column`` call then records its call site over py4j), and a call made
 with no active session caches "off"; the test clears that cache so the
 counts follow the session's setting (Spark's default, on).  ``contract``
-runs one distributed round's stages per round (47 jobs on grid 6), and
+runs one distributed round's stages per round (40 jobs on grid 6), and
 ``knn_join_cells`` runs its ring rounds inside the call (each round's
 carry-over probe collects), so each count waits for the listener bus to
 drain before reading the job group.

@@ -73,7 +73,38 @@ def test_contraction_hybrid_preserves_distances(spark, graph, tmp_path,
     assert len(dist_rounds) >= 1
     assert all(m["checkpoint_bytes"] > 0 for m in dist_rounds)
     assert res.metrics[-1]["local_finish"]
-    _check_distances(_ch_rows(res), rows, n_sources=4, n_targets=4, seed=11)
+    ch_rows = _ch_rows(res)
+    assert len({(r[0], r[1]) for r in ch_rows}) == len(ch_rows)
+    _check_distances(ch_rows, rows, n_sources=4, n_targets=4, seed=11)
+
+
+def test_rounds_contract_two_hop_independent_sets(spark, tmp_path,
+                                                  monkeypatch):
+    """X5: no two nodes one distributed round contracts lie within 2
+    hops of each other in that round's input graph (the previous
+    round's ``active``), read back from the round checkpoints."""
+    nodes, refs = FX.road_network_dfs(spark, grid=8)
+    edges = RT.extract_edges(refs, nodes).select("src", "dst", "weight")
+    monkeypatch.setattr(RT, "LOCAL_THRESHOLD", 200)
+    ck = tmp_path / "ch_indep"
+    res = RT.contract(edges, checkpoint_dir=str(ck))
+    rounds = [m["round"] for m in res.metrics if not m.get("local_finish")]
+    assert len(rounds) >= 2
+    graph_in = [(r.src, r.dst) for r in edges.collect() if r.src != r.dst]
+    for rnd in rounds:
+        nbrs: dict = {}
+        for s, d in graph_in:
+            nbrs.setdefault(s, set()).add(d)
+            nbrs.setdefault(d, set()).add(s)
+        rd = ck / f"round={rnd:04d}"
+        chosen = sorted(r.node for r in
+                        spark.read.parquet(str(rd / "ranks")).collect())
+        assert chosen
+        conflicts = [(a, b) for i, a in enumerate(chosen) for b in chosen[i + 1:]
+                     if b in nbrs[a] or nbrs[a] & nbrs[b]]
+        assert conflicts == [], rnd
+        graph_in = [(r.src, r.dst) for r in
+                    spark.read.parquet(str(rd / "active")).collect()]
 
 
 def test_contraction_resume(spark, graph, tmp_path, monkeypatch):
@@ -163,6 +194,8 @@ def test_contraction_all_ranked_no_equal_rank_edges(graph):
     )
     assert res.ranks.count() == n_nodes
     assert res.edges.filter("rank_src = rank_dst").count() == 0
+    pairs = [(r.src, r.dst) for r in res.edges.select("src", "dst").collect()]
+    assert len(set(pairs)) == len(pairs)
 
 
 def test_hub_node_deferred_to_local_finish(spark, tmp_path, monkeypatch):

@@ -152,6 +152,32 @@ def test_knn_cells_exact_expanding_rings(spark, geo_pages, monkeypatch):
     assert len({p for p, *_ in got}) == N_PAGES
 
 
+def test_knn_cells_certify_all_in_first_round(spark, monkeypatch):
+    """400 points x 64 features (the cost ledger's ``knn_join_cells``
+    input): every point certifies in the first ring round, so the
+    residue pass never runs.  A round that certified nothing would
+    still answer exactly, through the residue, so the answer check
+    alone cannot see it."""
+    monkeypatch.setattr(KNN, "BROADCAST_FEATURE_LIMIT", 0)
+    residue_calls = []
+    brute = KNN._residue_brute
+    monkeypatch.setattr(KNN, "_residue_brute",
+                        lambda *a: residue_calls.append(a) or brute(*a))
+    pts = geocode_pages(pages_df(spark, 400))
+    feats = geocode_ids(spark.range(64).withColumnRenamed("id", "feature_id"),
+                        "feature_id")
+    got = {
+        (r.page_id, r.rank, r.feature_id, r.dist2)
+        for r in knn_join(pts, feats, k=1, cell_zoom=8, radius=2).collect()
+    }
+    want = {
+        (r.page_id, r.rank, r.feature_id, r.dist2)
+        for r in brute_force_knn(pts, feats, k=1).collect()
+    }
+    assert got == want
+    assert residue_calls == []
+
+
 def test_knn_cells_exact_residue_only(spark, geo_pages, monkeypatch):
     """MAX_EXPANSIONS=0: every uncertified point goes through the
     reverse-broadcast residue kernel (feature layer never broadcast);
