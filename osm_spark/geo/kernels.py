@@ -14,10 +14,12 @@ the reference pins a semantic edge case we reproduce it exactly:
   behaviour for points exactly on the boundary is unspecified there
   (geometry.mli:32-33) and here.
 - polygon_area: anchored shoelace with ``(a+1)/2`` truncating division
-  (/root/reference/osm/geometry.ml:211-226; OCaml `/` truncates toward 0).
+  (/root/reference/osm/geometry.ml:211-226; OCaml `/` truncates toward 0);
+  ``polygon_areas_packed`` per packed ring, ``_feature_areas`` per feature.
 - simplify_ring_int: squared-eps integer Douglas-Peucker over a batch of
   polylines, incl. the ``truncate(float n * float n / float d2)`` mixed
-  rounding of douglas_peucker.ml:88-98.
+  rounding of douglas_peucker.ml:88-98; ``_dp_spans`` turns one such
+  pass into kept counts and clamped tile spans (polygon and line tiles).
 - distance: haversine, truncated, with the reference's radius constant
   (units: the reference uses r = 6371*1e6, i.e. millimeters;
   osm/geometry.ml:26-36).
@@ -376,6 +378,16 @@ def polygon_areas_packed(px, py, starts, lens):
     return np.where(a >= -1, (a + 1) // 2, -((-(a + 1)) // 2))
 
 
+def _feature_areas(px, py, lens, feat, n):
+    """Signed area of ``n`` features whose rings are packed end to end
+    (ring k: the next ``lens[k]`` vertices, owned by feature
+    ``feat[k]``): ``polygon_areas_packed`` summed per feature, so holes
+    (clockwise) subtract (surfaces.ml:655-657)."""
+    out = np.zeros(n, np.int64)
+    np.add.at(out, feat, polygon_areas_packed(px, py, np.cumsum(lens) - lens, lens))
+    return out
+
+
 # ---------------------------------------------------------------------------
 # Space-filling curves
 
@@ -494,6 +506,42 @@ def simplify_ring_int(eps, x, y, lens):
         opn = i2 - i1 >= 2
         i1, i2, e2 = i1[opn], i2[opn], e2[opn]
     return keep
+
+
+_SPAN_BOX = (("x_min", tile_x, np.minimum, 1), ("x_max", tile_x, np.maximum, 1),
+             ("y_min", tile_y_float, np.maximum, 0),
+             ("y_max", tile_y_float, np.minimum, 0))
+
+
+def _dp_spans(lat, lon, starts, lens, eps, g0, zoom):
+    """One ``simplify_ring_int`` pass, then each group's clamped tile
+    span.  Polyline k is vertices ``starts[k]:starts[k] + lens[k]`` of
+    ``lat``/``lon`` at eps ``eps[k]`` (DP's squared distances do not
+    change when x and y swap, so the axis order is free); group j is
+    polylines ``g0[j]:g0[j + 1]`` and keeps a vertex.  The bbox of its
+    kept vertices becomes tiles at ``zoom[j]``, clamped to [0, 2^z - 1]
+    (polar rows blow up, lon = +180° gives x = 2^z; the span explode
+    must not fabricate tiles).  Returns (kept vertices per polyline,
+    {x_min, x_max, y_min, y_max, n_pts} per group)."""
+    v = concat_ranges(starts, lens)
+    xy = (np.asarray(lat, np.int64)[v], np.asarray(lon, np.int64)[v])
+    keep = simplify_ring_int(eps, *xy, lens)
+    c = np.concatenate(([0], np.cumsum(keep)))
+    ends = np.cumsum(lens)
+    kept = c[ends] - c[ends - lens]
+    n_pts = np.add.reduceat(kept, g0)
+    k0 = np.cumsum(n_pts) - n_pts
+    xy = (xy[0][keep], xy[1][keep])
+    zoom = np.asarray(zoom)
+    span = {}
+    for name, tile, f, axis in _SPAN_BOX:
+        edge = f.reduceat(xy[axis], k0) if len(k0) else k0
+        span[name] = col = np.empty(len(k0), np.int64)
+        for z in np.unique(zoom):
+            g = zoom == z
+            col[g] = np.clip(tile(edge[g], z), 0, (1 << int(z)) - 1)
+    span["n_pts"] = n_pts
+    return kept, span
 
 
 # ---------------------------------------------------------------------------

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osm_spark.geo import kernels as K
-from osm_spark.operators.spatial_join import RING_SQL, flat_values
+from osm_spark.operators.spatial_join import RING_SQL, _unpack_rings
 
 
 def haversine_col(lat1, lon1, lat2, lon2):
@@ -34,35 +34,18 @@ def haversine_col(lat1, lon1, lat2, lon2):
 def feature_areas(polys: DataFrame) -> DataFrame:
     """(feature_id, area): signed integer shoelace summed over rings,
     holes (CW) negative — surfaces.ml:655-657 semantics with the
-    reference's (a+1)/2 truncating division (geometry.ml:211-226)."""
+    reference's (a+1)/2 truncating division (geometry.ml:211-226); one
+    ``kernels._feature_areas`` pass over every ring of the batch."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            # one packed vectorized pass over ALL rings in the batch
-            # (kernels.polygon_areas_packed), not per-ring Python calls
-            las, los, lens, ring_feat = [], [], [], []
-            for fi, rings in enumerate(pdf["rings"]):
-                for r in rings:
-                    la = np.asarray(r["lat"], np.int64)
-                    las.append(la)
-                    los.append(np.asarray(r["lon"], np.int64))
-                    lens.append(len(la))
-                    ring_feat.append(fi)
-            nf = len(pdf)
-            areas = np.zeros(nf, np.int64)
-            if lens:
-                lens_a = np.asarray(lens, np.int64)
-                starts = np.concatenate(([0], np.cumsum(lens_a)[:-1]))
-                ring_area = K.polygon_areas_packed(
-                    np.concatenate(los), np.concatenate(las),
-                    starts, lens_a)
-                np.add.at(areas, np.asarray(ring_feat, np.int64),
-                          ring_area)
+            # a 0/1-vertex ring has no area
+            la, lo, lens, _, feat, live = _unpack_rings(pdf, 2)
             yield pd.DataFrame({
                 "feature_id": pdf["feature_id"].to_numpy(np.int64),
-                "area": areas})
+                "area": K._feature_areas(lo, la, lens, live[feat], len(pdf))})
 
-    return polys.select("feature_id", "rings").mapInPandas(
+    return polys.selectExpr("feature_id", *RING_SQL).mapInPandas(
         fn, "feature_id long, area long")
 
 
@@ -73,14 +56,12 @@ def feature_dp_counts(polys: DataFrame, ratio: int) -> DataFrame:
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            lens, _ = flat_values(pdf["lens"])
-            la, n_in = flat_values(pdf["flat_lat"])
-            lo, _ = flat_values(pdf["flat_lon"])
+            la, lo, lens, _, feat, live = _unpack_rings(pdf, 0)
             keep = K.simplify_ring_int(ratio, lo, la, lens)
-            vfeat = np.repeat(np.arange(len(pdf)), n_in)
+            vfeat = np.repeat(live[feat], lens)
             yield pd.DataFrame({
                 "feature_id": pdf["feature_id"].to_numpy(np.int64),
-                "n_in": n_in,
+                "n_in": np.bincount(vfeat, minlength=len(pdf)),
                 "n_kept": np.bincount(vfeat[keep], minlength=len(pdf))})
 
     return polys.selectExpr("feature_id", *RING_SQL).mapInPandas(

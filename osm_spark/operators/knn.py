@@ -23,8 +23,9 @@ Two scale paths, chosen from the measured feature count:
 
 Memory bound: no path force-broadcasts anything that grows with the
 feature layer.  The driver holds at most the probe's
-``BROADCAST_FEATURE_LIMIT`` + 1 collected feature rows and the
-residue's ``BRUTE_RESIDUE_LIMIT`` + 1 points; any other broadcast is
+``BROADCAST_FEATURE_LIMIT`` + 1 collected feature rows and the last
+round's ``BRUTE_RESIDUE_LIMIT`` + 1 residue points (an earlier round
+collects one row, to see whether any point is left); any other broadcast is
 the planner's (or AQE's) own, under ``autoBroadcastJoinThreshold``.
 
 Exactness guarantee of the cell path: a query point whose k-th
@@ -299,8 +300,9 @@ def knn_join(
     parts, remaining = [], pts
     for i in range(1 + MAX_EXPANSIONS):
         r = radius << i
-        if 2 * r + 1 >= (1 << cell_zoom):
-            break  # ring would wrap onto itself; residue pass is exact
+        # the last round: no expansions left, or the next ring would
+        # wrap onto itself (the residue pass is exact)
+        last = i == MAX_EXPANSIONS or 2 * (r << 1) + 1 >= (1 << cell_zoom)
         bound = r * _cell_min_extent(cell_zoom, lat_lo, lat_hi, r)
         cand = _ring(remaining, r, cell_zoom).join(feats, ["cx", "cy"], "left")
         ranked = _top_k(cand.selectExpr(sql_name(key), "lat", "lon", "feature_id",
@@ -310,8 +312,10 @@ def knn_join(
         parts.append(ranked.where("ok"))
         remaining = ranked.where("NOT ok AND rank = 1").selectExpr(
             sql_name(key), "lat", "lon")
-        residue_rows = remaining.limit(BRUTE_RESIDUE_LIMIT + 1).collect()
-        if not residue_rows:
+        # an earlier round only asks whether any point is left
+        residue_rows = remaining.limit(
+            BRUTE_RESIDUE_LIMIT + 1 if last else 1).collect()
+        if last or not residue_rows:
             break
     if len(residue_rows) > BRUTE_RESIDUE_LIMIT:
         raise ValueError(

@@ -325,7 +325,8 @@ def _persist(df: DataFrame, rd: str | None, name: str) -> DataFrame:
 def _contract_local(rows, rank_offset: int, depths0=None):
     """Sequential CH finish for the small residual core graph.
 
-    ``rows``: (src, dst, weight, orig, via).  Contract nodes one at a
+    ``rows``: (src, dst, weight, orig, via); ``depths0``: the live
+    nodes' depths, edgeless ones included.  Contract nodes one at a
     time in lazy priority order (priority recomputed at pop — the
     standard CH queue trick; same formula as the distributed rounds),
     witness-searching the live residual graph.  Returns
@@ -342,10 +343,9 @@ def _contract_local(rows, rank_offset: int, depths0=None):
         if cur is None or w < cur[0]:
             out_e.setdefault(s, {})[d] = (float(w), int(o), via)
             in_e.setdefault(d, {})[s] = (float(w), int(o), via)
-    nodes = set(out_e) | set(in_e)
-    depth = {n: 0 for n in nodes}
-    if depths0:
-        depth.update({int(k): int(v) for k, v in depths0.items() if int(k) in nodes})
+    # every live node takes a rank, also one that lost its edges
+    depth = dict.fromkeys(set(out_e) | set(in_e), 0)
+    depth.update({int(k): int(v) for k, v in (depths0 or {}).items()})
 
     def simulate(v):
         ins = [(u, w, o) for u, (w, o, _) in in_e.get(v, {}).items() if u != v]
@@ -361,7 +361,7 @@ def _contract_local(rows, rank_offset: int, depths0=None):
     frozen = []
     ranks = {}
     pq = []
-    for v in nodes:
+    for v in depth:
         p, _ = simulate(v)
         heapq.heappush(pq, (p, (v * HASH_A) % HASH_MOD, v))
     rank = rank_offset
@@ -413,9 +413,10 @@ def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
     ``LOCAL_THRESHOLD`` edges, at most ``MAX_ROUNDS`` of them; the long
     tail (independent sets shrink geometrically, so late rounds touch a
     tiny core) is finished sequentially on the driver — the per-round
-    cluster overhead would dominate otherwise.  A residual core above
-    16 * ``LOCAL_THRESHOLD`` edges raises ``RuntimeError`` instead; the
-    checkpointed rounds stay resumable.
+    cluster overhead would dominate otherwise.  The finish ranks every
+    node left, also one whose edges all froze in a round.  A residual
+    core above 16 * ``LOCAL_THRESHOLD`` edges raises ``RuntimeError``
+    instead; the checkpointed rounds stay resumable.
     """
     spark = edges.sparkSession
     ckpt = checkpoint_dir.rstrip("/") if checkpoint_dir else None
@@ -562,21 +563,23 @@ def contract(edges: DataFrame, checkpoint_dir: str | None = None) -> CHResult:
     done = done.select("src", "dst", "weight", "orig", "via")
     rank_offset = (metrics[-1]["round"] + 1) if metrics else 0
 
-    if n_active > 0:
-        if n_active > 16 * LOCAL_THRESHOLD:
-            # a stalled distributed phase (dense core above
-            # MAX_SIM_DEGREE, or MAX_ROUNDS hit) must not dump an
-            # unbounded residual graph on the driver
-            raise RuntimeError(
-                f"distributed contraction stalled with {n_active} active "
-                f"edges (> 16 * LOCAL_THRESHOLD={LOCAL_THRESHOLD}); raise "
-                "MAX_ROUNDS/LOCAL_THRESHOLD; a call with the same "
-                "checkpoint_dir resumes from the last complete round")
+    if n_active > 16 * LOCAL_THRESHOLD:
+        # a stalled distributed phase (dense core above
+        # MAX_SIM_DEGREE, or MAX_ROUNDS hit) must not dump an
+        # unbounded residual graph on the driver
+        raise RuntimeError(
+            f"distributed contraction stalled with {n_active} active "
+            f"edges (> 16 * LOCAL_THRESHOLD={LOCAL_THRESHOLD}); raise "
+            "MAX_ROUNDS/LOCAL_THRESHOLD; a call with the same "
+            "checkpoint_dir resumes from the last complete round")
+    # the live nodes: the active edges' endpoints, and any node whose
+    # edges all froze into a contracted neighbour
+    t0 = time.time()
+    depth_rows = {r.node: r.depth for r in depths.collect()}
+    if depth_rows:
         # residual core: sequential CH on the driver (see docstring)
-        t0 = time.time()
-        depth_rows = {r.node: r.depth for r in depths.collect()}
         core_rows = [(r.src, r.dst, r.weight, r.orig, r.via)
-                     for r in active.collect()]
+                     for r in active.collect()] if n_active else []
         frozen_rows, rank_map = _contract_local(
             core_rows, 1_000_000 + rank_offset, depth_rows)
         local_done = spark.createDataFrame(

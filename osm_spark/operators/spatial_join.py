@@ -158,6 +158,26 @@ def flat_values(col: pd.Series) -> tuple[np.ndarray, np.ndarray]:
             else np.empty(0, np.int64)), n
 
 
+def _unpack_rings(pdf: pd.DataFrame, min_len: int):
+    """A batch's ``RING_SQL`` columns as flat arrays, rings of fewer
+    than ``min_len`` vertices dropped: (lat, lon) per vertex, (lens,
+    roles, feat) per ring, and ``live``, the rows left with a ring;
+    ``feat`` indexes ``live``, and each feature's rings stay
+    contiguous."""
+    lens, n_rings = flat_values(pdf["lens"])
+    roles, _ = flat_values(pdf["roles"])
+    lat, _ = flat_values(pdf["flat_lat"])
+    lon, _ = flat_values(pdf["flat_lon"])
+    feat = np.repeat(np.arange(len(pdf)), n_rings)
+    ok = lens >= min_len
+    if not ok.all():
+        vkeep = np.repeat(ok, lens)
+        lat, lon = lat[vkeep], lon[vkeep]
+        lens, roles, feat = lens[ok], roles[ok], feat[ok]
+    live, feat = np.unique(feat, return_inverse=True)
+    return lat, lon, lens, roles, feat, live
+
+
 class CellIndex(NamedTuple):
     """CSR cell index of a polygon layer at zoom ``z``; every vertex is
     stored once, whatever the number of cells its polygon covers.
@@ -190,25 +210,13 @@ class CellIndex(NamedTuple):
 
 def _build_group_index_packed(polys_pdf: pd.DataFrame, z: int) -> CellIndex:
     """CSR cell index of a polygon layer from its ``feature_id`` and
-    ``RING_SQL`` columns: one concat per column, zero-edge rings and
-    ring-less polygons dropped by masks, bboxes by reduceat, and the
-    (cell, polygon) registrations expanded and sorted once — no
+    ``RING_SQL`` columns: one ``_unpack_rings``, bboxes by reduceat,
+    and the (cell, polygon) registrations expanded and sorted once — no
     per-polygon or per-cell Python."""
-    fids = polys_pdf["feature_id"].to_numpy(np.int64)
-    lens, n_rings = flat_values(polys_pdf["lens"])
-    roles, _ = flat_values(polys_pdf["roles"])
-    lat, _ = flat_values(polys_pdf["flat_lat"])
-    lon, _ = flat_values(polys_pdf["flat_lon"])
-    ring_poly = np.repeat(np.arange(len(fids)), n_rings)
     # a zero-edge (0/1-vertex) ring carries no area, and its empty
     # reduceat segment would take crossings from its neighbour
-    ok = lens >= 2
-    if not ok.all():
-        vkeep = np.repeat(ok, lens)
-        lat, lon = lat[vkeep], lon[vkeep]
-        lens, roles, ring_poly = lens[ok], roles[ok], ring_poly[ok]
-    live, ring_poly = np.unique(ring_poly, return_inverse=True)
-    fids = fids[live]
+    lat, lon, lens, roles, ring_poly, live = _unpack_rings(polys_pdf, 2)
+    fids = polys_pdf["feature_id"].to_numpy(np.int64)[live]
     n_poly = len(fids)
     poly_ring = np.concatenate(
         ([0], np.cumsum(np.bincount(ring_poly, minlength=n_poly))))

@@ -30,7 +30,7 @@ from pyspark.sql.types import (IntegerType, LongType, StringType, StructField,
                                StructType)
 
 from osm_spark.geo import kernels as K
-from osm_spark.operators.spatial_join import (RING_SQL, flat_values,
+from osm_spark.operators.spatial_join import (RING_SQL, _unpack_rings,
                                               tile_x_sql, tile_y_sql)
 
 ZOOM_BANDS = (6, 8, 10, 12)
@@ -101,34 +101,26 @@ def page_tiles_exact(pages_geo: DataFrame, rows_df: DataFrame, key: str = "page_
 
 def _feature_tiles_pandas(zooms: tuple[int, ...]):
     """Flat passes over the batch's packed ring arrays, no per-feature
-    or per-ring Python: areas by ``polygon_areas_packed``, full-resolution
-    bboxes by reduceat, then ONE batched Douglas-Peucker over every
-    (band, feature passing the band's area cutoff, ring) at the band's
-    eps; the simplified bboxes, point counts and the "outer ring keeps
-    < 4 points" drop come from reduceat over its keep mask."""
+    or per-ring Python: one ``_unpack_rings``, areas by
+    ``kernels._feature_areas``, full-resolution bboxes by reduceat, then
+    one ``kernels._dp_spans`` over every (band, feature passing the
+    band's area cutoff, ring) at the band's eps, which gives each
+    (band, feature) its simplified span and point count; a feature
+    whose outer ring keeps < 4 points drops out of the band."""
+    cutoffs = np.array([band_params(z)[0] for z in zooms], np.int64)
+    ratios = np.array([band_params(z)[1] for z in zooms], np.int64)
+    zs = np.asarray(zooms)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cutoffs = np.array([band_params(z)[0] for z in zooms], np.int64)
-        ratios = np.array([band_params(z)[1] for z in zooms], np.int64)
         for pdf in batches:
-            lens, n_rings = flat_values(pdf["lens"])
-            roles, _ = flat_values(pdf["roles"])
-            la, _ = flat_values(pdf["flat_lat"])
-            lo, _ = flat_values(pdf["flat_lon"])
             # empty rings carry no geometry, and a feature left without
             # rings has no tiles
-            ring_feat = np.repeat(np.arange(len(pdf)), n_rings)[lens > 0]
-            roles = roles[lens > 0]
-            lens = lens[lens > 0]
-            live, ring_feat = np.unique(ring_feat, return_inverse=True)
+            la, lo, lens, roles, ring_feat, live = _unpack_rings(pdf, 1)
             fids = pdf["feature_id"].to_numpy(np.int64)[live]
             cats = pdf["category"].to_numpy(np.int64)[live]
             nf = len(fids)
             starts = np.cumsum(lens) - lens
-
-            ring_area = K.polygon_areas_packed(lo, la, starts, lens)
-            feat_area = np.zeros(nf, np.int64)
-            np.add.at(feat_area, ring_feat, ring_area)
+            feat_area = K._feature_areas(lo, la, lens, ring_feat, nf)
 
             # full-res per-feature bbox + point count (rings are
             # contiguous per feature in the packed layout)
@@ -146,44 +138,22 @@ def _feature_tiles_pandas(zooms: tuple[int, ...]):
                 "n_pts": np.add.reduceat(lens, first_ring),
             })]
 
-            # one DP over (band, feature over the band's cutoff, ring)
+            # one DP over (band, feature over the band's cutoff, ring);
+            # (band, feature) groups are contiguous runs of rings
             sel = [np.flatnonzero(feat_area[ring_feat] >= c) for c in cutoffs]
             ring = np.concatenate(sel)
             if len(ring):
                 band = np.repeat(np.arange(len(zooms)), [len(r) for r in sel])
-                ilen = lens[ring]
-                v = K.concat_ranges(starts[ring], ilen)
-                vla, vlo = la[v], lo[v]
-                keep = K.simplify_ring_int(ratios[band], vla, vlo, ilen)
-                kept = np.add.reduceat(keep, np.cumsum(ilen) - ilen,
-                                       dtype=np.int64)
-                # (band, feature) groups are contiguous runs of rings
                 gid = band * nf + ring_feat[ring]
                 g0 = np.flatnonzero(np.r_[True, gid[1:] != gid[:-1]])
-                dropped = np.logical_or.reduceat(
-                    (roles[ring] == 0) & (kept < 4), g0)
-                k0 = (np.cumsum(kept) - kept)[g0]
-                sla, slo = vla[keep], vlo[keep]
-                gb, gf = band[g0], ring_feat[ring[g0]]
-                n_pts = np.add.reduceat(kept, g0)
-                bbox = (np.minimum.reduceat(slo, k0), np.maximum.reduceat(slo, k0),
-                        np.maximum.reduceat(sla, k0), np.minimum.reduceat(sla, k0))
-                for b, z in enumerate(zooms):
-                    g = np.flatnonzero((gb == b) & ~dropped)
-                    # clamp to [0, 2^z-1]: polar latitudes blow up the
-                    # mercator row and lon=+180 gives x=2^z; the span
-                    # explode downstream must not fabricate tiles
-                    nmax = (1 << z) - 1
-                    x0, x1, ya, yb = (a[g] for a in bbox)
-                    parts.append(pd.DataFrame({
-                        "feature_id": fids[gf[g]], "category": cats[gf[g]],
-                        "band": str(z), "z": z,
-                        "x_min": np.clip(K.tile_x(x0, z), 0, nmax),
-                        "x_max": np.clip(K.tile_x(x1, z), 0, nmax),
-                        "y_min": np.clip(K.tile_y_float(ya, z), 0, nmax),
-                        "y_max": np.clip(K.tile_y_float(yb, z), 0, nmax),
-                        "n_pts": n_pts[g],
-                    }))
+                kept, span = K._dp_spans(la, lo, starts[ring], lens[ring],
+                                         ratios[band], g0, zs[band[g0]])
+                g = ~np.logical_or.reduceat((roles[ring] == 0) & (kept < 4), g0)
+                gb, gf = band[g0[g]], ring_feat[ring[g0[g]]]
+                parts.append(pd.DataFrame({
+                    "feature_id": fids[gf], "category": cats[gf],
+                    "band": zs[gb].astype(str), "z": zs[gb],
+                    **{c: a[g] for c, a in span.items()}}))
             yield pd.concat(parts, ignore_index=True)
 
     return fn
@@ -227,11 +197,16 @@ def viewport_query(tile_table: DataFrame, z: int, lat_min: int, lat_max: int,
         & F.col("x").between(x0, x1) & F.col("y").between(y0, y1))
 
 
-def feature_tiles(polys: DataFrame, zooms: tuple[int, ...] = ZOOM_BANDS) -> DataFrame:
-    """Exploded (feature_id, band, z, x, y) tile assignment table.  One
+def _explode_spans(spans: DataFrame, head: tuple[str, ...]) -> DataFrame:
+    """``head`` plus one (x, y) row per tile of each row's span.  One
     generator per axis, so a span streams as rows: its x×y tiles are
     never one array (a z14 span can hold millions)."""
-    head = ("feature_id", "category", "band", "z")
-    return feature_tile_spans(polys, zooms).selectExpr(
+    return spans.selectExpr(
         *head, "explode(sequence(x_min, x_max)) AS x", "y_min", "y_max",
     ).selectExpr(*head, "x", "explode(sequence(y_min, y_max)) AS y")
+
+
+def feature_tiles(polys: DataFrame, zooms: tuple[int, ...] = ZOOM_BANDS) -> DataFrame:
+    """Exploded (feature_id, band, z, x, y) tile assignment table."""
+    return _explode_spans(feature_tile_spans(polys, zooms),
+                          ("feature_id", "category", "band", "z"))

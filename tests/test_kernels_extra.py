@@ -160,3 +160,58 @@ def test_fixture_straddlers_on_distinct_tile_boundaries():
         assert lo < b < hi          # genuinely straddles a boundary
         centers.append(b)
     assert centers[0] != centers[1]  # two DIFFERENT boundaries
+
+
+def test_dp_spans_match_scalar_dp_bbox_and_clamp():
+    """``kernels._dp_spans`` against the per-polyline scalar DP
+    (``kernel_oracles.dp_scalar``) and a per-group numpy bbox and clamp.
+    Random packed polylines of 0 to 40 vertices, each at its own eps,
+    are gathered out of order and grouped several to a group; the walks
+    reach the poles and ±180°, where the clamp to [0, 2^z - 1] acts.
+    The scalar DP runs on (lon, lat) and the kernel on (lat, lon): DP
+    does not change when x and y swap."""
+    from kernel_oracles import dp_scalar
+
+    rng = np.random.default_rng(20)
+    for trial in range(40):
+        lens = rng.choice([0, 1, 2, 3, 5, 12, 40], int(rng.integers(1, 25)))
+        step = rng.choice([10**3, 10**6, 10**8], len(lens))
+        vstep = np.repeat(step, lens)
+        lat = np.clip(np.cumsum(rng.integers(-1, 2, len(vstep)) * vstep),
+                      -900_000_000, 900_000_000)
+        lon = np.clip(np.cumsum(rng.integers(-1, 2, len(vstep)) * vstep * 2),
+                      -1_800_000_000, 1_800_000_000)
+        starts0 = np.cumsum(lens) - lens
+        eps = rng.integers(0, 2 * 10**7, len(lens))
+        # groups: runs of a random polyline order, each with a vertex
+        groups, run = [], []
+        for k in rng.permutation(len(lens)):
+            run.append(k)
+            if lens[run].sum() and rng.random() < 0.4:
+                groups.append(run)
+                run = []
+        if run and lens[run].sum():
+            groups.append(run)
+        order = np.array([k for g in groups for k in g], np.int64)
+        sizes = np.array([len(g) for g in groups], np.int64)
+        g0 = np.cumsum(sizes) - sizes
+        zoom = rng.choice([0, 3, 8, 12, 14], len(groups))
+        kept, span = K._dp_spans(lat, lon, starts0[order], lens[order],
+                                 eps[order], g0, zoom)
+        masks = {k: dp_scalar(int(eps[k]), lon[starts0[k]:starts0[k] + lens[k]],
+                              lat[starts0[k]:starts0[k] + lens[k]])
+                 for k in order}
+        assert kept.tolist() == [int(masks[k].sum()) for k in order], trial
+        for j, (g, z) in enumerate(zip(groups, zoom)):
+            kla = np.concatenate([lat[starts0[k]:starts0[k] + lens[k]][masks[k]]
+                                  for k in g])
+            klo = np.concatenate([lon[starts0[k]:starts0[k] + lens[k]][masks[k]]
+                                  for k in g])
+            nmax = (1 << int(z)) - 1
+            want = (np.clip(K.tile_x(klo.min(), z), 0, nmax),
+                    np.clip(K.tile_x(klo.max(), z), 0, nmax),
+                    np.clip(K.tile_y_float(kla.max(), z), 0, nmax),
+                    np.clip(K.tile_y_float(kla.min(), z), 0, nmax), len(kla))
+            got = tuple(span[c][j] for c in
+                        ("x_min", "x_max", "y_min", "y_max", "n_pts"))
+            assert got == want, (trial, j)

@@ -208,3 +208,26 @@ def test_side_files_go_through_ranges():
     assert not bad, (
         "filesystem code outside osm_spark/sources/ranges.py; use its "
         "helpers instead: " + ", ".join(bad))
+
+
+def test_perfbench_profiles_existing_defs():
+    """perfbench's per-layer metrics (``kernels.dp_s``,
+    ``spatial_join.layer_read_s``, ``warc.decode_s``, …) read the
+    profiler by function name: ``prof("name"[, "file"])`` in
+    ``perfbench/workloads.py``.  Each name must be a def in
+    ``osm_spark`` (nested defs count), in a file whose name ends with
+    the given file; a renamed def would read 0, not fail."""
+    defs: dict = {}
+    for path in PACKAGE.rglob("*.py"):
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.setdefault(node.name, []).append(str(path))
+    probes = [tuple(a.value for a in node.args)
+              for node in ast.walk(_parse(ROOT / "perfbench" / "workloads.py"))
+              if isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+              and node.func.id == "prof"]
+    assert {p[0] for p in probes} >= {"_pip_pack", "simplify_ring_int", "fp"}
+    missing = [p for p in probes
+               if not any(f.endswith(p[1] if len(p) > 1 else "")
+                          for f in defs.get(p[0], ()))]
+    assert not missing, f"prof() names no def in osm_spark: {missing}"

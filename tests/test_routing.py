@@ -107,6 +107,46 @@ def test_rounds_contract_two_hop_independent_sets(spark, tmp_path,
                     spark.read.parquet(str(rd / "active")).collect()]
 
 
+def _check_all_pairs(res, rows):
+    """Every (s, t) CH distance equal to the plain Dijkstra's (``inf``
+    when t is unreachable), and every node ranked."""
+    nodes = sorted({s for s, _, _ in rows} | {d for _, d, _ in rows})
+    ch_rows = _ch_rows(res)
+    for s in nodes:
+        ref = dijkstra_ref(rows, s)
+        for t in nodes:
+            assert RT.ch_query(ch_rows, s, t)[0] == pytest.approx(
+                ref.get(t, np.inf), rel=1e-9), (s, t)
+    assert sorted(r.node for r in res.ranks.collect()) == nodes
+
+
+def test_two_node_component_ranks_both(spark, monkeypatch):
+    """``1 ⇄ 2`` with every edge distributed: round 0 contracts one node
+    and freezes both edges, which leaves the other node live with no
+    edge.  It still takes a rank (in the driver finish), so the frozen
+    edges survive the output's rank joins."""
+    rows = [(1, 2, 1.0), (2, 1, 1.0)]
+    monkeypatch.setattr(RT, "LOCAL_THRESHOLD", 0)
+    res = RT.contract(spark.createDataFrame(rows, "src long, dst long, weight double"))
+    _check_all_pairs(res, rows)
+    assert res.metrics[0]["active_edges_out"] == 0
+    assert res.metrics[-1]["local_finish"]
+
+
+def test_node_into_selected_sink_ranked(spark, monkeypatch):
+    """3 → 4 ← 5: round 0 contracts the sink 4 (lowest key of its
+    2-hop neighbourhood), so 3 and 5 lose their only edges while the
+    path 10 ⇄ … ⇄ 15 still has active edges for the driver finish.
+    3 and 5 are in no finish edge, yet each takes a rank there."""
+    rows = [(3, 4, 2.0), (5, 4, 3.0)] + [
+        e for a in range(10, 15) for e in ((a, a + 1, 1.0), (a + 1, a, 1.5))]
+    monkeypatch.setattr(RT, "LOCAL_THRESHOLD", 8)
+    res = RT.contract(spark.createDataFrame(rows, "src long, dst long, weight double"))
+    _check_all_pairs(res, rows)
+    assert {r.node: r.rank for r in res.ranks.collect()}[4] == 0
+    assert res.metrics[-1]["local_finish"] and res.metrics[-1]["core_edges"] > 0
+
+
 def test_contraction_resume(spark, graph, tmp_path, monkeypatch):
     edges, rows = graph
     ck = tmp_path / "ch_resume"

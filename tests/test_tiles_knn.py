@@ -135,15 +135,28 @@ def test_knn_sparse_features_fallback(spark, geo_pages):
 def test_knn_cells_exact_expanding_rings(spark, geo_pages, monkeypatch):
     """Force the cell path with features so sparse that round-1
     certification fails for most points: expanding-ring retries (and the
-    residue brute) must still match the brute-force oracle exactly."""
+    residue brute) must still match the brute-force oracle exactly.
+    Only the last round collects the residue (up to
+    ``BRUTE_RESIDUE_LIMIT`` + 1 points); an earlier round collects one
+    row, to see whether any point is left (a ``collect`` spy)."""
     monkeypatch.setattr(KNN, "BROADCAST_FEATURE_LIMIT", 0)
     feats = geocode_ids(spark.range(3).withColumnRenamed("id", "feature_id"),
                         "feature_id")
-    got = {
-        (r.page_id, r.rank, r.feature_id, r.dist2)
-        for r in knn_join(geo_pages, feats, k=1, cell_zoom=8,
-                          radius=1).collect()
-    }
+    cls = type(geo_pages)
+    collect, sizes = cls.collect, []
+
+    def spy(df):
+        rows = collect(df)
+        sizes.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(cls, "collect", spy)
+    out = knn_join(geo_pages, feats, k=1, cell_zoom=8, radius=1)
+    monkeypatch.setattr(cls, "collect", collect)
+    # the lat range, then one probe per round: round 0 left points
+    assert len(sizes) >= 3 and sizes[1] == 1
+    assert all(n <= 1 for n in sizes[:-1]), sizes
+    got = {(r.page_id, r.rank, r.feature_id, r.dist2) for r in out.collect()}
     want = {
         (r.page_id, r.rank, r.feature_id, r.dist2)
         for r in brute_force_knn(geo_pages, feats, k=1).collect()
